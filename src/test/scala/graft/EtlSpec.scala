@@ -1,9 +1,17 @@
 package graft
 
 import graft.operators.{Etl, PartitionCache}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
-class EtlSpec extends SparkSuite {
+class EtlSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   test("extract respects the exclusive price band and joins every row") {
     val df = Etl.extract(spark, sf).cache()
@@ -99,5 +107,124 @@ class EtlSpec extends SparkSuite {
       assert(sorted.map(_.getLong(2)).distinct.length == 1,
         "create and reuse paths must agree on the value")
     }
+  }
+
+  // ---- one-job partition-cache read ----------------------------------
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs `f` starts, counted by an `onJobStart` listener on a
+    * job group of its own. The listener bus is asynchronous, so a marker
+    * job in a second group follows `f`: once its start is seen, every
+    * earlier start has been delivered. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"etlspec-jobs-${System.nanoTime}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => n.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try f finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The aggregate a reuse of `key` runs, as `calcAvg` builds it. */
+  private def reuseFrame(cacheDir: String, key: String): DataFrame = {
+    val p = new Path(s"$cacheDir/l_returnflag=$key")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    PartitionCache.avgFrame(spark, p, fs.listStatus(p).toSeq)
+  }
+
+  private def finalPlan(df: DataFrame): SparkPlan = {
+    df.collect() // let AQE finalize every stage
+    df.queryExecution.executedPlan
+  }
+
+  private def dataFiles(dir: String): Seq[java.io.File] =
+    new java.io.File(dir).listFiles().toSeq
+      .filter(f => f.isFile && !f.getName.startsWith("_") &&
+        !f.getName.startsWith("."))
+      .sortBy(_.getName)
+
+  private def withMaxPartitionBytes[T](bytes: Long)(f: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, bytes.toString)
+    try f finally spark.conf.set(key, was)
+  }
+
+  test("partition cache: a reuse of a small partition is one job with no Exchange") {
+    val cacheDir = tmpDir("graft_jobs_")
+    val ((v1, s1), createJobs) =
+      jobsOf(PartitionCache.calcAvg(spark, sf, cacheDir, "A"))
+    assert(s1 == "create")
+    // the source's schema inference, one write job over the source and
+    // one read of the written partition: the source is scanned once
+    assert(createJobs == 3, s"create ran $createJobs jobs")
+    val ((v2, s2), reuseJobs) =
+      jobsOf(PartitionCache.calcAvg(spark, sf, cacheDir, "A"))
+    assert(s2 == "reuse" && v2 == v1)
+    assert(reuseJobs == 1, s"reuse ran $reuseJobs jobs")
+    val plan = finalPlan(reuseFrame(cacheDir, "A"))
+    assert(collect(plan) { case e: Exchange => e }.isEmpty,
+      s"single-split reuse must not exchange:\n$plan")
+  }
+
+  test("partition cache: a partition larger than one split keeps the partial/final aggregate") {
+    val cacheDir = tmpDir("graft_split_")
+    val (v1, _) = PartitionCache.calcAvg(spark, sf, cacheDir, "A")
+    val single = reuseFrame(cacheDir, "A").head().getLong(0)
+    assert(single == v1)
+    val bytes = dataFiles(s"$cacheDir/l_returnflag=A").map(_.length).sum
+    withMaxPartitionBytes(bytes - 1) {
+      val (v2, s2) = PartitionCache.calcAvg(spark, sf, cacheDir, "A")
+      assert(s2 == "reuse" && v2 == single)
+      val plan = finalPlan(reuseFrame(cacheDir, "A"))
+      val modes = collect(plan) { case a: BaseAggregateExec => a }
+        .flatMap(_.aggregateExpressions.map(_.mode)).toSet
+      assert(modes == Set(Partial, Final), s"aggregate modes $modes:\n$plan")
+      assert(collect(plan) { case e: Exchange => e }.nonEmpty,
+        s"multi-split reuse must aggregate across tasks:\n$plan")
+    }
+  }
+
+  test("partition cache: garbage in a non-first data file still forces recreate") {
+    val expected = PartitionCache.calcAvg(spark, sf, tmpDir("graft_ref_"), "A")._1
+    val cacheDir = tmpDir("graft_multi_")
+    val partDir = s"$cacheDir/l_returnflag=A"
+    spark.read.parquet(s"$sf/lineitem.parquet").filter(col("l_returnflag") === "A")
+      .repartition(3).write.parquet(partDir)
+    val files = dataFiles(partDir)
+    assert(files.length >= 2, s"want a multi-file partition, got $files")
+    // the footer of the first file stays good: only the scan can see this
+    java.nio.file.Files.write(files.last.toPath, "not a parquet file".getBytes)
+    val (v, s) = PartitionCache.calcAvg(spark, sf, cacheDir, "A")
+    assert(s == "recreate", s"expected recreate, got $s")
+    assert(v == expected)
+    assert(PartitionCache.calcAvg(spark, sf, cacheDir, "A") == (expected, "reuse"))
+  }
+
+  test("partition cache: a DECIMAL cache column is reused, its type read from the footer") {
+    val expected = PartitionCache.calcAvg(spark, sf, tmpDir("graft_ref_"), "A")._1
+    val cacheDir = tmpDir("graft_decimal_")
+    spark.read.parquet(s"$sf/lineitem.parquet").filter(col("l_returnflag") === "A")
+      .withColumn("l_extendedprice", col("l_extendedprice").cast(DecimalType(12, 2)))
+      .write.parquet(s"$cacheDir/l_returnflag=A")
+    assert(PartitionCache.calcAvg(spark, sf, cacheDir, "A") == (expected, "reuse"))
   }
 }
