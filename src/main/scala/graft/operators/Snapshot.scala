@@ -275,23 +275,6 @@ object Snapshot {
     columnMapOf(spark, root, v).find(_._2 == logical)
       .map(_._1).getOrElse(logical)
 
-  /** [[enforceWritten]] under an OWNED claim: a rejected batch must not
-    * wedge the table — read-modify-write commits (merge/delete/
-    * constraint-add) can only ever claim `pointer+1`, so a burnt claim
-    * there would block them until vacuum. We still hold the claim, the
-    * written directory never became visible: remove it FIRST (so the
-    * claim protocol's already-decided check can never observe a released
-    * claim with a live dir), then the claim, then rethrow. */
-  private def enforceOrRelease(spark: SparkSession, root: String,
-                               next: Long, base: Long): Unit =
-    try enforceWritten(spark, root, next, base)
-    catch { case v: ConstraintViolation =>
-      val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$next"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(root, s"$ClaimsDir/$next"), false)
-      throw v
-    }
-
   /** The `(file, bytes)` inventory of version `v` — manifest-listed
     * files or the directory's parquet parts; an O(files) driver-side
     * metadata read, never a data scan. */
@@ -398,11 +381,9 @@ object Snapshot {
     * comes from ITS parquet footers: the whole count is O(files)
     * driver-side metadata, no job — where `readCurrent(...).count()`
     * re-read every committed byte back (at 100 TB: the table, again,
-    * per post-commit visibility check). `graft.count.manifestFastPath
-    * =false` restores the measured full count (same kill-switch
-    * discipline as the stats footer path); SnapshotSpec pins
-    * fast-path = full-count equality through commit, append,
-    * MOR-delete, purge, and full-file-delete venues. */
+    * per post-commit visibility check). SnapshotSpec pins it equal to
+    * `readCurrent(...).count()` through commit, append, MOR-delete,
+    * purge, and full-file-delete venues. */
   def currentRowCount(spark: SparkSession, root: String): Long = {
     val v = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(
@@ -412,9 +393,6 @@ object Snapshot {
 
   private[graft] def versionRowCount(spark: SparkSession, root: String,
                                      v: Long): Long = {
-    val fast = spark.conf.getOption("graft.count.manifestFastPath")
-      .forall(_.toBoolean)
-    if (!fast) return readResolved(spark, root, v).count()
     val live = Layout.footerRowCountOfFiles(spark,
       fileInventory(spark, root, v).map(_._1))
     val dvP = new org.apache.hadoop.fs.Path(root, s"$DvDir/v=$v")
@@ -467,38 +445,24 @@ object Snapshot {
     * per-attempt (the referenced set changes if a concurrent commit
     * wins the claim race) keeps rewrite parallelism tracking volume. */
   def compact(spark: SparkSession, root: String,
-              numFiles: Int = DerivedWidth,
-              maxRetries: Int = 16): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version to compact"))
-      if (claimVersion(spark, root, base + 1)) {
-        // readResolved: compacting a manifest (delete) version
-        // re-materializes it self-contained, collapsing the reference
-        // chain so vacuum can reclaim the referenced ancestors
-        val resolved = toPhysical(readResolved(spark, root, base),
-          columnMapOf(spark, root, base))
-        val nF = if (numFiles > 0) numFiles
-                 else derivedCompactFiles(spark, root, base)
-        resolved.repartition(nF)
-          .write.mode("overwrite").parquet(s"$root/v=${base + 1}")
-        // a stats-carrying table keeps its data-skipping index across
-        // maintenance passes: re-derive the manifest for the new files
-        val sc = statsColsOf(spark, root, base)
-        if (sc.nonEmpty) writeStats(spark, root, base + 1, sc,
-          bloomColsOf(spark, root, base))
-        writeSchema(spark, root, base + 1, resolved.schema)
-        if (pointerAdvance(spark, root, base + 1)) return base + 1
-      } else {
-        if (awaitAdvance(spark, root, base)) attempt -= 1
-      }
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"compact of $root did not win a claim in $maxRetries attempts")
-  }
+              numFiles: Int = DerivedWidth): Long =
+    onHead(spark, root, "compact") { base => Some { next =>
+      // readResolved: compacting a manifest (delete) version
+      // re-materializes it self-contained, collapsing the reference
+      // chain so vacuum can reclaim the referenced ancestors
+      val resolved = toPhysical(readResolved(spark, root, base),
+        columnMapOf(spark, root, base))
+      val nF = if (numFiles > 0) numFiles
+               else derivedCompactFiles(spark, root, base)
+      resolved.repartition(nF)
+        .write.mode("overwrite").parquet(s"$root/v=$next")
+      // a stats-carrying table keeps its data-skipping index across
+      // maintenance passes: re-derive the manifest for the new files
+      val sc = statsColsOf(spark, root, base)
+      if (sc.nonEmpty) writeStats(spark, root, next, sc,
+        bloomColsOf(spark, root, base))
+      writeSchema(spark, root, next, resolved.schema)
+    } }
 
   private val ClaimsDir = "_claims"
 
@@ -624,6 +588,94 @@ object Snapshot {
         true
       }
     } finally fs.delete(lock, false)
+  }
+
+  /** Attempt budget of a read-modify-write commit: attempts lost to a
+    * stalled claimant count against it, attempts lost to a live
+    * competitor do not ([[awaitAdvance]]). */
+  private val CommitAttempts = 16
+
+  private def lostClaims(op: String, root: String) =
+    new IllegalStateException(
+      s"$op on $root did not win a claim in $CommitAttempts attempts " +
+        "(live contention, or a crashed writer's stale claim — see vacuum)")
+
+  /** Undo an owned, unpublished claim on `next`: the directory first,
+    * so the claim protocol's already-decided check can never observe a
+    * released claim with a live dir, then the claim itself. */
+  private def releaseClaim(spark: SparkSession, root: String,
+                           next: Long): Unit = {
+    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
+    fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$next"), true)
+    fs.delete(new org.apache.hadoop.fs.Path(root, s"$ClaimsDir/$next"), false)
+  }
+
+  /** Run a commit's `write` under its owned claim on `next`. A batch a
+    * CHECK constraint rejects must not wedge the table — read-modify-write commits can
+    * only ever claim `pointer+1`, so a burnt claim there would block
+    * them until vacuum — so a [[ConstraintViolation]] releases the
+    * claim before it propagates. */
+  private def writeClaimed(spark: SparkSession, root: String, next: Long)(
+      write: => Unit): Unit =
+    try write
+    catch { case v: ConstraintViolation =>
+      releaseClaim(spark, root, next)
+      throw v
+    }
+
+  /** THE read-modify-write commit loop: read the head (an empty table
+    * fails with [[java.util.NoSuchElementException]]), let `plan` run
+    * its checks against it, claim exactly `pointer+1`, write, publish.
+    * `plan` returns None for a no-op (the head is returned and nothing
+    * is claimed) or `Some(write)`, which writes version `next`'s
+    * artifacts before the loop swaps the pointer. Winning `pointer+1`
+    * proves no other committer can finalize it, so the base `plan` read
+    * is the true predecessor — the serializability argument of every
+    * caller. A lost claim waits for the winner ([[awaitAdvance]]) and
+    * replans on the new head; a publish out-versioned by a blind commit
+    * replans too. */
+  private def onHead(spark: SparkSession, root: String, op: String)(
+      plan: Long => Option[Long => Unit]): Long = {
+    var attempt = 0
+    while (attempt < CommitAttempts) {
+      val base = currentVersion(spark, root).getOrElse(
+        throw new java.util.NoSuchElementException(
+          s"snapshot table $root has no committed version ($op)"))
+      plan(base) match {
+        case None => return base
+        case Some(write) =>
+          val next = base + 1
+          if (claimVersion(spark, root, next)) {
+            writeClaimed(spark, root, next)(write(next))
+            if (pointerAdvance(spark, root, next)) return next
+          } else if (awaitAdvance(spark, root, base)) attempt -= 1
+      }
+      attempt += 1
+    }
+    throw lostClaims(op, root)
+  }
+
+  /** The blind commit loop: claim strictly above every version any
+    * artifact names ([[observedMax]]), write, publish with a monotonic
+    * advance. `admit(next)` runs the checks for the candidate version
+    * before it is claimed. Blind commits never wait: a lost claim
+    * simply moves to the next free version. */
+  private def blindClaim(spark: SparkSession, root: String, op: String)(
+      admit: Long => Unit)(write: Long => Unit): Long = {
+    var attempts = 0
+    while (true) {
+      val next = observedMax(spark, root) + 1
+      admit(next)
+      if (claimVersion(spark, root, next)) {
+        writeClaimed(spark, root, next)(write(next))
+        pointerAdvance(spark, root, next)
+        return next
+      }
+      attempts += 1
+      if (attempts > 64) throw new IllegalStateException(
+        s"$op to $root lost the version claim 64 times")
+    }
+    -1L // unreachable
   }
 
   private val HistoryDir = "_history"
@@ -757,40 +809,35 @@ object Snapshot {
     commitInternal(Layout.zorderCluster(df, c1, c2, nFiles, bits), root,
       Seq(c1, c2), bloomCols)
 
+  /** `sidecar(next)` writes any further per-version metadata the
+    * caller's readers need, inside the commit: before the pointer swap,
+    * so no reader can see the version without it. */
   private def commitInternal(df: DataFrame, root: String,
                              statsCols: Seq[String],
-                             bloomCols: Seq[String] = Nil): Long = {
+                             bloomCols: Seq[String] = Nil,
+                             sidecar: Long => Unit = _ => ()): Long = {
     val spark = df.sparkSession
-    var attempts = 0
-    while (true) {
-      val next = observedMax(spark, root) + 1
-      if (claimVersion(spark, root, next)) {
-        // column mapping: the batch arrives in LOGICAL names — freeze
-        // it back to the table's physical names before parquet sees it
-        // (and the stats columns with it); a fresh table has no map
-        val cmap = currentVersion(spark, root)
-          .map(columnMapOf(spark, root, _)).getOrElse(Nil)
-        val physDf = toPhysical(df, cmap)
-        val physStats = statsCols.map(c =>
-          cmap.find(_._2 == c).map(_._1).getOrElse(c))
-        val physBlooms = bloomCols.map(c =>
-          cmap.find(_._2 == c).map(_._1).getOrElse(c))
-        physDf.write.mode("overwrite").parquet(s"$root/v=$next")
-        // CHECK constraints resolve against the live pointer (a blind
-        // commit replaces whatever is current, so current's rules bind)
-        currentVersion(spark, root)
-          .foreach(cur => enforceOrRelease(spark, root, next, cur))
-        if (physStats.nonEmpty)
-          writeStats(spark, root, next, physStats, physBlooms)
-        writeSchema(spark, root, next, physDf.schema)
-        pointerAdvance(spark, root, next)
-        return next
-      }
-      attempts += 1
-      if (attempts > 64) throw new IllegalStateException(
-        s"snapshot commit to $root lost the version claim 64 times")
+    blindClaim(spark, root, "snapshot commit")(_ => ()) { next =>
+      // column mapping: the batch arrives in LOGICAL names — freeze
+      // it back to the table's physical names before parquet sees it
+      // (and the stats columns with it); a fresh table has no map
+      val cmap = currentVersion(spark, root)
+        .map(columnMapOf(spark, root, _)).getOrElse(Nil)
+      val physDf = toPhysical(df, cmap)
+      val physStats = statsCols.map(c =>
+        cmap.find(_._2 == c).map(_._1).getOrElse(c))
+      val physBlooms = bloomCols.map(c =>
+        cmap.find(_._2 == c).map(_._1).getOrElse(c))
+      physDf.write.mode("overwrite").parquet(s"$root/v=$next")
+      // CHECK constraints resolve against the live pointer (a blind
+      // commit replaces whatever is current, so current's rules bind)
+      currentVersion(spark, root)
+        .foreach(cur => enforceWritten(spark, root, next, cur))
+      if (physStats.nonEmpty)
+        writeStats(spark, root, next, physStats, physBlooms)
+      writeSchema(spark, root, next, physDf.schema)
+      sidecar(next)
     }
-    -1L // unreachable
   }
 
   private val StatsDir = "_stats"
@@ -979,69 +1026,51 @@ object Snapshot {
   private def writeStats(spark: SparkSession, root: String, v: Long,
                          statsCols: Seq[String],
                          bloomCols: Seq[String] = Nil): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(root, s"v=$v")
+    freshStats(spark, dir, parquetFiles(spark, dir), statsCols, bloomCols)
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$root/$StatsDir/v=$v")
+  }
+
+  /** The parquet data files directly under `dir`. */
+  private def parquetFiles(spark: SparkSession, dir: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    fsOf(spark, dir).listStatus(dir).toSeq
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+
+  /** Per-file `(file, min_c, max_c, …, [bloom_c, …,] n_rows)` stats rows
+    * for `files`, the parquet a commit just wrote into `dir`. The
+    * min/max/count manifest is exactly what parquet footers already
+    * record, so it derives from METADATA — no second pass over the
+    * just-committed data bytes (at 100 TB the read-back is a full extra
+    * scan of every commit). Only the data selects the measured scan
+    * of `dir` instead: bloom columns (a sketch needs the values), a
+    * stats column that is not a plain INT32/INT64, a missing statistic,
+    * mixed physical widths, or no populated file ([[footerStatsOf]]). */
+  private def freshStats(spark: SparkSession, dir: org.apache.hadoop.fs.Path,
+                         files: Seq[org.apache.hadoop.fs.FileStatus],
+                         statsCols: Seq[String],
+                         bloomCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
-    // FOOTER FAST PATH (r14, guide §6/§1.2): the per-file min/max/count
-    // manifest is exactly what parquet footers already record, so for
-    // integer stats columns the manifest derives from METADATA — no
-    // second pass over the just-committed data bytes (at 100 TB the
-    // read-back is a full extra scan of every commit). Values are
-    // exact (parquet int statistics are never truncated), null
-    // semantics match the aggregate path (all-null file → null bounds;
-    // zero-row file → no manifest row, like an empty groupBy), and any
-    // unsupported type / missing statistic / bloom requirement falls
-    // back to the measured scan. `graft.stats.footerFastPath=false`
-    // restores the old path for A/B.
-    val enabled = spark.conf.getOption("graft.stats.footerFastPath")
-      .forall(_.toBoolean)
-    val fast =
-      if (bloomCols.nonEmpty || !enabled) None
-      else footerStats(spark, s"$root/v=$v", statsCols)
-    fast match {
-      case Some(df) =>
-        df.coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/$StatsDir/v=$v")
-      case None =>
-        spark.read.parquet(s"$root/v=$v")
-          .groupBy(canonMetaPath(input_file_name()).as("file"))
-          .agg(statsAggs(spark, statsCols, bloomCols).head,
-            statsAggs(spark, statsCols, bloomCols).tail: _*)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/$StatsDir/v=$v")
+    val footer =
+      if (bloomCols.nonEmpty) None
+      else footerStatsOf(spark, files, statsCols)
+    footer.getOrElse {
+      val aggs = statsAggs(spark, statsCols, bloomCols)
+      spark.read.parquet(dir.toString)
+        .groupBy(canonMetaPath(input_file_name()).as("file"))
+        .agg(aggs.head, aggs.tail: _*)
     }
   }
 
-  /** Per-file `(file, min_c, max_c, …, n_rows)` rows assembled from
-    * parquet FOOTERS (column-chunk statistics aggregated across row
-    * groups), or None when any stats column is not a plain INT32/INT64
-    * (float NaN rules and binary truncation make those footers
-    * unreliable; int statistics are exact) or any populated row group
-    * lacks a statistic. Driver-side O(files) metadata reads — the same
-    * footers the scan-path planner opens anyway. */
-  private def footerStats(spark: SparkSession, dir: String,
-                          statsCols: Seq[String]): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files =
-      try p.getFileSystem(conf).listStatus(p).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      catch { case _: java.io.FileNotFoundException => return None }
-    footerStatsOf(spark, files, statsCols)
-  }
-
-  /** [[footerStats]] over an explicit file list (the file-granular
-    * commit's FRESH files — paths as [[canonFile]] strings). */
-  private def footerStatsPaths(spark: SparkSession, paths: Seq[String],
-                               statsCols: Seq[String]): Option[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files =
-      try paths.map { s =>
-        val p = new org.apache.hadoop.fs.Path(s)
-        p.getFileSystem(conf).getFileStatus(p)
-      }
-      catch { case _: java.io.FileNotFoundException => return None }
-    footerStatsOf(spark, files, statsCols)
-  }
-
+  /** Footer-derived stats rows, or None when the footers cannot give
+    * the scan path's exact answer: a stats column that is not a plain
+    * INT32/INT64 (float NaN rules and binary truncation make those
+    * footers unreliable; int statistics are exact, and null semantics
+    * match the aggregate: all-null file → null bounds, zero-row file →
+    * no row, like an empty groupBy) or a populated row group lacking a
+    * statistic. Driver-side O(files) metadata reads — the same footers
+    * the scan-path planner opens anyway. */
   private def footerStatsOf(spark: SparkSession,
                             files: Seq[org.apache.hadoop.fs.FileStatus],
                             statsCols: Seq[String]): Option[DataFrame] = {
@@ -1051,8 +1080,7 @@ object Snapshot {
     if (files.isEmpty) return None
     // (sparkType, per-file Row values) per column; abort → None
     val perFile = files.flatMap { st =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      val reader = Layout.openFooter(conf, st)
       try {
         val schema = reader.getFileMetaData.getSchema
         val blocks = reader.getRowGroups.asScala.toSeq
@@ -1385,128 +1413,105 @@ object Snapshot {
     * version won't appear) — the retry limit surfaces it and
     * [[vacuum]] `clearStaleClaims=true` is the admin recovery. */
   def mergeCommit(spark: SparkSession, root: String, changes: DataFrame,
-                  key: String, maxRetries: Int = 16): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version to merge into"))
-      if (claimVersion(spark, root, base + 1)) {
-        // CHECK constraints: validate the CHANGE batch up front —
-        // O(batch), and base rows were validated by their own commits,
-        // so the merged result cannot introduce a violation elsewhere
-        val mcs = checkConstraintsOf(spark, root, base)
-        if (mcs.nonEmpty) violationCounts(changes, mcs)
-          .filter(_._2 > 0).headOption.foreach { case (n, c) =>
-            // nothing written yet — release the claim so pointer+1
-            // committers are not wedged, then reject
-            fsOf(spark, new org.apache.hadoop.fs.Path(root)).delete(
-              new org.apache.hadoop.fs.Path(
-                root, s"$ClaimsDir/${base + 1}"), false)
-            throw new ConstraintViolation(n, c,
-              s"merge into $root rejected: CHECK constraint `$n` " +
-                s"failed on $c change row(s); pointer stays on v=$base")
-          }
-        val cmap = columnMapOf(spark, root, base)
-        val physKey = physicalOf(spark, root, base, key)
-        val statsPath =
-          new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$base")
-        val prunable = statsColsOf(spark, root, base).contains(physKey) &&
-          fsOf(spark, statsPath).exists(statsPath)
-        if (prunable) {
-          import org.apache.spark.sql.functions._
-          // the stats manifest is the file inventory (deleteWhere's
-          // discipline): O(files) metadata rows decide the rewrite set
-          val stats = spark.read.parquet(statsPath.toString)
-            .select(col("file"), col(s"min_$physKey").as("kmin"),
-              col(s"max_$physKey").as("kmax"))
-          val all = stats.select("file").collect().map(_.getString(0)).toSeq
-          // touched = files whose key interval contains ≥1 change key:
-          // broadcast the metadata-sized interval list, stream the keys
-          // through it (BNLJ — non-equi, but one side is O(files) rows)
-          val touched = changes.select(col(key).as("k"))
-            .filter(col("k").isNotNull).distinct()
-            .join(broadcast(stats),
-              col("k") >= col("kmin") && col("k") <= col("kmax"), "inner")
-            .select("file").distinct()
-            .collect().map(_.getString(0)).toSeq
-          val untouched = all.diff(touched)
-          // survivors: touched files' rows whose key is NOT replaced.
-          // Recorded-schema read (mixed generations after an evolution),
-          // logical names for the anti-join, empty-but-full-schema
-          // relation when no file overlaps (pure insert).
-          val survivors =
-            if (touched.nonEmpty)
-              // tombstones apply to the rewrite read, so a MOR-deleted
-              // row never re-materializes through a merge's rewrite
-              toLogical(applyDv(spark, root, base,
-                  physReader(spark, root, base).parquet(touched: _*)),
-                cmap).join(changes.select(key), Seq(key), "left_anti")
-            else readResolved(spark, root, base).limit(0)
-          val merged =
-            changes.unionByName(survivors, allowMissingColumns = true)
-          // Output width from the REWRITE mass (touched-file bytes,
-          // floored at the touched-file count — one reader ≈ one
-          // writer), never from the union's inherited partitioning: a
-          // CDC batch filtered out of a wide corpus scan carries the
-          // scan's near-empty splits, and writing through them exploded
-          // a 72.6 MB band rewrite into 210 ~350 KB files (measured,
-          // sf100 one-hop MergeSoak). Insert-only merges (no touched
-          // files) size from the batch's plan estimate instead — an
-          // in-memory over-estimate, so it only widens, clamped at cap.
-          val cap = spark.sessionState.conf.numShufflePartitions
-          val width =
-            if (touched.nonEmpty) {
-              val inv = fileInventory(spark, root, base).toMap
-              math.max(
-                compactWidthFor(touched.map(inv.getOrElse(_, 0L)).sum, cap),
-                math.min(touched.size, cap))
-            } else {
-              val est = merged.queryExecution.optimizedPlan.stats.sizeInBytes
-              compactWidthFor(
-                if (est.isValidLong) est.toLong else Long.MaxValue, cap)
-            }
-          toPhysical(merged, cmap).coalesce(width).write.mode("overwrite")
-            .parquet(s"$root/v=${base + 1}")
-          // manifest carries untouched files by reference; stats carry
-          // verbatim for them and re-derive over the fresh files; the
-          // recorded schema absorbs any add-column evolution
-          writeManifestAndStats(spark, root, base + 1, base, untouched)
-          if (pointerAdvance(spark, root, base + 1)) return base + 1
-        } else {
-          val baseDf = readResolved(spark, root, base)
-          // allowMissingColumns: a change batch carrying a NEW column is
-          // an add-column evolution (kept rows read NULL there), and a
-          // batch without a recently-added column still merges (its rows
-          // get NULL) — either way the union schema is recorded below
-          val merged = changes.unionByName(
-            baseDf.join(changes.select(key), Seq(key), "left_anti"),
-            allowMissingColumns = true)
-          // the merge is computed in LOGICAL names (changes and baseDf
-          // both are); freeze back to physical before the write
-          val physMerged = toPhysical(merged, cmap)
-          physMerged.write.mode("overwrite").parquet(s"$root/v=${base + 1}")
-          // carry the base's stats manifest forward (same contract as
-          // compact: maintenance must not silently kill data skipping)
-          val sc = statsColsOf(spark, root, base)
-          if (sc.nonEmpty) writeStats(spark, root, base + 1, sc,
-            bloomColsOf(spark, root, base))
-          writeSchema(spark, root, base + 1, physMerged.schema)
-          if (pointerAdvance(spark, root, base + 1)) return base + 1
+                  key: String): Long =
+    onHead(spark, root, "mergeCommit") { base => Some { next =>
+      // CHECK constraints: validate the CHANGE batch up front —
+      // O(batch), and base rows were validated by their own commits,
+      // so the merged result cannot introduce a violation elsewhere
+      // (nothing is written yet; the loop releases the claim)
+      val mcs = checkConstraintsOf(spark, root, base)
+      if (mcs.nonEmpty) violationCounts(changes, mcs)
+        .filter(_._2 > 0).headOption.foreach { case (n, c) =>
+          throw new ConstraintViolation(n, c,
+            s"merge into $root rejected: CHECK constraint `$n` " +
+              s"failed on $c change row(s); pointer stays on v=$base")
         }
-        // a concurrent blind commit claimed a higher version and swapped
-        // first — this merge never became current; recompute on the head
+      val cmap = columnMapOf(spark, root, base)
+      val physKey = physicalOf(spark, root, base, key)
+      val statsPath =
+        new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$base")
+      val prunable = statsColsOf(spark, root, base).contains(physKey) &&
+        fsOf(spark, statsPath).exists(statsPath)
+      if (prunable) {
+        import org.apache.spark.sql.functions._
+        // the stats manifest is the file inventory (deleteWhere's
+        // discipline): O(files) metadata rows decide the rewrite set
+        val stats = spark.read.parquet(statsPath.toString)
+          .select(col("file"), col(s"min_$physKey").as("kmin"),
+            col(s"max_$physKey").as("kmax"))
+        val all = stats.select("file").collect().map(_.getString(0)).toSeq
+        // touched = files whose key interval contains ≥1 change key:
+        // broadcast the metadata-sized interval list, stream the keys
+        // through it (BNLJ — non-equi, but one side is O(files) rows)
+        val touched = changes.select(col(key).as("k"))
+          .filter(col("k").isNotNull).distinct()
+          .join(broadcast(stats),
+            col("k") >= col("kmin") && col("k") <= col("kmax"), "inner")
+          .select("file").distinct()
+          .collect().map(_.getString(0)).toSeq
+        val untouched = all.diff(touched)
+        // survivors: touched files' rows whose key is NOT replaced.
+        // Recorded-schema read (mixed generations after an evolution),
+        // logical names for the anti-join, empty-but-full-schema
+        // relation when no file overlaps (pure insert).
+        val survivors =
+          if (touched.nonEmpty)
+            // tombstones apply to the rewrite read, so a MOR-deleted
+            // row never re-materializes through a merge's rewrite
+            toLogical(applyDv(spark, root, base,
+                physReader(spark, root, base).parquet(touched: _*)),
+              cmap).join(changes.select(key), Seq(key), "left_anti")
+          else readResolved(spark, root, base).limit(0)
+        val merged =
+          changes.unionByName(survivors, allowMissingColumns = true)
+        // Output width from the REWRITE mass (touched-file bytes,
+        // floored at the touched-file count — one reader ≈ one
+        // writer), never from the union's inherited partitioning: a
+        // CDC batch filtered out of a wide corpus scan carries the
+        // scan's near-empty splits, and writing through them exploded
+        // a 72.6 MB band rewrite into 210 ~350 KB files (measured,
+        // sf100 one-hop MergeSoak). Insert-only merges (no touched
+        // files) size from the batch's plan estimate instead — an
+        // in-memory over-estimate, so it only widens, clamped at cap.
+        val cap = spark.sessionState.conf.numShufflePartitions
+        val width =
+          if (touched.nonEmpty) {
+            val inv = fileInventory(spark, root, base).toMap
+            math.max(
+              compactWidthFor(touched.map(inv.getOrElse(_, 0L)).sum, cap),
+              math.min(touched.size, cap))
+          } else {
+            val est = merged.queryExecution.optimizedPlan.stats.sizeInBytes
+            compactWidthFor(
+              if (est.isValidLong) est.toLong else Long.MaxValue, cap)
+          }
+        toPhysical(merged, cmap).coalesce(width).write.mode("overwrite")
+          .parquet(s"$root/v=$next")
+        // manifest carries untouched files by reference; stats carry
+        // verbatim for them and re-derive over the fresh files; the
+        // recorded schema absorbs any add-column evolution
+        writeManifestAndStats(spark, root, next, base, untouched)
       } else {
-        // lost the claim: the winner's swap is in flight — wait for the
-        // pointer to move past our base before recomputing
-        if (awaitAdvance(spark, root, base)) attempt -= 1
+        val baseDf = readResolved(spark, root, base)
+        // allowMissingColumns: a change batch carrying a NEW column is
+        // an add-column evolution (kept rows read NULL there), and a
+        // batch without a recently-added column still merges (its rows
+        // get NULL) — either way the union schema is recorded below
+        val merged = changes.unionByName(
+          baseDf.join(changes.select(key), Seq(key), "left_anti"),
+          allowMissingColumns = true)
+        // the merge is computed in LOGICAL names (changes and baseDf
+        // both are); freeze back to physical before the write
+        val physMerged = toPhysical(merged, cmap)
+        physMerged.write.mode("overwrite").parquet(s"$root/v=$next")
+        // carry the base's stats manifest forward (same contract as
+        // compact: maintenance must not silently kill data skipping)
+        val sc = statsColsOf(spark, root, base)
+        if (sc.nonEmpty) writeStats(spark, root, next, sc,
+          bloomColsOf(spark, root, base))
+        writeSchema(spark, root, next, physMerged.schema)
       }
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"mergeCommit to $root did not win a claim in $maxRetries attempts " +
-        "(live contention, or a crashed writer's stale claim — see vacuum)")
-  }
+    } }
 
   /** Row-level DELETE with file-granular copy-on-write: remove every
     * row with `statsCol BETWEEN lo AND hi`, rewriting ONLY the files
@@ -1533,14 +1538,9 @@ object Snapshot {
     * directory a retained manifest still references. */
   def deleteWhere(spark: SparkSession, root: String, statsCol: String,
                   lo: org.apache.spark.sql.Column,
-                  hi: org.apache.spark.sql.Column,
-                  maxRetries: Int = 16): Long = {
+                  hi: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version to delete from"))
+    onHead(spark, root, "deleteWhere") { base =>
       // column mapping: the caller names the LOGICAL column; stats
       // manifests and the physical files know its frozen physical name
       val physCol = physicalOf(spark, root, base, statsCol)
@@ -1548,8 +1548,7 @@ object Snapshot {
       require(sc.contains(physCol),
         s"deleteWhere needs per-file stats on $statsCol (have: $sc) — " +
           "commit with commitWithStats to make deletes file-granular")
-      if (claimVersion(spark, root, base + 1)) {
-        val next = base + 1
+      Some { next =>
         // the stats manifest is the file inventory (its `file` values
         // are input_file_name-format URIs, consistent across carried
         // and fresh rows)
@@ -1572,27 +1571,18 @@ object Snapshot {
         // present: after an add-column evolution they can mix
         // generations, and plain inference would take one file's schema
         // and drop the later column from the rewrite.
-        val touchedReader = schemaOf(spark, root, base) match {
-          case Some(s) => spark.read.schema(s)
-          case None => spark.read
-        }
         val rewritten =
           if (touched.nonEmpty) // DV-filtered: a COW rewrite of a file
             // holding MOR tombstones must not resurrect those rows
             applyDv(spark, root, base,
-              touchedReader.parquet(touched: _*)).filter(keep)
+              physReader(spark, root, base).parquet(touched: _*))
+              .filter(keep)
           else toPhysical(readResolved(spark, root, base),
             columnMapOf(spark, root, base)).limit(0)
         rewritten.write.mode("overwrite").parquet(s"$root/v=$next")
         writeManifestAndStats(spark, root, next, base, untouched)
-        if (pointerAdvance(spark, root, next)) return next
-      } else {
-        if (awaitAdvance(spark, root, base)) attempt -= 1
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"deleteWhere on $root did not win a claim in $maxRetries attempts")
   }
 
   /** Row-level DELETE, MERGE-ON-READ — the Delta deletion-vector
@@ -1638,86 +1628,72 @@ object Snapshot {
     *         follow-on purge's commit. Purge failure is logged and
     *         swallowed — the delete is durable either way. */
   def deleteWhereMor(spark: SparkSession, root: String,
-                     cond: org.apache.spark.sql.Column,
-                     maxRetries: Int = 16): Long = {
+                     cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version to delete from"))
-      if (claimVersion(spark, root, base + 1)) {
-        val next = base + 1
-        val cmap = columnMapOf(spark, root, base)
-        val reader = physReader(spark, root, base)
-        val physical = manifestFiles(spark, root, base) match {
-          case Some(files) if files.nonEmpty => reader.parquet(files: _*)
-          case _ => reader.parquet(s"$root/v=$base")
-        }
-        // pin (file, row_index) BEFORE the existing-DV anti-join (both
-        // relations are parquet scans — `_metadata` goes ambiguous
-        // after the join), apply the base's tombstones so already-
-        // deleted rows never re-enter, then evaluate the predicate in
-        // logical names
-        val tagged = applyDv(spark, root, base, physical
-          .withColumn("__mor_file",
-            canonMetaPath(col("_metadata.file_path")))
-          .withColumn("__mor_idx", col("_metadata.row_index")))
-        val fresh = toLogical(tagged, cmap)
-          .filter(coalesce(cond, lit(false)))
-          .select(col("__mor_file").as("file"),
-            col("__mor_idx").as("row_index"))
-        // persisted: the count below and the sidecar write would
-        // otherwise each re-run the corpus-sized predicate scan
-        val merged = dvOf(spark, root, base)
-          .map(_.unionByName(fresh)).getOrElse(fresh).distinct().persist()
-        try {
-          val nTomb = merged.count()
-          // schema anchor (the claim/observedMax protocol needs the
-          // dir); all data rides by reference
-          toPhysical(readResolved(spark, root, base), cmap).limit(0)
-            .write.mode("overwrite").parquet(s"$root/v=$next")
-          val carried = fileInventory(spark, root, base).map(_._1)
-          writeManifestAndStats(spark, root, next, base, carried)
-          // the carry above wrote the base's sidecar verbatim (all files
-          // carried); replace it with base ∪ fresh. A predicate matching
-          // zero rows on a DV-less base writes NO sidecar at all — an
-          // empty one would tax every subsequent read with the anti-join
-          // plus the per-plan inventory-hash check for no semantic
-          // effect. Width tracks tombstone volume ([[DvRowsPerSidecarFile]])
-          // so a scattered 10^9-row erasure never funnels through one
-          // writer task.
-          if (nTomb > 0) {
-            val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-            val width = math.min(cap.toLong, (nTomb + DvRowsPerSidecarFile
-              - 1) / DvRowsPerSidecarFile).toInt
-            merged.coalesce(width).write.mode("overwrite")
-              .parquet(s"$root/$DvDir/v=$next")
-          }
-          // The MOR commit is durable once the pointer advances; the
-          // auto-purge is follow-on maintenance. A purge failure (e.g.
-          // claim contention exhausting ITS retries) must not surface
-          // as a deleteWhereMor failure — the delete committed. On
-          // purge success the returned version is the PURGE's commit
-          // (the newest version carrying the delete's effect); on
-          // failure or opt-out it is the MOR commit itself.
-          if (pointerAdvance(spark, root, next))
-            return (try maybePurgeOversizedDv(spark, root, next)
-            catch {
-              case e: Exception =>
-                System.err.println(s"graft: post-MOR DV auto-purge on " +
-                  s"$root failed (${e.getMessage}); the MOR delete at " +
-                  s"v=$next is committed — run Snapshot.purgeDv manually")
-                next
-            })
-        } finally merged.unpersist()
-      } else {
-        if (awaitAdvance(spark, root, base)) attempt -= 1
+    val v = onHead(spark, root, "deleteWhereMor") { base => Some { next =>
+      val cmap = columnMapOf(spark, root, base)
+      val reader = physReader(spark, root, base)
+      val physical = manifestFiles(spark, root, base) match {
+        case Some(files) if files.nonEmpty => reader.parquet(files: _*)
+        case _ => reader.parquet(s"$root/v=$base")
       }
-      attempt += 1
+      // pin (file, row_index) BEFORE the existing-DV anti-join (both
+      // relations are parquet scans — `_metadata` goes ambiguous
+      // after the join), apply the base's tombstones so already-
+      // deleted rows never re-enter, then evaluate the predicate in
+      // logical names
+      val tagged = applyDv(spark, root, base, physical
+        .withColumn("__mor_file",
+          canonMetaPath(col("_metadata.file_path")))
+        .withColumn("__mor_idx", col("_metadata.row_index")))
+      val fresh = toLogical(tagged, cmap)
+        .filter(coalesce(cond, lit(false)))
+        .select(col("__mor_file").as("file"),
+          col("__mor_idx").as("row_index"))
+      // persisted: the count below and the sidecar write would
+      // otherwise each re-run the corpus-sized predicate scan
+      val merged = dvOf(spark, root, base)
+        .map(_.unionByName(fresh)).getOrElse(fresh).distinct().persist()
+      try {
+        val nTomb = merged.count()
+        // schema anchor (the claim/observedMax protocol needs the
+        // dir); all data rides by reference
+        toPhysical(readResolved(spark, root, base), cmap).limit(0)
+          .write.mode("overwrite").parquet(s"$root/v=$next")
+        val carried = fileInventory(spark, root, base).map(_._1)
+        writeManifestAndStats(spark, root, next, base, carried)
+        // the carry above wrote the base's sidecar verbatim (all files
+        // carried); replace it with base ∪ fresh. A predicate matching
+        // zero rows on a DV-less base writes NO sidecar at all — an
+        // empty one would tax every subsequent read with the anti-join
+        // plus the per-plan inventory-hash check for no semantic
+        // effect. Width tracks tombstone volume ([[DvRowsPerSidecarFile]])
+        // so a scattered 10^9-row erasure never funnels through one
+        // writer task.
+        if (nTomb > 0) {
+          val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+          val width = math.min(cap.toLong, (nTomb + DvRowsPerSidecarFile
+            - 1) / DvRowsPerSidecarFile).toInt
+          merged.coalesce(width).write.mode("overwrite")
+            .parquet(s"$root/$DvDir/v=$next")
+        }
+      } finally merged.unpersist()
+    } }
+    // The MOR commit is durable once the pointer advances; the
+    // auto-purge is follow-on maintenance. A purge failure (e.g. claim
+    // contention exhausting ITS retries) must not surface as a
+    // deleteWhereMor failure — the delete committed. On purge success
+    // the returned version is the PURGE's commit (the newest version
+    // carrying the delete's effect); on failure or opt-out it is the
+    // MOR commit itself.
+    try maybePurgeOversizedDv(spark, root, v)
+    catch {
+      case e: Exception =>
+        System.err.println(s"graft: post-MOR DV auto-purge on " +
+          s"$root failed (${e.getMessage}); the MOR delete at " +
+          s"v=$v is committed — run Snapshot.purgeDv manually")
+        v
     }
-    throw new IllegalStateException(
-      s"deleteWhereMor on $root did not win a claim in $maxRetries attempts")
   }
 
   /** The README's COW-vs-MOR operational rule, self-executing: once a
@@ -1769,16 +1745,9 @@ object Snapshot {
     * itself: every surviving tombstone names a rewritten file, so the
     * carried set is empty — no special case. No-op (current version
     * returned, no commit burned) on a table without tombstones. */
-  def purgeDv(spark: SparkSession, root: String,
-              maxRetries: Int = 16): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version to purge"))
-      if (dvOf(spark, root, base).isEmpty) return base
-      if (claimVersion(spark, root, base + 1)) {
-        val next = base + 1
+  def purgeDv(spark: SparkSession, root: String): Long =
+    onHead(spark, root, "purgeDv") { base =>
+      if (dvOf(spark, root, base).isEmpty) None else Some { next =>
         val touched = dvOf(spark, root, base).get
           .select("file").distinct().collect().map(_.getString(0)).toSeq
         val inv = fileInventory(spark, root, base)
@@ -1803,15 +1772,8 @@ object Snapshot {
           .coalesce(width)
           .write.mode("overwrite").parquet(s"$root/v=$next")
         writeManifestAndStats(spark, root, next, base, untouched)
-        if (pointerAdvance(spark, root, next)) return next
-      } else {
-        if (awaitAdvance(spark, root, base)) attempt -= 1
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"purgeDv on $root did not win a claim in $maxRetries attempts")
-  }
 
   /** ADD a named CHECK constraint (the Delta `ALTER TABLE ... ADD
     * CONSTRAINT ... CHECK (...)` shape): validate that the CURRENT
@@ -1829,13 +1791,8 @@ object Snapshot {
     * skip re-validation: they only rearrange or remove already-
     * validated rows. */
   def addCheckConstraint(spark: SparkSession, root: String,
-                         name: String, exprSql: String,
-                         maxRetries: Int = 16): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version to constrain"))
+                         name: String, exprSql: String): Long =
+    onHead(spark, root, "addCheckConstraint") { base =>
       val existing = checkConstraintsOf(spark, root, base)
       require(!existing.exists(_._1 == name),
         s"constraint `$name` already exists on $root")
@@ -1846,59 +1803,38 @@ object Snapshot {
             s"cannot add CHECK constraint `$n` to $root: existing data " +
               s"violates it on $c row(s)")
         }
-      if (claimVersion(spark, root, base + 1)) {
-        val next = base + 1
-        // metadata-only version: an empty data dir (for the claim /
-        // observedMax protocol) + a manifest referencing base's files
-        fsOf(spark, new org.apache.hadoop.fs.Path(root))
-          .mkdirs(new org.apache.hadoop.fs.Path(root, s"v=$next"))
-        writeManifestAndStats(spark, root, next, base,
-          fileInventory(spark, root, base).map(_._1))
-        writeConstraintSet(spark, root, next,
-          existing :+ (name -> exprSql))
-        if (pointerAdvance(spark, root, next)) return next
-      } else {
-        if (awaitAdvance(spark, root, base)) attempt -= 1
+      Some { next =>
+        carryAll(spark, root, base, next)
+        writeConstraintSet(spark, root, next, existing :+ (name -> exprSql))
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"addCheckConstraint on $root did not win a claim in " +
-        s"$maxRetries attempts")
-  }
 
   /** DROP a CHECK constraint by name — a metadata-only version whose
     * constraint set omits it; later versions stop enforcing while
     * time-travel reads of earlier versions still report it through
     * [[checkConstraintsOf]]. */
   def dropCheckConstraint(spark: SparkSession, root: String,
-                          name: String, maxRetries: Int = 16): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version"))
+                          name: String): Long =
+    onHead(spark, root, "dropCheckConstraint") { base =>
       val existing = checkConstraintsOf(spark, root, base)
       require(existing.exists(_._1 == name),
         s"no constraint `$name` on $root (have: " +
           s"${existing.map(_._1).mkString(", ")})")
-      if (claimVersion(spark, root, base + 1)) {
-        val next = base + 1
-        fsOf(spark, new org.apache.hadoop.fs.Path(root))
-          .mkdirs(new org.apache.hadoop.fs.Path(root, s"v=$next"))
-        writeManifestAndStats(spark, root, next, base,
-          fileInventory(spark, root, base).map(_._1))
-        writeConstraintSet(spark, root, next,
-          existing.filterNot(_._1 == name))
-        if (pointerAdvance(spark, root, next)) return next
-      } else {
-        if (awaitAdvance(spark, root, base)) attempt -= 1
+      Some { next =>
+        carryAll(spark, root, base, next)
+        writeConstraintSet(spark, root, next, existing.filterNot(_._1 == name))
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"dropCheckConstraint on $root did not win a claim in " +
-        s"$maxRetries attempts")
+
+  /** The body every METADATA-ONLY commit shares: an empty `v=next`
+    * data dir (for the claim / observedMax protocol) plus a manifest
+    * carrying every file of `base` by reference. */
+  private def carryAll(spark: SparkSession, root: String,
+                       base: Long, next: Long): Unit = {
+    fsOf(spark, new org.apache.hadoop.fs.Path(root))
+      .mkdirs(new org.apache.hadoop.fs.Path(root, s"v=$next"))
+    writeManifestAndStats(spark, root, next, base,
+      fileInventory(spark, root, base).map(_._1))
   }
 
   /** METADATA-ONLY column RENAME (the Delta column-mapping / Iceberg
@@ -1918,13 +1854,8 @@ object Snapshot {
     * constraint sets, the mapping persists across [[restore]]:
     * metadata history is orthogonal to data history. */
   def renameColumn(spark: SparkSession, root: String,
-                   from: String, to: String,
-                   maxRetries: Int = 16): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version to rename in"))
+                   from: String, to: String): Long =
+    onHead(spark, root, "renameColumn") { base =>
       val logicalNames = readResolved(spark, root, base).columns.toSet
       require(logicalNames.contains(from),
         s"no column `$from` in $root (have: ${logicalNames.mkString(", ")})")
@@ -1935,27 +1866,16 @@ object Snapshot {
           s"rename of `$from` refused: CHECK constraint `$n` ($e) " +
             "references it — drop the constraint first")
       }
-      if (claimVersion(spark, root, base + 1)) {
-        val next = base + 1
-        fsOf(spark, new org.apache.hadoop.fs.Path(root))
-          .mkdirs(new org.apache.hadoop.fs.Path(root, s"v=$next"))
-        writeManifestAndStats(spark, root, next, base,
-          fileInventory(spark, root, base).map(_._1))
+      Some { next =>
+        carryAll(spark, root, base, next)
         val phys = physicalOf(spark, root, base, from)
         val composed = columnMapOf(spark, root, base)
           .filterNot(_._1 == phys) :+ (phys -> to)
         // identity entries (renamed back to the physical name) drop out
         writeColumnMap(spark, root, next,
           composed.filterNot(p => p._1 == p._2))
-        if (pointerAdvance(spark, root, next)) return next
-      } else {
-        if (awaitAdvance(spark, root, base)) attempt -= 1
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"renameColumn on $root did not win a claim in $maxRetries attempts")
-  }
 
   private val DroppedDir = "_dropped"
 
@@ -2003,13 +1923,8 @@ object Snapshot {
     * is an ordinary add-column evolution with NULLs for kept rows.
     * Refused when the column is missing, is the table's last column,
     * or an active CHECK constraint references it. */
-  def dropColumn(spark: SparkSession, root: String, colName: String,
-                 maxRetries: Int = 16): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version to drop from"))
+  def dropColumn(spark: SparkSession, root: String, colName: String): Long =
+    onHead(spark, root, "dropColumn") { base =>
       val resolved = readResolved(spark, root, base)
       val logicalNames = resolved.columns.toSet
       require(logicalNames.contains(colName),
@@ -2029,12 +1944,8 @@ object Snapshot {
           bloomColsOf(spark, root, base)).contains(physKey),
         s"drop of `$colName` refused: it keys the data-skipping index " +
           "— recommit with different stats columns first")
-      if (claimVersion(spark, root, base + 1)) {
-        val next = base + 1
-        fsOf(spark, new org.apache.hadoop.fs.Path(root))
-          .mkdirs(new org.apache.hadoop.fs.Path(root, s"v=$next"))
-        writeManifestAndStats(spark, root, next, base,
-          fileInventory(spark, root, base).map(_._1))
+      Some { next =>
+        carryAll(spark, root, base, next)
         val cmap = columnMapOf(spark, root, base)
         val phys = physicalOf(spark, root, base, colName)
         // the base's PHYSICAL schema (logical fields mapped back
@@ -2050,15 +1961,8 @@ object Snapshot {
         // the mapping entry (if any) retires with the column
         writeColumnMap(spark, root, next, cmap.filterNot(_._1 == phys))
         writeDropped(spark, root, next, droppedOf(spark, root, base) + phys)
-        if (pointerAdvance(spark, root, next)) return next
-      } else {
-        if (awaitAdvance(spark, root, base)) attempt -= 1
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"dropColumn on $root did not win a claim in $maxRetries attempts")
-  }
 
   /** Manifest-referenced APPEND: commit `df` as NEW files while every
     * existing file rides into the new version by reference — an
@@ -2070,128 +1974,123 @@ object Snapshot {
     * an empty table degrades to a plain [[commit]]. Note appends are
     * ADDITIVE by contract: same-key rows accumulate (use
     * [[mergeCommit]] for upsert semantics). */
-  def appendCommit(df: DataFrame, root: String,
-                   maxRetries: Int = 16): Long = {
+  def appendCommit(df: DataFrame, root: String): Long = {
     val spark = df.sparkSession
     var attempt = 0
-    while (attempt < maxRetries) {
-      currentVersion(spark, root) match {
-        case None =>
-          // The empty-table bootstrap must ALSO serialize through the
-          // claim: two appends racing here as blind [[commit]]s would
-          // each land a full-replace version (v=1, v=2) and the pointer
-          // would end on ONE batch — the other silently lost despite
-          // append's additive contract. Claim the first version
-          // ourselves; a lost claim waits for the winner's pointer swap
-          // and re-enters the loop, which then sees Some(base) and
-          // appends on top of it.
-          val next = observedMax(spark, root) + 1
-          if (claimVersion(spark, root, next)) {
-            df.write.mode("overwrite").parquet(s"$root/v=$next")
-            writeSchema(spark, root, next, df.schema)
-            // Publish is a strict CAS against the EMPTY table: when
-            // `next > 1` this claim sits ahead of other claimants still
-            // mid-bootstrap, and one of them can publish between our
-            // None observation and our swap. An unconditional advance
-            // then replaced their batch with ours — silent loss under a
-            // perfectly contiguous version history (caught by the
-            // two-JVM SnapshotRace soak). On CAS failure the table is
-            // no longer empty: UPGRADE this commit in place to an
-            // append — we still hold the claim on `next`, the data dir
-            // is written, so carry the now-current head's inventory and
-            // CAS against that head; re-carry if it moves again (each
-            // retry means a version below `next` published — finite).
-            var outcome = 0L // >0: committed; <0: out-versioned
-            while (outcome == 0L) {
-              currentVersion(spark, root) match {
-                case None =>
-                  if (pointerAdvance(spark, root, next, expectedPrev = 0L))
-                    outcome = next
-                  // else a concurrent bootstrap published: loop — the
-                  // re-read sees Some and upgrades to an append
-                case Some(base2) if base2 < next =>
-                  // The data dir was written from RAW df (the
-                  // bootstrap assumed an empty table). If the
-                  // now-current head carries a column map or
-                  // tombstones, these files hold LOGICAL names the
-                  // head's physical schema may not match, and the
-                  // tombstone guard never ran — release the claim and
-                  // dir and retry through the normal Some(base) append
-                  // arm, which renames via toPhysical and enforces the
-                  // guard before writing.
-                  if (columnMapOf(spark, root, base2).nonEmpty
-                      || droppedOf(spark, root, base2).nonEmpty) {
-                    val fs = fsOf(spark,
-                      new org.apache.hadoop.fs.Path(root))
-                    fs.delete(
-                      new org.apache.hadoop.fs.Path(root, s"v=$next"), true)
-                    fs.delete(new org.apache.hadoop.fs.Path(root,
-                      s"$ClaimsDir/$next"), false)
-                    outcome = -1L
-                  } else {
-                    enforceOrRelease(spark, root, next, base2)
-                    writeManifestAndStats(spark, root, next, base2,
-                      fileInventory(spark, root, base2).map(_._1))
-                    if (pointerAdvance(spark, root, next,
-                        expectedPrev = base2))
-                      outcome = next
-                    // else the head moved again — re-carry from it
-                  }
-                case Some(_) =>
-                  // the pointer PASSED our claim while we wrote (a
-                  // later claimant's CAS won): this version can never
-                  // publish — abandon (orphan dir + decided claim are
-                  // vacuum's to clean) and retry on the new head
-                  outcome = -1L
-              }
-            }
-            if (outcome > 0L) return outcome
-          } else {
-            val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-            while (currentVersion(spark, root).isEmpty
-                   && System.nanoTime() < deadline) Thread.sleep(20)
-          }
-        case Some(base) =>
-          // tombstone guard (see [[dropColumn]]): a batch whose
-          // physical names include a dropped column would make the
-          // merged schema resurrect carried files' old values. Only
-          // names ABSENT from the base's live schema are refused — a
-          // [[restore]] to a pre-drop version puts the column back in
-          // the schema, and appending it there is consistent (carried
-          // files all hold real values again).
-          val physBatch = toPhysical(df, columnMapOf(spark, root, base))
-          val livePhys = schemaOf(spark, root, base)
-            .map(_.fieldNames.toSet)
-            .getOrElse {
-              val byLogical =
-                columnMapOf(spark, root, base).map(_.swap).toMap
-              readResolved(spark, root, base).columns
-                .map(c => byLogical.getOrElse(c, c)).toSet
-            }
-          val revived = physBatch.columns.toSet
-            .intersect(droppedOf(spark, root, base)) -- livePhys
-          require(revived.isEmpty,
-            s"append to $root refused: column(s) ${revived.mkString(", ")} " +
-              "were dropped and their physical names are retired — " +
-              "use a fresh logical name")
-          if (claimVersion(spark, root, base + 1)) {
-            val next = base + 1
-            val carried = fileInventory(spark, root, base).map(_._1)
-            // column mapping: logical batch → frozen physical names
-            physBatch.write.mode("overwrite").parquet(s"$root/v=$next")
-            // enforce on the APPENDED files only — carried rows were
-            // validated by the commits that wrote them
-            enforceOrRelease(spark, root, next, base)
-            writeManifestAndStats(spark, root, next, base, carried)
-            if (pointerAdvance(spark, root, next)) return next
-          } else {
-            if (awaitAdvance(spark, root, base)) attempt -= 1
-          }
+    while (currentVersion(spark, root).isEmpty) {
+      if (attempt == CommitAttempts) throw lostClaims("appendCommit", root)
+      bootstrapAppend(df, root) match {
+        case Some(v) => return v
+        case None => attempt += 1
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"appendCommit to $root did not win a claim in $maxRetries attempts")
+    onHead(spark, root, "appendCommit") { base =>
+      // tombstone guard (see [[dropColumn]]): a batch whose
+      // physical names include a dropped column would make the
+      // merged schema resurrect carried files' old values. Only
+      // names ABSENT from the base's live schema are refused — a
+      // [[restore]] to a pre-drop version puts the column back in
+      // the schema, and appending it there is consistent (carried
+      // files all hold real values again).
+      val physBatch = toPhysical(df, columnMapOf(spark, root, base))
+      val livePhys = schemaOf(spark, root, base)
+        .map(_.fieldNames.toSet)
+        .getOrElse {
+          val byLogical =
+            columnMapOf(spark, root, base).map(_.swap).toMap
+          readResolved(spark, root, base).columns
+            .map(c => byLogical.getOrElse(c, c)).toSet
+        }
+      val revived = physBatch.columns.toSet
+        .intersect(droppedOf(spark, root, base)) -- livePhys
+      require(revived.isEmpty,
+        s"append to $root refused: column(s) ${revived.mkString(", ")} " +
+          "were dropped and their physical names are retired — " +
+          "use a fresh logical name")
+      Some { next =>
+        val carried = fileInventory(spark, root, base).map(_._1)
+        // column mapping: logical batch → frozen physical names
+        physBatch.write.mode("overwrite").parquet(s"$root/v=$next")
+        // enforce on the APPENDED files only — carried rows were
+        // validated by the commits that wrote them
+        enforceWritten(spark, root, next, base)
+        writeManifestAndStats(spark, root, next, base, carried)
+      }
+    }
+  }
+
+  /** One attempt at the empty-table bootstrap of [[appendCommit]]: the
+    * committed version, or None when the attempt lost (the caller
+    * re-reads the head, and appends on top of it once one exists).
+    *
+    * The bootstrap must ALSO serialize through the claim: two appends
+    * racing here as blind [[commit]]s would each land a full-replace
+    * version (v=1, v=2) and the pointer would end on ONE batch — the
+    * other silently lost despite append's additive contract. Claim the
+    * first version ourselves; a lost claim waits for the winner's
+    * pointer swap. */
+  private def bootstrapAppend(df: DataFrame, root: String): Option[Long] = {
+    val spark = df.sparkSession
+    val next = observedMax(spark, root) + 1
+    if (claimVersion(spark, root, next)) {
+      df.write.mode("overwrite").parquet(s"$root/v=$next")
+      writeSchema(spark, root, next, df.schema)
+      // Publish is a strict CAS against the EMPTY table: when
+      // `next > 1` this claim sits ahead of other claimants still
+      // mid-bootstrap, and one of them can publish between our
+      // None observation and our swap. An unconditional advance
+      // then replaced their batch with ours — silent loss under a
+      // perfectly contiguous version history (caught by the
+      // two-JVM SnapshotRace soak). On CAS failure the table is
+      // no longer empty: UPGRADE this commit in place to an
+      // append — we still hold the claim on `next`, the data dir
+      // is written, so carry the now-current head's inventory and
+      // CAS against that head; re-carry if it moves again (each
+      // retry means a version below `next` published — finite).
+      while (true) {
+        currentVersion(spark, root) match {
+          case None =>
+            if (pointerAdvance(spark, root, next, expectedPrev = 0L))
+              return Some(next)
+            // else a concurrent bootstrap published: loop — the
+            // re-read sees Some and upgrades to an append
+          case Some(base2) if base2 < next =>
+            // The data dir was written from RAW df (the
+            // bootstrap assumed an empty table). If the
+            // now-current head carries a column map or
+            // tombstones, these files hold LOGICAL names the
+            // head's physical schema may not match, and the
+            // tombstone guard never ran — release the claim and
+            // dir and retry through the normal append loop,
+            // which renames via toPhysical and enforces the
+            // guard before writing.
+            if (columnMapOf(spark, root, base2).nonEmpty
+                || droppedOf(spark, root, base2).nonEmpty) {
+              releaseClaim(spark, root, next)
+              return None
+            }
+            writeClaimed(spark, root, next)(
+              enforceWritten(spark, root, next, base2))
+            writeManifestAndStats(spark, root, next, base2,
+              fileInventory(spark, root, base2).map(_._1))
+            if (pointerAdvance(spark, root, next, expectedPrev = base2))
+              return Some(next)
+            // else the head moved again — re-carry from it
+          case Some(_) =>
+            // the pointer PASSED our claim while we wrote (a
+            // later claimant's CAS won): this version can never
+            // publish — abandon (orphan dir + decided claim are
+            // vacuum's to clean) and retry on the new head
+            return None
+        }
+      }
+      None // unreachable
+    } else {
+      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+      while (currentVersion(spark, root).isEmpty
+             && System.nanoTime() < deadline) Thread.sleep(20)
+      None
+    }
   }
 
   /** Shared tail of every file-granular commit: write version `next`'s
@@ -2205,9 +2104,8 @@ object Snapshot {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val newDir = new org.apache.hadoop.fs.Path(root, s"v=$next")
-    val newFiles = fsOf(spark, newDir).listStatus(newDir)
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .map(canonFile).toSeq
+    val newStatus = parquetFiles(spark, newDir)
+    val newFiles = newStatus.map(st => canonFile(st.getPath))
     (carriedFiles ++ newFiles).toDF("file").coalesce(1)
       .write.mode("overwrite").parquet(s"$root/$ManifestDir/v=$next")
     // schema evolution: the new version's logical schema is the base's
@@ -2225,21 +2123,10 @@ object Snapshot {
     if (sc.nonEmpty) {
       val carried = spark.read.parquet(s"$root/$StatsDir/v=$base")
         .filter(col("file").isin(carriedFiles: _*))
-      val blooms = bloomColsOf(spark, root, base)
-      val aggs = statsAggs(spark, sc, blooms)
-      // fresh-file stats from footers where eligible (same fast path
-      // as writeStats — appends are the highest-frequency commit
-      // shape, and the scan this replaces reads every appended byte
-      // back); scan fallback otherwise
-      val footerOk = blooms.isEmpty &&
-        spark.conf.getOption("graft.stats.footerFastPath")
-          .forall(_.toBoolean)
       val fresh =
         if (newFiles.isEmpty) carried.limit(0)
-        else (if (footerOk) footerStatsPaths(spark, newFiles, sc) else None)
-          .getOrElse(spark.read.parquet(newFiles: _*)
-            .groupBy(canonMetaPath(input_file_name()).as("file"))
-            .agg(aggs.head, aggs.tail: _*))
+        else freshStats(spark, newDir, newStatus, sc,
+          bloomColsOf(spark, root, base))
       carried.unionByName(fresh).coalesce(1)
         .write.mode("overwrite").parquet(s"$root/$StatsDir/v=$next")
     }
@@ -2290,41 +2177,24 @@ object Snapshot {
     * same way as [[deleteWhere]]'s, so data skipping survives. */
   def compactSmall(spark: SparkSession, root: String,
                    smallBytes: Long = 32L * 1024 * 1024,
-                   targetBytes: Long = 128L * 1024 * 1024,
-                   maxRetries: Int = 16): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version to compact"))
+                   targetBytes: Long = 128L * 1024 * 1024): Long =
+    onHead(spark, root, "compactSmall") { base =>
       val inv = fileInventory(spark, root, base)
       val (small, large) = inv.partition(_._2 < smallBytes)
-      if (small.size <= 1) return base // already compact: no new version
-      if (claimVersion(spark, root, base + 1)) {
-        val next = base + 1
+      // ≤1 small file: already compact, no new version
+      if (small.size <= 1) None else Some { next =>
         val nOut = math.max(1L,
           (small.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
         // coalesce, not repartition: bin-packing needs no shuffle.
         // Recorded schema for the same mixed-generation reason as
         // deleteWhere's rewrite — small files can straddle an
         // add-column evolution boundary.
-        val smallReader = schemaOf(spark, root, base) match {
-          case Some(s) => spark.read.schema(s)
-          case None => spark.read
-        }
-        applyDv(spark, root, base,
-          smallReader.parquet(small.map(_._1): _*)).coalesce(nOut)
+        applyDv(spark, root, base, physReader(spark, root, base)
+            .parquet(small.map(_._1): _*)).coalesce(nOut)
           .write.mode("overwrite").parquet(s"$root/v=$next")
         writeManifestAndStats(spark, root, next, base, large.map(_._1))
-        if (pointerAdvance(spark, root, next)) return next
-      } else {
-        if (awaitAdvance(spark, root, base)) attempt -= 1
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"compactSmall of $root did not win a claim in $maxRetries attempts")
-  }
 
   /** SHALLOW CLONE: materialize a NEW table at `dstRoot` whose first
     * version REFERENCES the source's current files through a manifest —
@@ -2350,45 +2220,36 @@ object Snapshot {
       throw new java.util.NoSuchElementException(
         s"snapshot table $srcRoot has no committed version to clone"))
     val src = readResolved(spark, srcRoot, srcV)
-    var attempts = 0
-    while (true) {
-      val next = observedMax(spark, dstRoot) + 1
+    blindClaim(spark, dstRoot, "shallowClone") { next =>
       require(next == 1L,
         s"shallowClone target $dstRoot already has versions — clone " +
           "into a fresh root")
-      if (claimVersion(spark, dstRoot, next)) {
-        // schema anchor: the v=N directory must exist for the claim /
-        // observedMax protocol; the data rides by reference. The anchor
-        // and recorded schema are PHYSICAL (readResolved presents
-        // logical) — the referenced files only answer to physical names
-        val srcMap = columnMapOf(spark, srcRoot, srcV)
-        val srcPhys = toPhysical(src, srcMap)
-        srcPhys.limit(0).write.mode("overwrite").parquet(s"$dstRoot/v=$next")
-        val carried = fileInventory(spark, srcRoot, srcV).map(_._1)
-        carried.toDF("file").coalesce(1)
-          .write.mode("overwrite").parquet(s"$dstRoot/$ManifestDir/v=$next")
-        writeSchema(spark, dstRoot, next, srcPhys.schema)
-        // the clone inherits the source's column mapping and CHECK
-        // constraints — it must read and gate like the table it mirrors
-        if (srcMap.nonEmpty) writeColumnMap(spark, dstRoot, next, srcMap)
-        val srcCs = checkConstraintsOf(spark, srcRoot, srcV)
-        if (srcCs.nonEmpty) writeConstraintSet(spark, dstRoot, next, srcCs)
-        if (statsColsOf(spark, srcRoot, srcV).nonEmpty)
-          spark.read.parquet(s"$srcRoot/$StatsDir/v=$srcV").coalesce(1)
-            .write.mode("overwrite").parquet(s"$dstRoot/$StatsDir/v=$next")
-        // the clone references the source's files, so it must also
-        // inherit their merge-on-read tombstones or deleted rows would
-        // resurrect on the clone
-        dvOf(spark, srcRoot, srcV).foreach(_.coalesce(1)
-          .write.mode("overwrite").parquet(s"$dstRoot/$DvDir/v=$next"))
-        pointerAdvance(spark, dstRoot, next)
-        return next
-      }
-      attempts += 1
-      if (attempts > 64) throw new IllegalStateException(
-        s"shallowClone to $dstRoot lost the version claim 64 times")
+    } { next =>
+      // schema anchor: the v=N directory must exist for the claim /
+      // observedMax protocol; the data rides by reference. The anchor
+      // and recorded schema are PHYSICAL (readResolved presents
+      // logical) — the referenced files only answer to physical names
+      val srcMap = columnMapOf(spark, srcRoot, srcV)
+      val srcPhys = toPhysical(src, srcMap)
+      srcPhys.limit(0).write.mode("overwrite").parquet(s"$dstRoot/v=$next")
+      val carried = fileInventory(spark, srcRoot, srcV).map(_._1)
+      carried.toDF("file").coalesce(1)
+        .write.mode("overwrite").parquet(s"$dstRoot/$ManifestDir/v=$next")
+      writeSchema(spark, dstRoot, next, srcPhys.schema)
+      // the clone inherits the source's column mapping and CHECK
+      // constraints — it must read and gate like the table it mirrors
+      if (srcMap.nonEmpty) writeColumnMap(spark, dstRoot, next, srcMap)
+      val srcCs = checkConstraintsOf(spark, srcRoot, srcV)
+      if (srcCs.nonEmpty) writeConstraintSet(spark, dstRoot, next, srcCs)
+      if (statsColsOf(spark, srcRoot, srcV).nonEmpty)
+        spark.read.parquet(s"$srcRoot/$StatsDir/v=$srcV").coalesce(1)
+          .write.mode("overwrite").parquet(s"$dstRoot/$StatsDir/v=$next")
+      // the clone references the source's files, so it must also
+      // inherit their merge-on-read tombstones or deleted rows would
+      // resurrect on the clone
+      dvOf(spark, srcRoot, srcV).foreach(_.coalesce(1)
+        .write.mode("overwrite").parquet(s"$dstRoot/$DvDir/v=$next"))
     }
-    -1L // unreachable
   }
 
   /** RESTORE: roll the table back to retained version `toV` as a NEW
@@ -2400,34 +2261,22 @@ object Snapshot {
     * carry from `toV`'s manifest, so data skipping survives. Runs
     * under the claim-exactly-`pointer+1` protocol like every
     * read-modify-write commit. */
-  def restore(spark: SparkSession, root: String, toV: Long,
-              maxRetries: Int = 16): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version to restore"))
-      if (base == toV) return base
-      // fails fast with the retained inventory if toV was vacuumed
-      val target = readVersion(spark, root, toV)
-      if (claimVersion(spark, root, base + 1)) {
-        val next = base + 1
-        // schema anchor: the v=N directory must exist for the
-        // claim/observedMax protocol; the data rides by reference
-        // (physical names — the carried files only answer to those)
-        toPhysical(target, columnMapOf(spark, root, toV)).limit(0)
-          .write.mode("overwrite").parquet(s"$root/v=$next")
-        val carried = fileInventory(spark, root, toV).map(_._1)
-        writeManifestAndStats(spark, root, next, toV, carried)
-        if (pointerAdvance(spark, root, next)) return next
-      } else {
-        if (awaitAdvance(spark, root, base)) attempt -= 1
+  def restore(spark: SparkSession, root: String, toV: Long): Long =
+    onHead(spark, root, "restore") { base =>
+      if (base == toV) None else {
+        // fails fast with the retained inventory if toV was vacuumed
+        val target = readVersion(spark, root, toV)
+        Some { next =>
+          // schema anchor: the v=N directory must exist for the
+          // claim/observedMax protocol; the data rides by reference
+          // (physical names — the carried files only answer to those)
+          toPhysical(target, columnMapOf(spark, root, toV)).limit(0)
+            .write.mode("overwrite").parquet(s"$root/v=$next")
+          val carried = fileInventory(spark, root, toV).map(_._1)
+          writeManifestAndStats(spark, root, next, toV, carried)
+        }
       }
-      attempt += 1
     }
-    throw new IllegalStateException(
-      s"restore of $root did not win a claim in $maxRetries attempts")
-  }
 
   /** Change feed between two retained versions (the lakehouse CDF
     * read): a keyed full-outer join of the `from` and `to` snapshots
@@ -2949,14 +2798,16 @@ object Snapshot {
       .withColumn(genName, expr(s"$baseCol div $bucket"))
       .repartitionByRange(nFiles, col(genName), col(baseCol))
       .sortWithinPartitions(genName, baseCol)
-    val v = commitWithStats(withG, root, Seq(genName))
-    val p = new org.apache.hadoop.fs.Path(root, s"$GenDir/v=$v.json")
-    val out = fsOf(spark, p).create(p, true)
-    try out.write(
-      s"""{"gen":"$genName","base":"$baseCol","bucket":$bucket}"""
-        .getBytes("UTF-8"))
-    finally out.close()
-    v
+    // the rule is written inside the commit, before the pointer swap:
+    // a reader of version v must never resolve an older rule (or none)
+    commitInternal(withG, root, Seq(genName), sidecar = { v =>
+      val p = new org.apache.hadoop.fs.Path(root, s"$GenDir/v=$v.json")
+      val out = fsOf(spark, p).create(p, true)
+      try out.write(
+        s"""{"gen":"$genName","base":"$baseCol","bucket":$bucket}"""
+          .getBytes("UTF-8"))
+      finally out.close()
+    })
   }
 
   /** The generation rule in force at version `v` (nearest at or below,

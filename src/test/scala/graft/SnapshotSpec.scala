@@ -1155,13 +1155,8 @@ class SnapshotSpec extends SparkSuite {
     val root = freshTable()
     def bothAgree(tag: String): Long = {
       val meta = Snapshot.currentRowCount(spark, root)
-      spark.conf.set("graft.count.manifestFastPath", "false")
-      val slow =
-        try Snapshot.currentRowCount(spark, root)
-        finally spark.conf.unset("graft.count.manifestFastPath")
       val scan = Snapshot.readCurrent(spark, root).count()
       assert(meta == scan, s"$tag: metadata count $meta != scan count $scan")
-      assert(slow == scan, s"$tag: kill-switch count $slow != scan $scan")
       meta
     }
     val df = spark.range(0, 500).select(col("id").as("k"),
@@ -1359,5 +1354,99 @@ class SnapshotSpec extends SparkSuite {
       !new java.io.File(root, "_dv/v=2").exists(),
       "vacuum left a dead version's deletion vector behind")
     assert(Snapshot.readCurrent(spark, root).count() == 89L)
+  }
+
+  test("commitGenerated writes its rule before the pointer swap") {
+    val root = freshTable()
+    Snapshot.commit(spark.range(0, 10).select(col("id").as("k")), root)
+    // a plain file where the rule directory belongs: the rule write fails
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_gencol"),
+      "not a directory".getBytes("UTF-8"))
+    intercept[java.io.IOException] {
+      Snapshot.commitGenerated(spark.range(0, 10).select(col("id").as("k")),
+        root, "k", 1000L, "kb", nFiles = 2)
+    }
+    // the version whose rule never landed was never published
+    assert(Snapshot.currentVersion(spark, root).contains(1L))
+  }
+
+  test("every read-modify-write commit: an empty table throws and claims " +
+      "nothing; a table advances by exactly one version or stays put") {
+    import spark.implicits._
+    def table(): String = {
+      val root = freshTable()
+      Snapshot.commitWithStats(spark.range(0, 200)
+        .select(col("id").as("k"), (col("id") % 7).as("v"),
+          (col("id") % 3).as("w"))
+        .repartitionByRange(4, col("k")).sortWithinPartitions("k"),
+        root, Seq("k"))
+      root
+    }
+    def exists(root: String, rel: String): Boolean =
+      new java.io.File(root, rel).exists()
+    val none: String => Unit = _ => ()
+    // (entry point, set-up on the committed table, call, advances?)
+    val cases: Seq[(String, String => Unit, String => Long, Boolean)] = Seq(
+      ("compact", none, r => Snapshot.compact(spark, r), true),
+      ("mergeCommit", none, r => Snapshot.mergeCommit(spark, r,
+        Seq((5L, 99L, 0L)).toDF("k", "v", "w"), "k"), true),
+      ("deleteWhere", none,
+        r => Snapshot.deleteWhere(spark, r, "k", lit(10L), lit(20L)), true),
+      ("deleteWhereMor", none,
+        r => Snapshot.deleteWhereMor(spark, r, col("k") < 5), true),
+      ("purgeDv", none, r => Snapshot.purgeDv(spark, r), false),
+      ("purgeDv", r => Snapshot.deleteWhereMor(spark, r, col("k") < 5),
+        r => Snapshot.purgeDv(spark, r), true),
+      ("addCheckConstraint", none,
+        r => Snapshot.addCheckConstraint(spark, r, "v_ok", "v >= 0"), true),
+      ("dropCheckConstraint",
+        r => Snapshot.addCheckConstraint(spark, r, "v_ok", "v >= 0"),
+        r => Snapshot.dropCheckConstraint(spark, r, "v_ok"), true),
+      ("renameColumn", none,
+        r => Snapshot.renameColumn(spark, r, "v", "v2"), true),
+      ("dropColumn", none, r => Snapshot.dropColumn(spark, r, "w"), true),
+      ("appendCommit", none, r => Snapshot.appendCommit(
+        Seq((500L, 1L, 1L)).toDF("k", "v", "w"), r), true),
+      ("compactSmall", none, r => Snapshot.compactSmall(spark, r), true),
+      ("compactSmall", none,
+        r => Snapshot.compactSmall(spark, r, smallBytes = 1L), false),
+      ("restore", none, r => Snapshot.restore(spark, r, 1L), false),
+      ("restore", r => Snapshot.deleteWhereMor(spark, r, col("k") < 5),
+        r => Snapshot.restore(spark, r, 1L), true))
+    assert(cases.map(_._1).distinct.size == 12)
+    cases.foreach { case (name, setup, call, advances) =>
+      // empty root: the head read fails before any claim. appendCommit
+      // is the exception by contract — it bootstraps the first version
+      val empty = freshTable() + "/empty"
+      if (name == "appendCommit")
+        assert(call(empty) == 1L, s"$name: bootstrap did not land v=1")
+      else {
+        intercept[java.util.NoSuchElementException](call(empty))
+        assert(!exists(empty, "_claims/1") && !exists(empty, "v=1"),
+          s"$name left a claim or version behind on an empty table")
+      }
+      // committed table
+      val root = table()
+      setup(root)
+      val head = Snapshot.currentVersion(spark, root).get
+      val got = call(root)
+      assert(Snapshot.currentVersion(spark, root).contains(got))
+      if (!advances) {
+        assert(got == head, s"$name: no-op moved the head $head → $got")
+        assert(!exists(root, s"_claims/${head + 1}") &&
+          !exists(root, s"v=${head + 1}"), s"$name: no-op claimed a version")
+      } else {
+        assert(got == head + 1, s"$name: $head → $got, expected head+1")
+        Seq(s"v=$got", s"_history/v=$got", s"_stats/v=$got").foreach { a =>
+          assert(exists(root, a), s"$name: $a missing after the commit")
+        }
+        // every commit but the self-contained full rewrite names its
+        // files through a file manifest
+        if (name != "compact")
+          assert(exists(root, s"_manifest/v=$got"), s"$name: no manifest")
+        // every file the new version names is readable
+        Snapshot.readCurrent(spark, root).count()
+      }
+    }
   }
 }
