@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.sum
 
 /** Driver-contract benchmark: one JSON line with per-query seconds over
   * `SPARK_GRAFT_SF_DIR`. Also replicates the reference's
@@ -11,23 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // The fixture contract is ONE parquet file per table, so the
-      // default 128 MB split size hands an 80 MB sf1 lineitem scan to a
-      // single core while 31 idle (measured: TPC-H Q7 12.3 s → 3.7 s
-      // just from re-splitting). 8 MB ≈ 2-3 splits per core at sf1. A
-      // real deployment gets scan parallelism from file COUNT and
-      // should keep the default; this sizes the single-file case per
-      // SURVEY §7.5 (split size vs executor memory at target SF).
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(graft.util.LocalSession.envCpus(4))
     // Streaming state width is a DEPLOYMENT property (state volume),
     // not code — the soak runs override it per scale (the sf10 x13a
     // diagnosis: 10M dedup keys through the fixture-sized 8 partitions)
@@ -53,35 +41,19 @@ object Bench {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
 
-    // Per-query shuffle/spill accounting: a SparkListener summing task
-    // metrics turns the static plan audits (PLANS.md) into MEASURED
-    // shuffle volume — the next super-linear diagnosis is one
-    // field-read instead of a re-run. Task-end events are delivered
-    // async on the listener bus; queries execute synchronously
-    // (count() returns after all tasks finish), so at a snapshot only
-    // the last few straggler events can misattribute to the NEXT
-    // query — noise of a few tasks, irrelevant at MB granularity.
-    val ioShufRead = new java.util.concurrent.atomic.AtomicLong
-    val ioShufWrite = new java.util.concurrent.atomic.AtomicLong
-    val ioSpill = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = e.taskMetrics
-          if (m != null) {
-            ioShufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            ioShufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            ioSpill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-          }
-        }
-      })
-    def ioSnapshot(): (Long, Long, Long) =
-      (ioShufRead.get, ioShufWrite.get, ioSpill.get)
+    // Per-query shuffle/spill accounting ([[TaskTotals]]): turns the
+    // static plan audits (PLANS.md) into MEASURED shuffle volume — the
+    // next super-linear diagnosis is one field-read instead of a re-run.
+    // Task-end events are delivered async on the listener bus; queries
+    // execute synchronously (count() returns after all tasks finish), so
+    // at a snapshot only the last few straggler events can misattribute
+    // to the NEXT query — noise of a few tasks, irrelevant at MB
+    // granularity.
+    val totals = new TaskTotals
+    spark.sparkContext.addSparkListener(totals)
 
-    // Calibration probe: a FIXED-shape job (20M-row range scan → modular
-    // key → hash aggregate over ~100k keys → tiny shuffle), independent
-    // of SPARK_GRAFT_SF_DIR, timed at bench start AND end (median of 3
+    // Calibration probe ([[probeFrame]]), independent of
+    // SPARK_GRAFT_SF_DIR, timed at bench start AND end (median of 3
     // each). The bench box is shared, and totals historically swing >2×
     // under contention with no code change (BENCH_NOTES round-2/4/6
     // caveats); the probe pins what the box was actually delivering
@@ -103,10 +75,7 @@ object Bench {
     def gcMs(): Long = gcBeans.map(_.getCollectionTime).sum
     def probeOnce(): (Double, Long) = {
       val g0 = gcMs()
-      val t = sec(spark.range(0L, 20000000L, 1L, 32)
-        .selectExpr("id % 99991 AS k", "id AS v")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
-        .selectExpr("count(*)", "sum(k)").collect())
+      val t = sec(probeFrame(spark).collect())
       (t, gcMs() - g0)
     }
     var probeSamples = Vector.empty[Double] // every single-shot sample
@@ -244,7 +213,7 @@ object Bench {
             } else -1.0 // absent marker (dropped from the JSON)
           probeTimeline :+= ((name, ps, pg, pio))
         }
-        val before = ioSnapshot()
+        val before = totals.snapshot()
         val gcBefore = gcMs()
         val t = sec(
           try {
@@ -261,9 +230,9 @@ object Bench {
             errors += name -> e.toString.takeWhile(_ != '\n').take(200)
               .map(c => if (c >= ' ' && c <= '~') c else ' ')
           })
-        val after = ioSnapshot()
-        queryIo :+= ((name, (after._1 - before._1, after._2 - before._2,
-          after._3 - before._3, gcMs() - gcBefore)))
+        val io = totals.snapshot() - before
+        queryIo :+= ((name, (io.shufRead, io.shufWrite, io.spill,
+          gcMs() - gcBefore)))
         val built = graft.util.SessionMemo.drainBuildLog()
           .filter(_._2 >= memoMin)
         memoBuilds ++= built.map { case (k, s) => (k, s, name) }
@@ -537,5 +506,40 @@ object Bench {
     val totalNorm = if (win.pMed > 0) win.total / win.pMed else win.total
     println(s"""{"metric":"total","value":${r2(win.total)},"unit":"sec","queries":$slowest,"queries_probe_norm":$slowestNorm,"n_queries":${win.nQ},"n_errors":${win.nErr},"memo_build_sec":${r2(win.memoTotal)},"cache_create_sec":${r2(win.cc)},"cache_reuse_sec":${r2(win.cr)},"o12_venue_create_sec":${r2(win.oc)},"o12_reuse_read_sec":${r2(win.orr)},"probe_start_sec":${r2(win.pStart)},"probe_end_sec":${r2(win.pEnd)},"probe_median_sec":${r2(win.pMed)},"probe_io_median_sec":${r2(win.pIoMed)},"total_probe_norm":${r2(totalNorm)},"wave_rerun":$waveRerun,"window":"${win.tag}","sf":"$sfDir","detail":"BENCH_FULL.json"}""")
     spark.stop()
+  }
+
+  /** Calibration probe: a FIXED-shape job (20M-row range scan → modular
+    * key → hash aggregate over ~100k keys → tiny shuffle) whose time is
+    * what the box is delivering right now. Runners time its `collect()`
+    * and compare query/probe ratios, not raw seconds. */
+  def probeFrame(spark: SparkSession): DataFrame =
+    spark.range(0L, 20000000L, 1L, 32)
+      .selectExpr("id % 99991 AS k", "id AS v")
+      .groupBy("k").agg(sum("v"))
+      .selectExpr("count(*)", "sum(k)")
+
+  /** Running totals of the finished tasks' metrics, in bytes and ns. */
+  final case class TaskSums(shufRead: Long, shufWrite: Long, spill: Long,
+                            cpuNs: Long, runNs: Long) {
+    def -(o: TaskSums): TaskSums = TaskSums(shufRead - o.shufRead,
+      shufWrite - o.shufWrite, spill - o.spill, cpuNs - o.cpuNs,
+      runNs - o.runNs)
+  }
+
+  /** Listener summing every finished task's shuffle, spill and CPU. */
+  final class TaskTotals extends SparkListener {
+    private val shufRead, shufWrite, spill, cpuNs, runNs = new AtomicLong
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      val m = e.taskMetrics
+      if (m != null) {
+        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
+        cpuNs.addAndGet(m.executorCpuTime)
+        runNs.addAndGet(m.executorRunTime * 1000000L)
+      }
+    }
+    def snapshot(): TaskSums = TaskSums(shufRead.get, shufWrite.get,
+      spill.get, cpuNs.get, runNs.get)
   }
 }

@@ -1,16 +1,32 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Generates `PLANS.md`: the physical plans of the headline queries in
-  * `explain("formatted")` form, each annotated with the scale property
-  * the plan must (and does) exhibit. PlanSpec asserts these properties
-  * mechanically; this artifact makes them REVIEWABLE — a reader can
-  * check the PushedFilters, the exchange count, and the codegen spans
-  * without building the repo.
+/** Plan dev tool, three modes over one factory session
+  * (`SPARK_GRAFT_CPUS` wide, default 8):
   *
-  * Usage: `runMain graft.PlanDump [sfDir] [outFile]`.
+  *  - `md [sfDir] [outFile]` generates `PLANS.md`: the physical plans
+  *    of the headline queries in `explain("formatted")` form, each
+  *    annotated with the scale property the plan must (and does)
+  *    exhibit. PlanSpec asserts these properties mechanically; this
+  *    artifact makes them REVIEWABLE — a reader can check the
+  *    PushedFilters, the exchange count, and the codegen spans without
+  *    building the repo.
+  *  - `audit [sfDir] [name,name,...]` prints the shuffle/broadcast shape
+  *    of every query's physical plan — the at-a-glance check for "did
+  *    this operator keep its scale shape" (exchanges that appear
+  *    unexpectedly, single-partition stages, joins that fell off
+  *    broadcast). Counts only. Plans print BEFORE execution, so under
+  *    AQE the codegen stars (`*(n)`) are not yet annotated — codegen=0
+  *    means "not finalized", not "interpreted".
+  *  - `snap <sfDir> <outDir> <suffix> <q1> <q2> ...` writes each plan
+  *    to `<outDir>/<q>_<suffix>.txt` — the committed before/after
+  *    record of an optimization round (`plans/rN/`).
+  *
+  * Usage: `runMain graft.PlanDump md|audit|snap ...`.
   */
 object PlanDump {
 
@@ -202,21 +218,52 @@ object PlanDump {
         "sessions with end_us ≤ (max_us div 1000 − delay_ms) · 1000 " +
         "(Spark's ms-truncated watermark), oracle-checked per run."))
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val outFile = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  // Plan-only forms, used in place of the query of the same name: a
+  // query whose returned frame is an eager checkpoint (plan = RDD scan)
+  // hides its real physical plan, and the staged BUILD relations the
+  // queries scan as checkpoints show their shuffle/join shape only
+  // un-memoized.
+  private val planOnly: Map[String, (SparkSession, String) => DataFrame] =
+    Map(
+      "x15w_sql_recursive" -> ((s, d) =>
+        graft.operators.SqlApi.recursiveReachPlanOnly(s, d)),
+      "build_ngram_prefix" -> ((s, d) =>
+        graft.operators.Dedup.ngramJaccardBuild(s, d,
+          strategy = graft.operators.Dedup.PrefixFilter,
+          materialize = false)),
+      "build_ngram_countjoin" -> ((s, d) =>
+        graft.operators.Dedup.ngramJaccardBuild(s, d,
+          materialize = false)))
 
+  private def frame(spark: SparkSession, sfDir: String,
+                    name: String): DataFrame =
+    planOnly.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  def main(argv: Array[String]): Unit = {
+    val mode = argv.headOption.getOrElse("")
+    require(Set("md", "audit", "snap")(mode),
+      "usage: PlanDump md [sfDir] [outFile] | audit [sfDir] [names] | " +
+        "snap <sfDir> <outDir> <suffix> <query>...")
+    val args = argv.drop(1)
+    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val spark = graft.util.LocalSession(graft.util.LocalSession.envCpus(8))
+    mode match {
+      case "md"    => markdown(spark, sfDir, args.lift(1).getOrElse("PLANS.md"))
+      case "audit" => audit(spark, sfDir, args.lift(1).map(_.split(",").toSet))
+      case "snap"  => snap(spark, sfDir, args(1), args(2), args.drop(3).toSeq)
+    }
+    spark.stop()
+  }
+
+  private def markdown(spark: SparkSession, sfDir: String,
+                       outFile: String): Unit = {
     val sb = new StringBuilder
     sb ++= s"""# PLANS — physical plans of the headline queries
                |
-               |Generated by `runMain graft.PlanDump $sfDir` (re-run after
+               |Generated by `runMain graft.PlanDump md $sfDir` (re-run after
                |any operator change; PlanSpec asserts the load-bearing
                |properties mechanically, this file is the human-readable
                |record). Read each plan bottom-up: scans → exchanges →
@@ -233,22 +280,46 @@ object PlanDump {
                |  generated code (custom expressions here implement
                |  `doGenCode`).
                |""".stripMargin
-
-    // queries whose returned frame is an eager checkpoint (plan = RDD
-    // scan) expose a plan-only form so the real physical plan stays on
-    // the record
-    val planOnly: Map[String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame] = Map(
-      "x15w_sql_recursive" ->
-        ((s, d) => graft.operators.SqlApi.recursiveReachPlanOnly(s, d)))
     picks.foreach { case (name, note) =>
-      val df = planOnly.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
-      val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val plan = formatted(frame(spark, sfDir, name))
       sb ++= s"\n## $name\n\n$note\n\n```\n$plan```\n"
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      sb.toString.getBytes("UTF-8"))
+    Files.write(Paths.get(outFile), sb.toString.getBytes("UTF-8"))
     println(s"wrote $outFile (${picks.size} plans)")
-    spark.stop()
+  }
+
+  private def audit(spark: SparkSession, sfDir: String,
+                    only: Option[Set[String]]): Unit = {
+    def count(hay: String, needle: String): Int =
+      hay.sliding(needle.length).count(_ == needle)
+    SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.forall(_.contains(name)))
+      .foreach { name =>
+        try {
+          val p = frame(spark, sfDir, name).queryExecution.executedPlan.toString
+          println(f"$name%-26s shuffle=${count(p, "Exchange hashpartitioning")}%2d " +
+            f"single=${count(p, "Exchange SinglePartition")}%2d " +
+            f"bcast=${count(p, "BroadcastExchange")}%2d " +
+            f"smj=${count(p, "SortMergeJoin")}%2d " +
+            f"bhj=${count(p, "BroadcastHashJoin")}%2d " +
+            f"codegen=${count(p, "*(")}%2d")
+        } catch {
+          case e: Throwable =>
+            println(f"$name%-26s PLAN FAILED: ${e.getMessage}")
+        }
+      }
+  }
+
+  private def snap(spark: SparkSession, sfDir: String, outDir: String,
+                   suffix: String, names: Seq[String]): Unit = {
+    val out = Paths.get(outDir)
+    Files.createDirectories(out)
+    names.foreach { name =>
+      val t0 = System.nanoTime()
+      val plan = formatted(frame(spark, sfDir, name))
+      val dt = (System.nanoTime() - t0) / 1e9
+      Files.write(out.resolve(s"${name}_$suffix.txt"), plan.getBytes("UTF-8"))
+      println(f"[plansnap] $name ($dt%.1f s) -> ${name}_$suffix.txt")
+    }
   }
 }

@@ -224,8 +224,7 @@ object Similarity {
     */
   private[operators] def bandedBuckets(spark: SparkSession, sfDir: String,
                                        planes: Int, bands: Int,
-                                       extraBits: Int = 0,
-                                       wide: Boolean = false): DataFrame = {
+                                       extraBits: Int = 0): DataFrame = {
     require(planes % bands == 0, "bands must divide planes")
     val perBand = planes / bands
     graft.plans.QuantizedDot.register(spark)
@@ -250,15 +249,8 @@ object Similarity {
     val pCols = (0 until planes + extraBits).map(j =>
       call_function(graft.plans.QuantizedDot.name,
         col("embedding"), lit(wvec(j))).as(s"p$j"))
-    // BUILD callers (refinedBuckets) widen the scan when row groups
-    // cap it below the derived width — the projection is the ~630
-    // µs/row hot loop; query callers keep the exchange-free shape
-    val src = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val srcW =
-      if (wide) widenedForBuild(src, spark, sfDir, vecBuildWidth(spark, sfDir))
-      else src
-    val withP = srcW.select(col("vec_id") +: pCols: _*)
+    val withP = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id") +: pCols: _*)
     val bandStructs = (0 until bands).map { b =>
       val key = (0 until perBand).map { r =>
         val j = b * perBand + r
@@ -325,20 +317,12 @@ object Similarity {
     graft.util.SessionMemo.memoized(spark,
         s"lshRefined|$sfDir|$planes|$bands") {
      vecScoped(spark, sfDir) {
-      // wide = off by default DELIBERATELY (r14, measured): widening
-      // this projection cut the build 80 → 62 s at sf10 but the
-      // downstream payload self-join (embeddingNearDup's SMJ over the
-      // bucket checkpoint) went 11 → 36 s with 4.5× the shuffle bytes
-      // — the scattered checkpoint order costs the query side more
-      // than the wide build saves (net wall flat, CPU ×4). The IVF
-      // staged-index builds keep the widen (measured −29% wall, §5).
-      // `graft.lsh.wide=true` arms the wide build PLUS a vec_id
-      // key-lay of the final checkpoint (the order-restoration
-      // experiment — results identical either way: the relation is
-      // consumed by key joins and the emitted queries re-sort).
-      val wide = spark.conf.getOption("graft.lsh.wide").exists(_.toBoolean)
+      // the projection scan is NOT widened like the IVF builds: a wide
+      // build here measured wall-flat at ~4x task CPU, because the
+      // scattered checkpoint order costs the payload self-join in
+      // embeddingNearDup more than the build saves (OPTIMIZATION_r14 §5)
       var cur = bandedBuckets(spark, sfDir, planes, bands,
-          extraBits = LshMaxExtraBits, wide = wide)
+          extraBits = LshMaxExtraBits)
         .select(col("vec_id"), col("band"), col("bandkey"), col("xkey"),
           lit(0L).as("sub"), lit(0).as("used"))
         .localCheckpoint()
@@ -370,14 +354,7 @@ object Similarity {
           round += 1
         }
       }
-      val out = cur.select("vec_id", "band", "bandkey", "sub")
-      // key-lay the signature table when the wide build scattered it
-      // (~50 MB of 4-long rows at sf10 — cheap next to the payload
-      // self-join whose map-side compressibility it restores)
-      if (wide)
-        out.repartitionByRange(vecBuildWidth(spark, sfDir), col("vec_id"))
-          .sortWithinPartitions("vec_id")
-      else out
+      cur.select("vec_id", "band", "bandkey", "sub")
      }
     }
 
@@ -409,57 +386,25 @@ object Similarity {
     // cheap side of the trade; the distinct is unchanged because the
     // score is deterministic per pair.
     //
-    // Physical-strategy switch (`graft.neardup.strategy`, r14 A/B —
-    // VERDICT r13 #4): the payload-carrying bucket join's residual
-    // cost at sf100 is the EXTERNAL SORTS feeding the sort-merge join
-    // — corpus×bands rows × 64-dim payload per side (25-35 GB spill).
-    //  - "smj" (default): the standing r11 shape above.
-    //  - "hash": same dataflow, but the self-join is a shuffled HASH
-    //    join (no sort of either payload-carrying side; partitions
-    //    are bucket-keyed so each build map holds one partition's
-    //    share and spills row-wise if tight).
-    //  - "light": ids-only candidates through the bucket join (sort
-    //    payload ~3 longs/row), distinct on candidate ids, payloads
-    //    re-joined before the verify-dot — the r11 candidate-mass
-    //    shape, kept A/B-able as the documented losing trade.
-    // All three are value-identical (same verify arithmetic, same
-    // distinct) — NearDupStrategySpec pins it; the bench decomposition
-    // lives in BENCH_NOTES r14.
-    val strategy = spark.conf.getOption("graft.neardup.strategy")
-      .getOrElse("smj")
+    // The join stays a sort-merge join carrying the payload: a shuffled
+    // hash join and an ids-only candidate join with the payloads
+    // re-joined afterwards were both measured no better (the latter
+    // spilled 15.6 GB at sf10; OPTIMIZATION_r14 §3, BENCH_NOTES r14).
     val all = quantized(spark, sfDir)
-    def bucketCond(x: String, y: String) =
-      col(s"$x.band") === col(s"$y.band") &&
-        col(s"$x.bandkey") === col(s"$y.bandkey") &&
-        col(s"$x.sub") === col(s"$y.sub") &&
-        col(s"$x.vec_id") < col(s"$y.vec_id")
-    val pairs = strategy match {
-      case "light" =>
-        val cand = bk.as("x").join(bk.as("y"), bucketCond("x", "y"))
-          .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
-          .distinct()
-        cand
-          .join(all.select(col("vec_id").as("vec_a"),
-            col("embedding").as("ea"), col("n2").as("na")), "vec_a")
-          .join(all.select(col("vec_id").as("vec_b"),
-            col("embedding").as("eb"), col("n2").as("nb")), "vec_b")
-          .select(col("vec_a"), col("vec_b"),
-            VectorOps.cosineFromQ(expr("quantized_dot(ea, eb)"),
-              col("na"), col("nb")).as("cosine"))
-          .filter(col("cosine") >= threshold)
-      case s =>
-        val withEmb = bk.join(all.select(col("vec_id"), col("embedding"),
-          col("n2")), "vec_id")
-        val left = if (s == "hash") withEmb.hint("SHUFFLE_HASH") else withEmb
-        left.as("x").join(withEmb.as("y"), bucketCond("x", "y"))
-          .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
-            VectorOps.cosineFromQ(
-              expr("quantized_dot(x.embedding, y.embedding)"),
-              col("x.n2"), col("y.n2")).as("cosine"))
-          .filter(col("cosine") >= threshold)
-          .distinct()
-    }
-    pairs.orderBy("vec_a", "vec_b")
+    val withEmb = bk.join(all.select(col("vec_id"), col("embedding"),
+      col("n2")), "vec_id")
+    withEmb.as("x").join(withEmb.as("y"),
+        col("x.band") === col("y.band") &&
+          col("x.bandkey") === col("y.bandkey") &&
+          col("x.sub") === col("y.sub") &&
+          col("x.vec_id") < col("y.vec_id"))
+      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
+        VectorOps.cosineFromQ(
+          expr("quantized_dot(x.embedding, y.embedding)"),
+          col("x.n2"), col("y.n2")).as("cosine"))
+      .filter(col("cosine") >= threshold)
+      .distinct()
+      .orderBy("vec_a", "vec_b")
   }
 
   /** X9 semantic dedup (SemDeDup, Abbas et al. 2023): cluster the
@@ -787,7 +732,7 @@ object Similarity {
       // [[graft.plans.CellArgmax]] (same total (score desc, cell asc)
       // tiebreak → same assignment), and the rebuild aggregates the
       // row's OWN qv under it. The old crossJoin → max_by(struct) +
-      // re-join form was the SortAggregate shape AnnBuildProbe caught
+      // re-join form was the SortAggregate shape measured (BENCH_NOTES r13)
       // on the full assignment plane — at 1B-vector geometry (k ≈ 31k
       // cells × the 65k sample) the training fan-out alone would be
       // 2B rows per iteration. An empty sample keeps the empty seed
@@ -1303,7 +1248,7 @@ object Similarity {
   /** Nearest codeword per (vector, subspace) under exact integer L2
     * with a total (dist, cell) tiebreak — a pure MAP job (one
     * [[pqArgminCol]] projection; the broadcast-join fan-out and the
-    * argmin aggregate are gone, AnnBuildProbe/BENCH_NOTES r13). */
+    * argmin aggregate are gone, BENCH_NOTES r13). */
   private[graft] def pqAssign(subs: DataFrame, cb: DataFrame): DataFrame =
     pqArgminCol(cb) match {
       case Some(cell) =>
@@ -1351,7 +1296,7 @@ object Similarity {
       // each Lloyd's iteration is one map + one map-side-combined
       // aggregate (the old assignment join back onto `subs` was a
       // corpus-sized SMJ: 740 MB shuffled per iteration at sf100,
-      // AnnBuildProbe/BENCH_NOTES r13). An empty codebook (empty
+      // BENCH_NOTES r13). An empty codebook (empty
       // corpus) stays empty — iterating is a no-op.
       pqArgminCol(cb).foreach { cell =>
         cb = subs.withColumn("cell", cell)
@@ -1567,8 +1512,8 @@ object Similarity {
     * crossJoin → max_by(struct) plane computed. That plane was a scale
     * defect, not just overhead: max_by's struct ordering key forces
     * SortAggregate, which at sf100 externally sorted the 500M-row
-    * fan-out — 23.7 GB of spill for a 2M-row result (AnnBuildProbe,
-    * BENCH_NOTES r13). The collect is metadata-plane by the same
+    * fan-out — 23.7 GB of spill for a 2M-row result (BENCH_NOTES
+    * r13). The collect is metadata-plane by the same
     * contract that broadcast the cells relation before it (k×dims ≈
     * 128 KB at sf100; a billion-vector corpus at k=√N ≈ 31k cells is
     * ~16 MB — still a driver constant). None for an empty codebook

@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * HashAggregate (struct agg buffers aren't UnsafeRow-mutable), so
   * Spark planned SortAggregate over the fan-out — at sf100 that was a
   * 500M-row, 23.7 GB external sort SPILL for a 2M-row result
-  * (AnnBuildProbe, BENCH_NOTES r13). A codebook is a MODEL — k×dims
+  * (BENCH_NOTES r13). A codebook is a MODEL — k×dims
   * integers, k ≈ √N by [[graft.operators.Similarity.annGeometry]] —
   * so the FAISS-shaped plan is: embed it in the row expression and
   * argmax inline. The fan-out, the aggregate, and the spill all

@@ -19,7 +19,7 @@ import org.apache.spark.sql.types._
   * ([[graft.functions.VectorOps.dotQ]]). Higher-order functions
   * evaluate their lambda INTERPRETED, per element, with two
   * intermediate ArrayData allocations per pair — measured ~7 µs per
-  * 64-dim pair (AnnBuildProbe, BENCH_NOTES r13), which multiplied by
+  * 64-dim pair (BENCH_NOTES r13), which multiplied by
   * the N×k assignment pass made the dot itself the staged-index
   * build's dominant cost. These expressions emit the same arithmetic
   * as a tight primitive loop inside whole-stage codegen: identical

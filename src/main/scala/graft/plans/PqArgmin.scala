@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * copies, and the training loop then JOINED the assignment back to
   * the cached sub-vectors to rebuild centroids — a corpus-sized
   * sort-merge join (740 MB shuffle per Lloyd's iteration at sf100,
-  * AnnBuildProbe/BENCH_NOTES r13) for data the row already had in
+  * BENCH_NOTES r13) for data the row already had in
   * hand. With the codebook embedded, assignment is one projection and
   * the rebuild is `withColumn(cell) → groupBy(sub, cell)` — no join,
   * no fan-out, one map-side-combined aggregate.

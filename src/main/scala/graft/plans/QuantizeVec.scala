@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   * element; quantization fronts every ANN training/assignment plane
   * (2M corpus rows × 64 elements per pass at sf100), so the lambda
   * overhead was a measurable slice of the assignment CPU
-  * (AnnBuildProbe, BENCH_NOTES r13).
+  * (BENCH_NOTES r13).
   *
   * Quantization is `ROUND(v·1e6)` half-away-from-zero — the same
   * `(long)(v·1e6 ± 0.5)` form [[QuantizedDot]] fuses and documents

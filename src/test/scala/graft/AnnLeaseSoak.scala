@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One competing builder PROCESS for [[AnnLeaseSoak]] — a real
   * separate JVM claiming the SHARED staged-ANN index root, because
   * the lease protocol's whole point is cross-PROCESS liveness: an
@@ -17,14 +15,7 @@ import org.apache.spark.sql.SparkSession
 object AnnLeaseSoakBuilder {
   def main(args: Array[String]): Unit = {
     val Array(fixtureDir, staleMs, _) = args.take(3)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-ann-lease-builder")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.LocalSession(4)
     spark.conf.set("graft.ann.leaseStaleMs", staleMs)
     val idx = graft.operators.Similarity.stagedIvfIndex(spark, fixtureDir)
     require(idx.assign.count() > 0)
@@ -86,13 +77,7 @@ object AnnLeaseSoak {
 
   def main(args: Array[String]): Unit = {
     val scenario = args.lift(0).getOrElse("all")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-ann-lease-soak").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.LocalSession(8)
     val run = Seq("slow", "dead")
       .filter(s => scenario == "all" || scenario == s)
     require(run.nonEmpty, s"unknown scenario $scenario")

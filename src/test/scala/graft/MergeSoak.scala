@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.Snapshot
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -25,20 +24,7 @@ import org.apache.spark.sql.types.DecimalType
 object MergeSoak {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // the fixture/venue contract (TESTDATA.md, Bench): 8 MB splits so
-      // a FEW-file read still spreads over the cores — without it the
-      // pruned path's 3-file rewrite ran 3 tasks wide at sf100 while
-      // the full rewrite enjoyed 34 (the r11 first-cut defect)
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(graft.util.LocalSession.envCpus(32))
     spark.range(1000).selectExpr("sum(id)").collect()
 
     // per-job wall profile: each timed leg below prints its slowest
@@ -76,7 +62,7 @@ object MergeSoak {
 
     // Bench's calibration probe between legs: this box's contention
     // waves swing walls ~2-6× (the r12 first sf100 run read the pruned
-    // merge at 98 s where the decomposed MergeProbe pegs the same path
+    // merge at 98 s where a decomposed run pegs the same path
     // at ~18 s) — a leg printed next to an elevated probe is the box,
     // next to a quiet one is the code.
     def probe(): Double = {

@@ -478,4 +478,25 @@ class PlanSpec extends SparkSuite {
     assert(!p.contains("hashpartitioning"),
       s"per-vector quantization must not shuffle:\n$p")
   }
+
+  test("x09f: the bucket self-join is a sort-merge join on (band, bandkey, sub) carrying the embeddings") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val root = SparkEntry.queries("x09f_embedding_dedup")(spark, sf)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case other                    => other
+      }
+    val p = root.toString
+    assert(!p.contains("ShuffledHashJoin"), s"no shuffled hash join:\n$p")
+    val bucketJoins = root.collect {
+      case j: SortMergeJoinExec
+          if j.leftKeys.map(_.references.head.name) == Seq("band", "bandkey", "sub") => j
+    }
+    assert(bucketJoins.size == 1, s"one bucket self-join expected:\n$p")
+    val j = bucketJoins.head
+    assert(j.rightKeys.map(_.references.head.name) == Seq("band", "bandkey", "sub"), p)
+    assert(Seq(j.left, j.right).forall(_.output.exists(_.name == "embedding")),
+      s"both join inputs must already carry the embedding:\n$p")
+  }
 }

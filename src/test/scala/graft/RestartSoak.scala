@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.Streaming
@@ -22,12 +21,7 @@ object RestartSoak {
   def main(args: Array[String]): Unit = {
     val m = if (args.nonEmpty) args(0).toDouble else 1.0
     val keys = (m * 1e6).toLong
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.LocalSession(32)
 
     val srcRoot = java.nio.file.Files.createTempDirectory("graft_rsk_").toString
     val out = java.nio.file.Files.createTempDirectory("graft_rsk_o_").toString

@@ -49,14 +49,9 @@ object ScaleFixtures {
     val src = args(0)
     val dst = args(1)
     val mult = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.LocalSession(32)
+    // the ns-generation fixtures carry events.ts as int64 nanos
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only soak driver (test scope, not product surface): time
   * [[graft.operators.Similarity.semanticDedup]] on an embeddings dir at
   * a given codebook size — the 10× scale soak varies BOTH corpus size
@@ -15,13 +13,7 @@ object SemDedupSoak {
     val dir = args(0)
     val k = args(1).toInt
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.LocalSession(32)
     // rep 1 is cold (trains the codebook); later reps read the session
     // memo, so the delta isolates training from scan+pair cost
     for (i <- 1 to reps) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only soak (test scope): decompose x23b's incremental
   * sessionization into its one-time BASE BUILD and its steady-state
   * REFRESH — the README design table's missing number. The first call
@@ -15,23 +13,11 @@ import org.apache.spark.sql.SparkSession
 object SessionSoak {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/tmp/sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(graft.util.LocalSession.envCpus(32))
     spark.range(1000).selectExpr("sum(id)").collect()
     def probe(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 20000000L, 1L, 32)
-        .selectExpr("id % 99991 AS k", "id AS v")
-        .groupBy("k").agg(org.apache.spark.sql.functions.sum("v"))
-        .selectExpr("count(*)", "sum(k)").collect()
+      Bench.probeFrame(spark).collect()
       (System.nanoTime() - t0) / 1e9
     }
     def sec[T](f: => T): Double = {

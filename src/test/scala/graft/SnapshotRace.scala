@@ -31,14 +31,7 @@ object SnapshotRaceWriter {
     val mode = args.lift(4).getOrElse("append")
     val n = nCommitsS.toInt
     val rows = rowsS.toLong
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName(s"graft-race-writer-$writerId")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.LocalSession(4)
     import graft.operators.Snapshot
     def batch(i: Int, lo: Long, width: Long): DataFrame =
       spark.range(lo, lo + width).select(
@@ -168,17 +161,6 @@ object SnapshotRace {
     }
   }
 
-  private def newSpark(name: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName(name).getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   private def contentOf(spark: SparkSession,
                         root: String): Map[(String, Int), Long] =
     graft.operators.Snapshot.readCurrent(spark, root)
@@ -224,7 +206,7 @@ object SnapshotRace {
     import graft.operators.Snapshot
     val root = java.nio.file.Files
       .createTempDirectory(s"graft_race_${scenario}_").toString
-    val spark = newSpark(s"graft-race-$scenario")
+    val spark = graft.util.LocalSession(8)
     def seedBatch(lo: Long, width: Long): DataFrame =
       spark.range(lo, lo + width).select(
         lit("seed").as("writer"), lit(-1).as("seq"), col("id").as("k"))

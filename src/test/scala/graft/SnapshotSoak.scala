@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Snapshot
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** File-count soak for the snapshot/manifest layer — the scale axis
@@ -18,13 +17,7 @@ object SnapshotSoak {
     val nFiles = args.lift(0).map(_.toInt).getOrElse(1000)
     val rowsPerFile = args.lift(1).map(_.toInt).getOrElse(10000)
     val est = args.lift(2).map(_.toLong).getOrElse(20000L)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.LocalSession(32)
     spark.conf.set("graft.snapshot.bloomEstItems", est.toString)
 
     val n = nFiles.toLong * rowsPerFile

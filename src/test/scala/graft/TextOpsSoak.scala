@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only soak driver (test scope, not product surface): time a set
   * of documents-table queries on an arbitrary fixture dir — used for
   * the 10× vocabulary-rotation scale soaks recorded in BENCH_NOTES.
@@ -12,13 +10,7 @@ object TextOpsSoak {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.util.LocalSession(32)
     val ops: Seq[(String, () => Long)] = Seq(
       "x09a_exact_dedup" ->
         (() => graft.operators.Dedup.exactDedup(spark, dir).count()),
