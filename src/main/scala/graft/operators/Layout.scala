@@ -444,6 +444,108 @@ object Layout {
       org.apache.parquet.HadoopReadOptions.builder(conf, file.getPath)
         .withMetadataFilter(filter).build())
 
+  /** The data files of the parquet at `path` — the file itself, or the
+    * directory's files under Spark's hidden-file rule (`_SUCCESS`,
+    * `.crc` and friends are not data), by name. None when Spark's own
+    * inference must decide: a missing path, no data file, or a
+    * subdirectory (partition discovery). */
+  private def flatDataFiles(spark: SparkSession, path: String)
+      : Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val listed =
+      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(p).toSeq
+      catch { case _: java.io.FileNotFoundException => return None }
+    val data = listed.filter { f =>
+      val n = f.getPath.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }.sortBy(_.getPath.getName)
+    if (data.isEmpty || data.exists(_.isDirectory)) None else Some(data)
+  }
+
+  /** The schema `spark.read.parquet` infers for a file set whose first
+    * data file is `file`: that file's footer, read in-process (no
+    * schema-inference job), through Spark's own footer rule — the
+    * schema a Spark writer embedded, else the converted parquet schema
+    * under the session's conf (`nanosAsLong`, `binaryAsString`, …) —
+    * made nullable, as Spark's file source makes it. */
+  private[graft] def footerSchema(spark: SparkSession,
+      file: org.apache.hadoop.fs.FileStatus)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    import org.apache.spark.sql.types._
+    val reader = openFooter(spark.sparkContext.hadoopConfiguration, file,
+      org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS)
+    val schema =
+      try ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(file.getPath, reader.getFooter),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      finally reader.close()
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), true)
+      case m: MapType =>
+        MapType(nullable(m.keyType), nullable(m.valueType), true)
+      case other => other
+    }
+    nullable(schema).asInstanceOf[StructType]
+  }
+
+  /** [[footerSchema]] of the parquet at `path` (a file or a directory
+    * of part files); Spark's own inference where [[flatDataFiles]]
+    * defers to it. */
+  private[graft] def footerSchema(spark: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType =
+    flatDataFiles(spark, path) match {
+      case Some(files) => footerSchema(spark, files.head)
+      case None => spark.read.parquet(path).schema
+    }
+
+  /** `spark.read.parquet(path)` for metadata-sized parquet (snapshot
+    * sidecars: manifests, stats, deletion vectors, constraint and
+    * column sets) without the two Spark jobs that read costs — schema
+    * inference and the collect. The schema comes from the first data
+    * file's footer ([[footerSchema]]). When the files total at most
+    * one split (`spark.sql.files.maxPartitionBytes`, the rule
+    * [[PartitionCache]] sizes by), Spark's own parquet reader reads
+    * them on the driver into a local relation: Catalyst folds filters
+    * and projections into it and `collect` runs no job. Larger inputs
+    * keep the distributed scan, with the declared schema. */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    flatDataFiles(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(files) =>
+        val schema = footerSchema(spark, files.head)
+        if (files.map(_.getLen).sum > spark.sessionState.conf.filesMaxPartitionBytes)
+          spark.read.schema(schema).parquet(path)
+        else readOnDriver(spark, schema, files)
+    }
+
+  private def readOnDriver(spark: SparkSession,
+                           schema: org.apache.spark.sql.types.StructType,
+                           files: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    import scala.jdk.CollectionConverters._
+    val read = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+        new org.apache.spark.sql.types.StructType(), schema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+    // the converter copies every value out of the reader's reused row
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val rows = files.flatMap { f =>
+      read(PartitionedFile(
+        org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(f.getPath),
+        0L, f.getLen, Array.empty, f.getModificationTime, f.getLen))
+        .map(toRow(_).asInstanceOf[org.apache.spark.sql.Row])
+    }
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
   /** Exact row count of a parquet directory from FOOTERS — metadata
     * only, no data pages, no job. Identical to `df.count()` on the
     * unfiltered table (parquet row counts are exact), so sizing passes

@@ -5,7 +5,6 @@ import graft.sources.Tables
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.SparkException
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.util.control.NonFatal
@@ -106,16 +105,9 @@ object PartitionCache {
     }.sortBy(_.getPath.getName)
     val first = data.headOption.getOrElse(
       throw new Unreadable(s"no data file in $dir"))
-    val conf = spark.sparkContext.hadoopConfiguration
     val footerSchema =
-      try {
-        // the schema needs no row-group metadata
-        val reader = Layout.openFooter(conf, first, org.apache.parquet.format
-          .converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-          .convert(reader.getFileMetaData.getSchema)
-        finally reader.close()
-      } catch { case NonFatal(e) =>
+      try Layout.footerSchema(spark, first)
+      catch { case NonFatal(e) =>
         throw new Unreadable(s"footer of ${first.getPath}", e) }
     val field = footerSchema.find(_.name == ValCol).getOrElse(
       throw new Unreadable(s"${first.getPath} has no $ValCol column"))

@@ -157,7 +157,7 @@ object Snapshot {
       .filter(_ <= v)
     if (vs.isEmpty) Nil
     else {
-      val rows = spark.read.parquet(s"$root/$ConstraintsDir/v=${vs.max}")
+      val rows = Layout.readParquet(spark, s"$root/$ConstraintsDir/v=${vs.max}")
         .select("name", "expr").collect()
       rows.map(r => (r.getString(0), r.getString(1))).toSeq.sortBy(_._1)
     }
@@ -233,7 +233,7 @@ object Snapshot {
       .collect { case n if n.matches("v=\\d+") => n.stripPrefix("v=").toLong }
       .filter(_ <= v)
     if (vs.isEmpty) Nil
-    else spark.read.parquet(s"$root/$ColMapDir/v=${vs.max}")
+    else Layout.readParquet(spark, s"$root/$ColMapDir/v=${vs.max}")
       .select("physical", "logical").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq.sortBy(_._1)
   }
@@ -303,7 +303,7 @@ object Snapshot {
                                    v: Long): Option[Seq[String]] = {
     val p = new org.apache.hadoop.fs.Path(root, s"$ManifestDir/v=$v")
     if (!fsOf(spark, p).exists(p)) None
-    else Some(spark.read.parquet(p.toString)
+    else Some(Layout.readParquet(spark, p.toString)
       .select("file").collect().map(_.getString(0)).toSeq)
   }
 
@@ -848,7 +848,7 @@ object Snapshot {
                           v: Long): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$v")
     if (!fsOf(spark, p).exists(p)) Nil
-    else spark.read.parquet(p.toString).schema.fieldNames.toSeq
+    else Layout.footerSchema(spark, p.toString).fieldNames.toSeq
       .collect { case n if n.startsWith("min_") => n.stripPrefix("min_") }
   }
 
@@ -858,7 +858,7 @@ object Snapshot {
                           v: Long): Seq[String] = {
     val p = new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$v")
     if (!fsOf(spark, p).exists(p)) Nil
-    else spark.read.parquet(p.toString).schema.fieldNames.toSeq
+    else Layout.footerSchema(spark, p.toString).fieldNames.toSeq
       .collect { case n if n.startsWith("bloom_") => n.stripPrefix("bloom_") }
   }
 
@@ -915,7 +915,7 @@ object Snapshot {
                    v: Long): Option[DataFrame] = {
     val p = new org.apache.hadoop.fs.Path(root, s"$DvDir/v=$v")
     if (!fsOf(spark, p).exists(p)) None
-    else Some(spark.read.parquet(p.toString))
+    else Some(Layout.readParquet(spark, p.toString))
   }
 
   /** Filter version `v`'s tombstoned rows out of a PHYSICAL parquet
@@ -944,7 +944,7 @@ object Snapshot {
     val p = new org.apache.hadoop.fs.Path(root, s"$DvDir/v=$v")
     val fs = fsOf(spark, p)
     if (!fs.exists(p)) return phys
-    val dv = spark.read.parquet(p.toString)
+    val dv = Layout.readParquet(spark, p.toString)
     def sized(df: DataFrame): DataFrame =
       if (fs.getContentSummary(p).getLength <= 64L * 1024 * 1024)
         broadcast(df)
@@ -1194,7 +1194,7 @@ object Snapshot {
                                  lo: org.apache.spark.sql.Column,
                                  hi: org.apache.spark.sql.Column): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    spark.read.parquet(s"$root/$StatsDir/v=$v")
+    Layout.readParquet(spark, s"$root/$StatsDir/v=$v")
       .filter(col(s"max_$statsCol") >= lo && col(s"min_$statsCol") <= hi)
       .select("file").collect().map(_.getString(0)).toSeq
   }
@@ -1282,16 +1282,17 @@ object Snapshot {
   }
 
   /** The files of version `v` whose per-file BLOOM index might contain
-    * `value` in `bloomCol` — the probe runs EXECUTOR-side (a filter over
-    * the manifest scan), so only the matching file NAMES ever reach the
-    * driver. The distinction is the difference between O(matches) and
-    * O(files × sketch-bytes) driver traffic: at the soak's own sizing
-    * (~18 KB/sketch) a million-file table would otherwise ship ~18 GB
-    * through the driver per lookup. The deserialization cost is the
-    * same either way and O(files) manifest rows distribute across the
-    * scan; a UDF is fine here because this is metadata scale, never the
-    * data path. Blooms never lose a file (no false negatives); false
-    * positives only add reads. */
+    * `value` in `bloomCol`. A manifest of at most one split is read and
+    * probed on the driver ([[Layout.readParquet]]); above that the probe
+    * runs EXECUTOR-side (a filter over the manifest scan), so only the
+    * matching file NAMES ever reach the driver. The distinction is the
+    * difference between O(matches) and O(files × sketch-bytes) driver
+    * traffic: at the soak's own sizing (~18 KB/sketch) a million-file
+    * table would otherwise ship ~18 GB through the driver per lookup.
+    * The deserialization cost is the same either way and O(files)
+    * manifest rows distribute across the scan; a UDF is fine here
+    * because this is metadata scale, never the data path. Blooms never
+    * lose a file (no false negatives); false positives only add reads. */
   private[graft] def filesForPoint(spark: SparkSession, root: String,
                                    v: Long, bloomCol: String,
                                    value: Long): Seq[String] = {
@@ -1301,7 +1302,7 @@ object Snapshot {
         .readFrom(new java.io.ByteArrayInputStream(bytes))
         .mightContainLong(value)
     }
-    spark.read.parquet(s"$root/$StatsDir/v=$v")
+    Layout.readParquet(spark, s"$root/$StatsDir/v=$v")
       .filter(mightContain(col(s"bloom_$bloomCol")))
       .select("file").collect().map(_.getString(0)).toSeq
   }
@@ -1333,7 +1334,7 @@ object Snapshot {
         // definitively absent: no file can contain it — anchor the
         // empty result's SCHEMA on one file instead of footer-reading
         // the whole table (measured 2.3 s vs 0.1 s at 1000 files)
-        val any = spark.read.parquet(s"$root/$StatsDir/v=$v")
+        val any = Layout.readParquet(spark, s"$root/$StatsDir/v=$v")
           .select("file").head().getString(0)
         toLogical(physReader(spark, root, v).parquet(any)
           .filter(eq).filter(lit(false)), cmap)
@@ -1436,7 +1437,7 @@ object Snapshot {
         import org.apache.spark.sql.functions._
         // the stats manifest is the file inventory (deleteWhere's
         // discipline): O(files) metadata rows decide the rewrite set
-        val stats = spark.read.parquet(statsPath.toString)
+        val stats = Layout.readParquet(spark, statsPath.toString)
           .select(col("file"), col(s"min_$physKey").as("kmin"),
             col(s"max_$physKey").as("kmax"))
         val all = stats.select("file").collect().map(_.getString(0)).toSeq
@@ -1552,7 +1553,7 @@ object Snapshot {
         // the stats manifest is the file inventory (its `file` values
         // are input_file_name-format URIs, consistent across carried
         // and fresh rows)
-        val all = spark.read.parquet(s"$root/$StatsDir/v=$base")
+        val all = Layout.readParquet(spark, s"$root/$StatsDir/v=$base")
           .select("file").collect().map(_.getString(0)).toSeq
         val touched = prunedFiles(spark, root, base, physCol, lo, hi)
         val untouched = all.diff(touched)
@@ -1747,8 +1748,9 @@ object Snapshot {
     * returned, no commit burned) on a table without tombstones. */
   def purgeDv(spark: SparkSession, root: String): Long =
     onHead(spark, root, "purgeDv") { base =>
-      if (dvOf(spark, root, base).isEmpty) None else Some { next =>
-        val touched = dvOf(spark, root, base).get
+      val dv = dvOf(spark, root, base)
+      if (dv.isEmpty) None else Some { next =>
+        val touched = dv.get
           .select("file").distinct().collect().map(_.getString(0)).toSeq
         val inv = fileInventory(spark, root, base)
         // Set membership, not Seq.contains: a fully scattered delete on
@@ -1891,7 +1893,7 @@ object Snapshot {
       .collect { case n if n.matches("v=\\d+") => n.stripPrefix("v=").toLong }
       .filter(_ <= v)
     if (vs.isEmpty) Set.empty
-    else spark.read.parquet(s"$root/$DroppedDir/v=${vs.max}")
+    else Layout.readParquet(spark, s"$root/$DroppedDir/v=${vs.max}")
       .select("physical").collect().map(_.getString(0)).toSet
   }
 
@@ -1939,15 +1941,14 @@ object Snapshot {
       // a stats/bloom key cannot be dropped in place: later appends
       // re-derive fresh per-file stats over the manifest's columns and
       // would aggregate a column the new files no longer have
-      val physKey = physicalOf(spark, root, base, colName)
+      val cmap = columnMapOf(spark, root, base)
+      val phys = cmap.find(_._2 == colName).map(_._1).getOrElse(colName)
       require(!(statsColsOf(spark, root, base) ++
-          bloomColsOf(spark, root, base)).contains(physKey),
+          bloomColsOf(spark, root, base)).contains(phys),
         s"drop of `$colName` refused: it keys the data-skipping index " +
           "— recommit with different stats columns first")
       Some { next =>
         carryAll(spark, root, base, next)
-        val cmap = columnMapOf(spark, root, base)
-        val phys = physicalOf(spark, root, base, colName)
         // the base's PHYSICAL schema (logical fields mapped back
         // through the column map — toLogical only renames, so this is
         // exact) minus the dropped field, recorded for `next`. This
@@ -2116,12 +2117,12 @@ object Snapshot {
     schemaOf(spark, root, base).foreach { baseSchema =>
       val vSchema =
         if (newFiles.isEmpty) baseSchema
-        else mergedSchema(baseSchema, spark.read.parquet(newFiles.head).schema)
+        else mergedSchema(baseSchema, Layout.footerSchema(spark, newStatus.head))
       writeSchema(spark, root, next, vSchema)
     }
     val sc = statsColsOf(spark, root, base)
     if (sc.nonEmpty) {
-      val carried = spark.read.parquet(s"$root/$StatsDir/v=$base")
+      val carried = Layout.readParquet(spark, s"$root/$StatsDir/v=$base")
         .filter(col("file").isin(carriedFiles: _*))
       val fresh =
         if (newFiles.isEmpty) carried.limit(0)
@@ -2242,7 +2243,7 @@ object Snapshot {
       val srcCs = checkConstraintsOf(spark, srcRoot, srcV)
       if (srcCs.nonEmpty) writeConstraintSet(spark, dstRoot, next, srcCs)
       if (statsColsOf(spark, srcRoot, srcV).nonEmpty)
-        spark.read.parquet(s"$srcRoot/$StatsDir/v=$srcV").coalesce(1)
+        Layout.readParquet(spark, s"$srcRoot/$StatsDir/v=$srcV").coalesce(1)
           .write.mode("overwrite").parquet(s"$dstRoot/$StatsDir/v=$next")
       // the clone references the source's files, so it must also
       // inherit their merge-on-read tombstones or deleted rows would
@@ -3100,7 +3101,7 @@ object Snapshot {
             retained.contains(v) || inFlight.contains(v)
           }
         }
-        .flatMap(p => spark.read.parquet(p.toString)
+        .flatMap(p => Layout.readParquet(spark, p.toString)
           .select("file").collect().map(_.getString(0)))
         .flatMap(f => "v=(\\d+)/".r.findAllMatchIn(f).toSeq.lastOption
           .map(_.group(1).toLong))

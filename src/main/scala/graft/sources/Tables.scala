@@ -17,8 +17,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The fixture table `name`, read with the schema its first data
+    * file's footer declares (`Layout.footerSchema`): the same schema
+    * and rows as `spark.read.parquet`, without its schema-inference
+    * job. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(graft.operators.Layout.footerSchema(spark, path))
+      .parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

@@ -60,7 +60,7 @@ object Streaming {
       case "files" =>
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val evPath = s"$sfDir/events.parquet"
-        val schema = spark.read.parquet(evPath).schema
+        val schema = graft.operators.Layout.footerSchema(spark, evPath)
         deriveStateWidth(spark, sfDir) // warm the width memo
         // The file stream source needs a directory to list. Two
         // landing shapes exist: the fixture ships events.parquet as a
@@ -198,8 +198,8 @@ object Streaming {
     math.min(cap.toLong, math.max(StatePartitions.toLong, want)).toInt
   }
 
-  /** Probe the events table's row count (parquet footer metadata — a
-    * count() over a zero-column projection reads no data pages) once
+  /** Probe the events table's row count (parquet footer row counts,
+    * read in-process: exact, no data pages, no Spark job) once
     * per (session, fixture dir, file fingerprint): the fingerprint key
     * means a fixture that GROWS mid-session — exactly the restart
     * contract, where more source files land between runs — re-probes
@@ -210,7 +210,8 @@ object Streaming {
     graft.util.SessionMemo.memoizedValue(spark,
         s"stateWidth|$sfDir|$cpuBound|" +
           graft.util.Fingerprint.of(spark, s"$sfDir/events.parquet")) {
-      val rows = spark.read.parquet(s"$sfDir/events.parquet").count()
+      val rows = graft.operators.Layout.footerRowCount(spark,
+        s"$sfDir/events.parquet")
       val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
       stateWidthFor(rows, cap, cpuBound)
     }

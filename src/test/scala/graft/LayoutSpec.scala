@@ -339,4 +339,59 @@ class LayoutSpec extends SparkSuite {
     assert(slow.filter(col("min_k").isNull).count() >= 1L)
     assert(fast.filter(col("min_k").isNull).count() >= 1L)
   }
+
+  test("readParquet reads every file of a directory, on the driver within one split and scanned above it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_readpq_")
+      .toString + "/t"
+    spark.range(0, 300).select(col("id"), (col("id") % 7).cast("string").as("s"))
+      .repartition(3).write.parquet(dir)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    val want = rows(spark.read.parquet(dir))
+    assert(want.size == 300)
+    val (local, localJobs) = jobsOf(rows(Layout.readParquet(spark, dir)))
+    assert(localJobs == 0 && local == want)
+    withConf("spark.sql.files.maxPartitionBytes", "1024") {
+      val (scanned, scanJobs) = jobsOf(rows(Layout.readParquet(spark, dir)))
+      assert(scanJobs > 0 && scanned == want)
+    }
+  }
+
+  test("readParquet and footerSchema defer to Spark's inference for a partitioned directory and a missing path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_readpq_")
+      .toString + "/p"
+    spark.range(0, 20).select(col("id"), (col("id") % 2).as("k"))
+      .write.partitionBy("k").parquet(dir)
+    val want = spark.read.parquet(dir)
+    assert(want.columns.toSeq == Seq("id", "k"))
+    assert(Layout.footerSchema(spark, dir) == want.schema)
+    val got = Layout.readParquet(spark, dir)
+    assert(got.schema == want.schema)
+    assert(got.collect().map(r => (r.getLong(0), r.get(1))).toSet ==
+      want.collect().map(r => (r.getLong(0), r.get(1))).toSet)
+    intercept[org.apache.spark.sql.AnalysisException](
+      Layout.footerSchema(spark, s"$dir-missing"))
+    intercept[org.apache.spark.sql.AnalysisException](
+      Layout.readParquet(spark, s"$dir-missing"))
+  }
+
+  test("fixture tables read with the footer schema equal the inferred read, with no job") {
+    import graft.sources.Tables
+    def hashes(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select(xxhash64(df.columns.map(col): _*)).collect()
+        .map(_.getLong(0)).toSeq.sorted
+    // session confs the footer schema must honor: the events fixture
+    // has shipped with int64-nanos `ts`, readable only under
+    // nanosAsLong, and its µs `ts` is NTZ only under inferTimestampNTZ
+    for (t <- Tables.all; ntz <- Seq(true, false) if ntz || t == "events")
+      withConf("spark.sql.legacy.parquet.nanosAsLong", (t == "events").toString) {
+        withConf("spark.sql.parquet.inferTimestampNTZ.enabled", ntz.toString) {
+          val (declared, jobs) = jobsOf(Tables.table(spark, sf, t))
+          assert(jobs == 0, s"$t: Tables.table ran $jobs jobs")
+          val inferred = spark.read.parquet(s"$sf/$t.parquet")
+          assert(declared.schema == inferred.schema, s"$t (ntz=$ntz): schema differs")
+          assert(hashes(declared) == hashes(inferred), s"$t (ntz=$ntz): rows differ")
+        }
+      }
+  }
 }

@@ -1449,4 +1449,88 @@ class SnapshotSpec extends SparkSuite {
       }
     }
   }
+
+  // ---- metadata-sized sidecars are read on the driver ----------------
+
+  /** The point-lookup key of [[sidecarTable]]'s row `k` (a bijection
+    * on [0, 1000)). */
+  private def vOf(k: Long): Long = (k * 7919L) % 1000L
+
+  /** 1000 rows in ~8 files with stats on `k`, a bloom on `v`, a file
+    * manifest (append) and a deletion vector (every `k % 10 == 3`):
+    * every sidecar kind a read resolves. Sketches sized to the
+    * ~125 rows per file. */
+  private def sidecarTable(): String = withConf(
+      "graft.snapshot.bloomEstItems", "200") {
+    val root = freshTable()
+    val mk = (lo: Long, hi: Long) => spark.range(lo, hi)
+      .select(col("id").as("k"), ((col("id") * 7919L) % 1000L).as("v"))
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k")
+    Snapshot.commitWithStats(mk(0L, 500L), root, Seq("k"),
+      bloomCols = Seq("v"))
+    Snapshot.appendCommit(mk(500L, 1000L), root)
+    Snapshot.deleteWhereMor(spark, root, col("k") % 10 === 3)
+    root
+  }
+
+  test("metadata reads run no Spark job: row count, read-plan construction, vacuum") {
+    val root = sidecarTable()
+    val (n, countJobs) = jobsOf(Snapshot.currentRowCount(spark, root))
+    assert(countJobs == 0, s"currentRowCount ran $countJobs jobs")
+    assert(n == 900L)
+    // plan construction resolves the manifest, stats, bloom and DV
+    // sidecars on the driver; only the action runs jobs
+    val (pruned, prunedJobs) = jobsOf(
+      Snapshot.readCurrentPruned(spark, root, "k", lit(100L), lit(199L)))
+    assert(prunedJobs == 0, s"readCurrentPruned planned with $prunedJobs jobs")
+    assert(pruned.count() == 90L)
+    val (hit, hitJobs) = jobsOf(
+      Snapshot.readCurrentPoint(spark, root, "v", vOf(124L)))
+    assert(hitJobs == 0, s"readCurrentPoint planned with $hitJobs jobs")
+    assert(hit.collect().map(_.getLong(0)).toSeq == Seq(124L))
+    // tombstoned row, and a value no file holds (the schema anchor)
+    Seq(vOf(123L), 5000L).foreach { v =>
+      val (miss, missJobs) = jobsOf(
+        Snapshot.readCurrentPoint(spark, root, "v", v))
+      assert(missJobs == 0, s"readCurrentPoint($v) planned with $missJobs jobs")
+      assert(miss.count() == 0L && miss.columns.toSeq == Seq("k", "v"))
+    }
+    val (deleted, vacuumJobs) = jobsOf(Snapshot.vacuum(spark, root))
+    assert(vacuumJobs == 0, s"vacuum ran $vacuumJobs jobs")
+    assert(deleted.nonEmpty)
+    assert(Snapshot.readCurrent(spark, root).count() == 900L)
+  }
+
+  test("sidecars above one split keep the distributed scan, with the driver branch's files and rows") {
+    val root = sidecarTable()
+    val v = Snapshot.currentVersion(spark, root).get
+    def sidecarReads() = (
+      Snapshot.manifestFiles(spark, root, v).get.sorted,
+      Snapshot.prunedFiles(spark, root, v, "k", lit(100L), lit(450L)).sorted,
+      Snapshot.filesForPoint(spark, root, v, "v", vOf(124L)).sorted)
+    def live() = Snapshot.readCurrent(spark, root)
+    def liveRows() =
+      live().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val (onDriver, driverJobs) = jobsOf(sidecarReads())
+    assert(driverJobs == 0, s"driver-branch sidecar reads ran $driverJobs jobs")
+    assert(onDriver._1.size >= 8 && onDriver._2.nonEmpty && onDriver._3.nonEmpty)
+    val driverRows = liveRows()
+    assert(driverRows.size == 900 && !live().inputFiles.exists(_.contains("/_dv/")))
+    // every sidecar the reads resolve is larger than the forced split
+    val split = 512L
+    Seq("_manifest", "_stats", "_dv").foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(s"$root/$d/v=$v")
+      val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+      assert(bytes > split, s"$d/v=$v is only $bytes B")
+    }
+    withConf("spark.sql.files.maxPartitionBytes", split.toString) {
+      val (scanned, scanJobs) = jobsOf(sidecarReads())
+      assert(scanJobs >= 3, s"above one split each read scans: $scanJobs jobs")
+      assert(scanned == onDriver)
+      // the DV-applied read anti-joins a scanned sidecar
+      assert(live().inputFiles.exists(_.contains("/_dv/")))
+      assert(liveRows() == driverRows)
+    }
+  }
 }

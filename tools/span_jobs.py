@@ -1,0 +1,58 @@
+#!/usr/bin/env python3
+"""Per-operation-kind Spark jobs and driver time of two traced benchmark runs.
+
+    python3 tools/span_jobs.py PARENT.spans.jsonl CHANGE.spans.jsonl
+
+Each argument is the spans file a traced run (`perfbench/run.py --trace 1`)
+saves beside its result. Operation spans are the lines with `"parent": null`;
+their `name` is the operation kind (append, merge, delete_mor, purge_dv,
+compact, vacuum, read_pruned, read_point, row_count, calcavg, ...). For each
+kind and side the table gives the operation count, the median wall time
+(`end_ms - start_ms`), the mean Spark jobs per operation with their range,
+and the median time the driver spent outside any job (`offjob_ms`). Run the
+two sides on the same workload and seed so the operation sequences match.
+"""
+import json
+import statistics
+import sys
+
+
+def op_spans(path):
+    """Operation spans of one spans file, grouped by kind."""
+    kinds = {}
+    with open(path) as f:
+        for line in f:
+            line = line.strip()
+            if not line:
+                continue
+            s = json.loads(line)
+            if s.get("parent") is None:
+                kinds.setdefault(s["name"], []).append(s)
+    return kinds
+
+
+def summary(spans):
+    if not spans:
+        return "-"
+    jobs = [s.get("jobs", 0) for s in spans]
+    ms = statistics.median(s["end_ms"] - s["start_ms"] for s in spans)
+    off = statistics.median(s.get("offjob_ms", 0) for s in spans)
+    span = f"{min(jobs)}" if min(jobs) == max(jobs) else f"{min(jobs)}-{max(jobs)}"
+    return (f"{len(spans):>4} {ms:>9.1f} {statistics.mean(jobs):>6.2f} "
+            f"{'(' + span + ')':>8} {off:>9.1f}")
+
+
+def main(argv):
+    if len(argv) != 3:
+        sys.exit("usage: " + __doc__.strip().splitlines()[2].strip())
+    parent, change = op_spans(argv[1]), op_spans(argv[2])
+    cols = f"{'n':>4} {'ms p50':>9} {'jobs':>6} {'range':>8} {'offjob':>9}"
+    print(f"{'kind':<14} | {'parent':^40} | {'change':^40}")
+    print(f"{'':<14} | {cols} | {cols}")
+    for kind in sorted(set(parent) | set(change)):
+        print(f"{kind:<14} | {summary(parent.get(kind, [])):>40} | "
+              f"{summary(change.get(kind, [])):>40}")
+
+
+if __name__ == "__main__":
+    main(sys.argv)
