@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Poor-man's ACID table commits over plain parquet: every write lands
   * in a fresh immutable `v=N` snapshot directory, and a one-line
@@ -8,7 +9,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * mutable object and it changes via an atomic rename, so a reader
   * either sees the old snapshot or the new one — never a half-written
   * merge. (The same pointer-swap commit protocol Delta/Iceberg build
-  * their logs on, reduced to a single head pointer: no time travel.)
+  * their logs on, reduced to a single head pointer; superseded versions
+  * stay readable by number or instant — [[readVersion]], [[readAsOf]] —
+  * until [[vacuum]] collects them.) Each version's metadata is one
+  * record, `_log/v=N.json` ([[Meta]]), written before the swap.
   *
   * Concurrent writers serialize through a VERSION CLAIM: before writing
   * `v=N`, a committer must win `_claims/N` via an atomic
@@ -30,9 +34,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Crash anatomy (proven in SnapshotSpec):
   *  - crash while writing `v=N+1` → pointer still names `v=N`; the
-  *    orphan directory is invisible to readers (they never list, they
-  *    follow the pointer) and the next commit claims a HIGHER version,
-  *    never reusing the orphan's name for different content.
+  *    orphan directory and its record are invisible to readers (they
+  *    never list, they follow the pointer and open only that version's
+  *    record) and the next commit claims a HIGHER version, never
+  *    reusing the orphan's name for different content.
   *  - crash between finishing `v=N+1` and the pointer swap → same:
   *    readers stay on `v=N`; the completed-but-unreferenced snapshot is
   *    garbage to be collected.
@@ -76,47 +81,121 @@ object Snapshot {
     else s
   }
 
-  private val SchemaDir = "_schema"
+  private val LogDir = "_log"
 
-  /** Record version `v`'s LOGICAL schema (`_schema/v=N.json`) — the
-    * schema-evolution backbone: a version whose manifest mixes file
-    * generations (old files without a later-added column) is read with
-    * this schema EXPLICITLY, so parquet fills the missing columns with
-    * NULL and no footer is ever read for inference (the 1000-file soak
-    * measured footer inference as the O(files) read to avoid). One tiny
-    * driver-side file per version, same lifecycle as the manifests. */
-  private def writeSchema(spark: SparkSession, root: String, v: Long,
-                          schema: org.apache.spark.sql.types.StructType): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root, s"$SchemaDir/v=$v.json")
-    val fs = fsOf(spark, p)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
-    try out.write(schema.json.getBytes("UTF-8")) finally out.close()
+  /** Version `v`'s METADATA RECORD, `_log/v=N.json`: everything a
+    * reader needs besides the file list, in one driver-side file.
+    *  - `schema`: the PHYSICAL schema. A version whose manifest mixes
+    *    file generations (old files without a later-added column) is
+    *    read with it EXPLICITLY, so parquet fills the missing columns
+    *    with NULL and no footer is read for inference.
+    *  - `constraints`: the CHECK constraints `(name, expr)`, by name.
+    *  - `colmap`: the column map `(physical, logical)` ([[renameColumn]]).
+    *  - `dropped`: physical names retired by [[dropColumn]].
+    *  - `gen`: the [[commitGenerated]] rule `(gen, base, bucket)`.
+    *
+    * Every commit writes the COMPLETE record of its version inside its
+    * claim, before the pointer swap: read-modify-write commits copy the
+    * head's record and apply their edit; blind commits copy the record
+    * of the head they validated their batch against, so they are
+    * last-writer-wins for metadata exactly as for data. A reader opens
+    * only the record of the version it reads — never a listing, never
+    * another version's record — so a record a never-published version
+    * left behind is invisible to every other version, and [[vacuum]]
+    * collects it with its data directory. */
+  private[graft] final case class Meta(
+      schema: StructType,
+      constraints: Seq[(String, String)] = Nil,
+      colmap: Seq[(String, String)] = Nil,
+      dropped: Set[String] = Set.empty,
+      gen: Option[(String, String, Long)] = None) {
+
+    /** The physical name behind a logical column (the name stats
+      * manifests and parquet footers know it by). */
+    def physical(logical: String): String =
+      colmap.find(_._2 == logical).map(_._1).getOrElse(logical)
+
+    /** The column names readers see, in schema order. */
+    def logicalNames: Seq[String] = {
+      val byPhys = colmap.toMap
+      schema.fieldNames.toSeq.map(c => byPhys.getOrElse(c, c))
+    }
   }
 
-  /** Version `v`'s recorded logical schema, or None for a version
-    * committed before schema tracking (reads fall back to inference). */
-  private[graft] def schemaOf(spark: SparkSession, root: String, v: Long)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val p = new org.apache.hadoop.fs.Path(root, s"$SchemaDir/v=$v.json")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  private def recordPath(root: String, v: Long) =
+    new org.apache.hadoop.fs.Path(root, s"$LogDir/v=$v.json")
+
+  /** Write version `v`'s record; empty fields are left out, so a plain
+    * table's record is its schema. */
+  private def writeMeta(spark: SparkSession, root: String, v: Long,
+                        m: Meta): Unit = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.{compact => jsonText, parse, render}
+    def pairs(ps: Seq[(String, String)]): JValue =
+      JObject(ps.map { case (k, x) => k -> JString(x) }.toList)
+    val fields = List("schema" -> parse(m.schema.json)) ++
+      Option.when(m.constraints.nonEmpty)("constraints" -> pairs(m.constraints)) ++
+      Option.when(m.colmap.nonEmpty)("colmap" -> pairs(m.colmap)) ++
+      Option.when(m.dropped.nonEmpty)(
+        "dropped" -> JArray(m.dropped.toList.sorted.map(JString(_)))) ++
+      m.gen.map { case (g, b, k) =>
+        "gen" -> JObject("gen" -> JString(g), "base" -> JString(b),
+          "bucket" -> JLong(k)) }
+    val p = recordPath(root, v)
+    val out = fsOf(spark, p).create(p, true)
+    try out.write(jsonText(render(JObject(fields))).getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** Version `v`'s record. A record that exists but does not parse is
+    * corruption or format drift, never "no metadata": it fails loudly
+    * with the evidence. */
+  private[graft] def metaOf(spark: SparkSession, root: String, v: Long): Meta = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.{compact => jsonText, parse, render}
+    import scala.util.control.NonFatal
+    val p = recordPath(root, v)
+    val in = fsOf(spark, p).open(p)
+    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+               finally in.close()
+    def malformed(cause: Throwable = null): Nothing =
+      throw new IllegalStateException(s"malformed metadata record $p: $json", cause)
+    def pairs(j: JValue): Seq[(String, String)] = j match {
+      case JNothing => Nil
+      case JObject(fs) => fs.map {
+        case (k, JString(x)) => (k, x)
+        case _ => malformed()
+      }
+      case _ => malformed()
     }
+    val j = try parse(json) catch { case NonFatal(e) => malformed(e) }
+    val schema =
+      try org.apache.spark.sql.types.DataType
+        .fromJson(jsonText(render(j \ "schema"))).asInstanceOf[StructType]
+      catch { case NonFatal(e) => malformed(e) }
+    Meta(schema, pairs(j \ "constraints"), pairs(j \ "colmap"),
+      j \ "dropped" match {
+        case JNothing => Set.empty
+        case JArray(xs) => xs.map {
+          case JString(n) => n
+          case _ => malformed()
+        }.toSet
+        case _ => malformed()
+      },
+      j \ "gen" match {
+        case JNothing => None
+        case g => (g \ "gen", g \ "base", g \ "bucket") match {
+          case (JString(gn), JString(b), JInt(k)) => Some((gn, b, k.toLong))
+          case _ => malformed()
+        }
+      })
   }
 
   /** ADD-COLUMN evolution: base columns keep their position, batch-only
     * columns append. A same-name column must keep its type — anything
     * else (rename, retype, drop) is not an additive append and fails
     * fast rather than silently corrupting carried files' reads. */
-  private def mergedSchema(base: org.apache.spark.sql.types.StructType,
-                           batch: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
+  private def mergedSchema(base: StructType, batch: StructType): StructType = {
     val baseNames = base.fieldNames.toSet
     base.fields.foreach { f =>
       batch.fields.find(_.name == f.name).foreach { g =>
@@ -126,11 +205,8 @@ object Snapshot {
             s"${g.dataType.simpleString} in the batch")
       }
     }
-    org.apache.spark.sql.types.StructType(
-      base.fields ++ batch.fields.filterNot(f => baseNames(f.name)))
+    StructType(base.fields ++ batch.fields.filterNot(f => baseNames(f.name)))
   }
-
-  private val ConstraintsDir = "_constraints"
 
   /** A commit rejected by a CHECK constraint: the constraint's name
     * plus how many of the batch's rows failed it. The version
@@ -141,35 +217,11 @@ object Snapshot {
                                   val nViolations: Long, msg: String)
     extends IllegalArgumentException(msg)
 
-  /** The CHECK constraints active at version `v`: a constraint
-    * add/drop writes the FULL new set at its own version, so
-    * resolution is one O(constraint-changes) directory listing plus
-    * one tiny parquet read of the highest set at-or-below `v` — never
-    * a log replay, and versions committed between constraint changes
-    * need no per-version copy. */
+  /** The CHECK constraints active at version `v`, sorted by name — one
+    * read of that version's record. */
   def checkConstraintsOf(spark: SparkSession, root: String,
-                         v: Long): Seq[(String, String)] = {
-    val dir = new org.apache.hadoop.fs.Path(root, ConstraintsDir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) return Nil
-    val vs = fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.matches("v=\\d+") => n.stripPrefix("v=").toLong }
-      .filter(_ <= v)
-    if (vs.isEmpty) Nil
-    else {
-      val rows = Layout.readParquet(spark, s"$root/$ConstraintsDir/v=${vs.max}")
-        .select("name", "expr").collect()
-      rows.map(r => (r.getString(0), r.getString(1))).toSeq.sortBy(_._1)
-    }
-  }
-
-  private def writeConstraintSet(spark: SparkSession, root: String,
-                                 v: Long,
-                                 cs: Seq[(String, String)]): Unit = {
-    import spark.implicits._
-    cs.toDF("name", "expr").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/$ConstraintsDir/v=$v")
-  }
+                         v: Long): Seq[(String, String)] =
+    metaOf(spark, root, v).constraints
 
   /** Violation counts of `df` against each constraint — ONE aggregate
     * scan reading only the constraint columns (column-pruned when `df`
@@ -190,22 +242,21 @@ object Snapshot {
     }
   }
 
-  /** Enforce the base version's CHECK constraints on the parquet just
-    * written into `v=next`, BEFORE the pointer swap — reading back the
-    * written files (the [[writeStats]] pattern) costs one column-pruned
-    * scan of the BATCH and never re-executes the input plan; a
-    * violation throws and the orphaned directory never becomes
-    * visible. */
+  /** Enforce the base version's CHECK constraints (`m`, its record) on
+    * the parquet just written into `v=next`, BEFORE the pointer swap —
+    * reading back the written files (the [[writeStats]] pattern) costs
+    * one column-pruned scan of the BATCH and never re-executes the
+    * input plan; a violation throws and the orphaned directory never
+    * becomes visible. */
   private def enforceWritten(spark: SparkSession, root: String,
-                             next: Long, base: Long): Unit = {
-    val cs = checkConstraintsOf(spark, root, base)
-    if (cs.isEmpty) return
+                             next: Long, base: Long, m: Meta): Unit = {
+    if (m.constraints.isEmpty) return
     // constraints are authored in LOGICAL names; the written files are
     // physical — evaluate on the logical view ([[renameColumn]] refuses
     // to rename a column an active constraint references)
     val bad = violationCounts(
-      toLogical(spark.read.parquet(s"$root/v=$next"),
-        columnMapOf(spark, root, base)), cs).filter(_._2 > 0)
+      toLogical(spark.read.parquet(s"$root/v=$next"), m.colmap),
+      m.constraints).filter(_._2 > 0)
     bad.headOption.foreach { case (n, c) =>
       throw new ConstraintViolation(n, c,
         s"commit to $root rejected: CHECK constraint `$n` failed on " +
@@ -213,39 +264,15 @@ object Snapshot {
     }
   }
 
-  private val ColMapDir = "_colmap"
-
   /** COLUMN MAPPING (Delta `columnMapping.mode = name` / Iceberg field
     * IDs, reduced to the rename case): physical column names are
-    * FROZEN at first commit; a rename is pure metadata — a
-    * `(physical, logical)` map versioned like the constraint sets
-    * (full set per change, nearest-at-or-below resolution). Readers
-    * get logical names by aliasing after the scan; writers translate
-    * logical → physical before parquet sees the batch, so EVERY file
-    * of the table keeps one physical schema across any number of
-    * renames and no data is ever rewritten. */
-  private[graft] def columnMapOf(spark: SparkSession, root: String,
-                                 v: Long): Seq[(String, String)] = {
-    val dir = new org.apache.hadoop.fs.Path(root, ColMapDir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) return Nil
-    val vs = fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.matches("v=\\d+") => n.stripPrefix("v=").toLong }
-      .filter(_ <= v)
-    if (vs.isEmpty) Nil
-    else Layout.readParquet(spark, s"$root/$ColMapDir/v=${vs.max}")
-      .select("physical", "logical").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq.sortBy(_._1)
-  }
-
-  private def writeColumnMap(spark: SparkSession, root: String, v: Long,
-                             m: Seq[(String, String)]): Unit = {
-    import spark.implicits._
-    m.toDF("physical", "logical").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/$ColMapDir/v=$v")
-  }
-
-  /** Present `df` (physical names) under version `v`'s logical names. */
+    * FROZEN at first commit; a rename is pure metadata — the record's
+    * `(physical, logical)` map. Readers get logical names by aliasing
+    * after the scan; writers translate logical → physical before
+    * parquet sees the batch, so EVERY file of the table keeps one
+    * physical schema across any number of renames and no data is ever
+    * rewritten. Present `df` (physical names) under the map's logical
+    * names. */
   private def toLogical(df: DataFrame,
                         m: Seq[(String, String)]): DataFrame =
     if (m.isEmpty) df
@@ -267,13 +294,6 @@ object Snapshot {
       df.select(df.columns.map(c =>
         col(c).as(byLogical.getOrElse(c, c))): _*)
     }
-
-  /** The physical name behind a logical column at version `v` (the
-    * name stats manifests and parquet footers know it by). */
-  private[graft] def physicalOf(spark: SparkSession, root: String,
-                                v: Long, logical: String): String =
-    columnMapOf(spark, root, v).find(_._2 == logical)
-      .map(_._1).getOrElse(logical)
 
   /** The `(file, bytes)` inventory of version `v` — manifest-listed
     * files or the directory's parquet parts; an O(files) driver-side
@@ -307,54 +327,62 @@ object Snapshot {
       .select("file").collect().map(_.getString(0)).toSeq)
   }
 
-  /** Resolve version `v` to a DataFrame: manifest-listed files when a
-    * manifest exists, the version directory otherwise. A version with a
-    * RECORDED schema is read with it explicitly — files from before an
-    * add-column evolution surface the new columns as NULL, and no
-    * footer is read for inference (O(1) planning instead of O(files)
-    * mergeSchema). */
-  /** Parquet reader pinned to version `v`'s RECORDED physical schema
-    * when one exists (inference otherwise). Every file-granular read
-    * path must go through this: a raw `spark.read.parquet(files)`
-    * infers the FILES' physical columns, which resurrects
-    * [[dropColumn]]-removed columns and footer-reads for schema. */
-  private def physReader(spark: SparkSession, root: String,
-                         v: Long): org.apache.spark.sql.DataFrameReader =
-    schemaOf(spark, root, v) match {
-      case Some(s) => spark.read.schema(s)
-      case None => spark.read
-    }
+  /** Parquet reader pinned to the version's RECORDED physical schema.
+    * Every file-granular read path must go through this: a raw
+    * `spark.read.parquet(files)` infers the FILES' physical columns,
+    * which resurrects [[dropColumn]]-removed columns and footer-reads
+    * for schema; the explicit schema surfaces columns added after a
+    * file was written as NULL, with no footer read (O(1) planning
+    * instead of O(files) mergeSchema). */
+  private def physReader(spark: SparkSession,
+                         m: Meta): org.apache.spark.sql.DataFrameReader =
+    spark.read.schema(m.schema)
 
-  private def readResolved(spark: SparkSession, root: String,
-                           v: Long): DataFrame = {
-    val reader = physReader(spark, root, v)
+  /** Version `v` (record `m`) in PHYSICAL names with its tombstones
+    * applied: manifest-listed files when a manifest names any, the
+    * version directory otherwise — which, for a version that names no
+    * file (a delete emptied the table), is an empty directory the
+    * recorded schema reads as an empty frame. */
+  private def readPhysical(spark: SparkSession, root: String, v: Long,
+                           m: Meta): DataFrame = {
     val physical = manifestFiles(spark, root, v) match {
-      case Some(files) if files.nonEmpty => reader.parquet(files: _*)
-      case Some(_) => // degenerate: a delete emptied the whole table —
-        // the rewrite dir still holds a schema-only anchor file
-        reader.parquet(s"$root/v=$v")
-      case None => reader.parquet(s"$root/v=$v")
+      case Some(files) if files.nonEmpty => physReader(spark, m).parquet(files: _*)
+      case _ => physReader(spark, m).parquet(s"$root/v=$v")
     }
-    // merge-on-read tombstones first (they key on the physical scan's
-    // _metadata), then column mapping: physical → logical names
-    toLogical(applyDv(spark, root, v, physical),
-      columnMapOf(spark, root, v))
+    // merge-on-read tombstones key on the physical scan's _metadata
+    applyDv(spark, root, v, physical)
   }
+
+  /** Version `v` (record `m`) in LOGICAL names. */
+  private def readResolved(spark: SparkSession, root: String, v: Long,
+                           m: Meta): DataFrame =
+    toLogical(readPhysical(spark, root, v, m), m.colmap)
+
+  /** Version `m`'s empty result in logical names, built from the
+    * recorded schema: no file is opened. */
+  private def emptyOf(spark: SparkSession, m: Meta): DataFrame =
+    toLogical(spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+      StructType(m.schema.fields.map(_.copy(nullable = true)))), m.colmap)
+
+  /** The live version; an empty table fails. */
+  private def headOf(spark: SparkSession, root: String): Long =
+    currentVersion(spark, root).getOrElse(
+      throw new java.util.NoSuchElementException(
+        s"snapshot table $root has no committed version"))
 
   /** Read the live snapshot (the only read path — readers never list
     * version directories, so unreferenced snapshots are invisible). */
   def readCurrent(spark: SparkSession, root: String): DataFrame = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"snapshot table $root has no committed version"))
-    readResolved(spark, root, v)
+    val v = headOf(spark, root)
+    readResolved(spark, root, v, metaOf(spark, root, v))
   }
 
-  /** Time travel: read a specific retained version. Versions survive
-    * until [[vacuum]] collects them (`retain` controls how many stay
-    * readable); reading a collected version fails fast with the
-    * version inventory rather than a bare path error. */
-  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame = {
+  /** Version `v`'s record, after checking the version is retained:
+    * reading a collected version fails fast with the version inventory
+    * rather than a bare path error. */
+  private def retainedMeta(spark: SparkSession, root: String,
+                           v: Long): Meta = {
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
     if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"v=$v"))) {
       val have = fs.listStatus(new org.apache.hadoop.fs.Path(root))
@@ -363,8 +391,14 @@ object Snapshot {
         s"snapshot $root has no version $v (vacuumed?); " +
           s"retained: ${have.mkString(", ")}")
     }
-    readResolved(spark, root, v)
+    metaOf(spark, root, v)
   }
+
+  /** Time travel: read a specific retained version. Versions survive
+    * until [[vacuum]] collects them (`retain` controls how many stay
+    * readable). */
+  def readVersion(spark: SparkSession, root: String, v: Long): DataFrame =
+    readResolved(spark, root, v, retainedMeta(spark, root, v))
 
   /** Exact row count of the LIVE version from METADATA alone — the
     * table-format count every manifest layer supports (Delta's
@@ -384,12 +418,8 @@ object Snapshot {
     * per post-commit visibility check). SnapshotSpec pins it equal to
     * `readCurrent(...).count()` through commit, append, MOR-delete,
     * purge, and full-file-delete venues. */
-  def currentRowCount(spark: SparkSession, root: String): Long = {
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"snapshot table $root has no committed version"))
-    versionRowCount(spark, root, v)
-  }
+  def currentRowCount(spark: SparkSession, root: String): Long =
+    versionRowCount(spark, root, headOf(spark, root))
 
   private[graft] def versionRowCount(spark: SparkSession, root: String,
                                      v: Long): Long = {
@@ -446,22 +476,20 @@ object Snapshot {
     * wins the claim race) keeps rewrite parallelism tracking volume. */
   def compact(spark: SparkSession, root: String,
               numFiles: Int = DerivedWidth): Long =
-    onHead(spark, root, "compact") { base => Some { next =>
-      // readResolved: compacting a manifest (delete) version
-      // re-materializes it self-contained, collapsing the reference
-      // chain so vacuum can reclaim the referenced ancestors
-      val resolved = toPhysical(readResolved(spark, root, base),
-        columnMapOf(spark, root, base))
+    onHead(spark, root, "compact") { (base, m) => Some { next =>
+      // compacting a manifest (delete) version re-materializes it
+      // self-contained, collapsing the reference chain so vacuum can
+      // reclaim the referenced ancestors
       val nF = if (numFiles > 0) numFiles
                else derivedCompactFiles(spark, root, base)
-      resolved.repartition(nF)
+      readPhysical(spark, root, base, m).repartition(nF)
         .write.mode("overwrite").parquet(s"$root/v=$next")
       // a stats-carrying table keeps its data-skipping index across
       // maintenance passes: re-derive the manifest for the new files
       val sc = statsColsOf(spark, root, base)
       if (sc.nonEmpty) writeStats(spark, root, next, sc,
         bloomColsOf(spark, root, base))
-      writeSchema(spark, root, next, resolved.schema)
+      m
     } }
 
   private val ClaimsDir = "_claims"
@@ -600,13 +628,15 @@ object Snapshot {
       s"$op on $root did not win a claim in $CommitAttempts attempts " +
         "(live contention, or a crashed writer's stale claim — see vacuum)")
 
-  /** Undo an owned, unpublished claim on `next`: the directory first,
-    * so the claim protocol's already-decided check can never observe a
-    * released claim with a live dir, then the claim itself. */
+  /** Undo an owned, unpublished claim on `next`: the directory and
+    * record first, so the claim protocol's already-decided check can
+    * never observe a released claim with a live dir, then the claim
+    * itself. */
   private def releaseClaim(spark: SparkSession, root: String,
                            next: Long): Unit = {
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
     fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$next"), true)
+    fs.delete(recordPath(root, next), false)
     fs.delete(new org.apache.hadoop.fs.Path(root, s"$ClaimsDir/$next"), false)
   }
 
@@ -623,30 +653,32 @@ object Snapshot {
       throw v
     }
 
-  /** THE read-modify-write commit loop: read the head (an empty table
-    * fails with [[java.util.NoSuchElementException]]), let `plan` run
-    * its checks against it, claim exactly `pointer+1`, write, publish.
-    * `plan` returns None for a no-op (the head is returned and nothing
-    * is claimed) or `Some(write)`, which writes version `next`'s
-    * artifacts before the loop swaps the pointer. Winning `pointer+1`
-    * proves no other committer can finalize it, so the base `plan` read
-    * is the true predecessor — the serializability argument of every
-    * caller. A lost claim waits for the winner ([[awaitAdvance]]) and
-    * replans on the new head; a publish out-versioned by a blind commit
-    * replans too. */
+  /** THE read-modify-write commit loop: read the head and its record
+    * (an empty table fails with [[java.util.NoSuchElementException]]),
+    * let `plan` run its checks against them, claim exactly
+    * `pointer+1`, write, publish. `plan` returns None for a no-op (the
+    * head is returned and nothing is claimed) or `Some(write)`, which
+    * writes version `next`'s artifacts and returns its record — the
+    * head's, with the commit's edit — which the loop writes before it
+    * swaps the pointer. Winning `pointer+1` proves no other committer
+    * can finalize it, so the base `plan` read is the true predecessor —
+    * the serializability argument of every caller. A lost claim waits
+    * for the winner ([[awaitAdvance]]) and replans on the new head; a
+    * publish out-versioned by a blind commit replans too. */
   private def onHead(spark: SparkSession, root: String, op: String)(
-      plan: Long => Option[Long => Unit]): Long = {
+      plan: (Long, Meta) => Option[Long => Meta]): Long = {
     var attempt = 0
     while (attempt < CommitAttempts) {
       val base = currentVersion(spark, root).getOrElse(
         throw new java.util.NoSuchElementException(
           s"snapshot table $root has no committed version ($op)"))
-      plan(base) match {
+      plan(base, metaOf(spark, root, base)) match {
         case None => return base
         case Some(write) =>
           val next = base + 1
           if (claimVersion(spark, root, next)) {
-            writeClaimed(spark, root, next)(write(next))
+            writeClaimed(spark, root, next)(
+              writeMeta(spark, root, next, write(next)))
             if (pointerAdvance(spark, root, next)) return next
           } else if (awaitAdvance(spark, root, base)) attempt -= 1
       }
@@ -658,16 +690,18 @@ object Snapshot {
   /** The blind commit loop: claim strictly above every version any
     * artifact names ([[observedMax]]), write, publish with a monotonic
     * advance. `admit(next)` runs the checks for the candidate version
-    * before it is claimed. Blind commits never wait: a lost claim
-    * simply moves to the next free version. */
+    * before it is claimed; `write(next)` writes its artifacts and
+    * returns its record, written before the swap. Blind commits never
+    * wait: a lost claim simply moves to the next free version. */
   private def blindClaim(spark: SparkSession, root: String, op: String)(
-      admit: Long => Unit)(write: Long => Unit): Long = {
+      admit: Long => Unit)(write: Long => Meta): Long = {
     var attempts = 0
     while (true) {
       val next = observedMax(spark, root) + 1
       admit(next)
       if (claimVersion(spark, root, next)) {
-        writeClaimed(spark, root, next)(write(next))
+        writeClaimed(spark, root, next)(
+          writeMeta(spark, root, next, write(next)))
         pointerAdvance(spark, root, next)
         return next
       }
@@ -772,7 +806,12 @@ object Snapshot {
     * `v=N` fully, then swap the pointer atomically. Returns the
     * committed version. Racing blind commits serialize through the
     * claim: each gets its own version directory and the pointer ends on
-    * the highest (monotonic advance) — nobody overwrites anybody. */
+    * the highest (monotonic advance) — nobody overwrites anybody's
+    * files. Like the data, the metadata is last-writer-wins: the new
+    * record takes the batch's schema and copies the constraints,
+    * column map, dropped set and generation rule of the head the batch
+    * was validated against; an edit a concurrent commit made to the
+    * head in between is not carried. */
   def commit(df: DataFrame, root: String): Long =
     commitInternal(df, root, Nil)
 
@@ -809,34 +848,28 @@ object Snapshot {
     commitInternal(Layout.zorderCluster(df, c1, c2, nFiles, bits), root,
       Seq(c1, c2), bloomCols)
 
-  /** `sidecar(next)` writes any further per-version metadata the
-    * caller's readers need, inside the commit: before the pointer swap,
-    * so no reader can see the version without it. */
+  /** `gen` replaces the head's generation rule in the new record
+    * ([[commitGenerated]]). */
   private def commitInternal(df: DataFrame, root: String,
                              statsCols: Seq[String],
                              bloomCols: Seq[String] = Nil,
-                             sidecar: Long => Unit = _ => ()): Long = {
+                             gen: Option[(String, String, Long)] = None): Long = {
     val spark = df.sparkSession
     blindClaim(spark, root, "snapshot commit")(_ => ()) { next =>
+      // the live head's record binds the batch (a blind commit replaces
+      // whatever is current, so current's rules bind); a fresh table
+      // has no map and no constraints
+      val head = currentVersion(spark, root)
+      val hm = head.fold(Meta(new StructType()))(metaOf(spark, root, _))
       // column mapping: the batch arrives in LOGICAL names — freeze
       // it back to the table's physical names before parquet sees it
-      // (and the stats columns with it); a fresh table has no map
-      val cmap = currentVersion(spark, root)
-        .map(columnMapOf(spark, root, _)).getOrElse(Nil)
-      val physDf = toPhysical(df, cmap)
-      val physStats = statsCols.map(c =>
-        cmap.find(_._2 == c).map(_._1).getOrElse(c))
-      val physBlooms = bloomCols.map(c =>
-        cmap.find(_._2 == c).map(_._1).getOrElse(c))
+      // (and the stats columns with it)
+      val physDf = toPhysical(df, hm.colmap)
       physDf.write.mode("overwrite").parquet(s"$root/v=$next")
-      // CHECK constraints resolve against the live pointer (a blind
-      // commit replaces whatever is current, so current's rules bind)
-      currentVersion(spark, root)
-        .foreach(cur => enforceWritten(spark, root, next, cur))
-      if (physStats.nonEmpty)
-        writeStats(spark, root, next, physStats, physBlooms)
-      writeSchema(spark, root, next, physDf.schema)
-      sidecar(next)
+      enforceWritten(spark, root, next, head.getOrElse(0L), hm)
+      if (statsCols.nonEmpty) writeStats(spark, root, next,
+        statsCols.map(hm.physical), bloomCols.map(hm.physical))
+      hm.copy(schema = physDf.schema, gen = gen.orElse(hm.gen))
     }
   }
 
@@ -1211,12 +1244,16 @@ object Snapshot {
   def readCurrentPruned(spark: SparkSession, root: String, statsCol: String,
                         lo: org.apache.spark.sql.Column,
                         hi: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"snapshot table $root has no committed version"))
-    val cmap = columnMapOf(spark, root, v)
-    val physCol = cmap.find(_._2 == statsCol).map(_._1).getOrElse(statsCol)
+    val v = headOf(spark, root)
+    prunedRead(spark, root, v, metaOf(spark, root, v), statsCol, lo, hi)
+  }
+
+  private def prunedRead(spark: SparkSession, root: String, v: Long,
+                         m: Meta, statsCol: String,
+                         lo: org.apache.spark.sql.Column,
+                         hi: org.apache.spark.sql.Column): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val physCol = m.physical(statsCol)
     val statsPath = new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$v")
     if (!fsOf(spark, statsPath).exists(statsPath))
       // resolve through the FILE manifest, not the bare v=N directory: a
@@ -1224,21 +1261,19 @@ object Snapshot {
       // then appendCommit/compactSmall/restore — writeManifestAndStats
       // skips stats when the base has none), and the directory alone
       // would silently drop every manifest-referenced row (for a
-      // restored version, the directory is an EMPTY schema anchor).
+      // restored version, the directory is EMPTY).
       // readResolved output is LOGICAL, so filter on the logical name
-      readResolved(spark, root, v)
+      readResolved(spark, root, v, m)
         .filter(col(statsCol) >= lo && col(statsCol) <= hi)
     else {
       // physical files: prune and filter on the frozen physical name,
       // then present logical names
       val between = col(physCol) >= lo && col(physCol) <= hi
       val files = prunedFiles(spark, root, v, physCol, lo, hi)
-      if (files.isEmpty) // no overlap: empty result, correct schema, no scan
-        toLogical(physReader(spark, root, v).parquet(s"$root/v=$v")
-          .filter(between).filter(lit(false)), cmap)
+      if (files.isEmpty) emptyOf(spark, m) // no overlap: no scan
       else toLogical(applyDv(spark, root, v,
-        physReader(spark, root, v).parquet(files: _*))
-        .filter(between), cmap)
+        physReader(spark, m).parquet(files: _*))
+        .filter(between), m.colmap)
     }
   }
 
@@ -1255,16 +1290,13 @@ object Snapshot {
                            hi1: org.apache.spark.sql.Column,
                            c2: String, lo2: org.apache.spark.sql.Column,
                            hi2: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"snapshot table $root has no committed version"))
-    val cmap = columnMapOf(spark, root, v)
-    val p1 = cmap.find(_._2 == c1).map(_._1).getOrElse(c1)
-    val p2 = cmap.find(_._2 == c2).map(_._1).getOrElse(c2)
+    import org.apache.spark.sql.functions.col
+    val v = headOf(spark, root)
+    val m = metaOf(spark, root, v)
+    val (p1, p2) = (m.physical(c1), m.physical(c2))
     val statsPath = new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$v")
     if (!fsOf(spark, statsPath).exists(statsPath))
-      readResolved(spark, root, v).filter(
+      readResolved(spark, root, v, m).filter(
         col(c1) >= lo1 && col(c1) <= hi1 &&
           col(c2) >= lo2 && col(c2) <= hi2)
     else {
@@ -1273,11 +1305,9 @@ object Snapshot {
       val files =
         prunedFiles(spark, root, v, p1, lo1, hi1).toSet
           .intersect(prunedFiles(spark, root, v, p2, lo2, hi2).toSet)
-      if (files.isEmpty)
-        toLogical(physReader(spark, root, v).parquet(s"$root/v=$v")
-          .filter(box).filter(lit(false)), cmap)
-      else toLogical(applyDv(spark, root, v, physReader(spark, root, v)
-        .parquet(files.toSeq.sorted: _*)).filter(box), cmap)
+      if (files.isEmpty) emptyOf(spark, m)
+      else toLogical(applyDv(spark, root, v, physReader(spark, m)
+        .parquet(files.toSeq.sorted: _*)).filter(box), m.colmap)
     }
   }
 
@@ -1320,26 +1350,18 @@ object Snapshot {
   def readCurrentPoint(spark: SparkSession, root: String,
                        pointCol: String, value: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"snapshot table $root has no committed version"))
-    val cmap = columnMapOf(spark, root, v)
-    val physCol = cmap.find(_._2 == pointCol).map(_._1).getOrElse(pointCol)
-    val eq = col(physCol) === lit(value)
+    val v = headOf(spark, root)
+    val m = metaOf(spark, root, v)
+    val physCol = m.physical(pointCol)
     if (!bloomColsOf(spark, root, v).contains(physCol))
-      readResolved(spark, root, v).filter(col(pointCol) === lit(value))
+      readResolved(spark, root, v, m).filter(col(pointCol) === lit(value))
     else {
       val files = filesForPoint(spark, root, v, physCol, value)
-      if (files.isEmpty) {
-        // definitively absent: no file can contain it — anchor the
-        // empty result's SCHEMA on one file instead of footer-reading
-        // the whole table (measured 2.3 s vs 0.1 s at 1000 files)
-        val any = Layout.readParquet(spark, s"$root/$StatsDir/v=$v")
-          .select("file").head().getString(0)
-        toLogical(physReader(spark, root, v).parquet(any)
-          .filter(eq).filter(lit(false)), cmap)
-      } else toLogical(applyDv(spark, root, v,
-        physReader(spark, root, v).parquet(files: _*)).filter(eq), cmap)
+      // definitively absent: no file can contain it
+      if (files.isEmpty) emptyOf(spark, m)
+      else toLogical(applyDv(spark, root, v,
+        physReader(spark, m).parquet(files: _*))
+        .filter(col(physCol) === lit(value)), m.colmap)
     }
   }
 
@@ -1415,20 +1437,19 @@ object Snapshot {
     * [[vacuum]] `clearStaleClaims=true` is the admin recovery. */
   def mergeCommit(spark: SparkSession, root: String, changes: DataFrame,
                   key: String): Long =
-    onHead(spark, root, "mergeCommit") { base => Some { next =>
+    onHead(spark, root, "mergeCommit") { (base, m) => Some { next =>
       // CHECK constraints: validate the CHANGE batch up front —
       // O(batch), and base rows were validated by their own commits,
       // so the merged result cannot introduce a violation elsewhere
       // (nothing is written yet; the loop releases the claim)
-      val mcs = checkConstraintsOf(spark, root, base)
-      if (mcs.nonEmpty) violationCounts(changes, mcs)
+      violationCounts(changes, m.constraints)
         .filter(_._2 > 0).headOption.foreach { case (n, c) =>
           throw new ConstraintViolation(n, c,
             s"merge into $root rejected: CHECK constraint `$n` " +
               s"failed on $c change row(s); pointer stays on v=$base")
         }
-      val cmap = columnMapOf(spark, root, base)
-      val physKey = physicalOf(spark, root, base, key)
+      val cmap = m.colmap
+      val physKey = m.physical(key)
       val statsPath =
         new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$base")
       val prunable = statsColsOf(spark, root, base).contains(physKey) &&
@@ -1460,9 +1481,9 @@ object Snapshot {
             // tombstones apply to the rewrite read, so a MOR-deleted
             // row never re-materializes through a merge's rewrite
             toLogical(applyDv(spark, root, base,
-                physReader(spark, root, base).parquet(touched: _*)),
+                physReader(spark, m).parquet(touched: _*)),
               cmap).join(changes.select(key), Seq(key), "left_anti")
-          else readResolved(spark, root, base).limit(0)
+          else emptyOf(spark, m)
         val merged =
           changes.unionByName(survivors, allowMissingColumns = true)
         // Output width from the REWRITE mass (touched-file bytes,
@@ -1491,9 +1512,9 @@ object Snapshot {
         // manifest carries untouched files by reference; stats carry
         // verbatim for them and re-derive over the fresh files; the
         // recorded schema absorbs any add-column evolution
-        writeManifestAndStats(spark, root, next, base, untouched)
+        writeManifestAndStats(spark, root, next, base, m, untouched)
       } else {
-        val baseDf = readResolved(spark, root, base)
+        val baseDf = readResolved(spark, root, base, m)
         // allowMissingColumns: a change batch carrying a NEW column is
         // an add-column evolution (kept rows read NULL there), and a
         // batch without a recently-added column still merges (its rows
@@ -1510,7 +1531,7 @@ object Snapshot {
         val sc = statsColsOf(spark, root, base)
         if (sc.nonEmpty) writeStats(spark, root, next, sc,
           bloomColsOf(spark, root, base))
-        writeSchema(spark, root, next, physMerged.schema)
+        m.copy(schema = physMerged.schema)
       }
     } }
 
@@ -1541,10 +1562,10 @@ object Snapshot {
                   lo: org.apache.spark.sql.Column,
                   hi: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
-    onHead(spark, root, "deleteWhere") { base =>
+    onHead(spark, root, "deleteWhere") { (base, m) =>
       // column mapping: the caller names the LOGICAL column; stats
       // manifests and the physical files know its frozen physical name
-      val physCol = physicalOf(spark, root, base, statsCol)
+      val physCol = m.physical(statsCol)
       val sc = statsColsOf(spark, root, base)
       require(sc.contains(physCol),
         s"deleteWhere needs per-file stats on $statsCol (have: $sc) — " +
@@ -1566,22 +1587,18 @@ object Snapshot {
         // range. coalesce pins NULL-key rows as survivors everywhere.
         val keep = !coalesce(between, lit(false))
         // rewrite ONLY the overlapping files, dropping matching rows;
-        // a no-overlap delete writes a schema-only anchor so the v=N
-        // directory exists for the claim/observedMax protocol. The
-        // touched files are read with the base's RECORDED schema when
-        // present: after an add-column evolution they can mix
-        // generations, and plain inference would take one file's schema
-        // and drop the later column from the rewrite.
-        val rewritten =
-          if (touched.nonEmpty) // DV-filtered: a COW rewrite of a file
-            // holding MOR tombstones must not resurrect those rows
-            applyDv(spark, root, base,
-              physReader(spark, root, base).parquet(touched: _*))
-              .filter(keep)
-          else toPhysical(readResolved(spark, root, base),
-            columnMapOf(spark, root, base)).limit(0)
-        rewritten.write.mode("overwrite").parquet(s"$root/v=$next")
-        writeManifestAndStats(spark, root, next, base, untouched)
+        // a no-overlap delete only creates the v=N directory for the
+        // claim/observedMax protocol. The touched files are read with
+        // the base's RECORDED schema: after an add-column evolution they
+        // can mix generations, and plain inference would take one
+        // file's schema and drop the later column from the rewrite.
+        if (touched.nonEmpty) // DV-filtered: a COW rewrite of a file
+          // holding MOR tombstones must not resurrect those rows
+          applyDv(spark, root, base,
+              physReader(spark, m).parquet(touched: _*))
+            .filter(keep).write.mode("overwrite").parquet(s"$root/v=$next")
+        else mkVersionDir(spark, root, next)
+        writeManifestAndStats(spark, root, next, base, m, untouched)
       }
     }
   }
@@ -1615,8 +1632,8 @@ object Snapshot {
     * serialization as every read-modify-write commit.
     *
     * Streaming append-tails are strictly SAFER under MOR than under
-    * COW deletes: the commit adds no data files (the version dir holds
-    * only a zero-row schema anchor), so a running tail sees nothing —
+    * COW deletes: the commit adds no data files (the version dir stays
+    * empty), so a running tail sees nothing —
     * no rewritten files interleaving already-emitted rows, which is
     * the case [[graft.streaming.Streaming.tailVacuumAudit]] exists to
     * refuse. (File tails never retract rows on any engine; deletes
@@ -1631,9 +1648,8 @@ object Snapshot {
   def deleteWhereMor(spark: SparkSession, root: String,
                      cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
-    val v = onHead(spark, root, "deleteWhereMor") { base => Some { next =>
-      val cmap = columnMapOf(spark, root, base)
-      val reader = physReader(spark, root, base)
+    val v = onHead(spark, root, "deleteWhereMor") { (base, m) => Some { next =>
+      val reader = physReader(spark, m)
       val physical = manifestFiles(spark, root, base) match {
         case Some(files) if files.nonEmpty => reader.parquet(files: _*)
         case _ => reader.parquet(s"$root/v=$base")
@@ -1647,7 +1663,7 @@ object Snapshot {
         .withColumn("__mor_file",
           canonMetaPath(col("_metadata.file_path")))
         .withColumn("__mor_idx", col("_metadata.row_index")))
-      val fresh = toLogical(tagged, cmap)
+      val fresh = toLogical(tagged, m.colmap)
         .filter(coalesce(cond, lit(false)))
         .select(col("__mor_file").as("file"),
           col("__mor_idx").as("row_index"))
@@ -1657,12 +1673,8 @@ object Snapshot {
         .map(_.unionByName(fresh)).getOrElse(fresh).distinct().persist()
       try {
         val nTomb = merged.count()
-        // schema anchor (the claim/observedMax protocol needs the
-        // dir); all data rides by reference
-        toPhysical(readResolved(spark, root, base), cmap).limit(0)
-          .write.mode("overwrite").parquet(s"$root/v=$next")
-        val carried = fileInventory(spark, root, base).map(_._1)
-        writeManifestAndStats(spark, root, next, base, carried)
+        // all data rides by reference
+        val record = carryAll(spark, root, base, m, next)
         // the carry above wrote the base's sidecar verbatim (all files
         // carried); replace it with base ∪ fresh. A predicate matching
         // zero rows on a DV-less base writes NO sidecar at all — an
@@ -1678,6 +1690,7 @@ object Snapshot {
           merged.coalesce(width).write.mode("overwrite")
             .parquet(s"$root/$DvDir/v=$next")
         }
+        record
       } finally merged.unpersist()
     } }
     // The MOR commit is durable once the pointer advances; the
@@ -1747,7 +1760,7 @@ object Snapshot {
     * carried set is empty — no special case. No-op (current version
     * returned, no commit burned) on a table without tombstones. */
   def purgeDv(spark: SparkSession, root: String): Long =
-    onHead(spark, root, "purgeDv") { base =>
+    onHead(spark, root, "purgeDv") { (base, m) =>
       val dv = dvOf(spark, root, base)
       if (dv.isEmpty) None else Some { next =>
         val touched = dv.get
@@ -1770,10 +1783,10 @@ object Snapshot {
         val width = math.max(compactWidthFor(touchedBytes, cap),
           math.min(touched.size, cap))
         applyDv(spark, root, base,
-            physReader(spark, root, base).parquet(touched: _*))
+            physReader(spark, m).parquet(touched: _*))
           .coalesce(width)
           .write.mode("overwrite").parquet(s"$root/v=$next")
-        writeManifestAndStats(spark, root, next, base, untouched)
+        writeManifestAndStats(spark, root, next, base, m, untouched)
       }
     }
 
@@ -1794,21 +1807,18 @@ object Snapshot {
     * validated rows. */
   def addCheckConstraint(spark: SparkSession, root: String,
                          name: String, exprSql: String): Long =
-    onHead(spark, root, "addCheckConstraint") { base =>
-      val existing = checkConstraintsOf(spark, root, base)
-      require(!existing.exists(_._1 == name),
+    onHead(spark, root, "addCheckConstraint") { (base, m) =>
+      require(!m.constraints.exists(_._1 == name),
         s"constraint `$name` already exists on $root")
-      violationCounts(readResolved(spark, root, base),
+      violationCounts(readResolved(spark, root, base, m),
           Seq((name, exprSql))).filter(_._2 > 0)
         .headOption.foreach { case (n, c) =>
           throw new ConstraintViolation(n, c,
             s"cannot add CHECK constraint `$n` to $root: existing data " +
               s"violates it on $c row(s)")
         }
-      Some { next =>
-        carryAll(spark, root, base, next)
-        writeConstraintSet(spark, root, next, existing :+ (name -> exprSql))
-      }
+      Some { next => carryAll(spark, root, base, m.copy(constraints =
+        (m.constraints :+ (name -> exprSql)).sortBy(_._1)), next) }
     }
 
   /** DROP a CHECK constraint by name — a metadata-only version whose
@@ -1817,34 +1827,37 @@ object Snapshot {
     * [[checkConstraintsOf]]. */
   def dropCheckConstraint(spark: SparkSession, root: String,
                           name: String): Long =
-    onHead(spark, root, "dropCheckConstraint") { base =>
-      val existing = checkConstraintsOf(spark, root, base)
-      require(existing.exists(_._1 == name),
+    onHead(spark, root, "dropCheckConstraint") { (base, m) =>
+      require(m.constraints.exists(_._1 == name),
         s"no constraint `$name` on $root (have: " +
-          s"${existing.map(_._1).mkString(", ")})")
-      Some { next =>
-        carryAll(spark, root, base, next)
-        writeConstraintSet(spark, root, next, existing.filterNot(_._1 == name))
-      }
+          s"${m.constraints.map(_._1).mkString(", ")})")
+      Some { next => carryAll(spark, root, base,
+        m.copy(constraints = m.constraints.filterNot(_._1 == name)), next) }
     }
 
-  /** The body every METADATA-ONLY commit shares: an empty `v=next`
-    * data dir (for the claim / observedMax protocol) plus a manifest
-    * carrying every file of `base` by reference. */
-  private def carryAll(spark: SparkSession, root: String,
-                       base: Long, next: Long): Unit = {
+  /** The empty `v=next` data directory the claim / observedMax
+    * protocol sees for a commit that writes no data file. */
+  private def mkVersionDir(spark: SparkSession, root: String,
+                           next: Long): Unit =
     fsOf(spark, new org.apache.hadoop.fs.Path(root))
       .mkdirs(new org.apache.hadoop.fs.Path(root, s"v=$next"))
-    writeManifestAndStats(spark, root, next, base,
-      fileInventory(spark, root, base).map(_._1))
+
+  /** The body every METADATA-ONLY commit shares: an empty `v=next`
+    * data dir plus a manifest carrying every file of `from` by
+    * reference. Returns `m`, the new version's record. */
+  private def carryAll(spark: SparkSession, root: String,
+                       from: Long, m: Meta, next: Long): Meta = {
+    mkVersionDir(spark, root, next)
+    writeManifestAndStats(spark, root, next, from, m,
+      fileInventory(spark, root, from).map(_._1))
   }
 
   /** METADATA-ONLY column RENAME (the Delta column-mapping / Iceberg
     * field-ID motion): physical names are frozen at first commit, so a
-    * rename writes only a new `(physical, logical)` map version and a
-    * manifest carrying every file by reference — zero data I/O at any
-    * table size. From then on readers alias physical → logical after
-    * the scan, writers translate logical → physical before it
+    * rename writes only a record with a new `(physical, logical)` map
+    * and a manifest carrying every file by reference — zero data I/O
+    * at any table size. From then on readers alias physical → logical
+    * after the scan, writers translate logical → physical before it
     * ([[commit]]/[[appendCommit]]/[[mergeCommit]] accept batches in
     * the NEW names), stats/bloom skipping keys stay physical (pruned
     * reads translate), renames COMPOSE (a→b→c keeps one map entry),
@@ -1857,52 +1870,24 @@ object Snapshot {
     * metadata history is orthogonal to data history. */
   def renameColumn(spark: SparkSession, root: String,
                    from: String, to: String): Long =
-    onHead(spark, root, "renameColumn") { base =>
-      val logicalNames = readResolved(spark, root, base).columns.toSet
+    onHead(spark, root, "renameColumn") { (base, m) =>
+      val logicalNames = m.logicalNames.toSet
       require(logicalNames.contains(from),
         s"no column `$from` in $root (have: ${logicalNames.mkString(", ")})")
       require(!logicalNames.contains(to),
         s"column `$to` already exists in $root")
-      checkConstraintsOf(spark, root, base).foreach { case (n, e) =>
+      m.constraints.foreach { case (n, e) =>
         require(!e.contains(from),
           s"rename of `$from` refused: CHECK constraint `$n` ($e) " +
             "references it — drop the constraint first")
       }
-      Some { next =>
-        carryAll(spark, root, base, next)
-        val phys = physicalOf(spark, root, base, from)
-        val composed = columnMapOf(spark, root, base)
-          .filterNot(_._1 == phys) :+ (phys -> to)
-        // identity entries (renamed back to the physical name) drop out
-        writeColumnMap(spark, root, next,
-          composed.filterNot(p => p._1 == p._2))
-      }
+      val phys = m.physical(from)
+      // renames compose to one entry per physical column; identity
+      // entries (renamed back to the physical name) drop out
+      val composed = (m.colmap.filterNot(_._1 == phys) :+ (phys -> to))
+        .filterNot(p => p._1 == p._2).sortBy(_._1)
+      Some { next => carryAll(spark, root, base, m.copy(colmap = composed), next) }
     }
-
-  private val DroppedDir = "_dropped"
-
-  /** PHYSICAL names retired by [[dropColumn]] as of version `v` —
-    * full-set-per-change, nearest-at-or-below resolution, exactly the
-    * [[columnMapOf]] protocol. O(1) metadata read. */
-  private[graft] def droppedOf(spark: SparkSession, root: String,
-                               v: Long): Set[String] = {
-    val dir = new org.apache.hadoop.fs.Path(root, DroppedDir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) return Set.empty
-    val vs = fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.matches("v=\\d+") => n.stripPrefix("v=").toLong }
-      .filter(_ <= v)
-    if (vs.isEmpty) Set.empty
-    else Layout.readParquet(spark, s"$root/$DroppedDir/v=${vs.max}")
-      .select("physical").collect().map(_.getString(0)).toSet
-  }
-
-  private def writeDropped(spark: SparkSession, root: String, v: Long,
-                           s: Set[String]): Unit = {
-    import spark.implicits._
-    s.toSeq.sorted.toDF("physical").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/$DroppedDir/v=$v")
-  }
 
   /** METADATA-ONLY column DROP (the other half of the column-mapping
     * story beside [[renameColumn]]): the new version records the
@@ -1926,14 +1911,13 @@ object Snapshot {
     * Refused when the column is missing, is the table's last column,
     * or an active CHECK constraint references it. */
   def dropColumn(spark: SparkSession, root: String, colName: String): Long =
-    onHead(spark, root, "dropColumn") { base =>
-      val resolved = readResolved(spark, root, base)
-      val logicalNames = resolved.columns.toSet
+    onHead(spark, root, "dropColumn") { (base, m) =>
+      val logicalNames = m.logicalNames.toSet
       require(logicalNames.contains(colName),
         s"no column `$colName` in $root (have: ${logicalNames.mkString(", ")})")
       require(logicalNames.size > 1,
         s"refusing to drop `$colName`: it is the last column of $root")
-      checkConstraintsOf(spark, root, base).foreach { case (n, e) =>
+      m.constraints.foreach { case (n, e) =>
         require(!e.contains(colName),
           s"drop of `$colName` refused: CHECK constraint `$n` ($e) " +
             "references it — drop the constraint first")
@@ -1941,28 +1925,17 @@ object Snapshot {
       // a stats/bloom key cannot be dropped in place: later appends
       // re-derive fresh per-file stats over the manifest's columns and
       // would aggregate a column the new files no longer have
-      val cmap = columnMapOf(spark, root, base)
-      val phys = cmap.find(_._2 == colName).map(_._1).getOrElse(colName)
+      val phys = m.physical(colName)
       require(!(statsColsOf(spark, root, base) ++
           bloomColsOf(spark, root, base)).contains(phys),
         s"drop of `$colName` refused: it keys the data-skipping index " +
           "— recommit with different stats columns first")
-      Some { next =>
-        carryAll(spark, root, base, next)
-        // the base's PHYSICAL schema (logical fields mapped back
-        // through the column map — toLogical only renames, so this is
-        // exact) minus the dropped field, recorded for `next`. This
-        // OVERWRITES whatever writeManifestAndStats recorded.
-        val byLogical = cmap.map(_.swap).toMap
-        val physSchema = org.apache.spark.sql.types.StructType(
-          resolved.schema.fields
-            .map(f => f.copy(name = byLogical.getOrElse(f.name, f.name)))
-            .filterNot(_.name == phys))
-        writeSchema(spark, root, next, physSchema)
-        // the mapping entry (if any) retires with the column
-        writeColumnMap(spark, root, next, cmap.filterNot(_._1 == phys))
-        writeDropped(spark, root, next, droppedOf(spark, root, base) + phys)
-      }
+      // the physical schema minus the field; the mapping entry (if
+      // any) retires with the column and its physical name is retired
+      Some { next => carryAll(spark, root, base, m.copy(
+        schema = StructType(m.schema.fields.filterNot(_.name == phys)),
+        colmap = m.colmap.filterNot(_._1 == phys),
+        dropped = m.dropped + phys), next) }
     }
 
   /** Manifest-referenced APPEND: commit `df` as NEW files while every
@@ -1985,7 +1958,7 @@ object Snapshot {
         case None => attempt += 1
       }
     }
-    onHead(spark, root, "appendCommit") { base =>
+    onHead(spark, root, "appendCommit") { (base, m) =>
       // tombstone guard (see [[dropColumn]]): a batch whose
       // physical names include a dropped column would make the
       // merged schema resurrect carried files' old values. Only
@@ -1993,17 +1966,9 @@ object Snapshot {
       // [[restore]] to a pre-drop version puts the column back in
       // the schema, and appending it there is consistent (carried
       // files all hold real values again).
-      val physBatch = toPhysical(df, columnMapOf(spark, root, base))
-      val livePhys = schemaOf(spark, root, base)
-        .map(_.fieldNames.toSet)
-        .getOrElse {
-          val byLogical =
-            columnMapOf(spark, root, base).map(_.swap).toMap
-          readResolved(spark, root, base).columns
-            .map(c => byLogical.getOrElse(c, c)).toSet
-        }
+      val physBatch = toPhysical(df, m.colmap)
       val revived = physBatch.columns.toSet
-        .intersect(droppedOf(spark, root, base)) -- livePhys
+        .intersect(m.dropped) -- m.schema.fieldNames
       require(revived.isEmpty,
         s"append to $root refused: column(s) ${revived.mkString(", ")} " +
           "were dropped and their physical names are retired — " +
@@ -2014,8 +1979,8 @@ object Snapshot {
         physBatch.write.mode("overwrite").parquet(s"$root/v=$next")
         // enforce on the APPENDED files only — carried rows were
         // validated by the commits that wrote them
-        enforceWritten(spark, root, next, base)
-        writeManifestAndStats(spark, root, next, base, carried)
+        enforceWritten(spark, root, next, base, m)
+        writeManifestAndStats(spark, root, next, base, m, carried)
       }
     }
   }
@@ -2035,7 +2000,7 @@ object Snapshot {
     val next = observedMax(spark, root) + 1
     if (claimVersion(spark, root, next)) {
       df.write.mode("overwrite").parquet(s"$root/v=$next")
-      writeSchema(spark, root, next, df.schema)
+      writeMeta(spark, root, next, Meta(df.schema))
       // Publish is a strict CAS against the EMPTY table: when
       // `next > 1` this claim sits ahead of other claimants still
       // mid-bootstrap, and one of them can publish between our
@@ -2065,15 +2030,17 @@ object Snapshot {
             // dir and retry through the normal append loop,
             // which renames via toPhysical and enforces the
             // guard before writing.
-            if (columnMapOf(spark, root, base2).nonEmpty
-                || droppedOf(spark, root, base2).nonEmpty) {
+            val m2 = metaOf(spark, root, base2)
+            if (m2.colmap.nonEmpty || m2.dropped.nonEmpty) {
               releaseClaim(spark, root, next)
               return None
             }
-            writeClaimed(spark, root, next)(
-              enforceWritten(spark, root, next, base2))
-            writeManifestAndStats(spark, root, next, base2,
-              fileInventory(spark, root, base2).map(_._1))
+            writeClaimed(spark, root, next) {
+              enforceWritten(spark, root, next, base2, m2)
+              writeMeta(spark, root, next, writeManifestAndStats(spark,
+                root, next, base2, m2,
+                fileInventory(spark, root, base2).map(_._1)))
+            }
             if (pointerAdvance(spark, root, next, expectedPrev = base2))
               return Some(next)
             // else the head moved again — re-carry from it
@@ -2098,10 +2065,12 @@ object Snapshot {
     * file manifest (`carried` by reference + whatever parquet the
     * commit just wrote into `v=next`) and, when the base carries a
     * stats manifest, the new stats manifest — `carried` rows verbatim,
-    * fresh stats re-derived by scanning ONLY the newly written files. */
+    * fresh stats re-derived by scanning ONLY the newly written files.
+    * Returns the new version's record: `m` with any new columns of the
+    * fresh files appended to its schema. */
   private def writeManifestAndStats(spark: SparkSession, root: String,
-                                    next: Long, base: Long,
-                                    carriedFiles: Seq[String]): Unit = {
+                                    next: Long, base: Long, m: Meta,
+                                    carriedFiles: Seq[String]): Meta = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val newDir = new org.apache.hadoop.fs.Path(root, s"v=$next")
@@ -2109,17 +2078,13 @@ object Snapshot {
     val newFiles = newStatus.map(st => canonFile(st.getPath))
     (carriedFiles ++ newFiles).toDF("file").coalesce(1)
       .write.mode("overwrite").parquet(s"$root/$ManifestDir/v=$next")
-    // schema evolution: the new version's logical schema is the base's
-    // with any NEW batch columns appended (one footer read of the fresh
-    // files — a commit batch is schema-uniform). A legacy base with no
-    // recorded schema stays legacy: recording only the batch's schema
-    // would mask the carried files' columns.
-    schemaOf(spark, root, base).foreach { baseSchema =>
-      val vSchema =
-        if (newFiles.isEmpty) baseSchema
-        else mergedSchema(baseSchema, Layout.footerSchema(spark, newStatus.head))
-      writeSchema(spark, root, next, vSchema)
-    }
+    // schema evolution: the new version's schema is the record's with
+    // any NEW batch columns appended (one footer read of the fresh
+    // files — a commit batch is schema-uniform)
+    val record =
+      if (newFiles.isEmpty) m
+      else m.copy(schema =
+        mergedSchema(m.schema, Layout.footerSchema(spark, newStatus.head)))
     val sc = statsColsOf(spark, root, base)
     if (sc.nonEmpty) {
       val carried = Layout.readParquet(spark, s"$root/$StatsDir/v=$base")
@@ -2163,6 +2128,7 @@ object Snapshot {
           .coalesce(1).write.mode("overwrite")
           .parquet(s"$root/$DvDir/v=$next")
     }
+    record
   }
 
   /** Incremental small-file compaction (the OPTIMIZE maintenance pass
@@ -2179,7 +2145,7 @@ object Snapshot {
   def compactSmall(spark: SparkSession, root: String,
                    smallBytes: Long = 32L * 1024 * 1024,
                    targetBytes: Long = 128L * 1024 * 1024): Long =
-    onHead(spark, root, "compactSmall") { base =>
+    onHead(spark, root, "compactSmall") { (base, m) =>
       val inv = fileInventory(spark, root, base)
       val (small, large) = inv.partition(_._2 < smallBytes)
       // ≤1 small file: already compact, no new version
@@ -2190,17 +2156,17 @@ object Snapshot {
         // Recorded schema for the same mixed-generation reason as
         // deleteWhere's rewrite — small files can straddle an
         // add-column evolution boundary.
-        applyDv(spark, root, base, physReader(spark, root, base)
+        applyDv(spark, root, base, physReader(spark, m)
             .parquet(small.map(_._1): _*)).coalesce(nOut)
           .write.mode("overwrite").parquet(s"$root/v=$next")
-        writeManifestAndStats(spark, root, next, base, large.map(_._1))
+        writeManifestAndStats(spark, root, next, base, m, large.map(_._1))
       }
     }
 
   /** SHALLOW CLONE: materialize a NEW table at `dstRoot` whose first
     * version REFERENCES the source's current files through a manifest —
     * the Delta `CREATE TABLE ... SHALLOW CLONE` shape: zero data I/O
-    * at any table size (a schema anchor plus O(files) manifest rows),
+    * at any table size (a record plus O(files) manifest rows),
     * after which the clone evolves independently (merges/deletes on
     * the clone write THEIR new files under `dstRoot` while untouched
     * data keeps riding the source's files by absolute reference — the
@@ -2220,28 +2186,17 @@ object Snapshot {
     val srcV = currentVersion(spark, srcRoot).getOrElse(
       throw new java.util.NoSuchElementException(
         s"snapshot table $srcRoot has no committed version to clone"))
-    val src = readResolved(spark, srcRoot, srcV)
+    val srcM = metaOf(spark, srcRoot, srcV)
     blindClaim(spark, dstRoot, "shallowClone") { next =>
       require(next == 1L,
         s"shallowClone target $dstRoot already has versions — clone " +
           "into a fresh root")
     } { next =>
-      // schema anchor: the v=N directory must exist for the claim /
-      // observedMax protocol; the data rides by reference. The anchor
-      // and recorded schema are PHYSICAL (readResolved presents
-      // logical) — the referenced files only answer to physical names
-      val srcMap = columnMapOf(spark, srcRoot, srcV)
-      val srcPhys = toPhysical(src, srcMap)
-      srcPhys.limit(0).write.mode("overwrite").parquet(s"$dstRoot/v=$next")
+      // the data rides by reference
+      mkVersionDir(spark, dstRoot, next)
       val carried = fileInventory(spark, srcRoot, srcV).map(_._1)
       carried.toDF("file").coalesce(1)
         .write.mode("overwrite").parquet(s"$dstRoot/$ManifestDir/v=$next")
-      writeSchema(spark, dstRoot, next, srcPhys.schema)
-      // the clone inherits the source's column mapping and CHECK
-      // constraints — it must read and gate like the table it mirrors
-      if (srcMap.nonEmpty) writeColumnMap(spark, dstRoot, next, srcMap)
-      val srcCs = checkConstraintsOf(spark, srcRoot, srcV)
-      if (srcCs.nonEmpty) writeConstraintSet(spark, dstRoot, next, srcCs)
       if (statsColsOf(spark, srcRoot, srcV).nonEmpty)
         Layout.readParquet(spark, s"$srcRoot/$StatsDir/v=$srcV").coalesce(1)
           .write.mode("overwrite").parquet(s"$dstRoot/$StatsDir/v=$next")
@@ -2250,6 +2205,9 @@ object Snapshot {
       // resurrect on the clone
       dvOf(spark, srcRoot, srcV).foreach(_.coalesce(1)
         .write.mode("overwrite").parquet(s"$dstRoot/$DvDir/v=$next"))
+      // the source head's record: the clone reads and gates like the
+      // table it mirrors
+      srcM
     }
   }
 
@@ -2258,24 +2216,19 @@ object Snapshot {
     * readable for forensics until vacuumed), and the restore itself is
     * a METADATA-ONLY commit: the new version's manifest references
     * `toV`'s files verbatim, so restoring a 100 TB table writes a
-    * schema anchor plus O(files) manifest rows, never data. Stats
+    * record plus O(files) manifest rows, never data. Stats
     * carry from `toV`'s manifest, so data skipping survives. Runs
     * under the claim-exactly-`pointer+1` protocol like every
     * read-modify-write commit. */
   def restore(spark: SparkSession, root: String, toV: Long): Long =
-    onHead(spark, root, "restore") { base =>
+    onHead(spark, root, "restore") { (base, m) =>
       if (base == toV) None else {
-        // fails fast with the retained inventory if toV was vacuumed
-        val target = readVersion(spark, root, toV)
+        // toV's files come back with toV's schema; the head's
+        // constraints, column map, dropped set and rule stay — metadata
+        // history is orthogonal to data history
+        val toM = retainedMeta(spark, root, toV)
         Some { next =>
-          // schema anchor: the v=N directory must exist for the
-          // claim/observedMax protocol; the data rides by reference
-          // (physical names — the carried files only answer to those)
-          toPhysical(target, columnMapOf(spark, root, toV)).limit(0)
-            .write.mode("overwrite").parquet(s"$root/v=$next")
-          val carried = fileInventory(spark, root, toV).map(_._1)
-          writeManifestAndStats(spark, root, next, toV, carried)
-        }
+          carryAll(spark, root, toV, m.copy(schema = toM.schema), next) }
       }
     }
 
@@ -2300,11 +2253,11 @@ object Snapshot {
     // the feed crosses a metadata-only RENAME boundary as pure renames
     // (same physical column, no spurious delete+insert): re-base the
     // older side physical → toV's map.
+    val toM = retainedMeta(spark, root, toV)
     val a = toLogical(
-      toPhysical(readVersion(spark, root, fromV),
-        columnMapOf(spark, root, fromV)),
-      columnMapOf(spark, root, toV))
-    val b = readVersion(spark, root, toV)
+      readPhysical(spark, root, fromV, retainedMeta(spark, root, fromV)),
+      toM.colmap)
+    val b = readResolved(spark, root, toV, toM)
     // Align both snapshots to the UNION of their columns so the feed
     // crosses an add-column evolution boundary: a column absent on one
     // side reads as NULL there (its pre-image before the column
@@ -2762,8 +2715,6 @@ object Snapshot {
       .orderBy(asc_nulls_first("o_audit_src"))
   }
 
-  private val GenDir = "_gencol"
-
   /** GENERATED-COLUMN commit (the Delta `GENERATED ALWAYS AS` pruning
     * motion): materialize `genName = baseCol div bucket` at write time,
     * lay the files out by range on it, keep per-file stats on the
@@ -2783,62 +2734,23 @@ object Snapshot {
                       nFiles: Int = 8): Long = {
     import org.apache.spark.sql.functions.{col, expr}
     require(bucket > 0, s"generation bucket must be positive: $bucket")
-    // the sidecar is a hand-built one-line JSON parsed by a fixed
-    // pattern in [[genRuleOf]]; restrict names to plain identifiers at
-    // COMMIT time so no committed rule can ever contain a quote,
-    // backslash, or other char the reader would mis-parse (and plain
-    // identifiers are also what `expr`/`repartitionByRange` expect —
-    // anything fancier would need backtick-quoting anyway)
+    // the rule's names reach `expr`, `repartitionByRange` and every
+    // reader's `col` unquoted: restrict them to plain identifiers at
+    // COMMIT time, so no committed rule names a column its readers
+    // would mis-resolve (anything fancier would need backtick-quoting)
     Seq("generated" -> genName, "base" -> baseCol).foreach { case (what, n) =>
       require(n.matches("[A-Za-z_][A-Za-z0-9_]*"),
         s"$what column name must be a plain identifier " +
           s"[A-Za-z_][A-Za-z0-9_]*, got: `$n`")
     }
-    val spark = df.sparkSession
     val withG = df
       .withColumn(genName, expr(s"$baseCol div $bucket"))
       .repartitionByRange(nFiles, col(genName), col(baseCol))
       .sortWithinPartitions(genName, baseCol)
-    // the rule is written inside the commit, before the pointer swap:
+    // the rule is recorded inside the commit, before the pointer swap:
     // a reader of version v must never resolve an older rule (or none)
-    commitInternal(withG, root, Seq(genName), sidecar = { v =>
-      val p = new org.apache.hadoop.fs.Path(root, s"$GenDir/v=$v.json")
-      val out = fsOf(spark, p).create(p, true)
-      try out.write(
-        s"""{"gen":"$genName","base":"$baseCol","bucket":$bucket}"""
-          .getBytes("UTF-8"))
-      finally out.close()
-    })
-  }
-
-  /** The generation rule in force at version `v` (nearest at or below,
-    * the [[columnMapOf]] protocol): (genName, baseCol, bucket). */
-  private[graft] def genRuleOf(spark: SparkSession, root: String,
-                               v: Long): Option[(String, String, Long)] = {
-    val dir = new org.apache.hadoop.fs.Path(root, GenDir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) return None
-    val vs = fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case n if n.matches("v=\\d+\\.json") =>
-        n.stripPrefix("v=").stripSuffix(".json").toLong }
-      .filter(_ <= v)
-    if (vs.isEmpty) None
-    else {
-      val p = new org.apache.hadoop.fs.Path(root, s"$GenDir/v=${vs.max}.json")
-      val in = fs.open(p)
-      val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                 finally in.close()
-      val re = """\{"gen":"([^"]+)","base":"([^"]+)","bucket":(\d+)\}""".r
-      json match {
-        case re(g, b, k) => Some((g, b, k.toLong))
-        // a sidecar EXISTS but doesn't parse → corruption or format
-        // drift, never "no rule": fail loudly with the evidence
-        // instead of returning None and letting the caller report the
-        // misleading "table has no generated-column rule"
-        case _ => throw new IllegalStateException(
-          s"malformed generated-column rule sidecar $p: $json")
-      }
-    }
+    commitInternal(withG, root, Seq(genName),
+      gen = Some((genName, baseCol, bucket)))
   }
 
   /** Range read on the BASE column of a [[commitGenerated]] table: the
@@ -2850,15 +2762,14 @@ object Snapshot {
   def readCurrentWhereBase(spark: SparkSession, root: String,
                            baseCol: String, lo: Long, hi: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = currentVersion(spark, root).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"snapshot table $root has no committed version"))
-    val (gen, base, bucket) = genRuleOf(spark, root, v).getOrElse(
+    val v = headOf(spark, root)
+    val m = metaOf(spark, root, v)
+    val (gen, base, bucket) = m.gen.getOrElse(
       throw new java.util.NoSuchElementException(
         s"snapshot table $root has no generated-column rule"))
     require(base == baseCol,
       s"generated rule on $root derives from `$base`, not `$baseCol`")
-    readCurrentPruned(spark, root, gen,
+    prunedRead(spark, root, v, m, gen,
         lit(Math.floorDiv(lo, bucket)), lit(Math.floorDiv(hi, bucket)))
       .filter(col(baseCol) >= lo && col(baseCol) <= hi)
   }
@@ -3055,9 +2966,11 @@ object Snapshot {
     * safe even against a delayed writer still racing for that version:
     * [[claimVersion]] refuses any version whose data directory exists
     * or that the pointer has reached, so a vacuumed claim number can
-    * never be re-won for committed content. Like any GC, vacuum
-    * assumes no reader is still walking an unreferenced snapshot's
-    * files. Returns deleted names. */
+    * never be re-won for committed content. Each version's stats and
+    * file manifests, deletion vector and metadata record go with it —
+    * including the record of a version that never published. Like any
+    * GC, vacuum assumes no reader is still walking an unreferenced
+    * snapshot's files. Returns deleted names. */
   def vacuum(spark: SparkSession, root: String,
              clearStaleClaims: Boolean = false,
              retain: Int = 1): Seq[String] = {
@@ -3125,64 +3038,25 @@ object Snapshot {
           case _ => true // abandoned .tmp claim staging
         }
       }
-    // stats manifests follow their data directory's fate
-    val statsRoot = new org.apache.hadoop.fs.Path(root, StatsDir)
-    val deadStats =
-      if (!fs.exists(statsRoot)) Seq.empty
-      else fs.listStatus(statsRoot).toSeq.map(_.getPath).filter { p =>
-        p.getName match {
-          case n if n.matches("v=\\d+") =>
-            val v = n.drop(2).toLong
-            !retained.contains(v) && !inFlight.contains(v)
-          case _ => true
-        }
-      }
-    // file manifests follow their data directory's fate
-    val manifestRoot = new org.apache.hadoop.fs.Path(root, ManifestDir)
-    val deadManifests =
-      if (!fs.exists(manifestRoot)) Seq.empty
-      else fs.listStatus(manifestRoot).toSeq.map(_.getPath).filter { p =>
-        p.getName match {
-          case n if n.matches("v=\\d+") =>
-            val v = n.drop(2).toLong
-            !retained.contains(v) && !inFlight.contains(v)
-          case _ => true
-        }
-      }
-    // schema records follow their data directory's fate
-    val schemaRoot = new org.apache.hadoop.fs.Path(root, SchemaDir)
-    val deadSchemas =
-      if (!fs.exists(schemaRoot)) Seq.empty
-      else fs.listStatus(schemaRoot).toSeq.map(_.getPath).filter { p =>
-        p.getName match {
-          case n if n.matches("v=\\d+\\.json") =>
-            val v = n.stripPrefix("v=").stripSuffix(".json").toLong
-            !retained.contains(v) && !inFlight.contains(v)
-          case _ => true
-        }
-      }
-    // deletion vectors follow their data directory's fate
-    val dvRoot = new org.apache.hadoop.fs.Path(root, DvDir)
-    val deadDvs =
-      if (!fs.exists(dvRoot)) Seq.empty
-      else fs.listStatus(dvRoot).toSeq.map(_.getPath).filter { p =>
-        p.getName match {
-          case n if n.matches("v=\\d+") =>
-            val v = n.drop(2).toLong
-            !retained.contains(v) && !inFlight.contains(v)
-          case _ => true
-        }
-      }
+    // sidecars follow their version's fate: stats and file manifests
+    // and deletion vectors live while the version is retained or in
+    // flight; metadata records exactly as long as the data directory
+    val versionName = "v=(\\d+)(?:\\.json)?".r
+    def dead(dir: String, live: Long => Boolean): Seq[String] = {
+      val d = new org.apache.hadoop.fs.Path(root, dir)
+      if (!fs.exists(d)) Seq.empty
+      else fs.listStatus(d).toSeq.map(_.getPath.getName).filter {
+        case versionName(v) => !live(v.toLong)
+        case _ => true // abandoned staging
+      }.map(n => s"$dir/$n")
+    }
+    val live = (v: Long) => retained.contains(v) || inFlight.contains(v)
+    val deadSidecars = dead(StatsDir, live) ++ dead(ManifestDir, live) ++
+      dead(LogDir, v => live(v) || referenced.contains(v)) ++ dead(DvDir, live)
     (deadDirs ++ deadClaims).map { p =>
       fs.delete(p, true); p.getName
-    } ++ deadStats.map { p => // disambiguate from the data dir's "v=N"
-      fs.delete(p, true); s"$StatsDir/${p.getName}"
-    } ++ deadManifests.map { p =>
-      fs.delete(p, true); s"$ManifestDir/${p.getName}"
-    } ++ deadSchemas.map { p =>
-      fs.delete(p, true); s"$SchemaDir/${p.getName}"
-    } ++ deadDvs.map { p =>
-      fs.delete(p, true); s"$DvDir/${p.getName}"
+    } ++ deadSidecars.map { n => // "_stats/v=N": distinct from the data dir's "v=N"
+      fs.delete(new org.apache.hadoop.fs.Path(root, n), true); n
     }
   }
 

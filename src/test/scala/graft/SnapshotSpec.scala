@@ -10,6 +10,20 @@ class SnapshotSpec extends SparkSuite {
   private def freshTable(): String =
     java.nio.file.Files.createTempDirectory("graft_snap_").toString
 
+  /** Run `op` as a writer killed between its last write and its
+    * pointer swap: a directory where the swap stages `_CURRENT.tmp`
+    * makes the swap throw, leaving the claim, the data directory and
+    * the metadata exactly as the writer wrote them. */
+  private def killedBeforeSwap(root: String)(op: => Any): Unit = {
+    val stage = new java.io.File(root, "_CURRENT.tmp")
+    assert(stage.mkdir())
+    try intercept[java.io.IOException](op)
+    finally stage.delete()
+  }
+
+  private def exists(root: String, rel: String): Boolean =
+    new java.io.File(root, rel).exists()
+
   private def rows(root: String): Set[(Long, String)] =
     Snapshot.readCurrent(spark, root).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
@@ -522,11 +536,11 @@ class SnapshotSpec extends SparkSuite {
     assert(rv == 3L, "restore must commit a NEW version, not rewind")
     // full content is back
     assert(Snapshot.readCurrent(spark, root).count() == 8000L)
-    // metadata-only: every data-bearing file is a v=1 reference; the
-    // only v=3 entry is the 0-row schema anchor
+    // metadata-only: every file is a v=1 reference, and v=3 holds none
     val inv = Snapshot.fileInventory(spark, root, rv)
     val refs = inv.map(_._1).filter(_.contains("/v=1/"))
-    assert(refs.size >= 4, s"expected v1 files referenced, got: $inv")
+    assert(refs.size >= 4 && refs.size == inv.size,
+      s"expected only v1 files referenced, got: $inv")
     // the damaged version stays readable for forensics
     assert(Snapshot.readVersion(spark, root, 2L).count() == 5499L)
     // the feed from damage to restore is pure re-inserts
@@ -645,13 +659,13 @@ class SnapshotSpec extends SparkSuite {
       "fallback dropped manifest-referenced rows")
     assert(Snapshot.readCurrentPruned(spark, root, "k",
       lit(500L), lit(1500L)).count() == 1001L)
-    // the degenerate anchor case: a stats-less RESTORE's directory is
-    // an EMPTY schema anchor — the directory fallback returns nothing
+    // the degenerate case: a stats-less RESTORE's directory is EMPTY —
+    // the directory fallback returns nothing
     Snapshot.commit(mk(0L, 10L), root)
     Snapshot.restore(spark, root, 1L)
     assert(Snapshot.readCurrentPruned(spark, root, "k",
       lit(0L), lit(5000L)).count() == 1000L,
-      "fallback returned the restore's empty anchor instead of the table")
+      "fallback returned the restore's empty directory instead of the table")
   }
 
   test("DELETE WHERE does not delete NULL-key rows, wherever they live") {
@@ -1010,11 +1024,11 @@ class SnapshotSpec extends SparkSuite {
     assert(Snapshot.readCurrent(spark, root).columns.toSeq
       == Seq("k", "price", "v"))
     val vNow = Snapshot.currentVersion(spark, root).get
-    assert(Snapshot.columnMapOf(spark, root, vNow)
+    assert(Snapshot.metaOf(spark, root, vNow).colmap
       == Seq(("qty", "price")))
     Snapshot.renameColumn(spark, root, "price", "qty")
-    assert(Snapshot.columnMapOf(spark, root,
-      Snapshot.currentVersion(spark, root).get).isEmpty)
+    assert(Snapshot.metaOf(spark, root,
+      Snapshot.currentVersion(spark, root).get).colmap.isEmpty)
     // refusals: unknown source, taken target, constraint-referenced
     intercept[IllegalArgumentException] {
       Snapshot.renameColumn(spark, root, "nope", "x")
@@ -1049,7 +1063,7 @@ class SnapshotSpec extends SparkSuite {
     val df = (1L to 8000L).map(i => (i, s"v$i")).toDF("k", "v")
     Snapshot.commitGenerated(df, root, "k", 1000L, "kb", nFiles = 8)
     // rule recorded and resolvable
-    assert(Snapshot.genRuleOf(spark, root, 1L)
+    assert(Snapshot.metaOf(spark, root, 1L).gen
       .contains(("kb", "k", 1000L)))
     // a one-bucket base range opens a strict subset of the files even
     // though stats exist only on the GENERATED column
@@ -1073,8 +1087,8 @@ class SnapshotSpec extends SparkSuite {
     import spark.implicits._
     val root = freshTable()
     val df = (1L to 10L).map(i => (i, s"v$i")).toDF("k", "v")
-    // a name the sidecar's fixed-format JSON could not round-trip is
-    // rejected BEFORE anything commits (quote, space, backtick)
+    // a name the readers could not resolve unquoted is rejected
+    // BEFORE anything commits (quote, space, backtick)
     for (bad <- Seq("""k"b""", "k b", "`kb`")) {
       intercept[IllegalArgumentException] {
         Snapshot.commitGenerated(df, root, "k", 1000L, bad)
@@ -1083,17 +1097,17 @@ class SnapshotSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       Snapshot.commitGenerated(df, root, """base"col""", 1000L, "kb")
     }
-    // a sidecar that EXISTS but doesn't parse is corruption, not
+    // a record that EXISTS but doesn't parse is corruption, not
     // "no rule": the reader must fail loudly with the evidence rather
     // than degrade into the misleading no-rule NoSuchElementException
     Snapshot.commitGenerated(df, root, "k", 1000L, "kb", nFiles = 2)
-    val sidecar = new java.io.File(root, "_gencol/v=1.json")
-    assert(sidecar.isFile, s"no rule sidecar at $sidecar")
-    java.nio.file.Files.write(sidecar.toPath,
+    val record = new java.io.File(root, "_log/v=1.json")
+    assert(record.isFile, s"no metadata record at $record")
+    java.nio.file.Files.write(record.toPath,
       """{"gen":bogus}""".getBytes("UTF-8"))
     // drop the local-FS checksum shadow so the corruption reaches the
     // PARSER (a CRC mismatch is the other, already-loud failure mode)
-    new java.io.File(sidecar.getParent, s".${sidecar.getName}.crc").delete()
+    new java.io.File(record.getParent, s".${record.getName}.crc").delete()
     val e = intercept[IllegalStateException] {
       Snapshot.readCurrentWhereBase(spark, root, "k", 1L, 5L)
     }
@@ -1133,10 +1147,8 @@ class SnapshotSpec extends SparkSuite {
     assert(v1Files.subsetOf(mf.map(_.stripPrefix("file://")).toSet)
       || mf.count(_.contains("/v=1/")) == v1Files.size,
       "MOR delete failed to carry every base file by reference")
-    val freshInV2 = mf.filter(_.contains(s"/v=$v2/"))
-    assert(freshInV2.isEmpty ||
-      spark.read.parquet(freshInV2: _*).isEmpty,
-      "MOR delete wrote data rows into its own version dir")
+    assert(!mf.exists(_.contains(s"/v=$v2/")),
+      "MOR delete wrote a file into its own version dir")
     // time travel: the pre-delete version still shows the rows
     assert(Snapshot.readVersion(spark, root, 1L).count() == 800L)
     // composition: a second MOR delete unions into the sidecar
@@ -1354,20 +1366,95 @@ class SnapshotSpec extends SparkSuite {
       !new java.io.File(root, "_dv/v=2").exists(),
       "vacuum left a dead version's deletion vector behind")
     assert(Snapshot.readCurrent(spark, root).count() == 89L)
+    // metadata records follow the data directories: the retained v=3
+    // and the v=1 its manifest still references
+    def records(): Set[Long] =
+      Option(new java.io.File(root, "_log").list()).toSet.flatten
+        .collect { case n if n.matches("v=\\d+\\.json") =>
+          n.stripPrefix("v=").stripSuffix(".json").toLong }
+    assert(records() == Set(1L, 3L))
+    // generated, rename, constraint, append and drop commits, then a
+    // writer killed before its swap (in flight)
+    Snapshot.commitGenerated(Snapshot.readCurrent(spark, root), root,
+      "k", 10L, "kb", nFiles = 2) // v=4, self-contained
+    Snapshot.renameColumn(spark, root, "v", "val")
+    Snapshot.addCheckConstraint(spark, root, "k_nonneg", "k >= 0")
+    Snapshot.appendCommit(
+      Seq((200L, 1L, 20L, 7L)).toDF("k", "val", "kb", "w"), root)
+    Snapshot.dropColumn(spark, root, "w") // v=8
+    killedBeforeSwap(root)(Snapshot.appendCommit(
+      Seq((201L, 2L, 20L)).toDF("k", "val", "kb"), root)) // v=9, in flight
+    // retained v=7 and v=8, v=4 and v=7 referenced by them and by the
+    // in-flight v=9's manifest
+    Snapshot.vacuum(spark, root, retain = 2)
+    assert(records() == Set(4L, 7L, 8L, 9L))
+    Seq(4L, 7L, 8L, 9L).foreach(v => assert(exists(root, s"v=$v")))
+    Seq(1L, 3L, 5L, 6L).foreach(v => assert(!exists(root, s"v=$v")))
+    // the head's record carries every edit
+    val head = Snapshot.readCurrent(spark, root)
+    assert(head.columns.toSeq == Seq("k", "val", "kb") && head.count() == 90L)
+    assert(Snapshot.checkConstraintsOf(spark, root, 8L) == Seq(("k_nonneg", "k >= 0")))
+    assert(Snapshot.readCurrentWhereBase(spark, root, "k", 20L, 29L).count() == 10L)
+    // the dead writer's record goes with its claim
+    Snapshot.vacuum(spark, root, clearStaleClaims = true, retain = 2)
+    assert(records() == Set(4L, 7L, 8L))
+    for (r <- Seq(root, cloneRoot);
+         d <- Seq("_schema", "_constraints", "_colmap", "_dropped", "_gencol"))
+      assert(!exists(r, d), s"$r/$d exists")
   }
 
   test("commitGenerated writes its rule before the pointer swap") {
     val root = freshTable()
     Snapshot.commit(spark.range(0, 10).select(col("id").as("k")), root)
-    // a plain file where the rule directory belongs: the rule write fails
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_gencol"),
-      "not a directory".getBytes("UTF-8"))
+    // a directory where the next version's record belongs: the record
+    // (and with it the rule) cannot be written
+    assert(new java.io.File(root, "_log/v=2.json").mkdirs())
     intercept[java.io.IOException] {
       Snapshot.commitGenerated(spark.range(0, 10).select(col("id").as("k")),
         root, "k", 1000L, "kb", nFiles = 2)
     }
     // the version whose rule never landed was never published
     assert(Snapshot.currentVersion(spark, root).contains(1L))
+  }
+
+  test("a commit killed before its pointer swap leaks none of its metadata into later versions") {
+    import spark.implicits._
+    def batch(ks: Range) =
+      ks.map(k => (k.toLong, k * 10L, k % 3L)).toDF("k", "qty", "w")
+    val killed: Seq[(String, String => Any)] = Seq(
+      "renameColumn" -> (r => Snapshot.renameColumn(spark, r, "qty", "amount")),
+      "addCheckConstraint" ->
+        (r => Snapshot.addCheckConstraint(spark, r, "qty_small", "qty < 100")),
+      "dropColumn" -> (r => Snapshot.dropColumn(spark, r, "w")),
+      "commitGenerated" -> (r => Snapshot.commitGenerated(batch(0 until 10),
+        r, "k", 5L, "kb", nFiles = 2)))
+    killed.foreach { case (name, op) =>
+      val root = freshTable()
+      Snapshot.commit(batch(0 until 10), root)
+      // claim, data directory and record of v=2 written; no swap
+      killedBeforeSwap(root)(op(root))
+      assert(Snapshot.currentVersion(spark, root).contains(1L), name)
+      assert(exists(root, "_claims/2") && exists(root, "v=2"), name)
+      // the next commit and append see only v=1's metadata: no rename,
+      // no constraint, no retired name, no rule
+      assert(Snapshot.commit(batch(0 until 10).drop("w"), root) == 3L, name)
+      assert(Snapshot.readCurrent(spark, root).columns.toSeq == Seq("k", "qty"),
+        s"$name: the killed commit's column map or schema leaked")
+      assert(Snapshot.checkConstraintsOf(spark, root, 3L).isEmpty,
+        s"$name: the killed commit's constraint leaked")
+      intercept[java.util.NoSuchElementException] {
+        Snapshot.readCurrentWhereBase(spark, root, "k", 0L, 3L)
+      }
+      Snapshot.appendCommit(batch(100 until 105), root)
+      val head = Snapshot.readCurrent(spark, root)
+      assert(head.columns.toSeq == Seq("k", "qty", "w") && head.count() == 15L,
+        name)
+      // vacuum collects the dead writer's record with its claim and dir
+      assert(exists(root, "_log/v=2.json"), name)
+      Snapshot.vacuum(spark, root, clearStaleClaims = true)
+      Seq("_log/v=2.json", "v=2", "_claims/2").foreach(a =>
+        assert(!exists(root, a), s"$name: $a survived vacuum"))
+    }
   }
 
   test("every read-modify-write commit: an empty table throws and claims " +
@@ -1382,8 +1469,6 @@ class SnapshotSpec extends SparkSuite {
         root, Seq("k"))
       root
     }
-    def exists(root: String, rel: String): Boolean =
-      new java.io.File(root, rel).exists()
     val none: String => Unit = _ => ()
     // (entry point, set-up on the committed table, call, advances?)
     val cases: Seq[(String, String => Unit, String => Long, Boolean)] = Seq(
@@ -1437,7 +1522,8 @@ class SnapshotSpec extends SparkSuite {
           !exists(root, s"v=${head + 1}"), s"$name: no-op claimed a version")
       } else {
         assert(got == head + 1, s"$name: $head → $got, expected head+1")
-        Seq(s"v=$got", s"_history/v=$got", s"_stats/v=$got").foreach { a =>
+        Seq(s"v=$got", s"_log/v=$got.json", s"_history/v=$got",
+            s"_stats/v=$got").foreach { a =>
           assert(exists(root, a), s"$name: $a missing after the commit")
         }
         // every commit but the self-contained full rewrite names its
@@ -1499,6 +1585,42 @@ class SnapshotSpec extends SparkSuite {
     assert(vacuumJobs == 0, s"vacuum ran $vacuumJobs jobs")
     assert(deleted.nonEmpty)
     assert(Snapshot.readCurrent(spark, root).count() == 900L)
+  }
+
+  test("commits that write no data file leave an empty version directory, with pinned Spark jobs") {
+    import spark.implicits._
+    val root = freshTable()
+    Snapshot.commitWithStats(spark.range(0, 1000)
+      .select(col("id").as("k"), (col("id") % 7).as("v"), (col("id") % 3).as("w"))
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k"), root, Seq("k"))
+    // (commit, Spark jobs): the data-sized scans and the manifest, stats
+    // and DV parquet writes remain; no zero-row anchor file is written,
+    // and the metadata record is written on the driver
+    val cases: Seq[(String, () => Long, Int)] = Seq(
+      ("deleteWhereMor", () => Snapshot.deleteWhereMor(spark, root,
+        col("k") % 10 === 3), 7),
+      ("restore", () => Snapshot.restore(spark, root, 1L), 2),
+      ("renameColumn", () => Snapshot.renameColumn(spark, root, "v", "v2"), 2),
+      ("addCheckConstraint", () =>
+        Snapshot.addCheckConstraint(spark, root, "k_ok", "k >= 0"), 4),
+      ("dropCheckConstraint", () =>
+        Snapshot.dropCheckConstraint(spark, root, "k_ok"), 2),
+      ("dropColumn", () => Snapshot.dropColumn(spark, root, "w"), 2),
+      ("deleteWhere", () => Snapshot.deleteWhere(spark, root, "k",
+        lit(5000L), lit(6000L)), 2))
+    val ran = cases.map { case (name, call, _) =>
+      val (v, jobs) = jobsOf(call())
+      assert(new java.io.File(root, s"v=$v").list().isEmpty,
+        s"$name wrote a file into v=$v")
+      name -> jobs
+    }
+    assert(ran == cases.map(c => c._1 -> c._3))
+    val clone = freshTable() + "/clone"
+    val (cv, cloneJobs) = jobsOf(Snapshot.shallowClone(spark, root, clone))
+    assert(cloneJobs == 2, s"shallowClone ran $cloneJobs jobs, pinned 2")
+    assert(new java.io.File(clone, s"v=$cv").list().isEmpty)
+    assert(Snapshot.readCurrent(spark, clone).columns.toSeq == Seq("k", "v2"))
+    assert(Snapshot.currentRowCount(spark, clone) == 1000L)
   }
 
   test("sidecars above one split keep the distributed scan, with the driver branch's files and rows") {
