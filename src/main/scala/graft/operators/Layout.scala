@@ -526,24 +526,37 @@ object Layout {
   private def readOnDriver(spark: SparkSession,
                            schema: org.apache.spark.sql.types.StructType,
                            files: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
     import scala.jdk.CollectionConverters._
+    // the converter copies every value out of the reader's reused row
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val rows = driverRows(spark, schema, files)
+      .map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]).toList
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The rows of `files`, file after file, read on the driver by
+    * Spark's own parquet reader as `schema` (a file without one of its
+    * columns reads NULL there). Lazy: a file is opened when the
+    * iterator reaches it, so a file that does not decode fails in
+    * `hasNext`/`next`. The iterator reuses its row: copy what must
+    * outlive the next call. */
+  private[graft] def driverRows(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      files: Seq[org.apache.hadoop.fs.FileStatus])
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
     val read = new org.apache.spark.sql.execution.datasources.parquet
       .ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
         new org.apache.spark.sql.types.StructType(), schema, Nil,
         Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
         spark.sessionState.newHadoopConf())
-    // the converter copies every value out of the reader's reused row
-    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
-      .createToScalaConverter(schema)
-    val rows = files.flatMap { f =>
+    files.iterator.flatMap { f =>
       read(PartitionedFile(
         org.apache.spark.sql.catalyst.InternalRow.empty,
         org.apache.spark.paths.SparkPath.fromPath(f.getPath),
         0L, f.getLen, Array.empty, f.getModificationTime, f.getLen))
-        .map(toRow(_).asInstanceOf[org.apache.spark.sql.Row])
     }
-    spark.createDataFrame(rows.asJava, schema)
   }
 
   /** Exact row count of a parquet directory from FOOTERS — metadata

@@ -21,28 +21,29 @@ import scala.util.control.NonFatal
   *
   * Spark-first re-expression: the cache is a `partitionBy(key)` parquet
   * directory, so the "reuse" read is a one-directory, one-column scan
-  * instead of a hand-named file. A request is ONE Spark job on a small
-  * partition: one `listStatus` gives existence and the byte total, the
-  * read schema comes from the first data file's footer, read in-process
-  * (no schema-inference job; a garbage file fails there, before any job),
-  * and a partition that fits in one split
-  * (`spark.sql.files.maxPartitionBytes`) is aggregated after
-  * `coalesce(1)`, so the plan has no `Exchange` and AQE adds no final
-  * stage. A larger partition keeps the distributed partial/final
-  * aggregate. `create` averages the partition it just wrote through the
-  * same read, never rescanning the source. Every request reads the
-  * partition (no memoized answers), so corruption between requests is
-  * still detected. Works on any Hadoop `FileSystem` (local now, HDFS via
-  * path scheme).
+  * instead of a hand-named file. A reuse of a small partition runs NO
+  * Spark job, as the reference reads its per-county file in-process:
+  * one `listStatus` gives existence and the byte total, the read schema
+  * comes from the first data file's footer, and a partition that fits
+  * in one split (`spark.sql.files.maxPartitionBytes`, the rule of
+  * [[Layout.readParquet]]) is read on the driver by Spark's own parquet
+  * reader and folded while streaming, with Spark's own cast, so the
+  * answer is bit-identical to [[graft.functions.Exact.avgFloorLong]]. A
+  * larger partition keeps the distributed partial/final aggregate.
+  * `create` averages the partition it just wrote through the same read,
+  * so it is one write job, never a rescan of the source. Every request
+  * reads the partition (no memoized answers), so corruption between
+  * requests is still detected. Works on any Hadoop `FileSystem` (local
+  * now, HDFS via path scheme).
   */
 object PartitionCache {
   private val KeyCol = "l_returnflag"
   private val ValCol = "l_extendedprice"
 
   /** The cached partition's bytes could not be read back: no data file,
-    * a footer that does not parse or lacks [[ValCol]], or a scan task that
-    * cannot decode a file. The only failure that turns a reuse into a
-    * `recreate`. */
+    * a footer that does not parse or lacks [[ValCol]], or a file that
+    * does not decode, whether the driver read or a scan task meets it.
+    * The only failure that turns a reuse into a `recreate`. */
   private final class Unreadable(msg: String, cause: Throwable = null)
     extends java.io.IOException(msg, cause)
 
@@ -78,25 +79,30 @@ object PartitionCache {
     }
   }
 
-  /** Truncating AVG of [[ValCol]] over one cache partition, in one job
-    * when it fits in one split. Pinned empty-key behavior: AVG over zero
-    * rows is 0 (the reference crashes here — `int(NaN)` on an unknown
-    * county, `server.py:128`; we define it instead, SURVEY §7.5). */
-  private def partitionAvg(spark: SparkSession, dir: Path,
-                           files: Seq[FileStatus]): Long = {
-    val df = avgFrame(spark, dir, files)
-    val r =
-      try df.head()
-      catch { case e: SparkException => throw new Unreadable(s"scan of $dir", e) }
-    if (r.isNullAt(0)) 0L else r.getLong(0)
+  /** Truncating AVG of [[ValCol]] over one cache partition, `files`
+    * being the listing of `dir`: folded on the driver when its data
+    * files total at most one split, else [[avgFrame]]'s job. Pinned
+    * empty-key behavior: AVG over zero rows is 0 (the reference crashes
+    * here — `int(NaN)` on an unknown county, `server.py:128`; we define
+    * it instead, SURVEY §7.5). */
+  private[graft] def partitionAvg(spark: SparkSession, dir: Path,
+                                  files: Seq[FileStatus]): Long = {
+    val (data, field) = valueColumn(spark, dir, files)
+    val folded =
+      if (data.map(_.getLen).sum > spark.sessionState.conf.filesMaxPartitionBytes) None
+      else foldOnDriver(spark, dir, data, field)
+    folded.getOrElse {
+      val r =
+        try avgFrame(spark, dir, files).head()
+        catch { case e: SparkException => throw new Unreadable(s"scan of $dir", e) }
+      if (r.isNullAt(0)) 0L else r.getLong(0)
+    }
   }
 
-  /** The aggregate [[partitionAvg]] runs over `files`, the listing of
-    * `dir`: [[ValCol]] read with the type the first data file's footer
-    * declares, coalesced to one task when the data files total at most
-    * one split. */
-  private[graft] def avgFrame(spark: SparkSession, dir: Path,
-                              files: Seq[FileStatus]): DataFrame = {
+  /** The data files of the listing `files` of `dir`, by name, and the
+    * [[ValCol]] field the first one's footer declares. */
+  private def valueColumn(spark: SparkSession, dir: Path,
+                          files: Seq[FileStatus]): (Seq[FileStatus], StructField) = {
     // Spark's own hidden-file rule: `_SUCCESS`, `.crc` and friends are
     // not data.
     val data = files.filter { f =>
@@ -111,10 +117,50 @@ object PartitionCache {
         throw new Unreadable(s"footer of ${first.getPath}", e) }
     val field = footerSchema.find(_.name == ValCol).getOrElse(
       throw new Unreadable(s"${first.getPath} has no $ValCol column"))
-    val scan = spark.read.schema(StructType(Seq(field))).parquet(dir.toString)
-    val oneSplit =
-      data.map(_.getLen).sum <= spark.sessionState.conf.filesMaxPartitionBytes
-    (if (oneSplit) scan.coalesce(1) else scan)
+    (data, field)
+  }
+
+  /** [[graft.functions.Exact.avgFloorLong]] of `field` over `data`,
+    * streamed through [[Layout.driverRows]]: Catalyst's own `Cast` to
+    * `Exact.Dec2` under the session's ANSI mode, an exact sum of the
+    * unscaled cents, Spark's `Decimal.toDouble`, division by the
+    * non-null count, floor. None when the sum leaves the `Long` range,
+    * which only Spark's DECIMAL(22,2) aggregate then decides. */
+  private def foldOnDriver(spark: SparkSession, dir: Path,
+                           data: Seq[FileStatus], field: StructField): Option[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode}
+    val conf = spark.sessionState.conf
+    val toDec2 = Cast(BoundReference(0, field.dataType, nullable = true),
+      Exact.Dec2, Some(conf.sessionLocalTimeZone), EvalMode.fromSQLConf(conf))
+    val rows = Layout.driverRows(spark, StructType(Seq(field)), data)
+    def decoded[T](f: => T): T =
+      try f catch { case NonFatal(e) => throw new Unreadable(s"driver read of $dir", e) }
+    var n = 0L
+    var cents = 0L
+    var summed = false
+    while (decoded(rows.hasNext)) {
+      val row = decoded(rows.next())
+      if (!row.isNullAt(0)) {
+        n += 1
+        toDec2.eval(row) match {
+          case d: Decimal =>
+            cents = try Math.addExact(cents, d.toUnscaledLong)
+                    catch { case _: ArithmeticException => return None }
+            summed = true
+          case _ => // NULL: a value the cast cannot hold, outside ANSI mode
+        }
+      }
+    }
+    Some(if (summed) math.floor(Decimal(cents, 22, 2).toDouble / n).toLong else 0L)
+  }
+
+  /** The distributed aggregate [[partitionAvg]] runs above one split,
+    * over `files`, the listing of `dir`: [[ValCol]] read with the type
+    * the first data file's footer declares, partial/final AVG. */
+  private[graft] def avgFrame(spark: SparkSession, dir: Path,
+                              files: Seq[FileStatus]): DataFrame = {
+    val (_, field) = valueColumn(spark, dir, files)
+    spark.read.schema(StructType(Seq(field))).parquet(dir.toString)
       .agg(Exact.avgFloorLong(col(ValCol)))
   }
 
@@ -122,7 +168,8 @@ object PartitionCache {
     * key against a fresh cache dir and emit (key, pass, avg, source) —
     * deterministically `create` on pass 1 and `reuse` on pass 2. The
     * per-key loop is control plane (it mirrors the reference's
-    * one-RPC-per-county shape); each iteration's scan/agg is distributed.
+    * one-RPC-per-county shape); each iteration is one [[calcAvg]]
+    * request.
     */
   def protocolTrace(spark: SparkSession, sfDir: String): DataFrame = {
     val cacheDir = graft.util.Scratch.dir("graft_cache_")

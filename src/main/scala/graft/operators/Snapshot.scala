@@ -380,13 +380,18 @@ object Snapshot {
 
   /** Version `v`'s record, after checking the version is retained:
     * reading a collected version fails fast with the version inventory
-    * rather than a bare path error. */
+    * rather than a bare path error. A collected version whose directory
+    * [[vacuum]] keeps for a survivor's manifest has lost its record
+    * (and its manifest, stats and deletion vector), so it fails too,
+    * instead of reading the directory alone. */
   private def retainedMeta(spark: SparkSession, root: String,
                            v: Long): Meta = {
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
-    if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"v=$v"))) {
+    if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"v=$v")) ||
+        !fs.exists(recordPath(root, v))) {
       val have = fs.listStatus(new org.apache.hadoop.fs.Path(root))
-        .map(_.getPath.getName).filter(_.matches("v=\\d+")).sorted
+        .map(_.getPath.getName).filter(_.matches("v=\\d+"))
+        .filter(n => fs.exists(recordPath(root, n.drop(2).toLong))).sorted
       throw new java.util.NoSuchElementException(
         s"snapshot $root has no version $v (vacuumed?); " +
           s"retained: ${have.mkString(", ")}")
@@ -487,7 +492,7 @@ object Snapshot {
       // a stats-carrying table keeps its data-skipping index across
       // maintenance passes: re-derive the manifest for the new files
       val sc = statsColsOf(spark, root, base)
-      if (sc.nonEmpty) writeStats(spark, root, next, sc,
+      if (sc.nonEmpty) writeStats(spark, root, next, m.schema, sc,
         bloomColsOf(spark, root, base))
       m
     } }
@@ -867,7 +872,7 @@ object Snapshot {
       val physDf = toPhysical(df, hm.colmap)
       physDf.write.mode("overwrite").parquet(s"$root/v=$next")
       enforceWritten(spark, root, next, head.getOrElse(0L), hm)
-      if (statsCols.nonEmpty) writeStats(spark, root, next,
+      if (statsCols.nonEmpty) writeStats(spark, root, next, physDf.schema,
         statsCols.map(hm.physical), bloomCols.map(hm.physical))
       hm.copy(schema = physDf.schema, gen = gen.orElse(hm.gen))
     }
@@ -949,6 +954,18 @@ object Snapshot {
     val p = new org.apache.hadoop.fs.Path(root, s"$DvDir/v=$v")
     if (!fsOf(spark, p).exists(p)) None
     else Some(Layout.readParquet(spark, p.toString))
+  }
+
+  /** The distinct `file` values of a sidecar read by
+    * [[Layout.readParquet]]: collected and made distinct on the driver
+    * when the read is a driver-side local relation (no job), Spark's
+    * distributed distinct above one split. */
+  private def distinctFiles(sidecar: DataFrame): Seq[String] = {
+    val files = sidecar.select("file")
+    val local = files.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    (if (local) files else files.distinct())
+      .collect().map(_.getString(0)).distinct.toSeq
   }
 
   /** Filter version `v`'s tombstoned rows out of a PHYSICAL parquet
@@ -1057,10 +1074,11 @@ object Snapshot {
       .map(_.toLong).getOrElse(100000L)
 
   private def writeStats(spark: SparkSession, root: String, v: Long,
-                         statsCols: Seq[String],
+                         schema: StructType, statsCols: Seq[String],
                          bloomCols: Seq[String] = Nil): Unit = {
     val dir = new org.apache.hadoop.fs.Path(root, s"v=$v")
-    freshStats(spark, dir, parquetFiles(spark, dir), statsCols, bloomCols)
+    freshStats(spark, dir, parquetFiles(spark, dir), schema, statsCols,
+      bloomCols)
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$root/$StatsDir/v=$v")
   }
@@ -1072,7 +1090,9 @@ object Snapshot {
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
 
   /** Per-file `(file, min_c, max_c, …, [bloom_c, …,] n_rows)` stats rows
-    * for `files`, the parquet a commit just wrote into `dir`. The
+    * for `files`, the parquet a commit just wrote into `dir` (read as
+    * the version's physical `schema`: a stats column a batch lacks reads
+    * NULL, so its bounds are NULL, the add-column rule). The
     * min/max/count manifest is exactly what parquet footers already
     * record, so it derives from METADATA — no second pass over the
     * just-committed data bytes (at 100 TB the read-back is a full extra
@@ -1082,15 +1102,15 @@ object Snapshot {
     * mixed physical widths, or no populated file ([[footerStatsOf]]). */
   private def freshStats(spark: SparkSession, dir: org.apache.hadoop.fs.Path,
                          files: Seq[org.apache.hadoop.fs.FileStatus],
-                         statsCols: Seq[String],
+                         schema: StructType, statsCols: Seq[String],
                          bloomCols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     val footer =
       if (bloomCols.nonEmpty) None
-      else footerStatsOf(spark, files, statsCols)
+      else footerStatsOf(spark, files, schema, statsCols)
     footer.getOrElse {
       val aggs = statsAggs(spark, statsCols, bloomCols)
-      spark.read.parquet(dir.toString)
+      spark.read.schema(schema).parquet(dir.toString)
         .groupBy(canonMetaPath(input_file_name()).as("file"))
         .agg(aggs.head, aggs.tail: _*)
     }
@@ -1101,11 +1121,13 @@ object Snapshot {
     * INT32/INT64 (float NaN rules and binary truncation make those
     * footers unreliable; int statistics are exact, and null semantics
     * match the aggregate: all-null file → null bounds, zero-row file →
-    * no row, like an empty groupBy) or a populated row group lacking a
+    * no row, like an empty groupBy; a file without the column → null
+    * bounds typed by `tableSchema`) or a populated row group lacking a
     * statistic. Driver-side O(files) metadata reads — the same footers
     * the scan-path planner opens anyway. */
   private def footerStatsOf(spark: SparkSession,
                             files: Seq[org.apache.hadoop.fs.FileStatus],
+                            tableSchema: StructType,
                             statsCols: Seq[String]): Option[DataFrame] = {
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
@@ -1121,57 +1143,61 @@ object Snapshot {
         if (nRows == 0L) None // scan path emits no group for 0 rows
         else {
           val cols = statsCols.map { c =>
-            if (!schema.containsField(c)) return None
-            val t = schema.getType(Seq(c): _*)
-            if (!t.isPrimitive) return None
-            val prim = t.asPrimitiveType()
-            val tn = prim.getPrimitiveTypeName
-            import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-            val sparkType: DataType = tn match {
-              case INT64 => LongType
-              case INT32 => IntegerType
-              case _ => return None
-            }
-            // logical annotations (decimal/date/timestamp/int8/16)
-            // change the Spark-side value — plain ints only
-            val ann = prim.getLogicalTypeAnnotation
-            val plain = ann == null || (ann match {
-              case i: org.apache.parquet.schema.LogicalTypeAnnotation
-                    .IntLogicalTypeAnnotation =>
-                i.isSigned && (i.getBitWidth == 32 || i.getBitWidth == 64)
-              case _ => false
-            })
-            if (!plain) return None
-            var lo: Long = Long.MaxValue
-            var hi: Long = Long.MinValue
-            var seen = false
-            blocks.foreach { b =>
-              if (b.getRowCount > 0) {
-                val chunk = b.getColumns.asScala
-                  .find(_.getPath.toDotString == c).getOrElse(return None)
-                val s = chunk.getStatistics
-                if (s == null || s.isEmpty) return None
-                if (s.hasNonNullValue) {
-                  val (mn, mx) = s.genericGetMin match {
-                    case l: java.lang.Long =>
-                      (l.longValue,
-                        s.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-                    case i: java.lang.Integer =>
-                      (i.intValue.toLong, s.genericGetMax
-                        .asInstanceOf[java.lang.Integer].intValue.toLong)
-                    case _ => return None
-                  }
-                  if (mn < lo) lo = mn
-                  if (mx > hi) hi = mx
-                  seen = true
-                } else if (s.getNumNulls < b.getRowCount) return None
+            if (!schema.containsField(c)) // a batch without the column
+              (tableSchema.find(_.name == c).getOrElse(return None).dataType,
+                null, null)
+            else {
+              val t = schema.getType(Seq(c): _*)
+              if (!t.isPrimitive) return None
+              val prim = t.asPrimitiveType()
+              val tn = prim.getPrimitiveTypeName
+              import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+              val sparkType: DataType = tn match {
+                case INT64 => LongType
+                case INT32 => IntegerType
+                case _ => return None
               }
+              // logical annotations (decimal/date/timestamp/int8/16)
+              // change the Spark-side value — plain ints only
+              val ann = prim.getLogicalTypeAnnotation
+              val plain = ann == null || (ann match {
+                case i: org.apache.parquet.schema.LogicalTypeAnnotation
+                      .IntLogicalTypeAnnotation =>
+                  i.isSigned && (i.getBitWidth == 32 || i.getBitWidth == 64)
+                case _ => false
+              })
+              if (!plain) return None
+              var lo: Long = Long.MaxValue
+              var hi: Long = Long.MinValue
+              var seen = false
+              blocks.foreach { b =>
+                if (b.getRowCount > 0) {
+                  val chunk = b.getColumns.asScala
+                    .find(_.getPath.toDotString == c).getOrElse(return None)
+                  val s = chunk.getStatistics
+                  if (s == null || s.isEmpty) return None
+                  if (s.hasNonNullValue) {
+                    val (mn, mx) = s.genericGetMin match {
+                      case l: java.lang.Long =>
+                        (l.longValue,
+                          s.genericGetMax.asInstanceOf[java.lang.Long].longValue)
+                      case i: java.lang.Integer =>
+                        (i.intValue.toLong, s.genericGetMax
+                          .asInstanceOf[java.lang.Integer].intValue.toLong)
+                      case _ => return None
+                    }
+                    if (mn < lo) lo = mn
+                    if (mx > hi) hi = mx
+                    seen = true
+                  } else if (s.getNumNulls < b.getRowCount) return None
+                }
+              }
+              def box(v: Long): Any =
+                if (sparkType == LongType) Long.box(v) else Int.box(v.toInt)
+              val (mnV, mxV) =
+                if (seen) (box(lo), box(hi)) else (null, null)
+              (sparkType, mnV, mxV)
             }
-            def box(v: Long): Any =
-              if (sparkType == LongType) Long.box(v) else Int.box(v.toInt)
-            val (mnV, mxV) =
-              if (seen) (box(lo), box(hi)) else (null, null)
-            (sparkType, mnV, mxV)
           }
           Some((canonFile(st.getPath), cols, nRows))
         }
@@ -1529,8 +1555,8 @@ object Snapshot {
         // carry the base's stats manifest forward (same contract as
         // compact: maintenance must not silently kill data skipping)
         val sc = statsColsOf(spark, root, base)
-        if (sc.nonEmpty) writeStats(spark, root, next, sc,
-          bloomColsOf(spark, root, base))
+        if (sc.nonEmpty) writeStats(spark, root, next, physMerged.schema,
+          sc, bloomColsOf(spark, root, base))
         m.copy(schema = physMerged.schema)
       }
     } }
@@ -1763,8 +1789,7 @@ object Snapshot {
     onHead(spark, root, "purgeDv") { (base, m) =>
       val dv = dvOf(spark, root, base)
       if (dv.isEmpty) None else Some { next =>
-        val touched = dv.get
-          .select("file").distinct().collect().map(_.getString(0)).toSeq
+        val touched = distinctFiles(dv.get)
         val inv = fileInventory(spark, root, base)
         // Set membership, not Seq.contains: a fully scattered delete on
         // a 100k-file table would otherwise run ~10^10 driver-side
@@ -2091,7 +2116,7 @@ object Snapshot {
         .filter(col("file").isin(carriedFiles: _*))
       val fresh =
         if (newFiles.isEmpty) carried.limit(0)
-        else freshStats(spark, newDir, newStatus, sc,
+        else freshStats(spark, newDir, newStatus, record.schema, sc,
           bloomColsOf(spark, root, base))
       carried.unionByName(fresh).coalesce(1)
         .write.mode("overwrite").parquet(s"$root/$StatsDir/v=$next")
@@ -2112,8 +2137,7 @@ object Snapshot {
       // differs between the two (spaces, percent, non-ASCII) is exactly
       // the mismatch this catches. Driver-side O(files): the sidecar's
       // distinct-file set is metadata-sized by contract.
-      val dvFiles = dv.select("file").distinct()
-        .collect().map(_.getString(0))
+      val dvFiles = distinctFiles(dv)
       val baseInv = fileInventory(spark, root, base).map(_._1).toSet
       val orphans = dvFiles.filterNot(baseInv.contains)
       require(orphans.isEmpty,
@@ -3038,9 +3062,10 @@ object Snapshot {
           case _ => true // abandoned .tmp claim staging
         }
       }
-    // sidecars follow their version's fate: stats and file manifests
-    // and deletion vectors live while the version is retained or in
-    // flight; metadata records exactly as long as the data directory
+    // sidecars follow their version's fate: records, stats and file
+    // manifests and deletion vectors live while the version is retained
+    // or in flight. A directory kept only for a survivor's manifest is
+    // a file store, no longer a readable version.
     val versionName = "v=(\\d+)(?:\\.json)?".r
     def dead(dir: String, live: Long => Boolean): Seq[String] = {
       val d = new org.apache.hadoop.fs.Path(root, dir)
@@ -3052,7 +3077,7 @@ object Snapshot {
     }
     val live = (v: Long) => retained.contains(v) || inFlight.contains(v)
     val deadSidecars = dead(StatsDir, live) ++ dead(ManifestDir, live) ++
-      dead(LogDir, v => live(v) || referenced.contains(v)) ++ dead(DvDir, live)
+      dead(LogDir, live) ++ dead(DvDir, live)
     (deadDirs ++ deadClaims).map { p =>
       fs.delete(p, true); p.getName
     } ++ deadSidecars.map { n => // "_stats/v=N": distinct from the data dir's "v=N"

@@ -109,7 +109,7 @@ class EtlSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  // ---- one-job partition-cache read ----------------------------------
+  // ---- zero-job partition-cache read ---------------------------------
 
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
@@ -132,22 +132,25 @@ class EtlSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         !f.getName.startsWith("."))
       .sortBy(_.getName)
 
-  test("partition cache: a reuse of a small partition is one job with no Exchange") {
+  test("partition cache: a reuse of a small partition runs no job, a create or recreate one") {
     val cacheDir = tmpDir("graft_jobs_")
     val ((v1, s1), createJobs) =
       jobsOf(PartitionCache.calcAvg(spark, sf, cacheDir, "A"))
     assert(s1 == "create")
     // one write job over the source (its schema comes from the footer,
-    // no inference job) and one read of the written partition: the
-    // source is scanned once
-    assert(createJobs == 2, s"create ran $createJobs jobs")
+    // no inference job); the written partition is read on the driver
+    assert(createJobs == 1, s"create ran $createJobs jobs")
     val ((v2, s2), reuseJobs) =
       jobsOf(PartitionCache.calcAvg(spark, sf, cacheDir, "A"))
     assert(s2 == "reuse" && v2 == v1)
-    assert(reuseJobs == 1, s"reuse ran $reuseJobs jobs")
-    val plan = finalPlan(reuseFrame(cacheDir, "A"))
-    assert(collect(plan) { case e: Exchange => e }.isEmpty,
-      s"single-split reuse must not exchange:\n$plan")
+    assert(reuseJobs == 0, s"reuse ran $reuseJobs jobs")
+    dataFiles(s"$cacheDir/l_returnflag=A").foreach { f =>
+      java.nio.file.Files.write(f.toPath, "not a parquet file".getBytes)
+    }
+    val ((v3, s3), recreateJobs) =
+      jobsOf(PartitionCache.calcAvg(spark, sf, cacheDir, "A"))
+    assert(s3 == "recreate" && v3 == v1)
+    assert(recreateJobs == 1, s"recreate ran $recreateJobs jobs")
   }
 
   test("partition cache: a partition larger than one split keeps the partial/final aggregate") {

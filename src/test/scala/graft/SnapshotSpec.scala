@@ -1366,13 +1366,13 @@ class SnapshotSpec extends SparkSuite {
       !new java.io.File(root, "_dv/v=2").exists(),
       "vacuum left a dead version's deletion vector behind")
     assert(Snapshot.readCurrent(spark, root).count() == 89L)
-    // metadata records follow the data directories: the retained v=3
-    // and the v=1 its manifest still references
+    // metadata records follow the retained versions: the v=1 directory
+    // v=3's manifest still references keeps its files, not its record
     def records(): Set[Long] =
       Option(new java.io.File(root, "_log").list()).toSet.flatten
         .collect { case n if n.matches("v=\\d+\\.json") =>
           n.stripPrefix("v=").stripSuffix(".json").toLong }
-    assert(records() == Set(1L, 3L))
+    assert(records() == Set(3L) && exists(root, "v=1"))
     // generated, rename, constraint, append and drop commits, then a
     // writer killed before its swap (in flight)
     Snapshot.commitGenerated(Snapshot.readCurrent(spark, root), root,
@@ -1387,7 +1387,7 @@ class SnapshotSpec extends SparkSuite {
     // retained v=7 and v=8, v=4 and v=7 referenced by them and by the
     // in-flight v=9's manifest
     Snapshot.vacuum(spark, root, retain = 2)
-    assert(records() == Set(4L, 7L, 8L, 9L))
+    assert(records() == Set(7L, 8L, 9L))
     Seq(4L, 7L, 8L, 9L).foreach(v => assert(exists(root, s"v=$v")))
     Seq(1L, 3L, 5L, 6L).foreach(v => assert(!exists(root, s"v=$v")))
     // the head's record carries every edit
@@ -1397,7 +1397,7 @@ class SnapshotSpec extends SparkSuite {
     assert(Snapshot.readCurrentWhereBase(spark, root, "k", 20L, 29L).count() == 10L)
     // the dead writer's record goes with its claim
     Snapshot.vacuum(spark, root, clearStaleClaims = true, retain = 2)
-    assert(records() == Set(4L, 7L, 8L))
+    assert(records() == Set(7L, 8L))
     for (r <- Seq(root, cloneRoot);
          d <- Seq("_schema", "_constraints", "_colmap", "_dropped", "_gencol"))
       assert(!exists(r, d), s"$r/$d exists")
@@ -1653,6 +1653,71 @@ class SnapshotSpec extends SparkSuite {
       // the DV-applied read anti-joins a scanned sidecar
       assert(live().inputFiles.exists(_.contains("/_dv/")))
       assert(liveRows() == driverRows)
+    }
+  }
+
+  test("vacuum leaves a version kept only for a survivor's manifest unreadable, retained versions whole") {
+    import spark.implicits._
+    val root = freshTable()
+    Snapshot.commitWithStats(spark.range(0, 100).select(col("id").as("k"))
+      .repartitionByRange(4, col("k")).sortWithinPartitions("k"), root, Seq("k"))
+    // v=2 rewrites one file (19 rows left) and carries three (75 rows)
+    Snapshot.deleteWhere(spark, root, "k", lit(0L), lit(5L))
+    Snapshot.appendCommit(Seq(1000L).toDF("k"), root) // v=3 carries v=2's file
+    def count(v: Long) = Snapshot.readVersion(spark, root, v).count()
+    def collected(v: Long) = {
+      val e = intercept[java.util.NoSuchElementException](count(v))
+      assert(e.getMessage.contains(s"no version $v (vacuumed?)"), e.getMessage)
+    }
+    assert(count(2L) == 94L && count(3L) == 95L)
+    Snapshot.vacuum(spark, root, retain = 2)
+    assert(exists(root, "v=1"), "v=2's manifest still references v=1")
+    collected(1L)
+    assert(count(2L) == 94L && count(3L) == 95L)
+    Snapshot.vacuum(spark, root, retain = 1)
+    assert(exists(root, "v=2"), "v=3's manifest still references v=2")
+    collected(2L)
+    assert(count(3L) == 95L && Snapshot.readCurrent(spark, root).count() == 95L)
+  }
+
+  test("appendCommit of a batch without a stats column records NULL bounds for it") {
+    import spark.implicits._
+    // no bloom: footer-derived stats; a bloom on k: the scan fallback
+    for (bloom <- Seq(Nil, Seq("k"))) {
+      val root = freshTable()
+      Snapshot.commitWithStats(spark.range(0, 40)
+          .select(col("id").as("k"), (col("id") * 10).as("s"), col("id").as("v"))
+          .repartitionByRange(2, col("k")), root, Seq("s"), bloomCols = bloom)
+      Snapshot.appendCommit(Seq((100L, 1L), (101L, 2L)).toDF("k", "v"), root)
+      val all = Snapshot.readCurrent(spark, root)
+      assert(all.count() == 42L && all.filter(col("s").isNull).count() == 2L)
+      def keys(df: org.apache.spark.sql.DataFrame) =
+        df.select("k").collect().map(_.getLong(0)).sorted.toSeq
+      for ((lo, hi) <- Seq((50L, 120L), (0L, 390L), (1000L, 2000L)))
+        assert(keys(Snapshot.readCurrentPruned(spark, root, "s", lit(lo), lit(hi))) ==
+          keys(all.filter(col("s").between(lo, hi))), s"bloom=$bloom [$lo, $hi]")
+    }
+  }
+
+  test("a commit on a table with a deletion vector takes the sidecar's file set on the driver") {
+    import spark.implicits._
+    def commits(root: String) = (
+      jobsOf(Snapshot.appendCommit(Seq((2000L, 1L)).toDF("k", "v"), root))._2,
+      jobsOf(Snapshot.purgeDv(spark, root))._2,
+      Snapshot.readCurrent(spark, root).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
+    val (append, purge, rows) = commits(sidecarTable())
+    // 8 and 10 while each distinct of the sidecar's files ran two jobs
+    // (once in the append, twice in purgeDv) and each fresh-stats scan
+    // inferred its schema in one more
+    assert((append, purge) == (5, 5),
+      s"append ran $append jobs, purgeDv $purge")
+    assert(rows.size == 901)
+    // above one split the distinct stays distributed, with the same rows
+    val root = sidecarTable()
+    withConf("spark.sql.files.maxPartitionBytes", "512") {
+      val (bigAppend, bigPurge, bigRows) = commits(root)
+      assert(bigAppend > append && bigPurge > purge && bigRows == rows)
     }
   }
 }

@@ -9,8 +9,10 @@ their `name` is the operation kind (append, merge, delete_mor, purge_dv,
 compact, vacuum, read_pruned, read_point, row_count, calcavg, ...). For each
 kind and side the table gives the operation count, the median wall time
 (`end_ms - start_ms`), the mean Spark jobs per operation with their range,
-and the median time the driver spent outside any job (`offjob_ms`). Run the
-two sides on the same workload and seed so the operation sequences match.
+and the median time the driver spent outside any job (`offjob_ms`), and the
+kind's share of the run: its summed wall time as a percentage of the
+summed wall time of all operations. Run the two sides on the same workload
+and seed so the operation sequences match.
 """
 import json
 import statistics
@@ -31,27 +33,38 @@ def op_spans(path):
     return kinds
 
 
-def summary(spans):
+def wall(span):
+    return span["end_ms"] - span["start_ms"]
+
+
+def total_wall(kinds):
+    return sum(wall(s) for spans in kinds.values() for s in spans)
+
+
+def summary(spans, total_ms):
     if not spans:
         return "-"
     jobs = [s.get("jobs", 0) for s in spans]
-    ms = statistics.median(s["end_ms"] - s["start_ms"] for s in spans)
+    ms = statistics.median(wall(s) for s in spans)
     off = statistics.median(s.get("offjob_ms", 0) for s in spans)
+    share = 100.0 * sum(wall(s) for s in spans) / total_ms if total_ms else 0.0
     span = f"{min(jobs)}" if min(jobs) == max(jobs) else f"{min(jobs)}-{max(jobs)}"
     return (f"{len(spans):>4} {ms:>9.1f} {statistics.mean(jobs):>6.2f} "
-            f"{'(' + span + ')':>8} {off:>9.1f}")
+            f"{'(' + span + ')':>8} {off:>9.1f} {share:>6.1f}")
 
 
 def main(argv):
     if len(argv) != 3:
         sys.exit("usage: " + __doc__.strip().splitlines()[2].strip())
     parent, change = op_spans(argv[1]), op_spans(argv[2])
-    cols = f"{'n':>4} {'ms p50':>9} {'jobs':>6} {'range':>8} {'offjob':>9}"
-    print(f"{'kind':<14} | {'parent':^40} | {'change':^40}")
+    totals = total_wall(parent), total_wall(change)
+    cols = (f"{'n':>4} {'ms p50':>9} {'jobs':>6} {'range':>8} {'offjob':>9} "
+            f"{'share%':>6}")
+    print(f"{'kind':<14} | {'parent':^47} | {'change':^47}")
     print(f"{'':<14} | {cols} | {cols}")
     for kind in sorted(set(parent) | set(change)):
-        print(f"{kind:<14} | {summary(parent.get(kind, [])):>40} | "
-              f"{summary(change.get(kind, [])):>40}")
+        print(f"{kind:<14} | {summary(parent.get(kind, []), totals[0]):>47} | "
+              f"{summary(change.get(kind, []), totals[1]):>47}")
 
 
 if __name__ == "__main__":
