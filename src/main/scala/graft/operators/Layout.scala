@@ -531,8 +531,10 @@ object Layout {
     val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(schema)
     val rows = driverRows(spark, schema, files)
-      .map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]).toList
-    spark.createDataFrame(rows.asJava, schema)
+    val read =
+      try rows.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]).toList
+      finally rows.close()
+    spark.createDataFrame(read.asJava, schema)
   }
 
   /** The rows of `files`, file after file, read on the driver by
@@ -540,23 +542,80 @@ object Layout {
     * columns reads NULL there). Lazy: a file is opened when the
     * iterator reaches it, so a file that does not decode fails in
     * `hasNext`/`next`. The iterator reuses its row: copy what must
-    * outlive the next call. */
+    * outlive the next call. A file read to its end is closed; a caller
+    * that stops early, by choice or by a failure, must `close` the
+    * iterator, as the driver has no task whose end would close it.
+    *
+    * The reader is Spark's DSv2 parquet row reader, given the Hadoop
+    * conf `ParquetScan.createReaderFactory` builds, taken from the
+    * session at each call, in a [[DriverOnly]] broadcast: a scan
+    * broadcasts its conf to the executors, a driver read has none. */
   private[graft] def driverRows(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
       files: Seq[org.apache.hadoop.fs.FileStatus])
-      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
-    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-    val read = new org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
-        new org.apache.spark.sql.types.StructType(), schema, Nil,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        spark.sessionState.newHadoopConf())
-    files.iterator.flatMap { f =>
-      read(PartitionedFile(
-        org.apache.spark.sql.catalyst.InternalRow.empty,
-        org.apache.spark.paths.SparkPath.fromPath(f.getPath),
-        0L, f.getLen, Array.empty, f.getModificationTime, f.getLen))
+      : Iterator[org.apache.spark.sql.catalyst.InternalRow] with java.io.Closeable = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.PartitionedFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+    import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+    import org.apache.spark.sql.internal.SQLConf
+    val sqlConf = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    val json = schema.json
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    Seq(
+      SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> sqlConf.nestedSchemaPruningEnabled,
+      SQLConf.CASE_SENSITIVE -> sqlConf.caseSensitiveAnalysis,
+      SQLConf.PARQUET_BINARY_AS_STRING -> sqlConf.isParquetBinaryAsString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> sqlConf.isParquetINT96AsTimestamp,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED -> sqlConf.parquetInferTimestampNTZEnabled,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> sqlConf.legacyParquetNanosAsLong,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
+        sqlConf.parquetReaderRespectUnknownTypeAnnotation
+    ).foreach { case (entry, on) => conf.setBoolean(entry.key, on) }
+    val factory = ParquetPartitionReaderFactory(sqlConf, new DriverOnly(conf),
+      schema, schema, new org.apache.spark.sql.types.StructType(),
+      Array.empty, None, new ParquetOptions(Map.empty[String, String], sqlConf))
+    new Iterator[InternalRow] with java.io.Closeable {
+      private var pending = files.iterator
+      private var reader: org.apache.spark.sql.connector.read.PartitionReader[InternalRow] = null
+      private var ready = false
+      def hasNext: Boolean = {
+        while (!ready && (reader != null || pending.hasNext)) {
+          if (reader == null) {
+            val f = pending.next()
+            reader = factory.buildReader(PartitionedFile(InternalRow.empty,
+              org.apache.spark.paths.SparkPath.fromPath(f.getPath),
+              0L, f.getLen, Array.empty, f.getModificationTime, f.getLen))
+          }
+          ready = reader.next()
+          if (!ready) closeReader()
+        }
+        ready
+      }
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException("no more rows")
+        ready = false
+        reader.get()
+      }
+      private def closeReader(): Unit =
+        if (reader != null) { val r = reader; reader = null; r.close() }
+      def close(): Unit = { pending = Iterator.empty; closeReader() }
     }
+  }
+
+  /** `conf` as the broadcast Spark's reader takes, read only in the JVM
+    * that made it: no block-manager copy to write, fetch or clean up. */
+  private final class DriverOnly(conf: org.apache.hadoop.conf.Configuration)
+      extends org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration](-1L) {
+    private val wrapped = new org.apache.spark.util.SerializableConfiguration(conf)
+    override protected def getValue() = wrapped
+    override protected def doUnpersist(blocking: Boolean): Unit = ()
+    override protected def doDestroy(blocking: Boolean): Unit = ()
   }
 
   /** Exact row count of a parquet directory from FOOTERS — metadata

@@ -138,19 +138,21 @@ object PartitionCache {
     var n = 0L
     var cents = 0L
     var summed = false
-    while (decoded(rows.hasNext)) {
-      val row = decoded(rows.next())
-      if (!row.isNullAt(0)) {
-        n += 1
-        toDec2.eval(row) match {
-          case d: Decimal =>
-            cents = try Math.addExact(cents, d.toUnscaledLong)
-                    catch { case _: ArithmeticException => return None }
-            summed = true
-          case _ => // NULL: a value the cast cannot hold, outside ANSI mode
+    try {
+      while (decoded(rows.hasNext)) {
+        val row = decoded(rows.next())
+        if (!row.isNullAt(0)) {
+          n += 1
+          toDec2.eval(row) match {
+            case d: Decimal =>
+              cents = try Math.addExact(cents, d.toUnscaledLong)
+                      catch { case _: ArithmeticException => return None }
+              summed = true
+            case _ => // NULL: a value the cast cannot hold, outside ANSI mode
+          }
         }
       }
-    }
+    } finally rows.close()
     Some(if (summed) math.floor(Decimal(cents, 22, 2).toDouble / n).toLong else 0L)
   }
 

@@ -357,6 +357,19 @@ class LayoutSpec extends SparkSuite {
     }
   }
 
+  test("a driver read broadcasts nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_readpq_")
+      .toString + "/t"
+    spark.range(0, 50).write.parquet(dir)
+    val before = org.apache.spark.BroadcastBlocks.ids()
+    val ((read, added), jobs) = jobsOf {
+      val read = Layout.readParquet(spark, dir)
+      (read, org.apache.spark.BroadcastBlocks.ids() -- before)
+    }
+    assert(jobs == 0 && added.isEmpty, s"$jobs jobs, broadcasts $added")
+    assert(read.count() == 50L)
+  }
+
   test("readParquet and footerSchema defer to Spark's inference for a partitioned directory and a missing path") {
     val dir = java.nio.file.Files.createTempDirectory("graft_readpq_")
       .toString + "/p"
@@ -375,11 +388,13 @@ class LayoutSpec extends SparkSuite {
       Layout.readParquet(spark, s"$dir-missing"))
   }
 
+  /** Sorted row hashes: equal multisets of rows hash equal. */
+  private def hashes(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select(xxhash64(df.columns.map(col): _*)).collect()
+      .map(_.getLong(0)).toSeq.sorted
+
   test("fixture tables read with the footer schema equal the inferred read, with no job") {
     import graft.sources.Tables
-    def hashes(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.select(xxhash64(df.columns.map(col): _*)).collect()
-        .map(_.getLong(0)).toSeq.sorted
     // session confs the footer schema must honor: the events fixture
     // has shipped with int64-nanos `ts`, readable only under
     // nanosAsLong, and its µs `ts` is NTZ only under inferTimestampNTZ
@@ -392,6 +407,30 @@ class LayoutSpec extends SparkSuite {
           assert(declared.schema == inferred.schema, s"$t (ntz=$ntz): schema differs")
           assert(hashes(declared) == hashes(inferred), s"$t (ntz=$ntz): rows differ")
         }
+      }
+  }
+
+  test("driver reads equal the distributed read on every fixture table as the reader confs switch") {
+    import graft.sources.Tables
+    // the schema converter inside the reader requires each of these
+    // keys in its Hadoop conf, so every read runs with them unset too
+    val keys = Seq("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.parquet.inferTimestampNTZ.enabled",
+      "spark.sql.parquet.binaryAsString")
+    val settings = Seq(
+      Seq(None, None, None),
+      Seq(Some("true"), Some("false"), Some("true")),
+      Seq(Some("false"), Some("true"), Some("false")),
+      Seq(None, Some("false"), None),
+      Seq(Some("true"), None, Some("true")))
+    for (s <- settings; t <- Tables.all)
+      withConfs(keys.zip(s): _*) {
+        val path = s"$sf/$t.parquet"
+        val (read, jobs) = jobsOf(Layout.readParquet(spark, path))
+        assert(jobs == 0, s"$t ($s): the driver read ran $jobs jobs")
+        val want = spark.read.parquet(path)
+        assert(read.schema == want.schema, s"$t ($s): schema differs")
+        assert(hashes(read) == hashes(want), s"$t ($s): rows differ")
       }
   }
 }

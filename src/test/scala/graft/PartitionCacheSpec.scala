@@ -2,8 +2,9 @@ package graft
 
 import graft.functions.Exact
 import graft.operators.{Layout, PartitionCache}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, Path}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 
 /** Parity of the CalcAvgLoan driver fold with Spark's own aggregate: a
@@ -129,4 +130,100 @@ class PartitionCacheSpec extends SparkSuite {
         Seq(Seq(Some(1e11), Some(4.0))))) == (2L, 2L))
     }
   }
+
+  test("a driver fold that stops early, at a sum overflow or a file that fails to decode, closes its reader") {
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[CountingFs].getName)
+    def dataOf(p: Path) = listing(p).filter(_.getPath.getName.endsWith(".parquet"))
+    /** `f` and the streams it left open. */
+    def leftOpen[T](f: => T): (T, Int) = {
+      val (opened, closed) = (CountingFs.opened.get, CountingFs.closed.get)
+      val out = f
+      val newlyOpened = CountingFs.opened.get - opened
+      assert(newlyOpened > 0, "nothing was read through the counting file system")
+      (out, newlyOpened - (CountingFs.closed.get - closed))
+    }
+    // 10M values of 9,999,999,999.99: the sum of their cents leaves the
+    // Long range near row 9.2M, and Spark's aggregate answers instead
+    val big = java.nio.file.Files.createTempDirectory("graft_close_").toString +
+      "/l_returnflag=A"
+    spark.range(0L, 10000000L, 1L, 1).select(lit(9999999999.99).as(Val))
+      .write.parquet(big)
+    val bigFs = new Path(s"countfs://$big")
+    assert(dataOf(bigFs).map(_.getLen).sum <= spark.sessionState.conf.filesMaxPartitionBytes)
+    assert(leftOpen(PartitionCache.partitionAvg(spark, bigFs, listing(bigFs))) ==
+      (9999999999L, 0))
+    // a file whose last row group is zeroed: its first row groups
+    // decode, then the reader fails
+    val bad = java.nio.file.Files.createTempDirectory("graft_close_").toString +
+      "/l_returnflag=A"
+    spark.range(0L, 200000L, 1L, 1).select((col("id") * 0.37 % 1000).as(Val))
+      .write.option("parquet.block.size", "65536").parquet(bad)
+    val badFs = new Path(s"countfs://$bad")
+    val file = dataOf(badFs).head
+    val lastChunk = {
+      val r = Layout.openFooter(spark.sparkContext.hadoopConfiguration, file)
+      try r.getRowGroups.get(r.getRowGroups.size - 1).getColumns.get(0)
+      finally r.close()
+    }
+    assert(lastChunk.getStartingPos > 4L, "want more than one row group")
+    val raf = new java.io.RandomAccessFile(file.getPath.toUri.getPath, "rw")
+    try {
+      raf.seek(lastChunk.getStartingPos)
+      raf.write(new Array[Byte](lastChunk.getTotalSize.toInt))
+    } finally raf.close()
+    val rows = Layout.driverRows(spark, StructType(Seq(StructField(Val, DoubleType))), Seq(file))
+    var decoded = 0
+    val (failed, open) = leftOpen {
+      try { while (rows.hasNext) { rows.next(); decoded += 1 }; None }
+      catch { case e: Exception => Some(e) }
+      finally rows.close()
+    }
+    assert(failed.nonEmpty && decoded > 0 && open == 0, s"decoded $decoded rows, then $failed")
+    val (unreadable, left) = leftOpen(intercept[java.io.IOException](
+      PartitionCache.partitionAvg(spark, badFs, listing(badFs))))
+    assert(left == 0, s"$left streams left open after $unreadable")
+  }
+
+  test("a CalcAvgLoan reuse broadcasts nothing") {
+    val cacheDir = graft.util.Scratch.dir("graft_cache_")
+    assert(PartitionCache.calcAvg(spark, sf, cacheDir, "A")._2 == "create")
+    val before = org.apache.spark.BroadcastBlocks.ids()
+    val ((source, added), jobs) = jobsOf {
+      val (_, source) = PartitionCache.calcAvg(spark, sf, cacheDir, "A")
+      (source, org.apache.spark.BroadcastBlocks.ids() -- before)
+    }
+    assert(source == "reuse" && jobs == 0 && added.isEmpty,
+      s"$source: $jobs jobs, broadcasts $added")
+  }
+}
+
+/** The local file system under the `countfs` scheme, counting the input
+  * streams it opens and the ones closed. */
+class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    val in = super.open(f, bufferSize)
+    CountingFs.opened.incrementAndGet()
+    new FSDataInputStream(new FSInputStream {
+      private var closed = false
+      def seek(pos: Long): Unit = in.seek(pos)
+      def getPos: Long = in.getPos
+      def seekToNewSource(target: Long): Boolean = in.seekToNewSource(target)
+      def read(): Int = in.read()
+      override def read(b: Array[Byte], off: Int, len: Int): Int = in.read(b, off, len)
+      override def read(pos: Long, b: Array[Byte], off: Int, len: Int): Int =
+        in.read(pos, b, off, len)
+      override def available(): Int = in.available()
+      override def close(): Unit = {
+        if (!closed) { closed = true; CountingFs.closed.incrementAndGet() }
+        in.close()
+      }
+    })
+  }
+}
+
+object CountingFs {
+  val opened = new java.util.concurrent.atomic.AtomicInteger
+  val closed = new java.util.concurrent.atomic.AtomicInteger
 }

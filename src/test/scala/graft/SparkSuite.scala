@@ -13,13 +13,19 @@ trait SparkSuite extends AnyFunSuite {
 
   /** Run `f` with the session conf `key` set to `value`, restored (or
     * unset) after. */
-  def withConf[T](key: String, value: String)(f: => T): T = {
-    val was = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try f finally was match {
-      case Some(w) => spark.conf.set(key, w)
+  def withConf[T](key: String, value: String)(f: => T): T =
+    withConfs(key -> Some(value))(f)
+
+  /** Run `f` with each session conf of `settings` set to its value, or
+    * unset where it is None; each restored (or unset) after. */
+  def withConfs[T](settings: (String, Option[String])*)(f: => T): T = {
+    def put(key: String, value: Option[String]): Unit = value match {
+      case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+    val was = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => put(k, v) }
+    try f finally was.foreach { case (k, v) => put(k, v) }
   }
 
   /** Spark jobs `f` starts, counted by an `onJobStart` listener on a

@@ -7,12 +7,12 @@ Each argument is the spans file a traced run (`perfbench/run.py --trace 1`)
 saves beside its result. Operation spans are the lines with `"parent": null`;
 their `name` is the operation kind (append, merge, delete_mor, purge_dv,
 compact, vacuum, read_pruned, read_point, row_count, calcavg, ...). For each
-kind and side the table gives the operation count, the median wall time
-(`end_ms - start_ms`), the mean Spark jobs per operation with their range,
-and the median time the driver spent outside any job (`offjob_ms`), and the
-kind's share of the run: its summed wall time as a percentage of the
-summed wall time of all operations. Run the two sides on the same workload
-and seed so the operation sequences match.
+kind and side the table gives the operation count, the median and 75th
+percentile wall time (`end_ms - start_ms`), the mean Spark jobs per operation
+with their range, and the median time the driver spent outside any job
+(`offjob_ms`), and the kind's share of the run: its summed wall time as a
+percentage of the summed wall time of all operations. Run the two sides on the
+same workload and seed so the operation sequences match.
 """
 import json
 import statistics
@@ -45,11 +45,14 @@ def summary(spans, total_ms):
     if not spans:
         return "-"
     jobs = [s.get("jobs", 0) for s in spans]
-    ms = statistics.median(wall(s) for s in spans)
+    walls = [wall(s) for s in spans]
+    ms = statistics.median(walls)
+    # one sample is its own upper quartile; quantiles() needs two
+    p75 = statistics.quantiles(walls, n=4)[2] if len(walls) > 1 else walls[0]
     off = statistics.median(s.get("offjob_ms", 0) for s in spans)
-    share = 100.0 * sum(wall(s) for s in spans) / total_ms if total_ms else 0.0
+    share = 100.0 * sum(walls) / total_ms if total_ms else 0.0
     span = f"{min(jobs)}" if min(jobs) == max(jobs) else f"{min(jobs)}-{max(jobs)}"
-    return (f"{len(spans):>4} {ms:>9.1f} {statistics.mean(jobs):>6.2f} "
+    return (f"{len(spans):>4} {ms:>9.1f} {p75:>9.1f} {statistics.mean(jobs):>6.2f} "
             f"{'(' + span + ')':>8} {off:>9.1f} {share:>6.1f}")
 
 
@@ -58,13 +61,13 @@ def main(argv):
         sys.exit("usage: " + __doc__.strip().splitlines()[2].strip())
     parent, change = op_spans(argv[1]), op_spans(argv[2])
     totals = total_wall(parent), total_wall(change)
-    cols = (f"{'n':>4} {'ms p50':>9} {'jobs':>6} {'range':>8} {'offjob':>9} "
-            f"{'share%':>6}")
-    print(f"{'kind':<14} | {'parent':^47} | {'change':^47}")
+    cols = (f"{'n':>4} {'ms p50':>9} {'ms p75':>9} {'jobs':>6} {'range':>8} "
+            f"{'offjob':>9} {'share%':>6}")
+    print(f"{'kind':<14} | {'parent':^57} | {'change':^57}")
     print(f"{'':<14} | {cols} | {cols}")
     for kind in sorted(set(parent) | set(change)):
-        print(f"{kind:<14} | {summary(parent.get(kind, []), totals[0]):>47} | "
-              f"{summary(change.get(kind, []), totals[1]):>47}")
+        print(f"{kind:<14} | {summary(parent.get(kind, []), totals[0]):>57} | "
+              f"{summary(change.get(kind, []), totals[1]):>57}")
 
 
 if __name__ == "__main__":
