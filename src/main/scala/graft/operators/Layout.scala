@@ -546,9 +546,8 @@ object Layout {
     * that stops early, by choice or by a failure, must `close` the
     * iterator, as the driver has no task whose end would close it.
     *
-    * The reader is Spark's DSv2 parquet row reader, given the Hadoop
-    * conf `ParquetScan.createReaderFactory` builds, taken from the
-    * session at each call, in a [[DriverOnly]] broadcast: a scan
+    * The reader is Spark's DSv2 parquet row reader, given
+    * [[driverReaderConf]] in a [[DriverOnly]] broadcast: a scan
     * broadcasts its conf to the executors, a driver read has none. */
   private[graft] def driverRows(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
@@ -556,28 +555,11 @@ object Layout {
       : Iterator[org.apache.spark.sql.catalyst.InternalRow] with java.io.Closeable = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.PartitionedFile
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
     import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
-    import org.apache.spark.sql.internal.SQLConf
     val sqlConf = spark.sessionState.conf
-    val conf = spark.sessionState.newHadoopConf()
-    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
-      classOf[ParquetReadSupport].getName)
-    val json = schema.json
-    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
-    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, json)
-    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
-    Seq(
-      SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> sqlConf.nestedSchemaPruningEnabled,
-      SQLConf.CASE_SENSITIVE -> sqlConf.caseSensitiveAnalysis,
-      SQLConf.PARQUET_BINARY_AS_STRING -> sqlConf.isParquetBinaryAsString,
-      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> sqlConf.isParquetINT96AsTimestamp,
-      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED -> sqlConf.parquetInferTimestampNTZEnabled,
-      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> sqlConf.legacyParquetNanosAsLong,
-      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
-        sqlConf.parquetReaderRespectUnknownTypeAnnotation
-    ).foreach { case (entry, on) => conf.setBoolean(entry.key, on) }
-    val factory = ParquetPartitionReaderFactory(sqlConf, new DriverOnly(conf),
+    val factory = ParquetPartitionReaderFactory(sqlConf,
+      new DriverOnly(driverReaderConf(spark, schema)),
       schema, schema, new org.apache.spark.sql.types.StructType(),
       Array.empty, None, new ParquetOptions(Map.empty[String, String], sqlConf))
     new Iterator[InternalRow] with java.io.Closeable {
@@ -606,6 +588,37 @@ object Layout {
         if (reader != null) { val r = reader; reader = null; r.close() }
       def close(): Unit = { pending = Iterator.empty; closeReader() }
     }
+  }
+
+  /** The Hadoop conf `ParquetScan.createReaderFactory` (Spark 4.1.2)
+    * hands its reader to read `schema`, taken from the session at each
+    * call: the read support, the requested and row schemas, the session
+    * time zone and the schema converter's flags. `LayoutSpec` holds it
+    * equal to the scan's own. */
+  private[graft] def driverReaderConf(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType)
+      : org.apache.hadoop.conf.Configuration = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
+    import org.apache.spark.sql.internal.SQLConf
+    val sqlConf = spark.sessionState.conf
+    val conf = spark.sessionState.newHadoopConf()
+    conf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    val json = schema.json
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
+    conf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, json)
+    conf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+    Seq(
+      SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> sqlConf.nestedSchemaPruningEnabled,
+      SQLConf.CASE_SENSITIVE -> sqlConf.caseSensitiveAnalysis,
+      SQLConf.PARQUET_BINARY_AS_STRING -> sqlConf.isParquetBinaryAsString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> sqlConf.isParquetINT96AsTimestamp,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED -> sqlConf.parquetInferTimestampNTZEnabled,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> sqlConf.legacyParquetNanosAsLong,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
+        sqlConf.parquetReaderRespectUnknownTypeAnnotation
+    ).foreach { case (entry, on) => conf.setBoolean(entry.key, on) }
+    conf
   }
 
   /** `conf` as the broadcast Spark's reader takes, read only in the JVM

@@ -395,25 +395,10 @@ class LayoutSpec extends SparkSuite {
 
   test("fixture tables read with the footer schema equal the inferred read, with no job") {
     import graft.sources.Tables
-    // session confs the footer schema must honor: the events fixture
-    // has shipped with int64-nanos `ts`, readable only under
-    // nanosAsLong, and its µs `ts` is NTZ only under inferTimestampNTZ
-    for (t <- Tables.all; ntz <- Seq(true, false) if ntz || t == "events")
-      withConf("spark.sql.legacy.parquet.nanosAsLong", (t == "events").toString) {
-        withConf("spark.sql.parquet.inferTimestampNTZ.enabled", ntz.toString) {
-          val (declared, jobs) = jobsOf(Tables.table(spark, sf, t))
-          assert(jobs == 0, s"$t: Tables.table ran $jobs jobs")
-          val inferred = spark.read.parquet(s"$sf/$t.parquet")
-          assert(declared.schema == inferred.schema, s"$t (ntz=$ntz): schema differs")
-          assert(hashes(declared) == hashes(inferred), s"$t (ntz=$ntz): rows differ")
-        }
-      }
-  }
-
-  test("driver reads equal the distributed read on every fixture table as the reader confs switch") {
-    import graft.sources.Tables
-    // the schema converter inside the reader requires each of these
-    // keys in its Hadoop conf, so every read runs with them unset too
+    // session confs both reads must honor, switched between reads in
+    // one session and unset too: the driver reader's schema converter
+    // requires each in its Hadoop conf, and events' µs `ts` is NTZ only
+    // under inferTimestampNTZ
     val keys = Seq("spark.sql.legacy.parquet.nanosAsLong",
       "spark.sql.parquet.inferTimestampNTZ.enabled",
       "spark.sql.parquet.binaryAsString")
@@ -426,11 +411,55 @@ class LayoutSpec extends SparkSuite {
     for (s <- settings; t <- Tables.all)
       withConfs(keys.zip(s): _*) {
         val path = s"$sf/$t.parquet"
-        val (read, jobs) = jobsOf(Layout.readParquet(spark, path))
-        assert(jobs == 0, s"$t ($s): the driver read ran $jobs jobs")
-        val want = spark.read.parquet(path)
-        assert(read.schema == want.schema, s"$t ($s): schema differs")
-        assert(hashes(read) == hashes(want), s"$t ($s): rows differ")
+        val inferred = spark.read.parquet(path)
+        for ((how, read) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+            "Tables.table" -> (() => Tables.table(spark, sf, t)),
+            "the driver read" -> (() => Layout.readParquet(spark, path)))) {
+          val (df, jobs) = jobsOf(read())
+          assert(jobs == 0, s"$t ($s): $how ran $jobs jobs")
+          assert(df.schema == inferred.schema, s"$t ($s): $how's schema differs")
+          assert(hashes(df) == hashes(inferred), s"$t ($s): $how's rows differ")
+        }
+      }
+  }
+
+  test("the driver reader's Hadoop conf equals the conf Spark's parquet scan broadcasts, as the session confs switch") {
+    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
+    import org.apache.spark.sql.internal.SQLConf
+    import scala.jdk.CollectionConverters._
+    def entries(c: org.apache.hadoop.conf.Configuration): Map[String, String] =
+      c.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+    val path = s"$sf/events.parquet"
+    val schema = Layout.footerSchema(spark, path)
+    val index = new InMemoryFileIndex(spark,
+      Seq(new org.apache.hadoop.fs.Path(path)), Map.empty, None)
+    // every session conf the scan copies into its Hadoop conf, all
+    // unset (a set one reaches both confs through newHadoopConf), then
+    // all set away from their defaults
+    val flags = Seq(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED, SQLConf.CASE_SENSITIVE,
+      SQLConf.PARQUET_BINARY_AS_STRING, SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED, SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION)
+    val tz = SQLConf.SESSION_LOCAL_TIMEZONE.key
+    val unset = (flags.map(_.key) :+ tz).map(_ -> None)
+    val switched = flags.map(f => f.key -> Some((!f.defaultValue.get).toString)) :+
+      (tz -> Some("America/Los_Angeles"))
+    for (s <- Seq(unset, switched))
+      withConfs(s: _*) {
+        val scan = ParquetScan(spark, spark.sessionState.newHadoopConf(), index,
+          schema, schema, new org.apache.spark.sql.types.StructType(), Array.empty,
+          org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+        val bc = scan.createReaderFactory()
+          .asInstanceOf[ParquetPartitionReaderFactory].broadcastedConf
+        try {
+          val want = entries(bc.value.value)
+          val got = entries(Layout.driverReaderConf(spark, schema))
+          val differ = (want.keySet ++ got.keySet).toSeq.sorted
+            .filter(k => want.get(k) != got.get(k))
+            .map(k => s"$k: scan ${want.get(k)}, driver ${got.get(k)}")
+          assert(differ.isEmpty, differ.mkString("; "))
+        } finally bc.destroy()
       }
   }
 }

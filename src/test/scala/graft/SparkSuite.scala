@@ -23,7 +23,10 @@ trait SparkSuite extends AnyFunSuite {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
-    val was = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    // getOption reads a default for a key that is not set
+    val conf = spark.sessionState.conf
+    val was = settings.map { case (k, _) =>
+      k -> Option.when(conf.contains(k))(conf.getConfString(k)) }
     settings.foreach { case (k, v) => put(k, v) }
     try f finally was.foreach { case (k, v) => put(k, v) }
   }
