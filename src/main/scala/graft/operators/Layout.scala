@@ -503,25 +503,27 @@ object Layout {
       case None => spark.read.parquet(path).schema
     }
 
-  /** `spark.read.parquet(path)` for metadata-sized parquet (snapshot
-    * sidecars: manifests, stats, deletion vectors, constraint and
-    * column sets) without the two Spark jobs that read costs — schema
-    * inference and the collect. The schema comes from the first data
-    * file's footer ([[footerSchema]]). When the files total at most
-    * one split (`spark.sql.files.maxPartitionBytes`, the rule
-    * [[PartitionCache]] sizes by), Spark's own parquet reader reads
-    * them on the driver into a local relation: Catalyst folds filters
-    * and projections into it and `collect` runs no job. Larger inputs
-    * keep the distributed scan, with the declared schema. */
-  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
-    flatDataFiles(spark, path) match {
-      case None => spark.read.parquet(path)
-      case Some(files) =>
-        val schema = footerSchema(spark, files.head)
-        if (files.map(_.getLen).sum > spark.sessionState.conf.filesMaxPartitionBytes)
-          spark.read.schema(schema).parquet(path)
-        else readOnDriver(spark, schema, files)
+  /** `spark.read.parquet(paths: _*)` for metadata-sized parquet
+    * (snapshot bloom and deletion-vector payloads) without the two
+    * Spark jobs that read costs — schema inference and the collect.
+    * The schema comes from the first data file's footer
+    * ([[footerSchema]]). When the files total at most one split
+    * (`spark.sql.files.maxPartitionBytes`, the rule [[PartitionCache]]
+    * sizes by), Spark's own parquet reader reads them on the driver
+    * into a local relation: Catalyst folds filters and projections into
+    * it and `collect` runs no job. Larger inputs keep the distributed
+    * scan, with the declared schema. */
+  private[graft] def readParquet(spark: SparkSession, paths: String*): DataFrame = {
+    val listed = paths.map(flatDataFiles(spark, _))
+    if (listed.exists(_.isEmpty)) spark.read.parquet(paths: _*)
+    else {
+      val files = listed.flatten.flatten
+      val schema = footerSchema(spark, files.head)
+      if (files.map(_.getLen).sum > spark.sessionState.conf.filesMaxPartitionBytes)
+        spark.read.schema(schema).parquet(paths: _*)
+      else readOnDriver(spark, schema, files)
     }
+  }
 
   private def readOnDriver(spark: SparkSession,
                            schema: org.apache.spark.sql.types.StructType,

@@ -11,8 +11,11 @@ import org.apache.spark.sql.types.StructType
   * merge. (The same pointer-swap commit protocol Delta/Iceberg build
   * their logs on, reduced to a single head pointer; superseded versions
   * stay readable by number or instant — [[readVersion]], [[readAsOf]] —
-  * until [[vacuum]] collects them.) Each version's metadata is one
-  * record, `_log/v=N.json` ([[Meta]]), written before the swap.
+  * until [[vacuum]] collects them.) Each version is described whole by
+  * one log entry, `_log/v=N.json` ([[Meta]]), written before the swap:
+  * its metadata, an action per live data file with the file's stats,
+  * and the reference to its deletion vector. A reader opens that entry
+  * and the files it names, nothing else.
   *
   * Concurrent writers serialize through a VERSION CLAIM: before writing
   * `v=N`, a committer must win `_claims/N` via an atomic
@@ -67,12 +70,10 @@ object Snapshot {
     }
   }
 
-  private val ManifestDir = "_manifest"
-
   /** `input_file_name`-format URI for a listed file. The local FS
     * prints `file:/x` from `Path.toString` but `file:///x` from the
-    * scan's `input_file_name` — one canonical form keeps manifest
-    * entries and stats-manifest `file` keys joinable (schemes with an
+    * scan's `input_file_name` — one canonical form keeps file actions,
+    * bloom payload rows and tombstones joinable (schemes with an
     * authority, e.g. `hdfs://nn/x`, already agree). */
   private def canonFile(p: org.apache.hadoop.fs.Path): String = {
     val s = p.toString
@@ -81,26 +82,45 @@ object Snapshot {
     else s
   }
 
-  private val LogDir = "_log"
+  /** `rel` under `root`, qualified, in [[canonFile]] form: how an entry
+    * names a directory of the table (a payload, a version directory). */
+  private def pathOf(spark: SparkSession, root: String, rel: String): String = {
+    val p = new org.apache.hadoop.fs.Path(root, rel)
+    canonFile(fsOf(spark, p).makeQualified(p))
+  }
 
-  /** Version `v`'s METADATA RECORD, `_log/v=N.json`: everything a
-    * reader needs besides the file list, in one driver-side file.
-    *  - `schema`: the PHYSICAL schema. A version whose manifest mixes
-    *    file generations (old files without a later-added column) is
-    *    read with it EXPLICITLY, so parquet fills the missing columns
-    *    with NULL and no footer is read for inference.
+  /** The directory a file action's file lives in. */
+  private def parentOf(file: String): String =
+    file.substring(0, file.lastIndexOf('/'))
+
+  private val LogDir = "_log"
+  private val BloomDir = "_bloom"
+
+  /** Version `v`'s LOG ENTRY, `_log/v=N.json`: the complete description
+    * of the version, in one driver-side file.
+    *  - `schema`: the PHYSICAL schema. A version whose files mix
+    *    generations (old files without a later-added column) is read
+    *    with it EXPLICITLY, so parquet fills the missing columns with
+    *    NULL and no footer is read for inference.
     *  - `constraints`: the CHECK constraints `(name, expr)`, by name.
     *  - `colmap`: the column map `(physical, logical)` ([[renameColumn]]).
     *  - `dropped`: physical names retired by [[dropColumn]].
     *  - `gen`: the [[commitGenerated]] rule `(gen, base, bucket)`.
+    *  - `files`: one [[FileAction]] per live data file — the version's
+    *    whole file set, wherever the files live (carried files stay in
+    *    the directory of the version that wrote them).
+    *  - `stats` / `blooms`: the physical columns every action carries
+    *    `[min, max]` bounds for, and the columns with a bloom sketch
+    *    per file.
+    *  - `dv`: the deletion vector ([[DvRef]]), if any row is tombstoned.
     *
-    * Every commit writes the COMPLETE record of its version inside its
+    * Every commit writes the COMPLETE entry of its version inside its
     * claim, before the pointer swap: read-modify-write commits copy the
-    * head's record and apply their edit; blind commits copy the record
+    * head's entry and apply their edit; blind commits copy the metadata
     * of the head they validated their batch against, so they are
     * last-writer-wins for metadata exactly as for data. A reader opens
-    * only the record of the version it reads — never a listing, never
-    * another version's record — so a record a never-published version
+    * only the entry of the version it reads — never a listing, never
+    * another version's entry — so an entry a never-published version
     * left behind is invisible to every other version, and [[vacuum]]
     * collects it with its data directory. */
   private[graft] final case class Meta(
@@ -108,10 +128,14 @@ object Snapshot {
       constraints: Seq[(String, String)] = Nil,
       colmap: Seq[(String, String)] = Nil,
       dropped: Set[String] = Set.empty,
-      gen: Option[(String, String, Long)] = None) {
+      gen: Option[(String, String, Long)] = None,
+      files: Seq[FileAction] = Nil,
+      stats: Seq[String] = Nil,
+      blooms: Seq[String] = Nil,
+      dv: Option[DvRef] = None) {
 
-    /** The physical name behind a logical column (the name stats
-      * manifests and parquet footers know it by). */
+    /** The physical name behind a logical column (the name file
+      * actions and parquet footers know it by). */
     def physical(logical: String): String =
       colmap.find(_._2 == logical).map(_._1).getOrElse(logical)
 
@@ -120,34 +144,114 @@ object Snapshot {
       val byPhys = colmap.toMap
       schema.fieldNames.toSeq.map(c => byPhys.getOrElse(c, c))
     }
+
+    /** Exact live rows: Σ file rows − Σ tombstones. Every tombstone
+      * names one row of a live file ([[deleteWhereMor]] checks it when
+      * it builds the tombstone set), so the subtraction is exact. */
+    def rowCount: Long =
+      files.map(_.rows).sum - dv.fold(0L)(_.tombs.values.sum)
   }
+
+  /** One live data file of a version: its path ([[canonFile]] form),
+    * bytes, rows, `[min, max]` per stats column of the entry (Catalyst
+    * internal values, both NULL when the file holds no non-NULL value
+    * there), and on a bloom table the payload `_bloom/v=K` holding its
+    * sketches. A carry copies the action verbatim. */
+  private[graft] final case class FileAction(path: String, size: Long,
+      rows: Long, bounds: Seq[(Any, Any)] = Nil, bloom: Option[String] = None)
+
+  /** A version's deletion vector: the payload `_dv/v=K` of tombstone
+    * rows `(file, row_index)` and the tombstone count per file. */
+  private[graft] final case class DvRef(path: String, tombs: Map[String, Long])
 
   private def recordPath(root: String, v: Long) =
     new org.apache.hadoop.fs.Path(root, s"$LogDir/v=$v.json")
 
-  /** Write version `v`'s record; empty fields are left out, so a plain
-    * table's record is its schema. */
+  /** A stats bound as JSON, from its Catalyst internal value: integral,
+    * date (days) and timestamp (micros) values are JSON numbers;
+    * decimal, double and float values their exact text (`NaN` and the
+    * infinities included); strings JSON strings; binary base64. */
+  private def boundJson(v: Any, t: org.apache.spark.sql.types.DataType)
+      : org.json4s.JValue = {
+    import org.apache.spark.sql.types._
+    import org.json4s._
+    if (v == null) JNull
+    else t match {
+      case ByteType | ShortType | IntegerType | LongType | DateType |
+           TimestampType | TimestampNTZType =>
+        JLong(v.asInstanceOf[Number].longValue)
+      case FloatType => JString(java.lang.Float.toString(v.asInstanceOf[Float]))
+      case DoubleType => JString(java.lang.Double.toString(v.asInstanceOf[Double]))
+      case _: DecimalType => JString(v.asInstanceOf[Decimal].toJavaBigDecimal.toString)
+      case _: StringType => JString(v.toString)
+      case BooleanType => JBool(v.asInstanceOf[Boolean])
+      case BinaryType =>
+        JString(java.util.Base64.getEncoder.encodeToString(v.asInstanceOf[Array[Byte]]))
+      case other => throw new IllegalArgumentException(
+        s"no stats bounds for a ${other.simpleString} column")
+    }
+  }
+
+  /** The inverse of [[boundJson]]; None for a value it cannot read. */
+  private def boundOf(j: org.json4s.JValue, t: org.apache.spark.sql.types.DataType)
+      : Option[Any] = {
+    import org.apache.spark.sql.types._
+    import org.json4s._
+    (j, t) match {
+      case (JNull, _) => Some(null)
+      case (JInt(n), ByteType) => Some(n.toByte)
+      case (JInt(n), ShortType) => Some(n.toShort)
+      case (JInt(n), IntegerType | DateType) => Some(n.toInt)
+      case (JInt(n), LongType | TimestampType | TimestampNTZType) => Some(n.toLong)
+      case (JString(s), FloatType) => Some(java.lang.Float.parseFloat(s))
+      case (JString(s), DoubleType) => Some(java.lang.Double.parseDouble(s))
+      case (JString(s), d: DecimalType) =>
+        Some(Decimal(new java.math.BigDecimal(s), d.precision, d.scale))
+      case (JString(s), _: StringType) =>
+        Some(org.apache.spark.unsafe.types.UTF8String.fromString(s))
+      case (JBool(b), BooleanType) => Some(b)
+      case (JString(s), BinaryType) => Some(java.util.Base64.getDecoder.decode(s))
+      case _ => None
+    }
+  }
+
+  /** Write version `v`'s entry; empty metadata fields are left out. */
   private def writeMeta(spark: SparkSession, root: String, v: Long,
                         m: Meta): Unit = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods.{compact => jsonText, parse, render}
     def pairs(ps: Seq[(String, String)]): JValue =
       JObject(ps.map { case (k, x) => k -> JString(x) }.toList)
+    def names(ns: Seq[String]): JValue = JArray(ns.map(JString(_)).toList)
+    val types = m.stats.map(c => m.schema(c).dataType)
+    val files = m.files.map { f =>
+      JObject(List("path" -> JString(f.path), "size" -> JLong(f.size),
+        "rows" -> JLong(f.rows)) ++
+        Option.when(types.nonEmpty)("bounds" -> JArray(f.bounds.zip(types).map {
+          case ((lo, hi), t) => JArray(List(boundJson(lo, t), boundJson(hi, t)))
+        }.toList)) ++
+        f.bloom.map("bloom" -> JString(_)))
+    }
     val fields = List("schema" -> parse(m.schema.json)) ++
       Option.when(m.constraints.nonEmpty)("constraints" -> pairs(m.constraints)) ++
       Option.when(m.colmap.nonEmpty)("colmap" -> pairs(m.colmap)) ++
-      Option.when(m.dropped.nonEmpty)(
-        "dropped" -> JArray(m.dropped.toList.sorted.map(JString(_)))) ++
+      Option.when(m.dropped.nonEmpty)("dropped" -> names(m.dropped.toSeq.sorted)) ++
       m.gen.map { case (g, b, k) =>
         "gen" -> JObject("gen" -> JString(g), "base" -> JString(b),
-          "bucket" -> JLong(k)) }
+          "bucket" -> JLong(k)) } ++
+      Option.when(m.stats.nonEmpty)("stats" -> names(m.stats)) ++
+      Option.when(m.blooms.nonEmpty)("blooms" -> names(m.blooms)) ++
+      List("files" -> JArray(files.toList)) ++
+      m.dv.map(d => "dv" -> JObject("path" -> JString(d.path),
+        "tombs" -> JObject(d.tombs.toList.sorted.map { case (f, n) =>
+          f -> (JLong(n): JValue) })))
     val p = recordPath(root, v)
     val out = fsOf(spark, p).create(p, true)
     try out.write(jsonText(render(JObject(fields))).getBytes("UTF-8"))
     finally out.close()
   }
 
-  /** Version `v`'s record. A record that exists but does not parse is
+  /** Version `v`'s entry. An entry that exists but does not parse is
     * corruption or format drift, never "no metadata": it fails loudly
     * with the evidence. */
   private[graft] def metaOf(spark: SparkSession, root: String, v: Long): Meta = {
@@ -168,24 +272,64 @@ object Snapshot {
       }
       case _ => malformed()
     }
+    def names(j: JValue): Seq[String] = j match {
+      case JNothing => Nil
+      case JArray(xs) => xs.map {
+        case JString(n) => n
+        case _ => malformed()
+      }
+      case _ => malformed()
+    }
+    def long(j: JValue): Long = j match {
+      case JInt(n) => n.toLong
+      case _ => malformed()
+    }
     val j = try parse(json) catch { case NonFatal(e) => malformed(e) }
     val schema =
       try org.apache.spark.sql.types.DataType
         .fromJson(jsonText(render(j \ "schema"))).asInstanceOf[StructType]
       catch { case NonFatal(e) => malformed(e) }
-    Meta(schema, pairs(j \ "constraints"), pairs(j \ "colmap"),
-      j \ "dropped" match {
-        case JNothing => Set.empty
-        case JArray(xs) => xs.map {
-          case JString(n) => n
+    val stats = names(j \ "stats")
+    val types =
+      try stats.map(c => schema(c).dataType)
+      catch { case NonFatal(e) => malformed(e) }
+    val files = j \ "files" match {
+      case JArray(fs) => fs.map { f =>
+        val bounds = (f \ "bounds", types) match {
+          case (JNothing, Nil) => Nil
+          case (JArray(bs), _) if bs.size == types.size => bs.zip(types).map {
+            case (JArray(List(lo, hi)), t) =>
+              (boundOf(lo, t).getOrElse(malformed()),
+                boundOf(hi, t).getOrElse(malformed()))
+            case _ => malformed()
+          }
           case _ => malformed()
-        }.toSet
-        case _ => malformed()
-      },
+        }
+        (f \ "path", f \ "bloom") match {
+          case (JString(path), JNothing) =>
+            FileAction(path, long(f \ "size"), long(f \ "rows"), bounds)
+          case (JString(path), JString(b)) =>
+            FileAction(path, long(f \ "size"), long(f \ "rows"), bounds, Some(b))
+          case _ => malformed()
+        }
+      }
+      case _ => malformed()
+    }
+    Meta(schema, pairs(j \ "constraints"), pairs(j \ "colmap"),
+      names(j \ "dropped").toSet,
       j \ "gen" match {
         case JNothing => None
         case g => (g \ "gen", g \ "base", g \ "bucket") match {
           case (JString(gn), JString(b), JInt(k)) => Some((gn, b, k.toLong))
+          case _ => malformed()
+        }
+      },
+      files, stats, names(j \ "blooms"),
+      j \ "dv" match {
+        case JNothing => None
+        case d => (d \ "path", d \ "tombs") match {
+          case (JString(path), JObject(ts)) =>
+            Some(DvRef(path, ts.map { case (f, n) => f -> long(n) }.toMap))
           case _ => malformed()
         }
       })
@@ -194,12 +338,16 @@ object Snapshot {
   /** ADD-COLUMN evolution: base columns keep their position, batch-only
     * columns append. A same-name column must keep its type — anything
     * else (rename, retype, drop) is not an additive append and fails
-    * fast rather than silently corrupting carried files' reads. */
+    * fast rather than silently corrupting carried files' reads. Only
+    * nullability may differ: a batch read back from its footer is
+    * nullable throughout (`array<bigint>` without its non-null
+    * elements flag is the same column). */
   private def mergedSchema(base: StructType, batch: StructType): StructType = {
     val baseNames = base.fieldNames.toSet
     base.fields.foreach { f =>
       batch.fields.find(_.name == f.name).foreach { g =>
-        require(g.dataType == f.dataType,
+        require(org.apache.spark.sql.types.DataType.equalsStructurally(
+            g.dataType, f.dataType, ignoreNullability = true),
           s"schema evolution is ADD-COLUMN only: ${f.name} is " +
             s"${f.dataType.simpleString} in the table but " +
             s"${g.dataType.simpleString} in the batch")
@@ -244,7 +392,7 @@ object Snapshot {
 
   /** Enforce the base version's CHECK constraints (`m`, its record) on
     * the parquet just written into `v=next`, BEFORE the pointer swap —
-    * reading back the written files (the [[writeStats]] pattern) costs
+    * reading back the written files costs
     * one column-pruned scan of the BATCH and never re-executes the
     * input plan; a violation throws and the orphaned directory never
     * becomes visible. */
@@ -295,36 +443,24 @@ object Snapshot {
         col(c).as(byLogical.getOrElse(c, c))): _*)
     }
 
-  /** The `(file, bytes)` inventory of version `v` — manifest-listed
-    * files or the directory's parquet parts; an O(files) driver-side
-    * metadata read, never a data scan. */
+  /** The `(file, bytes)` inventory of version `v`: its entry's file
+    * actions, no listing and no file status. */
   private[graft] def fileInventory(spark: SparkSession, root: String,
-                                   v: Long): Seq[(String, Long)] = {
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
-    manifestFiles(spark, root, v) match {
-      case Some(files) => files.map { f =>
-        (f, fs.getFileStatus(new org.apache.hadoop.fs.Path(f)).getLen)
-      }
-      case None =>
-        val dir = new org.apache.hadoop.fs.Path(root, s"v=$v")
-        fs.listStatus(dir).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(st => (canonFile(st.getPath), st.getLen))
-    }
-  }
+                                   v: Long): Seq[(String, Long)] =
+    metaOf(spark, root, v).files.map(f => (f.path, f.size))
 
-  /** The data files composing version `v`, when a FILE MANIFEST names
-    * them explicitly ([[deleteWhere]] writes one so untouched files are
-    * carried by REFERENCE into the new version instead of rewritten);
-    * None for a self-contained `v=N` directory. A manifest read is a
-    * driver-side metadata scan, O(files) — the same planning read every
-    * table format's manifest layer does. */
-  private[graft] def manifestFiles(spark: SparkSession, root: String,
-                                   v: Long): Option[Seq[String]] = {
-    val p = new org.apache.hadoop.fs.Path(root, s"$ManifestDir/v=$v")
-    if (!fsOf(spark, p).exists(p)) None
-    else Some(Layout.readParquet(spark, p.toString)
-      .select("file").collect().map(_.getString(0)).toSeq)
+  /** The paths a read of version `v` (entry `m`) passes to the parquet
+    * reader: the version's own directory when every file lives there (a
+    * self-contained version, and a version with no file, whose empty
+    * directory the recorded schema reads as an empty frame), otherwise
+    * the files. One root path for a self-contained version keeps its
+    * read below Spark's parallel-listing threshold whatever its file
+    * count. */
+  private def scanPaths(spark: SparkSession, root: String, v: Long,
+                        m: Meta): Seq[String] = {
+    val own = pathOf(spark, root, s"v=$v")
+    if (m.files.forall(f => parentOf(f.path) == own)) Seq(s"$root/v=$v")
+    else m.files.map(_.path)
   }
 
   /** Parquet reader pinned to the version's RECORDED physical schema.
@@ -338,20 +474,12 @@ object Snapshot {
                          m: Meta): org.apache.spark.sql.DataFrameReader =
     spark.read.schema(m.schema)
 
-  /** Version `v` (record `m`) in PHYSICAL names with its tombstones
-    * applied: manifest-listed files when a manifest names any, the
-    * version directory otherwise — which, for a version that names no
-    * file (a delete emptied the table), is an empty directory the
-    * recorded schema reads as an empty frame. */
+  /** Version `v` (entry `m`) in PHYSICAL names with its tombstones
+    * applied. */
   private def readPhysical(spark: SparkSession, root: String, v: Long,
-                           m: Meta): DataFrame = {
-    val physical = manifestFiles(spark, root, v) match {
-      case Some(files) if files.nonEmpty => physReader(spark, m).parquet(files: _*)
-      case _ => physReader(spark, m).parquet(s"$root/v=$v")
-    }
+                           m: Meta): DataFrame =
     // merge-on-read tombstones key on the physical scan's _metadata
-    applyDv(spark, root, v, physical)
-  }
+    applyDv(spark, m, physReader(spark, m).parquet(scanPaths(spark, root, v, m): _*))
 
   /** Version `v` (record `m`) in LOGICAL names. */
   private def readResolved(spark: SparkSession, root: String, v: Long,
@@ -378,12 +506,11 @@ object Snapshot {
     readResolved(spark, root, v, metaOf(spark, root, v))
   }
 
-  /** Version `v`'s record, after checking the version is retained:
+  /** Version `v`'s entry, after checking the version is retained:
     * reading a collected version fails fast with the version inventory
     * rather than a bare path error. A collected version whose directory
-    * [[vacuum]] keeps for a survivor's manifest has lost its record
-    * (and its manifest, stats and deletion vector), so it fails too,
-    * instead of reading the directory alone. */
+    * [[vacuum]] keeps for a survivor's files has lost its entry, so it
+    * fails too, instead of reading the directory alone. */
   private def retainedMeta(spark: SparkSession, root: String,
                            v: Long): Meta = {
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
@@ -405,37 +532,17 @@ object Snapshot {
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame =
     readResolved(spark, root, v, retainedMeta(spark, root, v))
 
-  /** Exact row count of the LIVE version from METADATA alone — the
-    * table-format count every manifest layer supports (Delta's
-    * `numRecords` stats, Iceberg's manifest `record_count`): Σ footer
-    * row counts of the version's inventory files minus the version's
-    * live tombstone count. DV-aware by construction: the sidecar holds
-    * DISTINCT `(file, row_index)` pairs ([[deleteWhereMor]] distincts
-    * the merge), every pair names a file in the version's inventory
-    * (the [[writeManifestAndStats]] carry invariant — orphans fail the
-    * commit loudly), and each names exactly one immutable physical
-    * row, so the subtraction is exact — the r14 "a naive metadata
-    * count would miscount MOR-tombstoned tables" objection is the
-    * tombstone term, now carried. The sidecar's own cardinality also
-    * comes from ITS parquet footers: the whole count is O(files)
-    * driver-side metadata, no job — where `readCurrent(...).count()`
-    * re-read every committed byte back (at 100 TB: the table, again,
-    * per post-commit visibility check). SnapshotSpec pins it equal to
-    * `readCurrent(...).count()` through commit, append, MOR-delete,
-    * purge, and full-file-delete venues. */
+  /** Exact row count of the LIVE version from its entry alone — the
+    * table-format count every log supports (Delta's `numRecords`
+    * stats, Iceberg's manifest `record_count`): Σ file rows minus Σ
+    * tombstones ([[Meta.rowCount]]). No file is opened and no job
+    * runs, where `readCurrent(...).count()` re-read every committed
+    * byte (at 100 TB: the table, again, per post-commit visibility
+    * check). SnapshotSpec pins it equal to `readCurrent(...).count()`
+    * through commit, append, MOR-delete, purge, and full-file-delete
+    * venues. */
   def currentRowCount(spark: SparkSession, root: String): Long =
-    versionRowCount(spark, root, headOf(spark, root))
-
-  private[graft] def versionRowCount(spark: SparkSession, root: String,
-                                     v: Long): Long = {
-    val live = Layout.footerRowCountOfFiles(spark,
-      fileInventory(spark, root, v).map(_._1))
-    val dvP = new org.apache.hadoop.fs.Path(root, s"$DvDir/v=$v")
-    val tombs =
-      if (!fsOf(spark, dvP).exists(dvP)) 0L
-      else Layout.footerRowCount(spark, dvP.toString)
-    live - tombs
-  }
+    metaOf(spark, root, headOf(spark, root)).rowCount
 
   /** `numFiles` sentinel for [[compact]]: derive the rewrite width
     * from the bytes the current version actually references. */
@@ -453,14 +560,6 @@ object Snapshot {
     math.min(cap.toLong, math.max(1L,
       (bytes + TargetCompactBytes - 1) / TargetCompactBytes)).toInt
 
-  /** Rewrite width for version `v`: referenced bytes (manifest-aware
-    * [[fileInventory]] — an O(files) metadata read, no data scan) over
-    * [[TargetCompactBytes]], clamped to [1, shuffle.partitions]. */
-  private def derivedCompactFiles(spark: SparkSession, root: String,
-                                  v: Long): Int =
-    compactWidthFor(fileInventory(spark, root, v).map(_._2).sum,
-      spark.sessionState.conf.numShufflePartitions)
-
   /** Compaction: rewrite the CURRENT version's files into `numFiles`
     * and commit the result as a new version — the small-file
     * maintenance pass every incrementally-ingested table needs (a CDC
@@ -474,27 +573,24 @@ object Snapshot {
     * remains until vacuumed.
     *
     * `numFiles` defaults to [[DerivedWidth]]: one writer per
-    * ~128 MB of referenced bytes, clamped to [1, shuffle.partitions].
-    * A FIXED width is the of21-class scale defect in maintenance
-    * form — 10× the rows through the same k writer tasks; deriving it
-    * per-attempt (the referenced set changes if a concurrent commit
-    * wins the claim race) keeps rewrite parallelism tracking volume. */
+    * ~128 MB of referenced bytes (the entry's file sizes), clamped to
+    * [1, shuffle.partitions]. A FIXED width is the of21-class scale
+    * defect in maintenance form — 10× the rows through the same k
+    * writer tasks; deriving it per-attempt (the referenced set changes
+    * if a concurrent commit wins the claim race) keeps rewrite
+    * parallelism tracking volume. */
   def compact(spark: SparkSession, root: String,
               numFiles: Int = DerivedWidth): Long =
     onHead(spark, root, "compact") { (base, m) => Some { next =>
-      // compacting a manifest (delete) version re-materializes it
-      // self-contained, collapsing the reference chain so vacuum can
-      // reclaim the referenced ancestors
+      // the new version is self-contained, collapsing any reference
+      // chain so vacuum can reclaim the referenced ancestors; the
+      // tombstones die with the rewrite and the stats are re-derived
       val nF = if (numFiles > 0) numFiles
-               else derivedCompactFiles(spark, root, base)
+               else compactWidthFor(m.files.map(_.size).sum,
+                 spark.sessionState.conf.numShufflePartitions)
       readPhysical(spark, root, base, m).repartition(nF)
         .write.mode("overwrite").parquet(s"$root/v=$next")
-      // a stats-carrying table keeps its data-skipping index across
-      // maintenance passes: re-derive the manifest for the new files
-      val sc = statsColsOf(spark, root, base)
-      if (sc.nonEmpty) writeStats(spark, root, next, m.schema, sc,
-        bloomColsOf(spark, root, base))
-      m
+      withFiles(spark, root, next, m, Nil)
     } }
 
   private val ClaimsDir = "_claims"
@@ -592,7 +688,7 @@ object Snapshot {
     * pointer need this — between their base observation and their swap
     * another claimant below them can publish, and an unconditional
     * "advance if higher" would then overwrite that commit's place in
-    * the carry chain with a manifest that never carried it (the
+    * the carry chain with an entry that never carried it (the
     * two-process bootstrap race the r9 soak caught: append's bootstrap
     * claimed v2 over a concurrent v1 and published a full-replace —
     * v1's batch vanished with every invariant green). */
@@ -820,14 +916,14 @@ object Snapshot {
   def commit(df: DataFrame, root: String): Long =
     commitInternal(df, root, Nil)
 
-  /** [[commit]] plus a per-file min/max/count stats manifest over
-    * `statsCols` — the data-skipping index every table format keeps
-    * (Delta's per-file stats, Iceberg's manifest column bounds). The
-    * manifest is written BEFORE the pointer swap, so any version the
-    * pointer names has its stats in place, and it is derived by
-    * re-scanning only the files just written (grouped on
-    * `input_file_name`, one map-side-combined aggregate — at 100 TB
-    * this reads back one commit's files, not the table). Pair with a
+  /** [[commit]] plus per-file min/max/count stats over `statsCols` —
+    * the data-skipping index every table format keeps (Delta's per-file
+    * stats in its add actions, Iceberg's manifest column bounds). The
+    * bounds ride in the entry's file actions, written BEFORE the
+    * pointer swap, so any version the pointer names has its stats in
+    * place; they come from the written files' footers, or from one
+    * aggregate over only the files just written ([[freshActions]] — at
+    * 100 TB this reads back one commit's files, not the table). Pair with a
     * range layout on the stats column (`repartitionByRange` +
     * `sortWithinPartitions`) so file bounds are disjoint and
     * [[readCurrentPruned]] skips all but the overlapping files. */
@@ -872,64 +968,41 @@ object Snapshot {
       val physDf = toPhysical(df, hm.colmap)
       physDf.write.mode("overwrite").parquet(s"$root/v=$next")
       enforceWritten(spark, root, next, head.getOrElse(0L), hm)
-      if (statsCols.nonEmpty) writeStats(spark, root, next, physDf.schema,
-        statsCols.map(hm.physical), bloomCols.map(hm.physical))
-      hm.copy(schema = physDf.schema, gen = gen.orElse(hm.gen))
+      withFiles(spark, root, next, hm.copy(schema = physDf.schema,
+        gen = gen.orElse(hm.gen), files = Nil, stats = statsCols.map(hm.physical),
+        blooms = bloomCols.map(hm.physical), dv = None), Nil)
     }
-  }
-
-  private val StatsDir = "_stats"
-
-  /** The stats columns version `v`'s manifest covers (recovered from
-    * its schema's `min_*` fields), or Nil for a stats-less version. */
-  private def statsColsOf(spark: SparkSession, root: String,
-                          v: Long): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$v")
-    if (!fsOf(spark, p).exists(p)) Nil
-    else Layout.footerSchema(spark, p.toString).fieldNames.toSeq
-      .collect { case n if n.startsWith("min_") => n.stripPrefix("min_") }
-  }
-
-  /** The columns version `v`'s manifest carries per-file BLOOM indexes
-    * for (`bloom_*` binary fields), or Nil. */
-  private def bloomColsOf(spark: SparkSession, root: String,
-                          v: Long): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$v")
-    if (!fsOf(spark, p).exists(p)) Nil
-    else Layout.footerSchema(spark, p.toString).fieldNames.toSeq
-      .collect { case n if n.startsWith("bloom_") => n.stripPrefix("bloom_") }
   }
 
   private val DvDir = "_dv"
 
-  /** The sidecar size up to which [[applyDv]] broadcasts the tombstone
+  /** The payload size up to which [[applyDv]] broadcasts the tombstone
     * relation; above it the anti-join falls back to a shuffle — the
     * operational signal that [[purgeDv]] is due (README's COW-vs-MOR
     * rule, enforced by [[maybePurgeOversizedDv]]). */
   private[graft] val DvBroadcastBytes = 64L * 1024 * 1024
 
-  /** Target tombstone rows per sidecar parquet file: ~4M `(file,
+  /** Target tombstone rows per payload parquet file: ~4M `(file,
     * row_index)` pairs (dictionary-encoded file column) keep each file
     * in the tens of MB, so a 10^9-row tombstone wave writes wide
     * instead of serializing through one task, while a toy delete still
     * writes exactly one file. */
   private val DvRowsPerSidecarFile = 4L * 1000 * 1000
 
-  /** Version `v`'s DELETION VECTOR — the merge-on-read tombstone
-    * relation `(file, row_index)` written by [[deleteWhereMor]] — or
-    * None when the version carries no tombstones (every table before
-    * its first MOR delete, and every version whose files were fully
-    * rewritten since). `file` is the scan's `_metadata.file_path` URI,
-    * the same form the stats/file manifests use, and `row_index` is
-    * parquet's stable in-file row ordinal (`_metadata.row_index`) —
-    * valid for exactly as long as the file is immutable, which
-    * snapshot version files are by construction. */
-  /** `_metadata.file_path` surfaces the local FS as `file:/x` while
-    * every manifest in this layer carries [[canonFile]]'s `file:///x`
-    * — normalize scan-side paths to the manifest form so sidecar
-    * entries, manifest rows, and stats rows all name a file the same
-    * way (other schemes — hdfs://, s3a:// — are already consistent and
-    * pass through untouched). */
+  /** A version's DELETION VECTOR is the merge-on-read tombstone
+    * relation `(file, row_index)` written by [[deleteWhereMor]], named
+    * by the entry's [[DvRef]]. `file` is the scan's `_metadata.file_path`
+    * URI in the form the file actions use, and `row_index` is parquet's
+    * stable in-file row ordinal (`_metadata.row_index`) — valid for
+    * exactly as long as the file is immutable, which snapshot version
+    * files are by construction.
+    *
+    * `_metadata.file_path` surfaces the local FS as `file:/x` while
+    * every file action carries [[canonFile]]'s `file:///x` — normalize
+    * scan-side paths to that form so tombstones, bloom payload rows and
+    * file actions all name a file the same way (other schemes —
+    * hdfs://, s3a:// — are already consistent and pass through
+    * untouched). */
   private def canonMetaPath(c: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions._
@@ -938,7 +1011,7 @@ object Snapshot {
     // `%` → `%25`), but the canonical form is the DECODED one: only it
     // is accepted back by `spark.read.parquet` (Hadoop `Path(String)`
     // treats `%20` as three literal chars), and it is what
-    // `Path.toString`-derived manifest rows already hold — measured in
+    // `Path.toString`-derived file actions already hold — measured in
     // SnapshotSpec's spaced-root pin, where the undecoded form dropped
     // every carried tombstone. `url_decode` is form-decoding (`+` →
     // space), so literal `+` — legal raw in a URI path — is protected
@@ -949,97 +1022,45 @@ object Snapshot {
     coalesce(try_url_decode(plusSafe), slashed)
   }
 
-  private def dvOf(spark: SparkSession, root: String,
-                   v: Long): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(root, s"$DvDir/v=$v")
-    if (!fsOf(spark, p).exists(p)) None
-    else Some(Layout.readParquet(spark, p.toString))
-  }
-
-  /** The distinct `file` values of a sidecar read by
-    * [[Layout.readParquet]]: collected and made distinct on the driver
-    * when the read is a driver-side local relation (no job), Spark's
-    * distributed distinct above one split. */
-  private def distinctFiles(sidecar: DataFrame): Seq[String] = {
-    val files = sidecar.select("file")
-    val local = files.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-    (if (local) files else files.distinct())
-      .collect().map(_.getString(0)).distinct.toSeq
-  }
-
-  /** Filter version `v`'s tombstoned rows out of a PHYSICAL parquet
-    * scan — the merge-on-read half of every read path. MUST be applied
-    * directly on (a projection of) the file scan: it reads the scan's
-    * constant `_metadata` columns, which do not survive a join. A
-    * version without tombstones returns the scan untouched — zero cost
-    * for every non-MOR table. The tombstone relation is metadata-sized
-    * by contract ([[purgeDv]]/[[compact]] re-materialize and clear it;
-    * those maintenance passes ARE the DV-growth bound), so the
-    * anti-join broadcasts below a 64 MB sidecar bound and falls back
-    * to a shuffled anti-join above it rather than OOMing the driver.
+  /** Filter the tombstoned rows of a version (entry `m`) out of a
+    * PHYSICAL parquet scan — the merge-on-read half of every read path.
+    * MUST be applied directly on (a projection of) the file scan: it
+    * reads the scan's constant `_metadata` columns, which do not
+    * survive a join. A version without tombstones returns the scan
+    * untouched — zero cost for every non-MOR table. The tombstone
+    * relation is metadata-sized by contract ([[purgeDv]]/[[compact]]
+    * re-materialize and clear it; those maintenance passes ARE the
+    * DV-growth bound), so the anti-join broadcasts below a 64 MB
+    * payload and falls back to a shuffled anti-join above it rather
+    * than OOMing the driver.
     *
     * The join keys on `(xxhash64(file), row_index)` — long pairs —
     * instead of the raw path string: the corpus side evaluates the
     * probe per ROW, and hashing a ~90-char URI beats string-equality
     * probing by ~4× at 150M rows (measured, the sf100 read-tax line in
-    * BENCH_NOTES). Exactness is not delegated to the hash: the
-    * version's file INVENTORY is metadata-sized, so hash uniqueness
-    * across it is CHECKED on the driver per apply, and a collision
-    * (never, at ~10⁻¹² for 10k files) falls back to the string-keyed
-    * join rather than trusting 64 bits. */
-  private def applyDv(spark: SparkSession, root: String, v: Long,
+    * BENCH_NOTES). Exactness is not delegated to the hash: hash
+    * uniqueness across the entry's file actions is CHECKED on the
+    * driver per apply, and a collision (never, at ~10⁻¹² for 10k
+    * files) falls back to the string-keyed join rather than trusting
+    * 64 bits. */
+  private def applyDv(spark: SparkSession, m: Meta,
                       phys: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    val p = new org.apache.hadoop.fs.Path(root, s"$DvDir/v=$v")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return phys
-    val dv = Layout.readParquet(spark, p.toString)
+    val d = m.dv.getOrElse(return phys)
+    val p = new org.apache.hadoop.fs.Path(d.path)
+    val dv = Layout.readParquet(spark, d.path)
     def sized(df: DataFrame): DataFrame =
-      if (fs.getContentSummary(p).getLength <= 64L * 1024 * 1024)
+      if (fsOf(spark, p).getContentSummary(p).getLength <= DvBroadcastBytes)
         broadcast(df)
       else df
     // the driver replays the SQL function's exact hash (same code
     // path, same seed) over the O(files) inventory — uniqueness there
-    // makes the long-keyed join provably equal to the string-keyed
-    // one. Versions are immutable, so the verdict is memoized per
-    // (root, version): without the memo every read-plan construction
-    // of a DV'd version re-collected the manifest and re-hashed the
-    // full inventory on the driver (twice per deleteWhereMor, which
-    // calls applyDv inside its own read). The key also folds in a
-    // cheap inventory fingerprint: a scratch root deleted and
-    // recreated at the same path within one session (test fixtures,
-    // re-run soaks) must not be served the dead root's verdict for a
-    // different inventory. Directory mtime alone is second-granular
-    // on some filesystems — a same-second delete+recreate would still
-    // hit the stale memo (ADVICE r13) — so fold in the direct-child
-    // count and total length from one listStatus (O(children) driver
-    // metadata, same order as the fs.exists probe above).
-    val fpDir = {
-      val m = new org.apache.hadoop.fs.Path(root, s"$ManifestDir/v=$v")
-      if (fs.exists(m)) m else new org.apache.hadoop.fs.Path(root, s"v=$v")
-    }
-    val fp = try {
-      val fpFs = fsOf(spark, fpDir)
-      val mtime = fpFs.getFileStatus(fpDir).getModificationTime
-      val kids = fpFs.listStatus(fpDir)
-      s"$mtime:${kids.length}:${kids.map(_.getLen).sum}"
-    } catch { case _: Exception => "0" }
-    val exactSafe = graft.util.SessionMemo.memoizedValue(spark,
-        s"graft.dv.exactSafe:$root:v=$v:fp=$fp") {
-      val inventory = manifestFiles(spark, root, v).getOrElse {
-        val dir = new org.apache.hadoop.fs.Path(root, s"v=$v")
-        fsOf(spark, dir).listStatus(dir).toSeq
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(st => canonFile(st.getPath))
-      }
-      def xx(f: String): Long =
-        org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-          org.apache.spark.unsafe.types.UTF8String.fromString(f),
-          org.apache.spark.sql.types.StringType, 42L)
-      inventory.iterator.map(xx).toSet.size == inventory.size
-    }
-    if (exactSafe) {
+    // makes the long-keyed join provably equal to the string-keyed one
+    def xx(f: String): Long =
+      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
+        org.apache.spark.unsafe.types.UTF8String.fromString(f),
+        org.apache.spark.sql.types.StringType, 42L)
+    if (m.files.iterator.map(f => xx(f.path)).toSet.size == m.files.size) {
       val right = sized(dv.select(xxhash64(col("file")).as("__dv_fh"),
         col("row_index").as("__dv_ri")))
       phys
@@ -1062,26 +1083,15 @@ object Snapshot {
 
   /** Per-file bloom sketch size target: estimated distinct values per
     * FILE (Spark sizes numBits from it at the default 3 % fpp, ~90 KB
-    * per file at 100k — SIZE IT TO ROWS-PER-FILE: the manifest grows
-    * by sketch-size × files, and [[readCurrentPoint]] deserializes
-    * every sketch (executor-side, inside the manifest scan), so an
-    * oversized est wastes manifest bytes and lookup latency while an
-    * undersized one only raises the false-positive rate — never loses
-    * files. Overridable per session via `graft.snapshot.bloomEstItems`
-    * on the Spark conf. */
+    * per file at 100k — SIZE IT TO ROWS-PER-FILE: the bloom payloads
+    * grow by sketch-size × files, and [[readCurrentPoint]] deserializes
+    * every live sketch, so an oversized est wastes payload bytes and
+    * lookup latency while an undersized one only raises the
+    * false-positive rate — never loses files. Overridable per session
+    * via `graft.snapshot.bloomEstItems` on the Spark conf. */
   private def bloomEstItems(spark: SparkSession): Long =
     spark.conf.getOption("graft.snapshot.bloomEstItems")
       .map(_.toLong).getOrElse(100000L)
-
-  private def writeStats(spark: SparkSession, root: String, v: Long,
-                         schema: StructType, statsCols: Seq[String],
-                         bloomCols: Seq[String] = Nil): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(root, s"v=$v")
-    freshStats(spark, dir, parquetFiles(spark, dir), schema, statsCols,
-      bloomCols)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/$StatsDir/v=$v")
-  }
 
   /** The parquet data files directly under `dir`. */
   private def parquetFiles(spark: SparkSession, dir: org.apache.hadoop.fs.Path)
@@ -1089,145 +1099,139 @@ object Snapshot {
     fsOf(spark, dir).listStatus(dir).toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
 
-  /** Per-file `(file, min_c, max_c, …, [bloom_c, …,] n_rows)` stats rows
-    * for `files`, the parquet a commit just wrote into `dir` (read as
-    * the version's physical `schema`: a stats column a batch lacks reads
-    * NULL, so its bounds are NULL, the add-column rule). The
-    * min/max/count manifest is exactly what parquet footers already
-    * record, so it derives from METADATA — no second pass over the
-    * just-committed data bytes (at 100 TB the read-back is a full extra
-    * scan of every commit). Only the data selects the measured scan
-    * of `dir` instead: bloom columns (a sketch needs the values), a
-    * stats column that is not a plain INT32/INT64, a missing statistic,
-    * mixed physical widths, or no populated file ([[footerStatsOf]]). */
-  private def freshStats(spark: SparkSession, dir: org.apache.hadoop.fs.Path,
-                         files: Seq[org.apache.hadoop.fs.FileStatus],
-                         schema: StructType, statsCols: Seq[String],
-                         bloomCols: Seq[String]): DataFrame = {
+  /** The file actions of `files`, the parquet a commit just wrote into
+    * `v=v`, read as the version's physical `schema` (a stats column a
+    * batch lacks reads NULL, so its bounds are NULL, the add-column
+    * rule). Rows and `stats` bounds are exactly what parquet footers
+    * already record, so they derive from METADATA ([[footerActions]]) —
+    * no second pass over the just-committed bytes (at 100 TB the
+    * read-back is a full extra scan of every commit). Only the data
+    * selects one aggregate over just these files instead: a stats
+    * column that is not a plain int, or a bloom column (a sketch needs
+    * the values). A bloom aggregate is written as the version's bloom
+    * payload `_bloom/v=N`, which holds only these files (a carry never
+    * rewrites sketches), and read back on the driver for the bounds. A
+    * file holding no row gets NULL bounds and no sketch. */
+  private def freshActions(spark: SparkSession, root: String, v: Long,
+                           files: Seq[org.apache.hadoop.fs.FileStatus],
+                           schema: StructType, stats: Seq[String],
+                           blooms: Seq[String]): Seq[FileAction] = {
     import org.apache.spark.sql.functions._
     val footer =
-      if (bloomCols.nonEmpty) None
-      else footerStatsOf(spark, files, schema, statsCols)
+      if (files.isEmpty) Some(Nil)
+      else if (blooms.nonEmpty) None
+      else footerActions(spark, files, schema, stats)
     footer.getOrElse {
-      val aggs = statsAggs(spark, statsCols, bloomCols)
-      spark.read.schema(schema).parquet(dir.toString)
+      val aggs = statsAggs(spark, stats, blooms)
+      val agg = spark.read.schema(schema).parquet(s"$root/v=$v")
         .groupBy(canonMetaPath(input_file_name()).as("file"))
         .agg(aggs.head, aggs.tail: _*)
+      val payload = Option.when(blooms.nonEmpty)(pathOf(spark, root, s"$BloomDir/v=$v"))
+      val rows = payload match {
+        case None => agg.collect()
+        case Some(p) =>
+          agg.coalesce(1).write.mode("overwrite").parquet(p)
+          Layout.readParquet(spark, p).collect()
+      }
+      val toBound = stats.map(c => org.apache.spark.sql.catalyst
+        .CatalystTypeConverters.createToCatalystConverter(schema(c).dataType))
+      val byFile = rows.map { r =>
+        r.getAs[String]("file") -> (r.getAs[Long]("n_rows"),
+          stats.zip(toBound).map { case (c, bound) =>
+            (bound(r.getAs[Any](s"min_$c")), bound(r.getAs[Any](s"max_$c"))) })
+      }.toMap
+      val listed = files.map(st => canonFile(st.getPath))
+      val strays = byFile.keySet -- listed
+      require(strays.isEmpty, s"stats of version $v in $root name files " +
+        s"the version directory does not list (path form mismatch — " +
+        s"canonMetaPath vs canonFile): ${strays.head}")
+      files.zip(listed).map { case (st, f) =>
+        byFile.get(f) match {
+          case Some((n, bounds)) => FileAction(f, st.getLen, n, bounds, payload)
+          case None => FileAction(f, st.getLen, 0L, stats.map(_ => (null, null)))
+        }
+      }
     }
   }
 
-  /** Footer-derived stats rows, or None when the footers cannot give
-    * the scan path's exact answer: a stats column that is not a plain
-    * INT32/INT64 (float NaN rules and binary truncation make those
-    * footers unreliable; int statistics are exact, and null semantics
-    * match the aggregate: all-null file → null bounds, zero-row file →
-    * no row, like an empty groupBy; a file without the column → null
-    * bounds typed by `tableSchema`) or a populated row group lacking a
-    * statistic. Driver-side O(files) metadata reads — the same footers
-    * the scan-path planner opens anyway. */
-  private def footerStatsOf(spark: SparkSession,
+  /** Footer-derived actions, or None when the footers cannot give the
+    * scan path's exact answer: a stats column that is not an int or a
+    * long in the table, or not a plain INT32/INT64 in a file (float NaN
+    * rules and binary truncation make those footers unreliable; int
+    * statistics are exact, and null semantics match the aggregate: an
+    * all-null file → NULL bounds; a file without the column → NULL
+    * bounds), or a populated row group lacking a statistic. Bounds take
+    * the table's type, so INT32 files under a long column widen.
+    * Driver-side O(files) metadata reads — the same footers the
+    * scan-path planner opens anyway. */
+  private def footerActions(spark: SparkSession,
                             files: Seq[org.apache.hadoop.fs.FileStatus],
                             tableSchema: StructType,
-                            statsCols: Seq[String]): Option[DataFrame] = {
+                            statsCols: Seq[String]): Option[Seq[FileAction]] = {
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
-    if (files.isEmpty) return None
-    // (sparkType, per-file Row values) per column; abort → None
-    val perFile = files.flatMap { st =>
+    val types = statsCols.map(c => tableSchema(c).dataType)
+    if (!types.forall(t => t == LongType || t == IntegerType)) return None
+    Some(files.map { st =>
       val reader = Layout.openFooter(conf, st)
       try {
         val schema = reader.getFileMetaData.getSchema
         val blocks = reader.getRowGroups.asScala.toSeq
-        val nRows = blocks.map(_.getRowCount).sum
-        if (nRows == 0L) None // scan path emits no group for 0 rows
-        else {
-          val cols = statsCols.map { c =>
-            if (!schema.containsField(c)) // a batch without the column
-              (tableSchema.find(_.name == c).getOrElse(return None).dataType,
-                null, null)
-            else {
-              val t = schema.getType(Seq(c): _*)
-              if (!t.isPrimitive) return None
-              val prim = t.asPrimitiveType()
-              val tn = prim.getPrimitiveTypeName
-              import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-              val sparkType: DataType = tn match {
-                case INT64 => LongType
-                case INT32 => IntegerType
-                case _ => return None
-              }
-              // logical annotations (decimal/date/timestamp/int8/16)
-              // change the Spark-side value — plain ints only
-              val ann = prim.getLogicalTypeAnnotation
-              val plain = ann == null || (ann match {
-                case i: org.apache.parquet.schema.LogicalTypeAnnotation
-                      .IntLogicalTypeAnnotation =>
-                  i.isSigned && (i.getBitWidth == 32 || i.getBitWidth == 64)
-                case _ => false
-              })
-              if (!plain) return None
-              var lo: Long = Long.MaxValue
-              var hi: Long = Long.MinValue
-              var seen = false
-              blocks.foreach { b =>
-                if (b.getRowCount > 0) {
-                  val chunk = b.getColumns.asScala
-                    .find(_.getPath.toDotString == c).getOrElse(return None)
-                  val s = chunk.getStatistics
-                  if (s == null || s.isEmpty) return None
-                  if (s.hasNonNullValue) {
-                    val (mn, mx) = s.genericGetMin match {
-                      case l: java.lang.Long =>
-                        (l.longValue,
-                          s.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-                      case i: java.lang.Integer =>
-                        (i.intValue.toLong, s.genericGetMax
-                          .asInstanceOf[java.lang.Integer].intValue.toLong)
-                      case _ => return None
-                    }
-                    if (mn < lo) lo = mn
-                    if (mx > hi) hi = mx
-                    seen = true
-                  } else if (s.getNumNulls < b.getRowCount) return None
-                }
-              }
-              def box(v: Long): Any =
-                if (sparkType == LongType) Long.box(v) else Int.box(v.toInt)
-              val (mnV, mxV) =
-                if (seen) (box(lo), box(hi)) else (null, null)
-              (sparkType, mnV, mxV)
+        val bounds = statsCols.zip(types).map { case (c, want) =>
+          if (!schema.containsField(c)) (null, null) // a batch without it
+          else {
+            val t = schema.getType(Seq(c): _*)
+            if (!t.isPrimitive) return None
+            val prim = t.asPrimitiveType()
+            import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+            prim.getPrimitiveTypeName match {
+              case INT32 =>
+              case INT64 if want == LongType =>
+              case _ => return None
             }
+            // logical annotations (decimal/date/timestamp/int8/16)
+            // change the Spark-side value — plain ints only
+            val ann = prim.getLogicalTypeAnnotation
+            val plain = ann == null || (ann match {
+              case i: org.apache.parquet.schema.LogicalTypeAnnotation
+                    .IntLogicalTypeAnnotation =>
+                i.isSigned && (i.getBitWidth == 32 || i.getBitWidth == 64)
+              case _ => false
+            })
+            if (!plain) return None
+            var lo: Long = Long.MaxValue
+            var hi: Long = Long.MinValue
+            var seen = false
+            blocks.foreach { b =>
+              if (b.getRowCount > 0) {
+                val chunk = b.getColumns.asScala
+                  .find(_.getPath.toDotString == c).getOrElse(return None)
+                val s = chunk.getStatistics
+                if (s == null || s.isEmpty) return None
+                if (s.hasNonNullValue) {
+                  val (mn, mx) = (s.genericGetMin, s.genericGetMax) match {
+                    case (a: java.lang.Number, b: java.lang.Number) =>
+                      (a.longValue, b.longValue)
+                    case _ => return None
+                  }
+                  if (mn < lo) lo = mn
+                  if (mx > hi) hi = mx
+                  seen = true
+                } else if (s.getNumNulls < b.getRowCount) return None
+              }
+            }
+            def box(v: Long): Any = if (want == LongType) v else v.toInt
+            if (seen) (box(lo), box(hi)) else (null, null)
           }
-          Some((canonFile(st.getPath), cols, nRows))
         }
+        FileAction(canonFile(st.getPath), st.getLen,
+          blocks.map(_.getRowCount).sum, bounds)
       } finally reader.close()
-    }
-    // every file empty: let the scan path produce the (empty) manifest
-    // with the exact column types — a guessed type here would silently
-    // widen on the carry path's unionByName
-    if (perFile.isEmpty) return None
-    val colTypes = perFile.head._2.map(_._1)
-    // Mixed physical generations (schema widening: INT32 files beside
-    // INT64 files for the same column) would box later files' values
-    // by THEIR type into a frame typed by the FIRST file's — a runtime
-    // createDataFrame failure instead of a fallback. Abort to the scan
-    // path, which reads the mixed set through one resolved schema
-    // (ADVICE r14).
-    if (perFile.exists(_._2.map(_._1) != colTypes)) return None
-    val fields = StructField("file", StringType, nullable = true) +:
-      statsCols.zip(colTypes).flatMap { case (c, t) =>
-        Seq(StructField(s"min_$c", t, nullable = true),
-          StructField(s"max_$c", t, nullable = true)) } :+
-      StructField("n_rows", LongType, nullable = false)
-    val rows = perFile.map { case (f, cols, n) =>
-      org.apache.spark.sql.Row.fromSeq(
-        f +: cols.flatMap { case (_, mn, mx) => Seq(mn, mx) } :+ Long.box(n))
-    }
-    Some(spark.createDataFrame(rows.asJava, StructType(fields)))
+    })
   }
 
-  /** The per-file aggregate list every stats write shares: min/max per
+  /** The per-file aggregate list every stats scan shares: min/max per
     * stats column, a bloom sketch per bloom column ([[readCurrentPoint]]
     * consults it for point-lookup file skipping on columns a range
     * layout can't serve), and the row count. */
@@ -1244,62 +1248,86 @@ object Snapshot {
       count(lit(1)).as("n_rows")
   }
 
-  /** The file paths of version `v` whose `[min,max]` interval on
-    * `statsCol` overlaps `[lo, hi]` — a driver-side scan of the stats
-    * MANIFEST (O(files) metadata rows, the same listing every table
-    * format's planner does), never of the data. */
-  private[graft] def prunedFiles(spark: SparkSession, root: String, v: Long,
-                                 statsCol: String,
-                                 lo: org.apache.spark.sql.Column,
-                                 hi: org.apache.spark.sql.Column): Seq[String] = {
+  /** The entry's per-file stats as a local relation `(file, min_c,
+    * max_c, …, n_rows)` typed by the recorded schema: Catalyst folds
+    * filters into it, and `collect` runs no job. */
+  private[graft] def statsFrame(spark: SparkSession, m: Meta): DataFrame = {
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val schema = StructType(StructField("file", StringType) +:
+      m.stats.flatMap { c =>
+        val t = m.schema(c).dataType
+        Seq(StructField(s"min_$c", t), StructField(s"max_$c", t))
+      } :+ StructField("n_rows", LongType, nullable = false))
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val rows = m.files.map { f =>
+      toRow(org.apache.spark.sql.catalyst.InternalRow.fromSeq(
+        org.apache.spark.unsafe.types.UTF8String.fromString(f.path) +:
+          f.bounds.flatMap { case (lo, hi) => Seq(lo, hi) } :+ f.rows))
+        .asInstanceOf[org.apache.spark.sql.Row]
+    }
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The files of entry `m` whose `[min,max]` interval on `statsCol`
+    * overlaps `[lo, hi]` — the [[statsFrame]] filtered on the driver
+    * (O(files) metadata rows, the same planning every table format's
+    * log does), never a data scan. */
+  private def pruned(spark: SparkSession, m: Meta, statsCol: String,
+                     lo: org.apache.spark.sql.Column,
+                     hi: org.apache.spark.sql.Column): Seq[String] = {
     import org.apache.spark.sql.functions.col
-    Layout.readParquet(spark, s"$root/$StatsDir/v=$v")
+    statsFrame(spark, m)
       .filter(col(s"max_$statsCol") >= lo && col(s"min_$statsCol") <= hi)
       .select("file").collect().map(_.getString(0)).toSeq
   }
 
-  /** Range read with manifest-level data skipping: consult the current
+  private[graft] def prunedFiles(spark: SparkSession, root: String, v: Long,
+                                 statsCol: String,
+                                 lo: org.apache.spark.sql.Column,
+                                 hi: org.apache.spark.sql.Column): Seq[String] =
+    pruned(spark, metaOf(spark, root, v), statsCol, lo, hi)
+
+  /** Range read with file-level data skipping: consult the current
     * version's per-file stats and scan ONLY the files whose bounds
     * overlap `[lo, hi]`, with the residual `BETWEEN` filter still
     * applied (file granularity is coarse) and pushed into the parquet
     * scan. On a range-laid-out table this turns a full-table scan into
     * an O(selectivity) one BEFORE any file is opened — at 100 TB,
     * skipping a file this way saves even the footer round-trip that
-    * row-group pruning would still pay. Falls back to a plain filtered
-    * scan when the version predates stats collection. */
+    * row-group pruning would still pay. A column without stats falls
+    * back to the plain filtered read. */
   def readCurrentPruned(spark: SparkSession, root: String, statsCol: String,
                         lo: org.apache.spark.sql.Column,
                         hi: org.apache.spark.sql.Column): DataFrame = {
     val v = headOf(spark, root)
-    prunedRead(spark, root, v, metaOf(spark, root, v), statsCol, lo, hi)
+    rangeRead(spark, root, v, metaOf(spark, root, v), Seq((statsCol, lo, hi)))
   }
 
-  private def prunedRead(spark: SparkSession, root: String, v: Long,
-                         m: Meta, statsCol: String,
-                         lo: org.apache.spark.sql.Column,
-                         hi: org.apache.spark.sql.Column): DataFrame = {
+  /** Read version `v` (entry `m`) filtered to `lo ≤ c ≤ hi` on every
+    * dimension `(c, lo, hi)`, `c` a logical name. The files opened are
+    * those whose bounds overlap every dimension the entry has stats
+    * for; a dimension without stats prunes nothing, and with none the
+    * read is the plain filtered read of the version. */
+  private def rangeRead(spark: SparkSession, root: String, v: Long, m: Meta,
+                        dims: Seq[(String, org.apache.spark.sql.Column,
+                          org.apache.spark.sql.Column)]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val physCol = m.physical(statsCol)
-    val statsPath = new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$v")
-    if (!fsOf(spark, statsPath).exists(statsPath))
-      // resolve through the FILE manifest, not the bare v=N directory: a
-      // stats-less version is reachable with a manifest (plain commit,
-      // then appendCommit/compactSmall/restore — writeManifestAndStats
-      // skips stats when the base has none), and the directory alone
-      // would silently drop every manifest-referenced row (for a
-      // restored version, the directory is EMPTY).
-      // readResolved output is LOGICAL, so filter on the logical name
-      readResolved(spark, root, v, m)
-        .filter(col(statsCol) >= lo && col(statsCol) <= hi)
+    def inRange(name: String => String) = dims.map { case (c, lo, hi) =>
+      col(name(c)) >= lo && col(name(c)) <= hi }.reduce(_ && _)
+    val skipping = dims.filter(d => m.stats.contains(m.physical(d._1)))
+    if (skipping.isEmpty)
+      readResolved(spark, root, v, m).filter(inRange(identity))
     else {
-      // physical files: prune and filter on the frozen physical name,
+      // physical files: prune and filter on the frozen physical names,
       // then present logical names
-      val between = col(physCol) >= lo && col(physCol) <= hi
-      val files = prunedFiles(spark, root, v, physCol, lo, hi)
+      val hit = skipping.map { case (c, lo, hi) =>
+        pruned(spark, m, m.physical(c), lo, hi).toSet }.reduce(_ intersect _)
+      val files = m.files.map(_.path).filter(hit)
       if (files.isEmpty) emptyOf(spark, m) // no overlap: no scan
-      else toLogical(applyDv(spark, root, v,
-        physReader(spark, m).parquet(files: _*))
-        .filter(between), m.colmap)
+      else toLogical(applyDv(spark, m, physReader(spark, m).parquet(files: _*))
+        .filter(inRange(m.physical)), m.colmap)
     }
   }
 
@@ -1309,66 +1337,60 @@ object Snapshot {
     * stats box overlaps the query box — the read-side half of Z-order
     * clustering (on a single-column layout the scattered dimension's
     * prune returns every file and the intersection degrades to the
-    * 1-D prune, never worse). The residual predicate still applies
-    * and pushes into the parquet scan. */
+    * 1-D prune, never worse; a dimension without stats prunes
+    * nothing). The residual predicate still applies and pushes into
+    * the parquet scan. */
   def readCurrentPrunedBox(spark: SparkSession, root: String,
                            c1: String, lo1: org.apache.spark.sql.Column,
                            hi1: org.apache.spark.sql.Column,
                            c2: String, lo2: org.apache.spark.sql.Column,
                            hi2: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val v = headOf(spark, root)
-    val m = metaOf(spark, root, v)
-    val (p1, p2) = (m.physical(c1), m.physical(c2))
-    val statsPath = new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$v")
-    if (!fsOf(spark, statsPath).exists(statsPath))
-      readResolved(spark, root, v, m).filter(
-        col(c1) >= lo1 && col(c1) <= hi1 &&
-          col(c2) >= lo2 && col(c2) <= hi2)
-    else {
-      val box = col(p1) >= lo1 && col(p1) <= hi1 &&
-        col(p2) >= lo2 && col(p2) <= hi2
-      val files =
-        prunedFiles(spark, root, v, p1, lo1, hi1).toSet
-          .intersect(prunedFiles(spark, root, v, p2, lo2, hi2).toSet)
-      if (files.isEmpty) emptyOf(spark, m)
-      else toLogical(applyDv(spark, root, v, physReader(spark, m)
-        .parquet(files.toSeq.sorted: _*)).filter(box), m.colmap)
-    }
+    rangeRead(spark, root, v, metaOf(spark, root, v),
+      Seq((c1, lo1, hi1), (c2, lo2, hi2)))
   }
 
-  /** The files of version `v` whose per-file BLOOM index might contain
-    * `value` in `bloomCol`. A manifest of at most one split is read and
-    * probed on the driver ([[Layout.readParquet]]); above that the probe
-    * runs EXECUTOR-side (a filter over the manifest scan), so only the
+  /** The live files of entry `m` whose BLOOM sketch on `bloomCol` might
+    * contain `value`, probed in the bloom payloads the actions name. The
+    * payloads are read through [[Layout.readParquet]]: at most one
+    * split is read and probed on the driver; above that the probe runs
+    * EXECUTOR-side (a filter over the payload scan), so only the
     * matching file NAMES ever reach the driver. The distinction is the
     * difference between O(matches) and O(files × sketch-bytes) driver
     * traffic: at the soak's own sizing (~18 KB/sketch) a million-file
     * table would otherwise ship ~18 GB through the driver per lookup.
-    * The deserialization cost is the same either way and O(files)
-    * manifest rows distribute across the scan; a UDF is fine here
-    * because this is metadata scale, never the data path. Blooms never
-    * lose a file (no false negatives); false positives only add reads. */
-  private[graft] def filesForPoint(spark: SparkSession, root: String,
-                                   v: Long, bloomCol: String,
-                                   value: Long): Seq[String] = {
+    * A payload can also hold sketches of files a later commit
+    * rewrote; only files the entry names are returned. A UDF is fine
+    * here because this is metadata scale, never the data path. Blooms
+    * never lose a file (no false negatives); false positives only add
+    * reads. */
+  private def pointFiles(spark: SparkSession, m: Meta, bloomCol: String,
+                         value: Long): Seq[String] = {
     import org.apache.spark.sql.functions.{col, udf}
+    val payloads = m.files.flatMap(_.bloom).distinct
+    if (payloads.isEmpty) return Nil
+    val live = m.files.map(_.path).toSet
     val mightContain = udf { bytes: Array[Byte] =>
       bytes != null && org.apache.spark.util.sketch.BloomFilter
         .readFrom(new java.io.ByteArrayInputStream(bytes))
         .mightContainLong(value)
     }
-    Layout.readParquet(spark, s"$root/$StatsDir/v=$v")
+    Layout.readParquet(spark, payloads: _*)
       .filter(mightContain(col(s"bloom_$bloomCol")))
-      .select("file").collect().map(_.getString(0)).toSeq
+      .select("file").collect().map(_.getString(0)).filter(live).toSeq
   }
+
+  private[graft] def filesForPoint(spark: SparkSession, root: String,
+                                   v: Long, bloomCol: String,
+                                   value: Long): Seq[String] =
+    pointFiles(spark, metaOf(spark, root, v), bloomCol, value)
 
   /** Point lookup with BLOOM-index file skipping: scan ONLY the files
     * whose per-file bloom sketch might contain `value` — the skipping
     * tool for the column a range layout CANNOT serve (min/max bounds
     * on an unordered column span everything; a bloom prunes by
     * membership instead, the Delta bloom-index / Parquet bloom-filter
-    * shape at manifest granularity). On a table whose values scatter a
+    * shape at file granularity). On a table whose values scatter a
     * key across few files, a point lookup opens those files plus the
     * sketch fpp, not the table. The residual equality filter still
     * applies and pushes into the parquet scan. Falls back to a plain
@@ -1379,13 +1401,13 @@ object Snapshot {
     val v = headOf(spark, root)
     val m = metaOf(spark, root, v)
     val physCol = m.physical(pointCol)
-    if (!bloomColsOf(spark, root, v).contains(physCol))
+    if (!m.blooms.contains(physCol))
       readResolved(spark, root, v, m).filter(col(pointCol) === lit(value))
     else {
-      val files = filesForPoint(spark, root, v, physCol, value)
+      val files = pointFiles(spark, m, physCol, value)
       // definitively absent: no file can contain it
       if (files.isEmpty) emptyOf(spark, m)
-      else toLogical(applyDv(spark, root, v,
+      else toLogical(applyDv(spark, m,
         physReader(spark, m).parquet(files: _*))
         .filter(col(physCol) === lit(value)), m.colmap)
     }
@@ -1434,10 +1456,10 @@ object Snapshot {
     * key ([[commitWithStats]]): only the files whose `[min,max]` key
     * interval contains at least one change key are rewritten (survivor
     * rows anti-joined against the batch, batch unioned in); every other
-    * file is carried into the new version BY REFERENCE through the
-    * same `_manifest` mechanism as [[deleteWhere]]. On a key-laid-out
+    * file is carried into the new version BY REFERENCE, its action
+    * copied into the new entry as in [[deleteWhere]]. On a key-laid-out
     * 100 TB table a merge touching 0.1% of the key space costs
-    * O(matching files) of data I/O plus an O(files) metadata write —
+    * O(matching files) of data I/O plus an O(files) entry write —
     * never a table rewrite; an insert-only batch (keys beyond every
     * file's range) rewrites ZERO base files and degenerates to an
     * append. The touch decision is a broadcast interval join of the
@@ -1476,18 +1498,13 @@ object Snapshot {
         }
       val cmap = m.colmap
       val physKey = m.physical(key)
-      val statsPath =
-        new org.apache.hadoop.fs.Path(root, s"$StatsDir/v=$base")
-      val prunable = statsColsOf(spark, root, base).contains(physKey) &&
-        fsOf(spark, statsPath).exists(statsPath)
-      if (prunable) {
+      if (m.stats.contains(physKey)) {
         import org.apache.spark.sql.functions._
-        // the stats manifest is the file inventory (deleteWhere's
-        // discipline): O(files) metadata rows decide the rewrite set
-        val stats = Layout.readParquet(spark, statsPath.toString)
+        // the entry's actions decide the rewrite set: O(files) metadata
+        // rows, never a data scan
+        val stats = statsFrame(spark, m)
           .select(col("file"), col(s"min_$physKey").as("kmin"),
             col(s"max_$physKey").as("kmax"))
-        val all = stats.select("file").collect().map(_.getString(0)).toSeq
         // touched = files whose key interval contains ≥1 change key:
         // broadcast the metadata-sized interval list, stream the keys
         // through it (BNLJ — non-equi, but one side is O(files) rows)
@@ -1496,18 +1513,18 @@ object Snapshot {
           .join(broadcast(stats),
             col("k") >= col("kmin") && col("k") <= col("kmax"), "inner")
           .select("file").distinct()
-          .collect().map(_.getString(0)).toSeq
-        val untouched = all.diff(touched)
+          .collect().map(_.getString(0)).toSet
+        val (rewrite, untouched) = m.files.partition(f => touched(f.path))
         // survivors: touched files' rows whose key is NOT replaced.
         // Recorded-schema read (mixed generations after an evolution),
         // logical names for the anti-join, empty-but-full-schema
         // relation when no file overlaps (pure insert).
         val survivors =
-          if (touched.nonEmpty)
+          if (rewrite.nonEmpty)
             // tombstones apply to the rewrite read, so a MOR-deleted
             // row never re-materializes through a merge's rewrite
-            toLogical(applyDv(spark, root, base,
-                physReader(spark, m).parquet(touched: _*)),
+            toLogical(applyDv(spark, m,
+                physReader(spark, m).parquet(rewrite.map(_.path): _*)),
               cmap).join(changes.select(key), Seq(key), "left_anti")
           else emptyOf(spark, m)
         val merged =
@@ -1523,22 +1540,20 @@ object Snapshot {
         // in-memory over-estimate, so it only widens, clamped at cap.
         val cap = spark.sessionState.conf.numShufflePartitions
         val width =
-          if (touched.nonEmpty) {
-            val inv = fileInventory(spark, root, base).toMap
-            math.max(
-              compactWidthFor(touched.map(inv.getOrElse(_, 0L)).sum, cap),
-              math.min(touched.size, cap))
-          } else {
+          if (rewrite.nonEmpty)
+            math.max(compactWidthFor(rewrite.map(_.size).sum, cap),
+              math.min(rewrite.size, cap))
+          else {
             val est = merged.queryExecution.optimizedPlan.stats.sizeInBytes
             compactWidthFor(
               if (est.isValidLong) est.toLong else Long.MaxValue, cap)
           }
         toPhysical(merged, cmap).coalesce(width).write.mode("overwrite")
           .parquet(s"$root/v=$next")
-        // manifest carries untouched files by reference; stats carry
-        // verbatim for them and re-derive over the fresh files; the
-        // recorded schema absorbs any add-column evolution
-        writeManifestAndStats(spark, root, next, base, m, untouched)
+        // untouched files ride by reference with their stats; the fresh
+        // files' stats are derived and the recorded schema absorbs any
+        // add-column evolution
+        withFiles(spark, root, next, m, untouched)
       } else {
         val baseDf = readResolved(spark, root, base, m)
         // allowMissingColumns: a change batch carrying a NEW column is
@@ -1552,58 +1567,50 @@ object Snapshot {
         // both are); freeze back to physical before the write
         val physMerged = toPhysical(merged, cmap)
         physMerged.write.mode("overwrite").parquet(s"$root/v=$next")
-        // carry the base's stats manifest forward (same contract as
-        // compact: maintenance must not silently kill data skipping)
-        val sc = statsColsOf(spark, root, base)
-        if (sc.nonEmpty) writeStats(spark, root, next, physMerged.schema,
-          sc, bloomColsOf(spark, root, base))
-        m.copy(schema = physMerged.schema)
+        // the stats columns carry forward, re-derived over the rewrite
+        // (same contract as compact: maintenance must not silently
+        // kill data skipping)
+        withFiles(spark, root, next, m.copy(schema = physMerged.schema), Nil)
       }
     } }
 
   /** Row-level DELETE with file-granular copy-on-write: remove every
     * row with `statsCol BETWEEN lo AND hi`, rewriting ONLY the files
     * whose per-file `[min,max]` stats overlap the range. Untouched
-    * files are carried into the new version BY REFERENCE through a
-    * file manifest (`_manifest/v=N`) — the Delta/Iceberg shape where a
+    * files are carried into the new version BY REFERENCE: the new
+    * entry copies their actions — the Delta/Iceberg shape where a
     * version is a file LIST, not a directory copy — so at 100 TB a
     * selective delete costs O(matching files) of data I/O plus an
-    * O(files) metadata write, never a table rewrite. On a range-laid-
+    * O(files) entry write, never a table rewrite. On a range-laid-
     * out table ([[commitWithStats]]'s contract) the overlap set IS the
     * selectivity.
     *
-    * The new version's stats manifest carries the untouched files'
-    * rows verbatim and re-derives stats over just the rewritten files,
-    * so data skipping survives the delete. Runs under the same
+    * The carried actions keep their stats and the rewritten files'
+    * stats are re-derived, so data skipping survives the delete. Runs
+    * under the same
     * claim-exactly-`pointer+1` protocol as [[mergeCommit]] (read-
     * modify-write serializability). Requires per-file stats on
     * `statsCol`: the skipping index is what makes the delete file-
     * granular (a stats-less table would degrade to a blind full
     * rewrite — refuse instead, the caller should commitWithStats).
     *
-    * [[compact]] re-materializes a manifest version self-contained,
+    * [[compact]] re-materializes a carrying version self-contained,
     * collapsing the reference chain; [[vacuum]] keeps any version
-    * directory a retained manifest still references. */
+    * directory a retained entry still names. */
   def deleteWhere(spark: SparkSession, root: String, statsCol: String,
                   lo: org.apache.spark.sql.Column,
                   hi: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
     onHead(spark, root, "deleteWhere") { (base, m) =>
-      // column mapping: the caller names the LOGICAL column; stats
-      // manifests and the physical files know its frozen physical name
+      // column mapping: the caller names the LOGICAL column; file
+      // actions and the physical files know its frozen physical name
       val physCol = m.physical(statsCol)
-      val sc = statsColsOf(spark, root, base)
-      require(sc.contains(physCol),
-        s"deleteWhere needs per-file stats on $statsCol (have: $sc) — " +
+      require(m.stats.contains(physCol),
+        s"deleteWhere needs per-file stats on $statsCol (have: ${m.stats}) — " +
           "commit with commitWithStats to make deletes file-granular")
       Some { next =>
-        // the stats manifest is the file inventory (its `file` values
-        // are input_file_name-format URIs, consistent across carried
-        // and fresh rows)
-        val all = Layout.readParquet(spark, s"$root/$StatsDir/v=$base")
-          .select("file").collect().map(_.getString(0)).toSeq
-        val touched = prunedFiles(spark, root, base, physCol, lo, hi)
-        val untouched = all.diff(touched)
+        val touched = pruned(spark, m, physCol, lo, hi).toSet
+        val (rewrite, untouched) = m.files.partition(f => touched(f.path))
         val between = col(physCol) >= lo && col(physCol) <= hi
         // SQL DELETE WHERE semantics: a NULL predicate does not delete.
         // A bare `!between` evaluates to NULL on NULL-key rows and the
@@ -1618,33 +1625,33 @@ object Snapshot {
         // the base's RECORDED schema: after an add-column evolution they
         // can mix generations, and plain inference would take one
         // file's schema and drop the later column from the rewrite.
-        if (touched.nonEmpty) // DV-filtered: a COW rewrite of a file
+        if (rewrite.nonEmpty) // DV-filtered: a COW rewrite of a file
           // holding MOR tombstones must not resurrect those rows
-          applyDv(spark, root, base,
-              physReader(spark, m).parquet(touched: _*))
+          applyDv(spark, m, physReader(spark, m).parquet(rewrite.map(_.path): _*))
             .filter(keep).write.mode("overwrite").parquet(s"$root/v=$next")
         else mkVersionDir(spark, root, next)
-        writeManifestAndStats(spark, root, next, base, m, untouched)
+        withFiles(spark, root, next, m, untouched)
       }
     }
   }
 
   /** Row-level DELETE, MERGE-ON-READ — the Delta deletion-vector
-    * motion: no data file is rewritten at all. The new version's
-    * manifest carries EVERY base file by reference, plus a tombstone
-    * sidecar (`_dv/v=N`, rows of `(file, row_index)`) naming exactly
-    * the deleted rows; every read path anti-joins the sidecar against
-    * the scan's `_metadata` columns ([[applyDv]]).
+    * motion: no data file is rewritten at all. The new entry carries
+    * EVERY base file by reference, plus a deletion vector: a tombstone
+    * payload (`_dv/v=N`, rows of `(file, row_index)`) naming exactly
+    * the deleted rows, with the tombstone count per file in the entry;
+    * every read path anti-joins the payload against the scan's
+    * `_metadata` columns ([[applyDv]]).
     *
     * This is the complement of [[deleteWhere]]'s copy-on-write: COW
     * wins when deletes CLUSTER (a range on the layout key rewrites few
     * files), MOR wins when they SCATTER — a predicate matching one row
     * in every file of a 100 TB table (the GDPR/right-to-be-forgotten
-    * erasure shape, per-id scrubs) costs O(matched rows) of sidecar
+    * erasure shape, per-id scrubs) costs O(matched rows) of tombstone
     * metadata here versus a full table rewrite there. The read-side
     * price is one broadcast anti-join per scan until [[compact]] (or
     * any rewriting maintenance pass) re-materializes the rows and
-    * clears the sidecar — run it when the sidecar grows past the
+    * clears the deletion vector — run it when the payload grows past the
     * broadcast bound, exactly Delta's PURGE discipline.
     *
     * Composes with the rest of the layer: tombstones survive appends
@@ -1667,7 +1674,7 @@ object Snapshot {
     *
     * @return the newest committed version carrying this delete's
     *         effect: normally the MOR commit itself, but when the new
-    *         sidecar crosses the broadcast bound and the auto-purge
+    *         payload crosses the broadcast bound and the auto-purge
     *         ([[maybePurgeOversizedDv]]) runs and succeeds, the
     *         follow-on purge's commit. Purge failure is logged and
     *         swallowed — the delete is durable either way. */
@@ -1675,17 +1682,13 @@ object Snapshot {
                      cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
     val v = onHead(spark, root, "deleteWhereMor") { (base, m) => Some { next =>
-      val reader = physReader(spark, m)
-      val physical = manifestFiles(spark, root, base) match {
-        case Some(files) if files.nonEmpty => reader.parquet(files: _*)
-        case _ => reader.parquet(s"$root/v=$base")
-      }
       // pin (file, row_index) BEFORE the existing-DV anti-join (both
       // relations are parquet scans — `_metadata` goes ambiguous
       // after the join), apply the base's tombstones so already-
       // deleted rows never re-enter, then evaluate the predicate in
       // logical names
-      val tagged = applyDv(spark, root, base, physical
+      val tagged = applyDv(spark, m, physReader(spark, m)
+        .parquet(scanPaths(spark, root, base, m): _*)
         .withColumn("__mor_file",
           canonMetaPath(col("_metadata.file_path")))
         .withColumn("__mor_idx", col("_metadata.row_index")))
@@ -1693,30 +1696,45 @@ object Snapshot {
         .filter(coalesce(cond, lit(false)))
         .select(col("__mor_file").as("file"),
           col("__mor_idx").as("row_index"))
-      // persisted: the count below and the sidecar write would
-      // otherwise each re-run the corpus-sized predicate scan
-      val merged = dvOf(spark, root, base)
-        .map(_.unionByName(fresh)).getOrElse(fresh).distinct().persist()
+      // persisted: the per-file counts below and the payload write
+      // would otherwise each re-run the corpus-sized predicate scan
+      val merged = m.dv.map(d => Layout.readParquet(spark, d.path)
+        .unionByName(fresh)).getOrElse(fresh).distinct().persist()
       try {
-        val nTomb = merged.count()
+        val tombs = merged.groupBy("file").count().collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+        // Loud invariant, not a silent filter: every tombstone must
+        // byte-match a file action, or a carry would silently DROP it
+        // and the MOR-deleted row would resurrect on the next commit
+        // (the GDPR-erasure shape this feature exists for). Tombstones
+        // come from `_metadata.file_path` via canonMetaPath, actions
+        // from `Path.toString` via canonFile — a table root whose
+        // URI-encoding differs between the two (spaces, percent,
+        // non-ASCII) is exactly the mismatch this catches.
+        val inventory = m.files.map(_.path).toSet
+        val orphans = tombs.keys.filterNot(inventory.contains)
+        require(orphans.isEmpty,
+          s"MOR delete on $root v=$base→$next would tombstone " +
+            s"${orphans.size} file(s) absent from the base inventory " +
+            s"(byte-wise path mismatch — canonMetaPath vs canonFile " +
+            s"canonicalization); first orphan: ${orphans.head}")
         // all data rides by reference
-        val record = carryAll(spark, root, base, m, next)
-        // the carry above wrote the base's sidecar verbatim (all files
-        // carried); replace it with base ∪ fresh. A predicate matching
-        // zero rows on a DV-less base writes NO sidecar at all — an
-        // empty one would tax every subsequent read with the anti-join
-        // plus the per-plan inventory-hash check for no semantic
-        // effect. Width tracks tombstone volume ([[DvRowsPerSidecarFile]])
-        // so a scattered 10^9-row erasure never funnels through one
-        // writer task.
-        if (nTomb > 0) {
+        mkVersionDir(spark, root, next)
+        // no new tombstone: the base's payload stands as it is (none at
+        // all on a DV-less base — an empty payload would tax every read
+        // with the anti-join for no effect). Width tracks tombstone
+        // volume ([[DvRowsPerSidecarFile]]) so a scattered 10^9-row
+        // erasure never funnels through one writer task.
+        if (m.dv.exists(_.tombs == tombs) || tombs.isEmpty) m
+        else {
+          val nTomb = tombs.values.sum
           val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
           val width = math.min(cap.toLong, (nTomb + DvRowsPerSidecarFile
             - 1) / DvRowsPerSidecarFile).toInt
-          merged.coalesce(width).write.mode("overwrite")
-            .parquet(s"$root/$DvDir/v=$next")
+          val p = pathOf(spark, root, s"$DvDir/v=$next")
+          merged.coalesce(width).write.mode("overwrite").parquet(p)
+          m.copy(dv = Some(DvRef(p, tombs)))
         }
-        record
       } finally merged.unpersist()
     } }
     // The MOR commit is durable once the pointer advances; the
@@ -1737,7 +1755,7 @@ object Snapshot {
   }
 
   /** The README's COW-vs-MOR operational rule, self-executing: once a
-    * just-committed sidecar exceeds the [[DvBroadcastBytes]] bound
+    * just-committed payload exceeds the [[DvBroadcastBytes]] bound
     * (overridable via `graft.snapshot.dvAutoPurgeBytes`), every read
     * of the version pays a SHUFFLED anti-join instead of a broadcast —
     * from that point the one-time [[purgeDv]] rewrite is strictly
@@ -1748,56 +1766,47 @@ object Snapshot {
     * purge is an ordinary follow-on maintenance commit. */
   private def maybePurgeOversizedDv(spark: SparkSession, root: String,
                                     v: Long): Long = {
-    val p = new org.apache.hadoop.fs.Path(root, s"$DvDir/v=$v")
-    val fs = fsOf(spark, p)
-    if (!fs.exists(p)) return v
-    val bytes = fs.getContentSummary(p).getLength
+    val d = metaOf(spark, root, v).dv.getOrElse(return v)
+    val p = new org.apache.hadoop.fs.Path(d.path)
+    val bytes = fsOf(spark, p).getContentSummary(p).getLength
     val bound = spark.conf.getOption("graft.snapshot.dvAutoPurgeBytes")
       .map(_.toLong).getOrElse(DvBroadcastBytes)
     if (bytes <= bound) return v
     val auto = spark.conf.getOption("graft.snapshot.dvAutoPurge")
       .forall(_.toBoolean)
     if (auto) {
-      System.err.println(s"graft: DV sidecar on $root v=$v is $bytes B " +
+      System.err.println(s"graft: DV payload on $root v=$v is $bytes B " +
         s"(> $bound B broadcast bound) — auto-purging (set " +
         "graft.snapshot.dvAutoPurge=false to defer)")
       purgeDv(spark, root)
     } else {
-      System.err.println(s"graft: DV sidecar on $root v=$v is $bytes B " +
+      System.err.println(s"graft: DV payload on $root v=$v is $bytes B " +
         s"(> $bound B broadcast bound) — reads now pay a shuffled " +
         "anti-join; run Snapshot.purgeDv to clear it")
       v
     }
   }
 
-  /** PURGE the deletion-vector sidecar — Delta's `REORG TABLE … APPLY
+  /** PURGE the deletion vector — Delta's `REORG TABLE … APPLY
     * (PURGE)` as a first-class maintenance pass: rewrite ONLY the
     * files that carry tombstones (DV-filtered, so the deleted rows
     * vanish from the bytes), carry every clean file into the new
-    * version by manifest reference, and drop the sidecar — after
+    * version by reference, and drop the deletion vector — after
     * which reads pay zero anti-join tax again. Where [[compact]]
     * rewrites the whole table, this touches O(tombstoned-file bytes):
     * on a table whose deletes clustered in a few files, the purge
     * reads those files, not the table. (A fully scattered delete —
     * of23's GDPR shape — tombstones every file, and purge degrades to
     * compact's cost; both points measured in BENCH_NOTES.) The
-    * sidecar clears through [[writeManifestAndStats]]'s carry rule
-    * itself: every surviving tombstone names a rewritten file, so the
-    * carried set is empty — no special case. No-op (current version
-    * returned, no commit burned) on a table without tombstones. */
+    * tombstoned files come from the entry's per-file counts, and the
+    * deletion vector clears through [[withFiles]]'s carry rule
+    * itself: every tombstone names a rewritten file, so none is
+    * carried — no special case. No-op (current version returned, no
+    * commit burned) on a table without tombstones. */
   def purgeDv(spark: SparkSession, root: String): Long =
     onHead(spark, root, "purgeDv") { (base, m) =>
-      val dv = dvOf(spark, root, base)
-      if (dv.isEmpty) None else Some { next =>
-        val touched = distinctFiles(dv.get)
-        val inv = fileInventory(spark, root, base)
-        // Set membership, not Seq.contains: a fully scattered delete on
-        // a 100k-file table would otherwise run ~10^10 driver-side
-        // string compares here (O(files × touched))
-        val touchedSet = touched.toSet
-        val untouched = inv.map(_._1).filterNot(touchedSet.contains)
-        val touchedBytes = inv.filter(f => touchedSet.contains(f._1))
-          .map(_._2).sum
+      m.dv.map { d => (next: Long) =>
+        val (touched, untouched) = m.files.partition(f => d.tombs.contains(f.path))
         // target-file-size width, FLOORED at the touched-file count:
         // bytes alone under-width hyper-compressed tables (the soak
         // fixture packs 150M rows into 119 MB → width 1 → a one-task
@@ -1805,13 +1814,12 @@ object Snapshot {
         // input file count keeps one reader≈one writer parallelism and
         // never explodes small files
         val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        val width = math.max(compactWidthFor(touchedBytes, cap),
+        val width = math.max(compactWidthFor(touched.map(_.size).sum, cap),
           math.min(touched.size, cap))
-        applyDv(spark, root, base,
-            physReader(spark, m).parquet(touched: _*))
+        applyDv(spark, m, physReader(spark, m).parquet(touched.map(_.path): _*))
           .coalesce(width)
           .write.mode("overwrite").parquet(s"$root/v=$next")
-        writeManifestAndStats(spark, root, next, base, m, untouched)
+        withFiles(spark, root, next, m, untouched)
       }
     }
 
@@ -1820,7 +1828,7 @@ object Snapshot {
     * data already satisfies `exprSql` (one column-pruned aggregate
     * scan — refused with the violation count otherwise, no version
     * burned), then commit a METADATA-ONLY version carrying every file
-    * by manifest reference (zero data I/O at any table size). From
+    * by reference (zero data I/O at any table size). From
     * that version on, every [[commit]]/[[appendCommit]]/[[mergeCommit]]
     * batch is validated before the pointer swap and rejected
     * atomically on violation ([[ConstraintViolation]]) — the
@@ -1842,7 +1850,7 @@ object Snapshot {
             s"cannot add CHECK constraint `$n` to $root: existing data " +
               s"violates it on $c row(s)")
         }
-      Some { next => carryAll(spark, root, base, m.copy(constraints =
+      Some { next => carryAll(spark, root, m.copy(constraints =
         (m.constraints :+ (name -> exprSql)).sortBy(_._1)), next) }
     }
 
@@ -1856,7 +1864,7 @@ object Snapshot {
       require(m.constraints.exists(_._1 == name),
         s"no constraint `$name` on $root (have: " +
           s"${m.constraints.map(_._1).mkString(", ")})")
-      Some { next => carryAll(spark, root, base,
+      Some { next => carryAll(spark, root,
         m.copy(constraints = m.constraints.filterNot(_._1 == name)), next) }
     }
 
@@ -1868,19 +1876,19 @@ object Snapshot {
       .mkdirs(new org.apache.hadoop.fs.Path(root, s"v=$next"))
 
   /** The body every METADATA-ONLY commit shares: an empty `v=next`
-    * data dir plus a manifest carrying every file of `from` by
-    * reference. Returns `m`, the new version's record. */
-  private def carryAll(spark: SparkSession, root: String,
-                       from: Long, m: Meta, next: Long): Meta = {
+    * data dir; the entry `m` carries every file action, its stats and
+    * the deletion vector verbatim, so no Spark job runs. Returns `m`,
+    * the new version's entry. */
+  private def carryAll(spark: SparkSession, root: String, m: Meta,
+                       next: Long): Meta = {
     mkVersionDir(spark, root, next)
-    writeManifestAndStats(spark, root, next, from, m,
-      fileInventory(spark, root, from).map(_._1))
+    m
   }
 
   /** METADATA-ONLY column RENAME (the Delta column-mapping / Iceberg
     * field-ID motion): physical names are frozen at first commit, so a
-    * rename writes only a record with a new `(physical, logical)` map
-    * and a manifest carrying every file by reference — zero data I/O
+    * rename writes only an entry with a new `(physical, logical)` map
+    * that carries every file action by reference — zero data I/O
     * at any table size. From then on readers alias physical → logical
     * after the scan, writers translate logical → physical before it
     * ([[commit]]/[[appendCommit]]/[[mergeCommit]] accept batches in
@@ -1911,13 +1919,13 @@ object Snapshot {
       // entries (renamed back to the physical name) drop out
       val composed = (m.colmap.filterNot(_._1 == phys) :+ (phys -> to))
         .filterNot(p => p._1 == p._2).sortBy(_._1)
-      Some { next => carryAll(spark, root, base, m.copy(colmap = composed), next) }
+      Some { next => carryAll(spark, root, m.copy(colmap = composed), next) }
     }
 
   /** METADATA-ONLY column DROP (the other half of the column-mapping
     * story beside [[renameColumn]]): the new version records the
-    * table's physical schema WITHOUT the column plus a manifest
-    * carrying every file by reference — zero data I/O at any table
+    * table's physical schema WITHOUT the column and carries every
+    * file action by reference — zero data I/O at any table
     * size. Carried files still physically contain the bytes, but the
     * recorded schema governs every read, so the vectorized reader
     * never materializes the column (dropping is also a read-cost
@@ -1948,22 +1956,21 @@ object Snapshot {
             "references it — drop the constraint first")
       }
       // a stats/bloom key cannot be dropped in place: later appends
-      // re-derive fresh per-file stats over the manifest's columns and
+      // re-derive fresh per-file stats over the entry's columns and
       // would aggregate a column the new files no longer have
       val phys = m.physical(colName)
-      require(!(statsColsOf(spark, root, base) ++
-          bloomColsOf(spark, root, base)).contains(phys),
+      require(!(m.stats ++ m.blooms).contains(phys),
         s"drop of `$colName` refused: it keys the data-skipping index " +
           "— recommit with different stats columns first")
       // the physical schema minus the field; the mapping entry (if
       // any) retires with the column and its physical name is retired
-      Some { next => carryAll(spark, root, base, m.copy(
+      Some { next => carryAll(spark, root, m.copy(
         schema = StructType(m.schema.fields.filterNot(_.name == phys)),
         colmap = m.colmap.filterNot(_._1 == phys),
         dropped = m.dropped + phys), next) }
     }
 
-  /** Manifest-referenced APPEND: commit `df` as NEW files while every
+  /** Reference-carrying APPEND: commit `df` as NEW files while every
     * existing file rides into the new version by reference — an
     * O(batch) write at any table size, vs [[commit]]'s full rewrite
     * (the incremental-ingest shape: a CDC/stream consumer lands each
@@ -1999,13 +2006,12 @@ object Snapshot {
           "were dropped and their physical names are retired — " +
           "use a fresh logical name")
       Some { next =>
-        val carried = fileInventory(spark, root, base).map(_._1)
         // column mapping: logical batch → frozen physical names
         physBatch.write.mode("overwrite").parquet(s"$root/v=$next")
         // enforce on the APPENDED files only — carried rows were
         // validated by the commits that wrote them
         enforceWritten(spark, root, next, base, m)
-        writeManifestAndStats(spark, root, next, base, m, carried)
+        withFiles(spark, root, next, m, m.files)
       }
     }
   }
@@ -2025,7 +2031,7 @@ object Snapshot {
     val next = observedMax(spark, root) + 1
     if (claimVersion(spark, root, next)) {
       df.write.mode("overwrite").parquet(s"$root/v=$next")
-      writeMeta(spark, root, next, Meta(df.schema))
+      writeMeta(spark, root, next, withFiles(spark, root, next, Meta(df.schema), Nil))
       // Publish is a strict CAS against the EMPTY table: when
       // `next > 1` this claim sits ahead of other claimants still
       // mid-bootstrap, and one of them can publish between our
@@ -2062,9 +2068,8 @@ object Snapshot {
             }
             writeClaimed(spark, root, next) {
               enforceWritten(spark, root, next, base2, m2)
-              writeMeta(spark, root, next, writeManifestAndStats(spark,
-                root, next, base2, m2,
-                fileInventory(spark, root, base2).map(_._1)))
+              writeMeta(spark, root, next,
+                withFiles(spark, root, next, m2, m2.files))
             }
             if (pointerAdvance(spark, root, next, expectedPrev = base2))
               return Some(next)
@@ -2086,118 +2091,84 @@ object Snapshot {
     }
   }
 
-  /** Shared tail of every file-granular commit: write version `next`'s
-    * file manifest (`carried` by reference + whatever parquet the
-    * commit just wrote into `v=next`) and, when the base carries a
-    * stats manifest, the new stats manifest — `carried` rows verbatim,
-    * fresh stats re-derived by scanning ONLY the newly written files.
-    * Returns the new version's record: `m` with any new columns of the
-    * fresh files appended to its schema. */
-  private def writeManifestAndStats(spark: SparkSession, root: String,
-                                    next: Long, base: Long, m: Meta,
-                                    carriedFiles: Seq[String]): Meta = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val newDir = new org.apache.hadoop.fs.Path(root, s"v=$next")
-    val newStatus = parquetFiles(spark, newDir)
-    val newFiles = newStatus.map(st => canonFile(st.getPath))
-    (carriedFiles ++ newFiles).toDF("file").coalesce(1)
-      .write.mode("overwrite").parquet(s"$root/$ManifestDir/v=$next")
-    // schema evolution: the new version's schema is the record's with
-    // any NEW batch columns appended (one footer read of the fresh
-    // files — a commit batch is schema-uniform)
-    val record =
-      if (newFiles.isEmpty) m
-      else m.copy(schema =
-        mergedSchema(m.schema, Layout.footerSchema(spark, newStatus.head)))
-    val sc = statsColsOf(spark, root, base)
-    if (sc.nonEmpty) {
-      val carried = Layout.readParquet(spark, s"$root/$StatsDir/v=$base")
-        .filter(col("file").isin(carriedFiles: _*))
-      val fresh =
-        if (newFiles.isEmpty) carried.limit(0)
-        else freshStats(spark, newDir, newStatus, record.schema, sc,
-          bloomColsOf(spark, root, base))
-      carried.unionByName(fresh).coalesce(1)
-        .write.mode("overwrite").parquet(s"$root/$StatsDir/v=$next")
+  /** Version `next`'s entry for a commit that keeps `carried` of the
+    * actions of `m` (the base's entry, with the commit's metadata
+    * edit) and adds whatever parquet it just wrote into `v=next`. The
+    * carried actions ride verbatim with their stats; the fresh files'
+    * actions are derived ([[freshActions]]); any new column of the
+    * fresh files is appended to the schema (one footer read — a commit
+    * batch is schema-uniform). Merge-on-read tombstones follow their
+    * files: a DV whose tombstoned files are all carried is referenced
+    * as it stands, with no job; one that loses a rewritten file (its
+    * rows are gone from the DV-filtered rewrite) is filtered into
+    * `_dv/v=next`, or dropped when nothing of it is carried. */
+  private def withFiles(spark: SparkSession, root: String, next: Long,
+                        m: Meta, carried: Seq[FileAction]): Meta = {
+    import org.apache.spark.sql.functions.col
+    val fresh = parquetFiles(spark, new org.apache.hadoop.fs.Path(root, s"v=$next"))
+    val schema =
+      if (fresh.isEmpty) m.schema
+      else mergedSchema(m.schema, Layout.footerSchema(spark, fresh.head))
+    val carriedSet = carried.map(_.path).toSet
+    val dv = m.dv.flatMap { d =>
+      val kept = d.tombs.filter { case (f, _) => carriedSet(f) }
+      if (kept.isEmpty) None
+      else if (kept.size == d.tombs.size) Some(d)
+      else {
+        val p = pathOf(spark, root, s"$DvDir/v=$next")
+        Layout.readParquet(spark, d.path)
+          .filter(col("file").isin(kept.keys.toSeq: _*))
+          .coalesce(1).write.mode("overwrite").parquet(p)
+        Some(DvRef(p, kept))
+      }
     }
-    // merge-on-read tombstones follow their files: entries for CARRIED
-    // files stay live in the new version; entries for rewritten files
-    // die with them (the rewrite read was DV-filtered, so the rows are
-    // gone from the fresh bytes). Written only when rows survive — a
-    // DV-less version costs its readers nothing.
-    dvOf(spark, root, base).foreach { dv =>
-      // Loud invariant, not a silent filter: every sidecar file string
-      // must byte-match a base-inventory string, or the carry below
-      // would silently DROP tombstones and MOR-deleted rows would
-      // resurrect on the next commit (the GDPR-erasure shape this
-      // feature exists for). The sidecar strings come from
-      // `_metadata.file_path` via canonMetaPath, the inventory from
-      // `Path.toString` via canonFile — a table root whose URI-encoding
-      // differs between the two (spaces, percent, non-ASCII) is exactly
-      // the mismatch this catches. Driver-side O(files): the sidecar's
-      // distinct-file set is metadata-sized by contract.
-      val dvFiles = distinctFiles(dv)
-      val baseInv = fileInventory(spark, root, base).map(_._1).toSet
-      val orphans = dvFiles.filterNot(baseInv.contains)
-      require(orphans.isEmpty,
-        s"DV carry on $root v=$base→$next would silently drop tombstones " +
-          s"for ${orphans.length} file(s) absent from the base inventory " +
-          s"(byte-wise path mismatch — canonMetaPath vs canonFile " +
-          s"canonicalization); first orphan: ${orphans.head}")
-      val carriedSet = carriedFiles.toSet
-      val keptFiles = dvFiles.filter(carriedSet.contains)
-      if (keptFiles.nonEmpty)
-        dv.filter(col("file").isin(keptFiles.toSeq: _*))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$root/$DvDir/v=$next")
-    }
-    record
+    m.copy(schema = schema, files = carried ++ freshActions(spark, root,
+      next, fresh, schema, m.stats, m.blooms), dv = dv)
   }
 
   /** Incremental small-file compaction (the OPTIMIZE maintenance pass
     * a CDC- or delete-churned table needs): bin-pack ONLY the files
     * under `smallBytes` into ~`targetBytes` outputs and carry every
-    * already-well-sized file into the new version by manifest
-    * reference. Where [[compact]] rewrites the whole table (collapsing
-    * reference chains for vacuum), this touches O(small-file bytes) —
-    * on a 100 TB table whose churn left a few thousand 1 MB merge
-    * outputs beside thousand-file terabytes of settled data, the
-    * rewrite reads megabytes, not the table. A no-op (≤1 small file)
-    * returns the current version without committing. Stats carry the
-    * same way as [[deleteWhere]]'s, so data skipping survives. */
+    * already-well-sized file into the new version by reference. Where
+    * [[compact]] rewrites the whole table (collapsing reference chains
+    * for vacuum), this touches O(small-file bytes) — on a 100 TB table
+    * whose churn left a few thousand 1 MB merge outputs beside
+    * thousand-file terabytes of settled data, the rewrite reads
+    * megabytes, not the table. A no-op (≤1 small file) returns the
+    * current version without committing. Stats carry the same way as
+    * [[deleteWhere]]'s, so data skipping survives. */
   def compactSmall(spark: SparkSession, root: String,
                    smallBytes: Long = 32L * 1024 * 1024,
                    targetBytes: Long = 128L * 1024 * 1024): Long =
     onHead(spark, root, "compactSmall") { (base, m) =>
-      val inv = fileInventory(spark, root, base)
-      val (small, large) = inv.partition(_._2 < smallBytes)
+      val (small, large) = m.files.partition(_.size < smallBytes)
       // ≤1 small file: already compact, no new version
       if (small.size <= 1) None else Some { next =>
         val nOut = math.max(1L,
-          (small.map(_._2).sum + targetBytes - 1) / targetBytes).toInt
+          (small.map(_.size).sum + targetBytes - 1) / targetBytes).toInt
         // coalesce, not repartition: bin-packing needs no shuffle.
         // Recorded schema for the same mixed-generation reason as
         // deleteWhere's rewrite — small files can straddle an
         // add-column evolution boundary.
-        applyDv(spark, root, base, physReader(spark, m)
-            .parquet(small.map(_._1): _*)).coalesce(nOut)
+        applyDv(spark, m, physReader(spark, m)
+            .parquet(small.map(_.path): _*)).coalesce(nOut)
           .write.mode("overwrite").parquet(s"$root/v=$next")
-        writeManifestAndStats(spark, root, next, base, m, large.map(_._1))
+        withFiles(spark, root, next, m, large)
       }
     }
 
   /** SHALLOW CLONE: materialize a NEW table at `dstRoot` whose first
-    * version REFERENCES the source's current files through a manifest —
-    * the Delta `CREATE TABLE ... SHALLOW CLONE` shape: zero data I/O
-    * at any table size (a record plus O(files) manifest rows),
-    * after which the clone evolves independently (merges/deletes on
-    * the clone write THEIR new files under `dstRoot` while untouched
-    * data keeps riding the source's files by absolute reference — the
-    * everyday dev/test-against-prod and experiment-branch motion).
-    * Stats/bloom manifests copy over, so data skipping works on the
-    * clone from the first read. Runs under the claim protocol on the
-    * destination; the target must be a fresh root.
+    * version REFERENCES the source's current files — the Delta
+    * `CREATE TABLE ... SHALLOW CLONE` shape: zero data I/O at any table
+    * size and no Spark job (one entry: the source head's, whose
+    * actions name the source's files, bloom payloads and deletion
+    * vector by absolute path), after which the clone evolves
+    * independently (merges/deletes on the clone write THEIR new files
+    * under `dstRoot` while untouched data keeps riding the source's
+    * files — the everyday dev/test-against-prod and experiment-branch
+    * motion). Data skipping works on the clone from the first read,
+    * and the source's tombstones stay applied. Runs under the claim
+    * protocol on the destination; the target must be a fresh root.
     *
     * Same caveat as Delta documents: the clone borrows the source's
     * RETENTION — vacuuming the source can collect files a clone still
@@ -2206,7 +2177,6 @@ object Snapshot {
     * self-contain it. */
   def shallowClone(spark: SparkSession, srcRoot: String,
                    dstRoot: String): Long = {
-    import spark.implicits._
     val srcV = currentVersion(spark, srcRoot).getOrElse(
       throw new java.util.NoSuchElementException(
         s"snapshot table $srcRoot has no committed version to clone"))
@@ -2215,33 +2185,15 @@ object Snapshot {
       require(next == 1L,
         s"shallowClone target $dstRoot already has versions — clone " +
           "into a fresh root")
-    } { next =>
-      // the data rides by reference
-      mkVersionDir(spark, dstRoot, next)
-      val carried = fileInventory(spark, srcRoot, srcV).map(_._1)
-      carried.toDF("file").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dstRoot/$ManifestDir/v=$next")
-      if (statsColsOf(spark, srcRoot, srcV).nonEmpty)
-        Layout.readParquet(spark, s"$srcRoot/$StatsDir/v=$srcV").coalesce(1)
-          .write.mode("overwrite").parquet(s"$dstRoot/$StatsDir/v=$next")
-      // the clone references the source's files, so it must also
-      // inherit their merge-on-read tombstones or deleted rows would
-      // resurrect on the clone
-      dvOf(spark, srcRoot, srcV).foreach(_.coalesce(1)
-        .write.mode("overwrite").parquet(s"$dstRoot/$DvDir/v=$next"))
-      // the source head's record: the clone reads and gates like the
-      // table it mirrors
-      srcM
-    }
+    } { next => carryAll(spark, dstRoot, srcM, next) }
   }
 
   /** RESTORE: roll the table back to retained version `toV` as a NEW
     * commit — history moves forward only (the bad versions stay
     * readable for forensics until vacuumed), and the restore itself is
-    * a METADATA-ONLY commit: the new version's manifest references
-    * `toV`'s files verbatim, so restoring a 100 TB table writes a
-    * record plus O(files) manifest rows, never data. Stats
-    * carry from `toV`'s manifest, so data skipping survives. Runs
+    * a METADATA-ONLY commit: the new entry takes `toV`'s file actions,
+    * stats and deletion vector verbatim, so restoring a 100 TB table
+    * writes one entry, never data, and data skipping survives. Runs
     * under the claim-exactly-`pointer+1` protocol like every
     * read-modify-write commit. */
   def restore(spark: SparkSession, root: String, toV: Long): Long =
@@ -2251,8 +2203,9 @@ object Snapshot {
         // constraints, column map, dropped set and rule stay — metadata
         // history is orthogonal to data history
         val toM = retainedMeta(spark, root, toV)
-        Some { next =>
-          carryAll(spark, root, toV, m.copy(schema = toM.schema), next) }
+        Some { next => carryAll(spark, root, m.copy(schema = toM.schema,
+          files = toM.files, stats = toM.stats, blooms = toM.blooms,
+          dv = toM.dv), next) }
       }
     }
 
@@ -2347,7 +2300,7 @@ object Snapshot {
     * files, committed with stats, then a selective key-range delete of
     * `[1, floor(max/5)]`. With the range layout, ~1/5 of the files
     * overlap the range and get rewritten; the rest ride into v2 by
-    * manifest reference (file-granularity is spec-pinned in
+    * reference (file-granularity is spec-pinned in
     * SnapshotSpec — this query certifies VALUES). DuckDB replays the
     * surviving rows straight off the fixture, certifying the
     * file-granular machinery is exactly a row filter: no lost rows
@@ -2623,7 +2576,7 @@ object Snapshot {
       .withColumn("l_quantity",
         when(col("l_linenumber") % 3 === 0, -col("l_quantity"))
           .otherwise(col("l_quantity")))
-    // post-commit visibility counts from the manifest+footers (r15,
+    // post-commit visibility counts from the entry (r15,
     // [[currentRowCount]]): the read-back count jobs re-scanned every
     // committed byte; the metadata count is exact (DV-aware) and the
     // oracle still certifies the values
@@ -2793,8 +2746,8 @@ object Snapshot {
         s"snapshot table $root has no generated-column rule"))
     require(base == baseCol,
       s"generated rule on $root derives from `$base`, not `$baseCol`")
-    prunedRead(spark, root, v, m, gen,
-        lit(Math.floorDiv(lo, bucket)), lit(Math.floorDiv(hi, bucket)))
+    rangeRead(spark, root, v, m, Seq((gen,
+        lit(Math.floorDiv(lo, bucket)), lit(Math.floorDiv(hi, bucket)))))
       .filter(col(baseCol) >= lo && col(baseCol) <= hi)
   }
 
@@ -2890,11 +2843,11 @@ object Snapshot {
 
   /** The oracle-certified [[vacuum]] venue (`of14_vacuum`): commit
     * lineitem range-laid-out (v1), carve a key range out with
-    * [[deleteWhere]] (v2 — a manifest version still REFERENCING v1's
+    * [[deleteWhere]] (v2 — a version still REFERENCING v1's
     * carried files), collapse the chain with [[compact]] (v3,
     * self-contained), then vacuum with the default one-version
-    * retention — v1 and v2 are now unreferenced and their data, stats,
-    * and manifest artifacts are reclaimed. The reclamation itself
+    * retention — v1 and v2 are now unreferenced and their data
+    * directories and entries are reclaimed. The reclamation itself
     * (directories gone, live version untouched, referenced ancestors
     * surviving while the chain exists) is spec-pinned in SnapshotSpec;
     * this query certifies VALUES — the post-GC table must still read
@@ -2977,24 +2930,29 @@ object Snapshot {
       .orderBy("snap", "bucket")
   }
 
-  /** Orphan GC: delete unreferenced `v=*` snapshot directories (old
-    * superseded versions beyond the `retain` newest — the time-travel
-    * window — AND crashed writers' never-pointed orphans) plus decided
-    * claims (≤ pointer). The pointer
-    * and its target are never touched. Claims ABOVE the pointer are
-    * kept by default — they may be a live writer's in-flight commit —
-    * and so are THEIR data directories (the writer's pointer swap must
-    * not publish a deleted path); `clearStaleClaims = true` removes
-    * both (admin asserts no live writers; unblocks merges stalled on a
-    * crashed writer's `pointer+1` claim). Deleting a DECIDED claim is
-    * safe even against a delayed writer still racing for that version:
-    * [[claimVersion]] refuses any version whose data directory exists
-    * or that the pointer has reached, so a vacuumed claim number can
-    * never be re-won for committed content. Each version's stats and
-    * file manifests, deletion vector and metadata record go with it —
-    * including the record of a version that never published. Like any
-    * GC, vacuum assumes no reader is still walking an unreferenced
-    * snapshot's files. Returns deleted names. */
+  /** Orphan GC, one rule: keep what a LIVE version names, delete
+    * everything else. The live versions are the `retain` newest
+    * committed ones (the time-travel window; the pointer target always
+    * among them) and any in flight — claims ABOVE the pointer are kept
+    * by default, as they may be a live writer's commit, whose data
+    * directory and payloads its pointer swap must not publish deleted.
+    * A `v=N` directory, a bloom payload `_bloom/v=N` or a deletion
+    * vector `_dv/v=N` survives only when it is a live version's own or
+    * a live entry names it (a carried file lives in the directory of
+    * the version that wrote it); a `_log/v=N.json` entry survives only
+    * with its live version, so a version kept only as a file store is
+    * no longer readable. Decided claims (≤ pointer) go too.
+    * `clearStaleClaims = true` also removes claims above the pointer
+    * and what they own (admin asserts no live writers; unblocks merges
+    * stalled on a crashed writer's `pointer+1` claim). Deleting a
+    * DECIDED claim is safe even against a delayed writer still racing
+    * for that version: [[claimVersion]] refuses any version whose data
+    * directory exists or that the pointer has reached, so a vacuumed
+    * claim number can never be re-won for committed content. The
+    * pointer and its target are never touched, and `_history` markers
+    * outlive their versions. Like any GC, vacuum assumes no reader is
+    * still walking an unreferenced snapshot's files. Returns deleted
+    * names. */
   def vacuum(spark: SparkSession, root: String,
              clearStaleClaims: Boolean = false,
              retain: Int = 1): Seq[String] = {
@@ -3004,85 +2962,51 @@ object Snapshot {
         s"snapshot table $root has no committed version; nothing to vacuum"))
     val rootPath = new org.apache.hadoop.fs.Path(root)
     val fs = fsOf(spark, rootPath)
-    val claims = new org.apache.hadoop.fs.Path(root, ClaimsDir)
-    // A claim above the pointer may be a LIVE writer mid-commit: its
-    // fully-written-but-not-yet-pointed v=N directory must survive the
-    // sweep, or the writer's imminent pointer swap would publish a
-    // deleted directory. clearStaleClaims (admin asserts no live
-    // writers) sweeps both the claim and its data directory.
+    def children(dir: org.apache.hadoop.fs.Path) =
+      if (!fs.exists(dir)) Seq.empty else fs.listStatus(dir).toSeq.map(_.getPath)
+    val claims = children(new org.apache.hadoop.fs.Path(root, ClaimsDir))
     val inFlight: Set[Long] =
-      if (clearStaleClaims || !fs.exists(claims)) Set.empty
-      else fs.listStatus(claims).toSeq.map(_.getPath.getName)
+      if (clearStaleClaims) Set.empty
+      else claims.map(_.getName)
         .collect { case n if n.matches("\\d+") => n.toLong }
         .filter(_ > cur).toSet
-    val onDisk = fs.listStatus(rootPath).toSeq.map(_.getPath.getName)
-      .collect { case n if n.matches("v=\\d+") => n.drop(2).toLong }
-    // Retention window for time travel: the newest `retain` committed
-    // versions (the pointer target always among them) stay readable
-    // via [[readVersion]].
-    val retained = onDisk.filter(_ <= cur).sorted.takeRight(retain).toSet
-    // A surviving version with a file MANIFEST ([[deleteWhere]]) may
-    // reference files living in OLDER version directories: those
-    // directories must outlive their own retention or the survivor
-    // dangles. (An in-flight delete between claim and manifest write
-    // is invisible here — the same "no reader mid-walk" caveat as the
-    // rest of vacuum; [[compact]] collapses chains when reclamation
-    // matters more than rewrite cost.)
-    val referenced: Set[Long] = {
-      val mRoot = new org.apache.hadoop.fs.Path(root, ManifestDir)
-      if (!fs.exists(mRoot)) Set.empty
-      else fs.listStatus(mRoot).toSeq.map(_.getPath)
-        .filter { p =>
-          p.getName.matches("v=\\d+") && {
-            val v = p.getName.drop(2).toLong
-            retained.contains(v) || inFlight.contains(v)
-          }
-        }
-        .flatMap(p => Layout.readParquet(spark, p.toString)
-          .select("file").collect().map(_.getString(0)))
-        .flatMap(f => "v=(\\d+)/".r.findAllMatchIn(f).toSeq.lastOption
-          .map(_.group(1).toLong))
-        .toSet
-    }
-    val deadDirs = fs.listStatus(rootPath).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.matches("v=\\d+") && {
-          val v = n.drop(2).toLong
-          !retained.contains(v) && !inFlight.contains(v) &&
-            !referenced.contains(v)
-        }
-      }
-    val deadClaims =
-      if (!fs.exists(claims)) Seq.empty
-      else fs.listStatus(claims).toSeq.map(_.getPath).filter { p =>
-        p.getName match {
-          case n if n.matches("\\d+") =>
-            n.toLong <= cur || clearStaleClaims
-          case _ => true // abandoned .tmp claim staging
-        }
-      }
-    // sidecars follow their version's fate: records, stats and file
-    // manifests and deletion vectors live while the version is retained
-    // or in flight. A directory kept only for a survivor's manifest is
-    // a file store, no longer a readable version.
     val versionName = "v=(\\d+)(?:\\.json)?".r
-    def dead(dir: String, live: Long => Boolean): Seq[String] = {
-      val d = new org.apache.hadoop.fs.Path(root, dir)
-      if (!fs.exists(d)) Seq.empty
-      else fs.listStatus(d).toSeq.map(_.getPath.getName).filter {
-        case versionName(v) => !live(v.toLong)
-        case _ => true // abandoned staging
-      }.map(n => s"$dir/$n")
+    val onDisk = children(rootPath).map(_.getName)
+      .collect { case versionName(v) => v.toLong }
+    val live = onDisk.filter(_ <= cur).sorted.takeRight(retain).toSet ++ inFlight
+    // every directory a live entry names: its files' directories, its
+    // bloom payloads, its deletion vector
+    val named: Set[String] = live.toSeq
+      .filter(v => fs.exists(recordPath(root, v)))
+      .flatMap { v =>
+        val m = metaOf(spark, root, v)
+        m.files.map(f => parentOf(f.path)) ++ m.files.flatMap(_.bloom) ++
+          m.dv.map(_.path)
+      }.toSet
+    // a live version's own directory and payloads; anything else only
+    // when named. Abandoned staging (no version name) never survives.
+    def dead(dir: String)(keep: (Long, String) => Boolean): Seq[String] =
+      children(if (dir.isEmpty) rootPath else new org.apache.hadoop.fs.Path(root, dir))
+        .filter { p =>
+          p.getName match {
+            case versionName(v) => !keep(v.toLong, canonFile(fs.makeQualified(p)))
+            case _ => dir.nonEmpty
+          }
+        }.map(p => if (dir.isEmpty) p.getName else s"$dir/${p.getName}")
+    val payload = (v: Long, p: String) => inFlight(v) || named(p)
+    val deadNames =
+      dead("")((v, p) => live(v) || named(p)) ++
+        dead(BloomDir)(payload) ++ dead(DvDir)(payload) ++
+        dead(LogDir)((v, _) => live(v))
+    val deadClaims = claims.filter { p =>
+      p.getName match {
+        case n if n.matches("\\d+") => n.toLong <= cur || clearStaleClaims
+        case _ => true // abandoned .tmp claim staging
+      }
     }
-    val live = (v: Long) => retained.contains(v) || inFlight.contains(v)
-    val deadSidecars = dead(StatsDir, live) ++ dead(ManifestDir, live) ++
-      dead(LogDir, live) ++ dead(DvDir, live)
-    (deadDirs ++ deadClaims).map { p =>
-      fs.delete(p, true); p.getName
-    } ++ deadSidecars.map { n => // "_stats/v=N": distinct from the data dir's "v=N"
-      fs.delete(new org.apache.hadoop.fs.Path(root, n), true); n
-    }
+    deadNames.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
+    deadClaims.foreach(fs.delete(_, true))
+    deadNames ++ deadClaims.map(_.getName)
   }
 
   /** Write a snapshot directory WITHOUT swapping the pointer — the

@@ -543,7 +543,7 @@ class DedupSimilaritySpec extends SparkSuite {
     Similarity.incrementalIvfAssignAt(spark, sf, root).count()
     val head = Snapshot.currentVersion(spark, root).get
     assert(head == 2L, s"expected commit + one merge, head=$head")
-    val mf = Snapshot.manifestFiles(spark, root, head).get
+    val mf = Snapshot.fileInventory(spark, root, head).map(_._1)
     val v1Count = java.nio.file.Files.list(java.nio.file.Paths.get(root, "v=1"))
       .toArray.map(_.toString)
       .count(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))

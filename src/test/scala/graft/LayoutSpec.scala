@@ -300,44 +300,72 @@ class LayoutSpec extends SparkSuite {
 
   test("footer-path stats manifest matches the scan path (r14)") {
     import graft.operators.Snapshot
-    import spark.implicits._
-    // a layout with one ALL-NULL file for the stats column (ids < 100
-    // range-partition into the first file) plus ordinary files — the
-    // null-bounds edge the fast path must reproduce, on both INT64 and
-    // INT32 columns
+    // a layout with one ALL-NULL file for the int columns (ids < 250
+    // range-partition into the first file) plus ordinary files, and a
+    // column of every type whose bounds the entry stores: a date, a
+    // timestamp with sub-millisecond micros, a non-ASCII string, a
+    // double with NaN (the max of a file holding one) and many digits,
+    // a decimal(12,2)
     val src = spark.range(0L, 1000L).toDF("id")
       .select(col("id"),
         when(col("id") < 250, lit(null).cast("long"))
           .otherwise(col("id") * 7 % 101).as("k"),
-        (col("id") % 1000).cast("int").as("i"))
+        when(col("id") < 250, lit(null).cast("int"))
+          .otherwise((col("id") % 1000).cast("int")).as("i"),
+        date_add(lit("2001-02-03").cast("date"), (col("id") * 13 % 700).cast("int")).as("d"),
+        timestamp_micros(lit(1600000000000000L) + col("id") * 1234567L + 789L).as("ts"),
+        concat(lit("ü日-"), (col("id") * 31 % 997).cast("string")).as("s"),
+        when(col("id") % 97 === 5, lit(Double.NaN))
+          .otherwise(col("id") / 7.0).as("x"),
+        (col("id") * 1.37).cast("decimal(12,2)").as("dec"))
       .repartitionByRange(8, col("id"))
       .sortWithinPartitions("id")
-    val root = java.nio.file.Files.createTempDirectory("graft_fstat_")
+    def root(): String = java.nio.file.Files.createTempDirectory("graft_fstat_")
       .toString + "/t"
-    Snapshot.commitWithStats(src, root, Seq("k", "i"))
-    val fast = spark.read.parquet(s"$root/_stats/v=1")
-    // the scan answer, computed here over the committed files: per-file
-    // min/max/count grouped on the file each row came from
-    val slow = spark.read.parquet(s"$root/v=1")
-      .groupBy(input_file_name().as("file"))
-      .agg(min("k").as("min_k"), max("k").as("max_k"),
-        min("i").as("min_i"), max("i").as("max_i"),
-        count(lit(1)).as("n_rows"))
-    // same schema (names + types, the contract readers prune on) …
-    assert(fast.schema.map(f => (f.name, f.dataType)) ==
-      slow.schema.map(f => (f.name, f.dataType)),
-      s"schema drift: ${fast.schema} vs ${slow.schema}")
-    // … and identical bounds/counts file by file (the two sides spell
-    // a local URI differently — key on the file name)
-    def byFile(df: org.apache.spark.sql.DataFrame) = df
-      .select("file", "min_k", "max_k", "min_i", "max_i", "n_rows")
-      .collect().map(r => r.getString(0).split('/').last -> r.toSeq.tail)
-      .toMap
-    assert(byFile(fast) == byFile(slow),
-      "footer-derived stats must equal the scan-derived stats")
-    // the all-null file's bounds really are null in BOTH
-    assert(slow.filter(col("min_k").isNull).count() >= 1L)
-    assert(fast.filter(col("min_k").isNull).count() >= 1L)
+    // the entry's per-file bounds against the scan answer, computed
+    // here over the committed files: per-file min/max/count grouped on
+    // the file each row came from
+    def matches(root: String, cols: Seq[String]): Unit = {
+      val fast = Snapshot.statsFrame(spark, Snapshot.metaOf(spark, root, 1L))
+      val aggs = cols.flatMap(c => Seq(min(c).as(s"min_$c"), max(c).as(s"max_$c"))) :+
+        count(lit(1)).as("n_rows")
+      val slow = spark.read.parquet(s"$root/v=1")
+        .groupBy(input_file_name().as("file"))
+        .agg(aggs.head, aggs.tail: _*)
+      // same schema (names + types, the contract readers prune on) …
+      assert(fast.schema.map(f => (f.name, f.dataType)) ==
+        slow.schema.map(f => (f.name, f.dataType)),
+        s"schema drift: ${fast.schema} vs ${slow.schema}")
+      // … and identical bounds/counts file by file, compared as text so
+      // NaN equals NaN and a timestamp shows its micros (the two sides
+      // spell a local URI differently — key on the file name)
+      def byFile(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => r.getString(0).split('/').last -> r.toSeq.tail.map(String.valueOf))
+        .toMap
+      assert(byFile(fast) == byFile(slow),
+        s"$cols: the entry's stats must equal the scan-derived stats")
+      // the all-null file's bounds really are null in BOTH
+      assert(slow.filter(col("min_k").isNull).count() >= 1L)
+      assert(fast.filter(col("min_k").isNull).count() >= 1L)
+    }
+    // int columns: bounds from the footers
+    val ints = root()
+    Snapshot.commitWithStats(src, ints, Seq("k", "i"))
+    matches(ints, Seq("k", "i"))
+    // every type: bounds from the scan aggregate
+    val typed = Seq("k", "i", "d", "ts", "s", "x", "dec")
+    val all = root()
+    Snapshot.commitWithStats(src, all, typed)
+    matches(all, typed)
+    val nan = Snapshot.statsFrame(spark, Snapshot.metaOf(spark, all, 1L))
+      .filter(col("max_x").isNaN).count()
+    assert(nan >= 1L, "a file holding NaN must keep NaN as its max")
+    // a bloom table: bounds read back from the bloom payload
+    val bloom = root()
+    withConf("graft.snapshot.bloomEstItems", "200") {
+      Snapshot.commitWithStats(src, bloom, Seq("k", "ts", "s"), bloomCols = Seq("id"))
+    }
+    matches(bloom, Seq("k", "ts", "s"))
   }
 
   test("readParquet reads every file of a directory, on the driver within one split and scanned above it") {

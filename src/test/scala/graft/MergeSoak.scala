@@ -123,7 +123,7 @@ object MergeSoak {
     val (vA, mergeA) = sec(Snapshot.mergeCommit(spark, tA, changes, "o_orderkey"))
     probeLine("pruned_merge")
     drainJobs("pruned_merge")
-    val mf = Snapshot.manifestFiles(spark, tA, vA).get
+    val mf = Snapshot.fileInventory(spark, tA, vA).map(_._1)
     val carried = mf.count(!_.contains(s"/v=$vA/"))
     val rewritten = mf.length - carried
     val bytesA = dirBytes(tA, vA)
@@ -200,7 +200,7 @@ object MergeSoak {
     val (_, morBand) = sec(Snapshot.deleteWhereMor(spark, tA,
       col("o_orderkey").between(bandLo, bandHi)))
     val (ppv, purgeClustered) = sec(Snapshot.purgeDv(spark, tA))
-    val pmf = Snapshot.manifestFiles(spark, tA, ppv).get
+    val pmf = Snapshot.fileInventory(spark, tA, ppv).map(_._1)
     val pRewrote = pmf.count(_.contains(s"/v=$ppv/"))
     probeLine("end")
     println(f"[msoak] mor_band_delete=$morBand%.2f s " +

@@ -295,10 +295,11 @@ class SnapshotSpec extends SparkSuite {
         (col("id") % 7).as("v"))
       .repartitionByRange(8, col("k")).sortWithinPartitions("k")
     Snapshot.commitWithStats(df, root, Seq("k"))
-    // one manifest row per data file
+    // one file action with stats per data file
     val nFiles = spark.read.parquet(s"$root/v=1")
       .select(input_file_name()).distinct().count()
-    val manifest = spark.read.parquet(s"$root/_stats/v=1").collect()
+    val manifest = Snapshot.statsFrame(spark, Snapshot.metaOf(spark, root, 1L))
+      .collect()
     assert(manifest.length == nFiles)
     assert(manifest.map(r => r.getAs[Long]("n_rows")).sum == 800L)
     // a narrow range touches a strict subset of files...
@@ -321,26 +322,31 @@ class SnapshotSpec extends SparkSuite {
     Snapshot.commit(df, plain)
     assert(Snapshot.readCurrentPruned(spark, plain, "k",
       lit(100L), lit(150L)).count() == 51L)
-    // superseding commit + vacuum sweeps the old version's manifest too
+    // superseding commit + vacuum sweeps the old version's entry too
     Snapshot.commitWithStats(df.filter(col("k") < 100), root, Seq("k"))
     val deleted = Snapshot.vacuum(spark, root)
-    assert(deleted.contains("v=1"))
-    val statsLeft = new java.io.File(s"$root/_stats").list().toSeq
-    assert(statsLeft == Seq("v=2"), s"stale manifests: $statsLeft")
+    assert(deleted.contains("v=1") && deleted.contains("_log/v=1.json"))
+    val statsLeft = new java.io.File(s"$root/_log").list().toSeq
+      .filter(_.endsWith(".json"))
+    assert(statsLeft == Seq("v=2.json"), s"stale entries: $statsLeft")
+    assert(!exists(root, "_stats") && !exists(root, "_manifest"))
     // the surviving version still prunes
     assert(Snapshot.readCurrentPruned(spark, root, "k",
       lit(0L), lit(10L)).count() == 11L)
     // maintenance must not kill the data-skipping index: compaction and
     // merge both re-derive the manifest for the version they write
+    def statsKept(v: Long): Boolean = {
+      val m = Snapshot.metaOf(spark, root, v)
+      m.stats == Seq("k") && m.files.nonEmpty &&
+        m.files.forall(f => f.rows == 0L || f.bounds.head._1 != null)
+    }
     val cv = Snapshot.compact(spark, root, numFiles = 4)
-    assert(new java.io.File(s"$root/_stats/v=$cv").exists(),
-      "compact dropped the stats manifest")
+    assert(statsKept(cv), "compact dropped the stats")
     assert(Snapshot.readCurrentPruned(spark, root, "k",
       lit(0L), lit(10L)).count() == 11L)
     Snapshot.mergeCommit(spark, root, Seq((5L, 99L)).toDF("k", "v"), "k")
     val mv = Snapshot.currentVersion(spark, root).get
-    assert(new java.io.File(s"$root/_stats/v=$mv").exists(),
-      "mergeCommit dropped the stats manifest")
+    assert(statsKept(mv), "mergeCommit dropped the stats")
     val after = Snapshot.readCurrentPruned(spark, root, "k",
       lit(5L), lit(5L)).collect()
     assert(after.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((5L, 99L)))
@@ -366,7 +372,7 @@ class SnapshotSpec extends SparkSuite {
       .map(k => (k, k % 7)).toSet
     assert(kept == expect)
     // file granularity: most v1 files are REFERENCED, not rewritten
-    val mf = Snapshot.manifestFiles(spark, root, 2L).get
+    val mf = Snapshot.fileInventory(spark, root, 2L).map(_._1)
     val referenced = mf.count(_.contains("/v=1/"))
     val rewritten = mf.count(_.contains("/v=2/"))
     assert(referenced > 0 && referenced >= v1Files - 2,
@@ -435,7 +441,7 @@ class SnapshotSpec extends SparkSuite {
     assert(got == expect)
     // file granularity: the band lives in at most 2 of the 8 files —
     // everything else is REFERENCED into v=2, not rewritten
-    val mf = Snapshot.manifestFiles(spark, root, 2L).get
+    val mf = Snapshot.fileInventory(spark, root, 2L).map(_._1)
     val referenced = mf.count(_.contains("/v=1/"))
     assert(referenced >= v1Files - 2,
       s"expected ~all-but-overlapping files referenced: " +
@@ -445,7 +451,7 @@ class SnapshotSpec extends SparkSuite {
     val v2Inventory = mf.toSet
     val iv = Snapshot.mergeCommit(spark, root,
       (20000L until 20010L).map(k => (k, k)).toDF("k", "v"), "k")
-    val mf3 = Snapshot.manifestFiles(spark, root, iv).get
+    val mf3 = Snapshot.fileInventory(spark, root, iv).map(_._1)
     assert(v2Inventory.subsetOf(mf3.toSet),
       "insert-only merge rewrote carried files")
     assert(Snapshot.readCurrent(spark, root).count() == 800L + 5 + 10)
@@ -666,6 +672,22 @@ class SnapshotSpec extends SparkSuite {
     assert(Snapshot.readCurrentPruned(spark, root, "k",
       lit(0L), lit(5000L)).count() == 1000L,
       "fallback returned the restore's empty directory instead of the table")
+    // a table with stats on `k` only: a read on `v` has no stats to
+    // prune with and falls back to the filtered read; a box prunes on
+    // the dimension that has stats and filters on both
+    val keyed = freshTable()
+    Snapshot.commitWithStats(mk(0L, 1000L).repartitionByRange(4, col("k"))
+      .sortWithinPartitions("k"), keyed, Seq("k"))
+    assert(Snapshot.readCurrentPruned(spark, keyed, "v",
+      lit(2L), lit(3L)).count() == 286L)
+    def box(c1: String, lo1: Long, hi1: Long, c2: String, lo2: Long, hi2: Long) =
+      Snapshot.readCurrentPrunedBox(spark, keyed, c1, lit(lo1), lit(hi1),
+        c2, lit(lo2), lit(hi2)).select("k").collect().map(_.getLong(0)).toSet
+    val want = (100L to 299L).filter(k => k % 7 == 2 || k % 7 == 3).toSet
+    assert(box("k", 100L, 299L, "v", 2L, 3L) == want)
+    assert(box("v", 2L, 3L, "k", 100L, 299L) == want)
+    assert(Snapshot.readCurrentPrunedBox(spark, keyed, "v", lit(2L), lit(3L),
+      "v", lit(0L), lit(6L)).count() == 286L)
   }
 
   test("DELETE WHERE does not delete NULL-key rows, wherever they live") {
@@ -884,16 +906,16 @@ class SnapshotSpec extends SparkSuite {
       src, Seq("k"))
     Snapshot.shallowClone(spark, src, dst)
     // the clone's v=1 holds NO data files of its own — pure reference
-    val cloned = Snapshot.manifestFiles(spark, dst, 1L)
-    assert(cloned.nonEmpty && cloned.get.nonEmpty)
-    assert(cloned.get.forall(_.contains("/src/")),
-      s"clone manifest should reference source files: ${cloned.get}")
+    val cloned = Snapshot.fileInventory(spark, dst, 1L).map(_._1)
+    assert(cloned.nonEmpty)
+    assert(cloned.forall(_.contains("/src/")),
+      s"clone entry should reference source files: $cloned")
     assert(rows(dst) == rows(src))
     // delete a band on the CLONE: only overlapping files rewrite (under
     // the clone's root); the rest keep riding the source's files
     Snapshot.deleteWhere(spark, dst, "k", lit(1L), lit(2L))
     assert(rows(dst) == Set((3L, "c"), (4L, "d")))
-    val after = Snapshot.manifestFiles(spark, dst, 2L).get
+    val after = Snapshot.fileInventory(spark, dst, 2L).map(_._1)
     assert(after.exists(_.contains("/src/")),
       "untouched files must still ride the source cross-root")
     // the source never noticed
@@ -905,9 +927,9 @@ class SnapshotSpec extends SparkSuite {
     }
     // compact self-contains the clone (drops the cross-root dependency)
     Snapshot.compact(spark, dst)
-    val selfFiles = Snapshot.manifestFiles(spark, dst,
-      Snapshot.currentVersion(spark, dst).get)
-    assert(selfFiles.isEmpty || selfFiles.get.forall(!_.contains("/src/")))
+    val selfFiles = Snapshot.fileInventory(spark, dst,
+      Snapshot.currentVersion(spark, dst).get).map(_._1)
+    assert(selfFiles.forall(!_.contains("/src/")))
     assert(rows(dst) == Set((3L, "c"), (4L, "d")))
   }
 
@@ -1143,7 +1165,7 @@ class SnapshotSpec extends SparkSuite {
     assert(got == (0L until 800L).filterNot(_ % 10 == 0).toSet)
     // granularity: the new version holds NO data rows of its own —
     // every base file rides by reference, only the sidecar is new
-    val mf = Snapshot.manifestFiles(spark, root, v2).get
+    val mf = Snapshot.fileInventory(spark, root, v2).map(_._1)
     assert(v1Files.subsetOf(mf.map(_.stripPrefix("file://")).toSet)
       || mf.count(_.contains("/v=1/")) == v1Files.size,
       "MOR delete failed to carry every base file by reference")
@@ -1256,7 +1278,7 @@ class SnapshotSpec extends SparkSuite {
     assert(!new java.io.File(root, s"_dv/v=$pv").exists,
       "purge left the sidecar behind")
     // only the tombstoned file(s) rewrote; the rest carried by reference
-    val mfp = Snapshot.manifestFiles(spark, root, pv).get
+    val mfp = Snapshot.fileInventory(spark, root, pv).map(_._1)
     assert(mfp.count(_.contains("/v=1/")) >= 2,
       s"purge rewrote clean files: $mfp")
     assert(Snapshot.readCurrent(spark, root).count() == 350L)
@@ -1522,16 +1544,19 @@ class SnapshotSpec extends SparkSuite {
           !exists(root, s"v=${head + 1}"), s"$name: no-op claimed a version")
       } else {
         assert(got == head + 1, s"$name: $head → $got, expected head+1")
-        Seq(s"v=$got", s"_log/v=$got.json", s"_history/v=$got",
-            s"_stats/v=$got").foreach { a =>
+        Seq(s"v=$got", s"_log/v=$got.json", s"_history/v=$got").foreach { a =>
           assert(exists(root, a), s"$name: $a missing after the commit")
         }
-        // every commit but the self-contained full rewrite names its
-        // files through a file manifest
-        if (name != "compact")
-          assert(exists(root, s"_manifest/v=$got"), s"$name: no manifest")
-        // every file the new version names is readable
-        Snapshot.readCurrent(spark, root).count()
+        // the entry is the whole version: it keeps the stats columns,
+        // every action carries their bounds, and its row count is the
+        // count of what every file it names reads back
+        val m = Snapshot.metaOf(spark, root, got)
+        assert(m.stats == Seq("k") && m.files.forall(_.bounds.size == 1),
+          s"$name: the entry lost its stats")
+        assert(Snapshot.currentRowCount(spark, root) ==
+          Snapshot.readCurrent(spark, root).count(), s"$name: row count")
+        Seq("_manifest", "_stats").foreach(d =>
+          assert(!exists(root, d), s"$name: wrote a $d sidecar"))
       }
     }
   }
@@ -1593,21 +1618,21 @@ class SnapshotSpec extends SparkSuite {
     Snapshot.commitWithStats(spark.range(0, 1000)
       .select(col("id").as("k"), (col("id") % 7).as("v"), (col("id") % 3).as("w"))
       .repartitionByRange(4, col("k")).sortWithinPartitions("k"), root, Seq("k"))
-    // (commit, Spark jobs): the data-sized scans and the manifest, stats
-    // and DV parquet writes remain; no zero-row anchor file is written,
-    // and the metadata record is written on the driver
+    // (commit, Spark jobs): only the data-sized scans and the DV payload
+    // write remain; no zero-row anchor file is written, and the entry —
+    // file actions, stats and DV reference — is written on the driver
     val cases: Seq[(String, () => Long, Int)] = Seq(
       ("deleteWhereMor", () => Snapshot.deleteWhereMor(spark, root,
-        col("k") % 10 === 3), 7),
-      ("restore", () => Snapshot.restore(spark, root, 1L), 2),
-      ("renameColumn", () => Snapshot.renameColumn(spark, root, "v", "v2"), 2),
+        col("k") % 10 === 3), 5),
+      ("restore", () => Snapshot.restore(spark, root, 1L), 0),
+      ("renameColumn", () => Snapshot.renameColumn(spark, root, "v", "v2"), 0),
       ("addCheckConstraint", () =>
-        Snapshot.addCheckConstraint(spark, root, "k_ok", "k >= 0"), 4),
+        Snapshot.addCheckConstraint(spark, root, "k_ok", "k >= 0"), 2),
       ("dropCheckConstraint", () =>
-        Snapshot.dropCheckConstraint(spark, root, "k_ok"), 2),
-      ("dropColumn", () => Snapshot.dropColumn(spark, root, "w"), 2),
+        Snapshot.dropCheckConstraint(spark, root, "k_ok"), 0),
+      ("dropColumn", () => Snapshot.dropColumn(spark, root, "w"), 0),
       ("deleteWhere", () => Snapshot.deleteWhere(spark, root, "k",
-        lit(5000L), lit(6000L)), 2))
+        lit(5000L), lit(6000L)), 0))
     val ran = cases.map { case (name, call, _) =>
       val (v, jobs) = jobsOf(call())
       assert(new java.io.File(root, s"v=$v").list().isEmpty,
@@ -1617,7 +1642,7 @@ class SnapshotSpec extends SparkSuite {
     assert(ran == cases.map(c => c._1 -> c._3))
     val clone = freshTable() + "/clone"
     val (cv, cloneJobs) = jobsOf(Snapshot.shallowClone(spark, root, clone))
-    assert(cloneJobs == 2, s"shallowClone ran $cloneJobs jobs, pinned 2")
+    assert(cloneJobs == 0, s"shallowClone ran $cloneJobs jobs, pinned 0")
     assert(new java.io.File(clone, s"v=$cv").list().isEmpty)
     assert(Snapshot.readCurrent(spark, clone).columns.toSeq == Seq("k", "v2"))
     assert(Snapshot.currentRowCount(spark, clone) == 1000L)
@@ -1626,31 +1651,41 @@ class SnapshotSpec extends SparkSuite {
   test("sidecars above one split keep the distributed scan, with the driver branch's files and rows") {
     val root = sidecarTable()
     val v = Snapshot.currentVersion(spark, root).get
-    def sidecarReads() = (
-      Snapshot.manifestFiles(spark, root, v).get.sorted,
-      Snapshot.prunedFiles(spark, root, v, "k", lit(100L), lit(450L)).sorted,
-      Snapshot.filesForPoint(spark, root, v, "v", vOf(124L)).sorted)
+    val m = Snapshot.metaOf(spark, root, v)
+    // the inventory and the range prune read the entry alone; the
+    // point lookup reads the bloom payloads the actions name
+    def entryReads() = (
+      Snapshot.fileInventory(spark, root, v).map(_._1).sorted,
+      Snapshot.prunedFiles(spark, root, v, "k", lit(100L), lit(450L)).sorted)
+    def pointRead() = Snapshot.filesForPoint(spark, root, v, "v", vOf(124L)).sorted
     def live() = Snapshot.readCurrent(spark, root)
     def liveRows() =
       live().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val (onDriver, driverJobs) = jobsOf(sidecarReads())
+    val (onDriver, driverJobs) = jobsOf((entryReads(), pointRead()))
     assert(driverJobs == 0, s"driver-branch sidecar reads ran $driverJobs jobs")
-    assert(onDriver._1.size >= 8 && onDriver._2.nonEmpty && onDriver._3.nonEmpty)
+    assert(onDriver._1._1.size >= 8 && onDriver._1._2.nonEmpty && onDriver._2.nonEmpty)
     val driverRows = liveRows()
     assert(driverRows.size == 900 && !live().inputFiles.exists(_.contains("/_dv/")))
-    // every sidecar the reads resolve is larger than the forced split
+    // every payload the reads resolve (the two bloom payloads, the
+    // deletion vector) is larger than the forced split
     val split = 512L
-    Seq("_manifest", "_stats", "_dv").foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(s"$root/$d/v=$v")
+    val payloads = m.files.flatMap(_.bloom).distinct ++ m.dv.map(_.path)
+    assert(payloads.map(_.split('/').takeRight(2).mkString("/")).sorted ==
+      Seq("_bloom/v=1", "_bloom/v=2", "_dv/v=3"), payloads)
+    payloads.foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
       val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
-      assert(bytes > split, s"$d/v=$v is only $bytes B")
+      assert(bytes > split, s"$d is only $bytes B")
     }
     withConf("spark.sql.files.maxPartitionBytes", split.toString) {
-      val (scanned, scanJobs) = jobsOf(sidecarReads())
-      assert(scanJobs >= 3, s"above one split each read scans: $scanJobs jobs")
-      assert(scanned == onDriver)
-      // the DV-applied read anti-joins a scanned sidecar
+      val (entry, entryJobs) = jobsOf(entryReads())
+      assert(entryJobs == 0 && entry == onDriver._1,
+        s"entry reads ran $entryJobs jobs above one split")
+      val (scanned, scanJobs) = jobsOf(pointRead())
+      assert(scanJobs >= 1, s"above one split the bloom probe scans: $scanJobs jobs")
+      assert(scanned == onDriver._2)
+      // the DV-applied read anti-joins a scanned payload
       assert(live().inputFiles.exists(_.contains("/_dv/")))
       assert(liveRows() == driverRows)
     }
@@ -1707,10 +1742,11 @@ class SnapshotSpec extends SparkSuite {
       Snapshot.readCurrent(spark, root).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
     val (append, purge, rows) = commits(sidecarTable())
-    // 8 and 10 while each distinct of the sidecar's files ran two jobs
-    // (once in the append, twice in purgeDv) and each fresh-stats scan
-    // inferred its schema in one more
-    assert((append, purge) == (5, 5),
+    // the append's jobs are its data write and its fresh bloom stats;
+    // it references the DV payload as it stands. purgeDv takes the
+    // tombstoned files from the entry's per-file counts: its jobs are
+    // the DV-filtered rewrite and the fresh bloom stats
+    assert((append, purge) == (3, 4),
       s"append ran $append jobs, purgeDv $purge")
     assert(rows.size == 901)
     // above one split the distinct stays distributed, with the same rows
@@ -1719,5 +1755,15 @@ class SnapshotSpec extends SparkSuite {
       val (bigAppend, bigPurge, bigRows) = commits(root)
       assert(bigAppend > append && bigPurge > purge && bigRows == rows)
     }
+    // an append references the MOR delete's payload as it stands, and
+    // vacuum keeps that payload for the live entry that names it
+    val kept = sidecarTable()
+    Snapshot.appendCommit(Seq((2000L, 1L)).toDF("k", "v"), kept)
+    val swept = Snapshot.vacuum(spark, kept, retain = 1)
+    assert(swept.contains("_log/v=3.json") && exists(kept, "_dv/v=3") &&
+      !exists(kept, "_dv/v=4"), s"swept $swept")
+    val left = Snapshot.readCurrent(spark, kept).collect().map(_.getLong(0))
+    assert(left.length == 901 && !left.exists(k => k < 1000 && k % 10 == 3))
+    assert(Snapshot.currentRowCount(spark, kept) == 901L)
   }
 }
