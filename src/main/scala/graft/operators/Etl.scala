@@ -213,10 +213,11 @@ object Etl {
     val table = graft.util.Scratch.dir("graft_merge_")
     val orders = Tables.orders(spark, sfDir)
     // Both the initial load and the merge are SNAPSHOT commits
-    // ([[Snapshot]]): each writes an immutable v=N directory and then
-    // atomically swaps the head pointer, so a reader concurrent with
-    // the merge sees the pre-merge table until the single rename — not
-    // a half-merged directory (crash anatomy proven in SnapshotSpec).
+    // ([[Snapshot]]): each writes its files into a private attempt
+    // directory and then atomically puts its log entry, so a reader
+    // concurrent with the merge sees the pre-merge table until that one
+    // put — not a half-merged directory (crash anatomy proven in
+    // SnapshotSpec).
     Snapshot.commit(orders, table)
     // change batch: every 10th key gets a repriced total (+1000, exact)
     val changes = orders.filter(col("o_orderkey") % 10 === 0)

@@ -3,50 +3,39 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Poor-man's ACID table commits over plain parquet: every write lands
-  * in a fresh immutable `v=N` snapshot directory, and a one-line
-  * `_CURRENT` manifest names the live version. The manifest is the ONLY
-  * mutable object and it changes via an atomic rename, so a reader
-  * either sees the old snapshot or the new one — never a half-written
-  * merge. (The same pointer-swap commit protocol Delta/Iceberg build
-  * their logs on, reduced to a single head pointer; superseded versions
-  * stay readable by number or instant — [[readVersion]], [[readAsOf]] —
-  * until [[vacuum]] collects them.) Each version is described whole by
-  * one log entry, `_log/v=N.json` ([[Meta]]), written before the swap:
-  * its metadata, an action per live data file with the file's stats,
-  * and the reference to its deletion vector. A reader opens that entry
-  * and the files it names, nothing else.
+/** Poor-man's ACID table commits over plain parquet, on Delta's log
+  * protocol (Armbrust et al., VLDB 2020, §3): version N IS its log
+  * entry, `_log/v=N.json` ([[Meta]]) — the version's metadata, an
+  * action per live data file with the file's stats, and the reference
+  * to its deletion vector. A reader opens that entry and the files it
+  * names, nothing else; superseded versions stay readable by number or
+  * instant — [[readVersion]], [[readAsOf]] — until [[vacuum]] collects
+  * them.
   *
-  * Concurrent writers serialize through a VERSION CLAIM: before writing
-  * `v=N`, a committer must win `_claims/N` via an atomic
-  * create-exclusive (NameNode-atomic rename-WITHOUT-overwrite on HDFS;
-  * kernel-atomic O_EXCL create on `file:` URIs, where Hadoop's rename
-  * is only check-then-act) — exactly one racing writer succeeds, every
-  * loser observes the conflict and retries against the new state
-  * instead of silently overwriting the winner's data directory and
-  * pointer (the pre-claim protocol's failure mode). A won claim is
-  * additionally REFUSED if the version was already decided (data dir
-  * present or pointer ≥ it), so claim-file GC can never re-open a
-  * committed version. Read-modify-write commits ([[mergeCommit]])
-  * claim exactly `pointer+1`, which makes them serializable: winning
-  * that claim proves no other committer can finalize `pointer+1`, so
-  * the base the merge read from is the true predecessor snapshot. The
-  * pointer swap itself runs under a leased `_ptrlock` critical section
-  * so committers of DIFFERENT versions cannot interleave their
-  * read-compare-rename and regress the pointer.
+  * The commit is ONE put-if-absent of the complete entry at `head+1`
+  * ([[graft.util.Lease.createExclusive]]: a link of a whole temp file on
+  * the local FS, a no-overwrite rename on HDFS). Whoever creates the
+  * file owns the version, so versions are dense (1..head): nobody can
+  * put N+1 before N exists. A commit first writes its data into a
+  * directory private to the attempt, `_data/<uuid>`, never shared with a
+  * racing writer, then puts. A lost put means a live writer committed:
+  * read-modify-write commits drop their attempt and replan on the new
+  * head (so they are serializable); blind commits keep it and re-put on
+  * top of the winner when the head still binds their batch the same
+  * way (so they are last-writer-wins, and no row is written twice).
+  * `_CURRENT` is a HINT, rewritten after the put: [[currentVersion]]
+  * probes the entries above it, so a stale or missing hint makes a read
+  * slower, never wrong.
   *
   * Crash anatomy (proven in SnapshotSpec):
-  *  - crash while writing `v=N+1` → pointer still names `v=N`; the
-  *    orphan directory and its record are invisible to readers (they
-  *    never list, they follow the pointer and open only that version's
-  *    record) and the next commit claims a HIGHER version, never
-  *    reusing the orphan's name for different content.
-  *  - crash between finishing `v=N+1` and the pointer swap → same:
-  *    readers stay on `v=N`; the completed-but-unreferenced snapshot is
-  *    garbage to be collected.
-  *  - the swap itself is a single metadata-atomic rename (HDFS
-  *    FileContext rename-OVERWRITE; CREATE+rename on the local FS), so
-  *    there is no window where `_CURRENT` is missing or truncated.
+  *  - crash before the put → the attempt directory is named by no entry;
+  *    readers never list, so it is invisible, the next commit puts the
+  *    same version number on top of the old head at once (nothing waits
+  *    for the dead writer), and [[vacuum]] collects the directory once
+  *    it is older than its retention.
+  *  - crash after the put, before the hint → committed: the probe finds
+  *    the entry.
+  *  - the put itself is atomic: an entry is never seen partly written.
   *
   * Reference had no table format at all (overwrite-only,
   * `server.py:53-54`); this gives the MERGE/CDC operators (`of4`/`of5`
@@ -58,24 +47,35 @@ object Snapshot {
   private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The live version, or None for an empty/new table. */
+  /** The live version, or None for an empty/new table: the `_CURRENT`
+    * hint, then a probe of the entries above it until one is absent —
+    * one `exists` when the hint is fresh. Entries are never deleted
+    * ([[vacuum]] shrinks a collected one to its header), so the probe
+    * never stops at a gap. */
   def currentVersion(spark: SparkSession, root: String): Option[Long] = {
     val ptr = new org.apache.hadoop.fs.Path(root, Pointer)
     val fs = fsOf(spark, ptr)
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong)
-      finally in.close()
-    }
+    var v =
+      try {
+        val in = fs.open(ptr)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
+        finally in.close()
+      } catch { case _: java.io.FileNotFoundException => 0L }
+    while (isFile(fs, recordPath(root, v + 1))) v += 1
+    Option.when(v > 0)(v)
   }
+
+  private def isFile(fs: org.apache.hadoop.fs.FileSystem,
+                     p: org.apache.hadoop.fs.Path): Boolean =
+    try fs.getFileStatus(p).isFile
+    catch { case _: java.io.FileNotFoundException => false }
 
   /** `input_file_name`-format URI for a listed file. The local FS
     * prints `file:/x` from `Path.toString` but `file:///x` from the
     * scan's `input_file_name` — one canonical form keeps file actions,
     * bloom payload rows and tombstones joinable (schemes with an
     * authority, e.g. `hdfs://nn/x`, already agree). */
-  private def canonFile(p: org.apache.hadoop.fs.Path): String = {
+  private[graft] def canonFile(p: org.apache.hadoop.fs.Path): String = {
     val s = p.toString
     if (s.startsWith("file:/") && !s.startsWith("file://"))
       "file://" + s.stripPrefix("file:")
@@ -83,7 +83,7 @@ object Snapshot {
   }
 
   /** `rel` under `root`, qualified, in [[canonFile]] form: how an entry
-    * names a directory of the table (a payload, a version directory). */
+    * names a directory of the table (an attempt directory). */
   private def pathOf(spark: SparkSession, root: String, rel: String): String = {
     val p = new org.apache.hadoop.fs.Path(root, rel)
     canonFile(fsOf(spark, p).makeQualified(p))
@@ -94,10 +94,35 @@ object Snapshot {
     file.substring(0, file.lastIndexOf('/'))
 
   private val LogDir = "_log"
-  private val BloomDir = "_bloom"
+
+  /** Every commit attempt's private directory lives in `_data`, named
+    * by a fresh UUID: two writers racing for one version never share
+    * one. Its payloads live under `_payload/` inside it (Spark's
+    * listing skips `_`-prefixed children, so a directory read of the
+    * attempt returns only its data files). */
+  private val DataDir = "_data"
+
+  /** The payload directory of kind `kind` (`bloom`, `dv`) of attempt
+    * directory `dir`. */
+  private def payloadOf(dir: String, kind: String): String =
+    s"$dir/_payload/$kind"
+
+  /** The attempt directory (`…/_data/<uuid>`) a file or payload path
+    * lives in. */
+  private def attemptOf(path: String): String = {
+    val i = path.lastIndexOf(s"/$DataDir/")
+    val j = if (i < 0) -1 else path.indexOf('/', i + DataDir.length + 2)
+    if (j < 0) path else path.substring(0, j)
+  }
 
   /** Version `v`'s LOG ENTRY, `_log/v=N.json`: the complete description
-    * of the version, in one driver-side file.
+    * of the version, in one driver-side file — and the commit itself.
+    *  - `time`: the commit's wall-clock millis, `max(now, prev + 1)`
+    *    over the version below it, so strictly increasing in version
+    *    (the axis of [[readAsOf]]).
+    *  - `dir`: the attempt directory the version added its data files
+    *    to; None when it added none (a metadata-only commit, or a MOR
+    *    delete whose attempt holds only its deletion vector).
     *  - `schema`: the PHYSICAL schema. A version whose files mix
     *    generations (old files without a later-added column) is read
     *    with it EXPLICITLY, so parquet fills the missing columns with
@@ -108,21 +133,20 @@ object Snapshot {
     *  - `gen`: the [[commitGenerated]] rule `(gen, base, bucket)`.
     *  - `files`: one [[FileAction]] per live data file — the version's
     *    whole file set, wherever the files live (carried files stay in
-    *    the directory of the version that wrote them).
+    *    the directory of the attempt that wrote them).
     *  - `stats` / `blooms`: the physical columns every action carries
     *    `[min, max]` bounds for, and the columns with a bloom sketch
     *    per file.
     *  - `dv`: the deletion vector ([[DvRef]]), if any row is tombstoned.
     *
-    * Every commit writes the COMPLETE entry of its version inside its
-    * claim, before the pointer swap: read-modify-write commits copy the
-    * head's entry and apply their edit; blind commits copy the metadata
-    * of the head they validated their batch against, so they are
-    * last-writer-wins for metadata exactly as for data. A reader opens
-    * only the entry of the version it reads — never a listing, never
-    * another version's entry — so an entry a never-published version
-    * left behind is invisible to every other version, and [[vacuum]]
-    * collects it with its data directory. */
+    * Read-modify-write commits copy the head's entry and apply their
+    * edit; blind commits copy the metadata of the head they validated
+    * their batch against, so they are last-writer-wins for metadata
+    * exactly as for data. A reader opens only the entry of the version
+    * it reads — never a listing, never another version's entry. Once
+    * [[vacuum]] collects a version, its entry shrinks to its HEADER,
+    * `{time, dir}`: the record of when the version committed and where
+    * its data was, which outlives the data. */
   private[graft] final case class Meta(
       schema: StructType,
       constraints: Seq[(String, String)] = Nil,
@@ -132,7 +156,9 @@ object Snapshot {
       files: Seq[FileAction] = Nil,
       stats: Seq[String] = Nil,
       blooms: Seq[String] = Nil,
-      dv: Option[DvRef] = None) {
+      dv: Option[DvRef] = None,
+      time: Long = 0L,
+      dir: Option[String] = None) {
 
     /** The physical name behind a logical column (the name file
       * actions and parquet footers know it by). */
@@ -155,13 +181,14 @@ object Snapshot {
   /** One live data file of a version: its path ([[canonFile]] form),
     * bytes, rows, `[min, max]` per stats column of the entry (Catalyst
     * internal values, both NULL when the file holds no non-NULL value
-    * there), and on a bloom table the payload `_bloom/v=K` holding its
-    * sketches. A carry copies the action verbatim. */
+    * there), and on a bloom table the bloom payload of the attempt that
+    * wrote it, holding its sketches. A carry copies the action
+    * verbatim. */
   private[graft] final case class FileAction(path: String, size: Long,
       rows: Long, bounds: Seq[(Any, Any)] = Nil, bloom: Option[String] = None)
 
-  /** A version's deletion vector: the payload `_dv/v=K` of tombstone
-    * rows `(file, row_index)` and the tombstone count per file. */
+  /** A version's deletion vector: the payload of tombstone rows
+    * `(file, row_index)` and the tombstone count per file. */
   private[graft] final case class DvRef(path: String, tombs: Map[String, Long])
 
   private def recordPath(root: String, v: Long) =
@@ -215,9 +242,8 @@ object Snapshot {
     }
   }
 
-  /** Write version `v`'s entry; empty metadata fields are left out. */
-  private def writeMeta(spark: SparkSession, root: String, v: Long,
-                        m: Meta): Unit = {
+  /** Entry `m` as JSON text; empty metadata fields are left out. */
+  private def entryText(m: Meta): String = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods.{compact => jsonText, parse, render}
     def pairs(ps: Seq[(String, String)]): JValue =
@@ -232,7 +258,8 @@ object Snapshot {
         }.toList)) ++
         f.bloom.map("bloom" -> JString(_)))
     }
-    val fields = List("schema" -> parse(m.schema.json)) ++
+    val fields = headerFields(m.time, m.dir) ++
+      List("schema" -> parse(m.schema.json)) ++
       Option.when(m.constraints.nonEmpty)("constraints" -> pairs(m.constraints)) ++
       Option.when(m.colmap.nonEmpty)("colmap" -> pairs(m.colmap)) ++
       Option.when(m.dropped.nonEmpty)("dropped" -> names(m.dropped.toSeq.sorted)) ++
@@ -245,25 +272,62 @@ object Snapshot {
       m.dv.map(d => "dv" -> JObject("path" -> JString(d.path),
         "tombs" -> JObject(d.tombs.toList.sorted.map { case (f, n) =>
           f -> (JLong(n): JValue) })))
-    val p = recordPath(root, v)
-    val out = fsOf(spark, p).create(p, true)
-    try out.write(jsonText(render(JObject(fields))).getBytes("UTF-8"))
-    finally out.close()
+    jsonText(render(JObject(fields)))
   }
 
-  /** Version `v`'s entry. An entry that exists but does not parse is
-    * corruption or format drift, never "no metadata": it fails loudly
-    * with the evidence. */
-  private[graft] def metaOf(spark: SparkSession, root: String, v: Long): Meta = {
+  private def headerFields(time: Long, dir: Option[String])
+      : List[(String, org.json4s.JValue)] =
+    ("time" -> org.json4s.JLong(time)) :: dir.map(d => "dir" -> org.json4s.JString(d)).toList
+
+  /** Version `v`'s entry, parsed, or None when there is none. Text that
+    * does not parse is corruption or format drift, never "no entry": it
+    * fails loudly with the evidence. */
+  private def entryJson(spark: SparkSession, root: String,
+                        v: Long): Option[org.json4s.JValue] = {
+    val p = recordPath(root, v)
+    val json =
+      try {
+        val in = fsOf(spark, p).open(p)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      } catch { case _: java.io.FileNotFoundException => return None }
+    try Some(org.json4s.jackson.JsonMethods.parse(json))
+    catch { case scala.util.control.NonFatal(e) =>
+      throw new IllegalStateException(s"malformed metadata record $p: $json", e) }
+  }
+
+  /** The `(time, dir)` header every entry starts with. */
+  private def headerOf(j: org.json4s.JValue): (Long, Option[String]) = {
     import org.json4s._
-    import org.json4s.jackson.JsonMethods.{compact => jsonText, parse, render}
+    (j \ "time", j \ "dir") match {
+      case (JInt(t), JNothing) => (t.toLong, None)
+      case (JInt(t), JString(d)) => (t.toLong, Some(d))
+      case _ => throw new IllegalStateException(s"malformed entry header: $j")
+    }
+  }
+
+  private def isHeaderOnly(j: org.json4s.JValue): Boolean =
+    (j \ "schema") == org.json4s.JNothing
+
+  /** Version `v`'s entry. A version with no entry, or one [[vacuum]]
+    * collected (its entry is a header), fails fast with the retained
+    * inventory rather than a bare path error. */
+  private[graft] def metaOf(spark: SparkSession, root: String, v: Long): Meta =
+    metaFrom(root, v, entryJson(spark, root, v).filterNot(isHeaderOnly).getOrElse {
+      val have = logVersions(spark, root)
+        .filter(u => entryJson(spark, root, u).exists(!isHeaderOnly(_)))
+      throw new java.util.NoSuchElementException(
+        s"snapshot $root has no version $v (vacuumed?); " +
+          s"retained: ${have.map(u => s"v=$u").mkString(", ")}")
+    })
+
+  /** Version `v`'s entry from its parsed JSON `j`. */
+  private def metaFrom(root: String, v: Long, j: org.json4s.JValue): Meta = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.{compact => jsonText, render}
     import scala.util.control.NonFatal
     val p = recordPath(root, v)
-    val in = fsOf(spark, p).open(p)
-    val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-               finally in.close()
     def malformed(cause: Throwable = null): Nothing =
-      throw new IllegalStateException(s"malformed metadata record $p: $json", cause)
+      throw new IllegalStateException(s"malformed metadata record $p: ${jsonText(render(j))}", cause)
     def pairs(j: JValue): Seq[(String, String)] = j match {
       case JNothing => Nil
       case JObject(fs) => fs.map {
@@ -284,7 +348,7 @@ object Snapshot {
       case JInt(n) => n.toLong
       case _ => malformed()
     }
-    val j = try parse(json) catch { case NonFatal(e) => malformed(e) }
+    val (time, dir) = try headerOf(j) catch { case NonFatal(e) => malformed(e) }
     val schema =
       try org.apache.spark.sql.types.DataType
         .fromJson(jsonText(render(j \ "schema"))).asInstanceOf[StructType]
@@ -332,7 +396,7 @@ object Snapshot {
             Some(DvRef(path, ts.map { case (f, n) => f -> long(n) }.toMap))
           case _ => malformed()
         }
-      })
+      }, time, dir)
   }
 
   /** ADD-COLUMN evolution: base columns keep their position, batch-only
@@ -357,10 +421,9 @@ object Snapshot {
   }
 
   /** A commit rejected by a CHECK constraint: the constraint's name
-    * plus how many of the batch's rows failed it. The version
-    * directory written before validation stays an unreferenced orphan
-    * (the standard crash anatomy — readers follow the pointer and
-    * never see it; [[vacuum]] collects it). */
+    * plus how many of the batch's rows failed it. The commit deletes
+    * the attempt directory it wrote before validation and puts
+    * nothing. */
   final class ConstraintViolation(val constraint: String,
                                   val nViolations: Long, msg: String)
     extends IllegalArgumentException(msg)
@@ -390,25 +453,24 @@ object Snapshot {
     }
   }
 
-  /** Enforce the base version's CHECK constraints (`m`, its record) on
-    * the parquet just written into `v=next`, BEFORE the pointer swap —
-    * reading back the written files costs
-    * one column-pruned scan of the BATCH and never re-executes the
-    * input plan; a violation throws and the orphaned directory never
-    * becomes visible. */
+  /** Enforce the base version's CHECK constraints (`m`, its entry) on
+    * the parquet just written into attempt directory `dir`, BEFORE the
+    * put — reading back the written files costs one column-pruned scan
+    * of the BATCH and never re-executes the input plan; a violation
+    * throws and nothing is put. */
   private def enforceWritten(spark: SparkSession, root: String,
-                             next: Long, base: Long, m: Meta): Unit = {
+                             dir: String, m: Meta): Unit = {
     if (m.constraints.isEmpty) return
     // constraints are authored in LOGICAL names; the written files are
     // physical — evaluate on the logical view ([[renameColumn]] refuses
     // to rename a column an active constraint references)
     val bad = violationCounts(
-      toLogical(spark.read.parquet(s"$root/v=$next"), m.colmap),
+      toLogical(spark.read.parquet(dir), m.colmap),
       m.constraints).filter(_._2 > 0)
     bad.headOption.foreach { case (n, c) =>
       throw new ConstraintViolation(n, c,
         s"commit to $root rejected: CHECK constraint `$n` failed on " +
-          s"$c row(s); pointer stays on v=$base")
+          s"$c row(s); nothing committed")
     }
   }
 
@@ -449,19 +511,14 @@ object Snapshot {
                                    v: Long): Seq[(String, Long)] =
     metaOf(spark, root, v).files.map(f => (f.path, f.size))
 
-  /** The paths a read of version `v` (entry `m`) passes to the parquet
-    * reader: the version's own directory when every file lives there (a
-    * self-contained version, and a version with no file, whose empty
-    * directory the recorded schema reads as an empty frame), otherwise
-    * the files. One root path for a self-contained version keeps its
-    * read below Spark's parallel-listing threshold whatever its file
-    * count. */
-  private def scanPaths(spark: SparkSession, root: String, v: Long,
-                        m: Meta): Seq[String] = {
-    val own = pathOf(spark, root, s"v=$v")
-    if (m.files.forall(f => parentOf(f.path) == own)) Seq(s"$root/v=$v")
-    else m.files.map(_.path)
-  }
+  /** The paths a read of entry `m` passes to the parquet reader: the
+    * version's own attempt directory when every file lives there (a
+    * self-contained version), otherwise the files. One root path for a
+    * self-contained version keeps its read below Spark's
+    * parallel-listing threshold whatever its file count. */
+  private def scanPaths(m: Meta): Seq[String] =
+    m.dir.filter(d => m.files.forall(f => parentOf(f.path) == d))
+      .fold(m.files.map(_.path))(Seq(_))
 
   /** Parquet reader pinned to the version's RECORDED physical schema.
     * Every file-granular read path must go through this: a raw
@@ -474,17 +531,15 @@ object Snapshot {
                          m: Meta): org.apache.spark.sql.DataFrameReader =
     spark.read.schema(m.schema)
 
-  /** Version `v` (entry `m`) in PHYSICAL names with its tombstones
+  /** The version of entry `m` in PHYSICAL names with its tombstones
     * applied. */
-  private def readPhysical(spark: SparkSession, root: String, v: Long,
-                           m: Meta): DataFrame =
+  private def readPhysical(spark: SparkSession, m: Meta): DataFrame =
     // merge-on-read tombstones key on the physical scan's _metadata
-    applyDv(spark, m, physReader(spark, m).parquet(scanPaths(spark, root, v, m): _*))
+    applyDv(spark, m, physReader(spark, m).parquet(scanPaths(m): _*))
 
-  /** Version `v` (record `m`) in LOGICAL names. */
-  private def readResolved(spark: SparkSession, root: String, v: Long,
-                           m: Meta): DataFrame =
-    toLogical(readPhysical(spark, root, v, m), m.colmap)
+  /** The version of entry `m` in LOGICAL names. */
+  private def readResolved(spark: SparkSession, m: Meta): DataFrame =
+    toLogical(readPhysical(spark, m), m.colmap)
 
   /** Version `m`'s empty result in logical names, built from the
     * recorded schema: no file is opened. */
@@ -500,37 +555,16 @@ object Snapshot {
         s"snapshot table $root has no committed version"))
 
   /** Read the live snapshot (the only read path — readers never list
-    * version directories, so unreferenced snapshots are invisible). */
-  def readCurrent(spark: SparkSession, root: String): DataFrame = {
-    val v = headOf(spark, root)
-    readResolved(spark, root, v, metaOf(spark, root, v))
-  }
-
-  /** Version `v`'s entry, after checking the version is retained:
-    * reading a collected version fails fast with the version inventory
-    * rather than a bare path error. A collected version whose directory
-    * [[vacuum]] keeps for a survivor's files has lost its entry, so it
-    * fails too, instead of reading the directory alone. */
-  private def retainedMeta(spark: SparkSession, root: String,
-                           v: Long): Meta = {
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
-    if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"v=$v")) ||
-        !fs.exists(recordPath(root, v))) {
-      val have = fs.listStatus(new org.apache.hadoop.fs.Path(root))
-        .map(_.getPath.getName).filter(_.matches("v=\\d+"))
-        .filter(n => fs.exists(recordPath(root, n.drop(2).toLong))).sorted
-      throw new java.util.NoSuchElementException(
-        s"snapshot $root has no version $v (vacuumed?); " +
-          s"retained: ${have.mkString(", ")}")
-    }
-    metaOf(spark, root, v)
-  }
+    * attempt directories, so unpublished attempts are invisible). */
+  def readCurrent(spark: SparkSession, root: String): DataFrame =
+    readResolved(spark, metaOf(spark, root, headOf(spark, root)))
 
   /** Time travel: read a specific retained version. Versions survive
     * until [[vacuum]] collects them (`retain` controls how many stay
-    * readable). */
+    * readable); a collected one fails fast with the retained
+    * inventory. */
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame =
-    readResolved(spark, root, v, retainedMeta(spark, root, v))
+    readResolved(spark, metaOf(spark, root, v))
 
   /** Exact row count of the LIVE version from its entry alone — the
     * table-format count every log supports (Delta's `numRecords`
@@ -565,9 +599,9 @@ object Snapshot {
     * maintenance pass every incrementally-ingested table needs (a CDC
     * stream of small merge batches leaves one file per shuffle
     * partition per commit; scan cost grows with file count, not data).
-    * Runs under the same claim protocol as any commit, so it is safe
-    * against concurrent writers — if a merge lands first, the claim is
-    * lost and the compaction retries on the new head. Readers are
+    * A read-modify-write commit like any other, so it is safe against
+    * concurrent writers — if a merge lands first, the put is lost and
+    * the compaction replans on the new head. Readers are
     * never disturbed: content is byte-identical by construction
     * (repartition only moves rows between files), and the old version
     * remains until vacuumed.
@@ -577,309 +611,148 @@ object Snapshot {
     * [1, shuffle.partitions]. A FIXED width is the of21-class scale
     * defect in maintenance form — 10× the rows through the same k
     * writer tasks; deriving it per-attempt (the referenced set changes
-    * if a concurrent commit wins the claim race) keeps rewrite
+    * if a concurrent commit wins the put) keeps rewrite
     * parallelism tracking volume. */
   def compact(spark: SparkSession, root: String,
               numFiles: Int = DerivedWidth): Long =
-    onHead(spark, root, "compact") { (base, m) => Some { next =>
+    onHead(spark, root, "compact") { (_, m) => Some { dir =>
       // the new version is self-contained, collapsing any reference
       // chain so vacuum can reclaim the referenced ancestors; the
       // tombstones die with the rewrite and the stats are re-derived
       val nF = if (numFiles > 0) numFiles
                else compactWidthFor(m.files.map(_.size).sum,
                  spark.sessionState.conf.numShufflePartitions)
-      readPhysical(spark, root, base, m).repartition(nF)
-        .write.mode("overwrite").parquet(s"$root/v=$next")
-      withFiles(spark, root, next, m, Nil)
+      readPhysical(spark, m).repartition(nF)
+        .write.mode("overwrite").parquet(dir)
+      withFiles(spark, dir, m, Nil)
     } }
 
-  private val ClaimsDir = "_claims"
+  /** A commit planned on a head: `write(dir)` writes the attempt's
+    * files into its directory `dir` (or nothing, for a metadata-only
+    * commit) and returns the new version's entry. `reput(entry, m2)`
+    * re-bases that entry on a newer head's entry `m2` without any job,
+    * or is None when the attempt must be dropped and replanned — always
+    * for a read-modify-write commit, whose plan read the old head. */
+  private final case class Plan(write: String => Meta,
+                                reput: (Meta, Meta) => Option[Meta] = (_, _) => None)
 
-  /** Highest version any artifact names: pointer, `v=*` data dirs
-    * (orphans included), and claims (in-flight or dead writers). The
-    * next blind commit goes strictly above ALL of them, so no name is
-    * ever reused for different content. Strict `\d+` matches: a stray
-    * non-numeric entry (editor artifact, leftover `v=tmp`) must not
-    * NumberFormatException every future commit. */
-  private def observedMax(spark: SparkSession, root: String): Long = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(spark, rootPath)
-    fs.mkdirs(rootPath)
-    val dirMax = fs.listStatus(rootPath).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("v=\\d+") => n.drop(2).toLong }
-      .maxOption.getOrElse(0L)
-    val claims = new org.apache.hadoop.fs.Path(root, ClaimsDir)
-    val claimMax =
-      if (!fs.exists(claims)) 0L
-      else fs.listStatus(claims).toSeq.map(_.getPath.getName)
-        .collect { case n if n.matches("\\d+") => n.toLong }
-        .maxOption.getOrElse(0L)
-    math.max(math.max(currentVersion(spark, root).getOrElse(0L), dirMax),
-      claimMax)
-  }
-
-  /** The atomic create-exclusive election primitive: exactly one racing
-    * creator of `p` succeeds — [[graft.util.Lease.createExclusive]]
-    * (the shared lease discipline; semantics documented there). */
-  private def createExclusive(spark: SparkSession,
-                              p: org.apache.hadoop.fs.Path,
-                              body: String): Boolean =
-    graft.util.Lease.createExclusive(
-      spark.sparkContext.hadoopConfiguration, p, body)
-
-  /** Claim exclusive right to commit version `v` via create-exclusive
-    * on `_claims/v`. Winning the file race is necessary but not
-    * sufficient: if `v` was ALREADY decided — its data directory exists,
-    * or the pointer has reached it — the claim is released and refused,
-    * so a delayed writer whose claim file was vacuumed away can never
-    * reclaim a committed version number and overwrite live data. */
-  /** Lost-claim wait: poll (20 ms) until the winner's pointer swap
-    * passes `base`, or 5 s. Returns true when the head ADVANCED — the
-    * loss was to a LIVE competitor and the table made global progress,
-    * so callers do not charge it against their retry budget (the
-    * two-JVM mergedelete race soak found the starvation this fixes: a
-    * hot sequential merge train re-claims within microseconds of each
-    * publish, and a neighbor polling at 20 ms lost 16 straight claims
-    * — exhausting a budget meant for STALLED claims). False — nothing
-    * moved in 5 s, a stale/dead claimant — is the budget-worthy case.
-    * An op may therefore wait out an arbitrarily long competitor
-    * train (each free retry is matched by ≥1 competitor commit, so
-    * the table is at maximal throughput), but can never spin without
-    * either global progress or budget burn: standard
-    * optimistic-concurrency liveness. */
-  private def awaitAdvance(spark: SparkSession, root: String,
-                           base: Long): Boolean =
-    graft.util.Lease.awaitProgress(5000L, base)(
-      currentVersion(spark, root).getOrElse(0L))
-
-  private[graft] def claimVersion(spark: SparkSession, root: String,
-                                  v: Long): Boolean = {
-    val claims = new org.apache.hadoop.fs.Path(root, ClaimsDir)
-    val fs = fsOf(spark, claims)
-    fs.mkdirs(claims)
-    val claim = new org.apache.hadoop.fs.Path(claims, v.toString)
-    if (!createExclusive(spark, claim, s"$v\n")) return false
-    val decided =
-      fs.exists(new org.apache.hadoop.fs.Path(root, s"v=$v")) ||
-        currentVersion(spark, root).getOrElse(0L) >= v
-    if (decided) { fs.delete(claim, false); return false }
-    true
-  }
-
-  /** Monotonic pointer swap: advance `_CURRENT` to `v` unless it already
-    * names something ≥ v (a concurrent committer of a HIGHER version may
-    * have swapped first; regressing the pointer would un-commit it).
-    * Returns whether the pointer now names `v`.
-    *
-    * The read-compare-rename must be a critical section: two committers
-    * of DIFFERENT versions interleaving (both read cur, higher renames
-    * first, lower renames second) would regress the pointer and
-    * un-commit a commit that already returned success. A create-
-    * exclusive `_ptrlock` serializes the swap; a holder that dies is
-    * recovered by breaking locks older than [[PtrLockTimeoutMs]] (the
-    * swap is two metadata ops — any live holder is long gone by then).
-    */
-  private val PtrLockTimeoutMs = 60000L
-
-  /** `expectedPrev >= 0` makes the swap a strict CAS: advance only if
-    * the pointer names exactly `expectedPrev` (0 = no pointer) at swap
-    * time. Commits that claimed MORE than one version ahead of the
-    * pointer need this — between their base observation and their swap
-    * another claimant below them can publish, and an unconditional
-    * "advance if higher" would then overwrite that commit's place in
-    * the carry chain with an entry that never carried it (the
-    * two-process bootstrap race the r9 soak caught: append's bootstrap
-    * claimed v2 over a concurrent v1 and published a full-replace —
-    * v1's batch vanished with every invariant green). */
-  private def pointerAdvance(spark: SparkSession, root: String,
-                             v: Long, expectedPrev: Long = -1L): Boolean = {
-    val lock = new org.apache.hadoop.fs.Path(root, "_ptrlock")
-    val fs = fsOf(spark, lock)
-    // Lease semantics ([[graft.util.Lease.acquire]]): a holder past the
-    // timeout has forfeited the lock (the critical section is two
-    // metadata ops; 60 s means a dead JVM). The break is
-    // IDENTITY-CHECKED against the observed modification time — an
-    // unconditional delete could race the forfeiting holder's own
-    // release and kill a FRESH committer's lock acquired in the gap
-    // (two swaps then interleave).
-    graft.util.Lease.acquire(spark.sparkContext.hadoopConfiguration,
-      lock, s"$v\n", PtrLockTimeoutMs)
-    try {
-      val cur = currentVersion(spark, root).getOrElse(0L)
-      if (cur >= v) false
-      else if (expectedPrev >= 0L && cur != expectedPrev) false
-      else {
-        setPointer(spark, root, v)
-        // still under _ptrlock, so markers are strictly serialized and
-        // the prev-marker read below sees the latest one
-        writeHistoryMarker(spark, root, cur, v)
-        true
-      }
-    } finally fs.delete(lock, false)
-  }
-
-  /** Attempt budget of a read-modify-write commit: attempts lost to a
-    * stalled claimant count against it, attempts lost to a live
-    * competitor do not ([[awaitAdvance]]). */
-  private val CommitAttempts = 16
-
-  private def lostClaims(op: String, root: String) =
-    new IllegalStateException(
-      s"$op on $root did not win a claim in $CommitAttempts attempts " +
-        "(live contention, or a crashed writer's stale claim — see vacuum)")
-
-  /** Undo an owned, unpublished claim on `next`: the directory and
-    * record first, so the claim protocol's already-decided check can
-    * never observe a released claim with a live dir, then the claim
-    * itself. */
-  private def releaseClaim(spark: SparkSession, root: String,
-                           next: Long): Unit = {
-    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
-    fs.delete(new org.apache.hadoop.fs.Path(root, s"v=$next"), true)
-    fs.delete(recordPath(root, next), false)
-    fs.delete(new org.apache.hadoop.fs.Path(root, s"$ClaimsDir/$next"), false)
-  }
-
-  /** Run a commit's `write` under its owned claim on `next`. A batch a
-    * CHECK constraint rejects must not wedge the table — read-modify-write commits can
-    * only ever claim `pointer+1`, so a burnt claim there would block
-    * them until vacuum — so a [[ConstraintViolation]] releases the
-    * claim before it propagates. */
-  private def writeClaimed(spark: SparkSession, root: String, next: Long)(
-      write: => Unit): Unit =
-    try write
-    catch { case v: ConstraintViolation =>
-      releaseClaim(spark, root, next)
-      throw v
-    }
-
-  /** THE read-modify-write commit loop: read the head and its record
-    * (an empty table fails with [[java.util.NoSuchElementException]]),
-    * let `plan` run its checks against them, claim exactly
-    * `pointer+1`, write, publish. `plan` returns None for a no-op (the
-    * head is returned and nothing is claimed) or `Some(write)`, which
-    * writes version `next`'s artifacts and returns its record — the
-    * head's, with the commit's edit — which the loop writes before it
-    * swaps the pointer. Winning `pointer+1` proves no other committer
-    * can finalize it, so the base `plan` read is the true predecessor —
-    * the serializability argument of every caller. A lost claim waits
-    * for the winner ([[awaitAdvance]]) and replans on the new head; a
-    * publish out-versioned by a blind commit replans too. */
-  private def onHead(spark: SparkSession, root: String, op: String)(
-      plan: (Long, Meta) => Option[Long => Meta]): Long = {
-    var attempt = 0
-    while (attempt < CommitAttempts) {
-      val base = currentVersion(spark, root).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"snapshot table $root has no committed version ($op)"))
-      plan(base, metaOf(spark, root, base)) match {
-        case None => return base
-        case Some(write) =>
-          val next = base + 1
-          if (claimVersion(spark, root, next)) {
-            writeClaimed(spark, root, next)(
-              writeMeta(spark, root, next, write(next)))
-            if (pointerAdvance(spark, root, next)) return next
-          } else if (awaitAdvance(spark, root, base)) attempt -= 1
-      }
-      attempt += 1
-    }
-    throw lostClaims(op, root)
-  }
-
-  /** The blind commit loop: claim strictly above every version any
-    * artifact names ([[observedMax]]), write, publish with a monotonic
-    * advance. `admit(next)` runs the checks for the candidate version
-    * before it is claimed; `write(next)` writes its artifacts and
-    * returns its record, written before the swap. Blind commits never
-    * wait: a lost claim simply moves to the next free version. */
-  private def blindClaim(spark: SparkSession, root: String, op: String)(
-      admit: Long => Unit)(write: Long => Meta): Long = {
-    var attempts = 0
+  /** THE commit loop, every commit kind's: read the head (None for an
+    * empty table) and its entry, `plan` against them (None is a no-op:
+    * the head is returned and nothing is written), write the attempt
+    * into a fresh `_data/<uuid>`, and put the entry at `head+1`
+    * ([[put]]). The put is the commit; the `_CURRENT` hint follows it.
+    * A lost put means a live writer committed that version, so there is
+    * nothing to wait for and no attempt budget: the plan's `reput`
+    * either re-bases the entry on the new head and puts again, keeping
+    * the attempt's files, or the attempt is deleted ([[discard]]) and
+    * the commit replans on the new head. A [[ConstraintViolation]]
+    * deletes the attempt and propagates. */
+  private def commitLoop(spark: SparkSession, root: String)(
+      plan: (Option[Long], Meta) => Option[Plan]): Long = {
+    var base = currentVersion(spark, root)
+    var m = base.fold(Meta(new StructType()))(metaOf(spark, root, _))
+    var planned: Option[(Plan, String, Meta)] = None
     while (true) {
-      val next = observedMax(spark, root) + 1
-      admit(next)
-      if (claimVersion(spark, root, next)) {
-        writeClaimed(spark, root, next)(
-          writeMeta(spark, root, next, write(next)))
-        pointerAdvance(spark, root, next)
+      val (p, dir, entry) = planned.getOrElse {
+        val p = plan(base, m).getOrElse(return base.get)
+        val dir = pathOf(spark, root, s"$DataDir/${java.util.UUID.randomUUID()}")
+        val entry =
+          try p.write(dir)
+          catch { case e: ConstraintViolation => discard(spark, dir); throw e }
+        (p, dir, entry)
+      }
+      val next = base.getOrElse(0L) + 1
+      val added = entry.files.exists(f => parentOf(f.path) == dir)
+      if (put(spark, root, next, entry.copy(
+            time = math.max(System.currentTimeMillis(), m.time + 1),
+            dir = Option.when(added)(dir)))) {
+        // the hint only speeds up the probe: a failed write of it
+        // leaves the commit, already published, intact
+        try setPointer(spark, root, next) catch { case _: java.io.IOException => () }
         return next
       }
-      attempts += 1
-      if (attempts > 64) throw new IllegalStateException(
-        s"$op to $root lost the version claim 64 times")
+      base = currentVersion(spark, root)
+      if (base.forall(_ < next)) throw new java.io.IOException(
+        s"${recordPath(root, next)} exists but is no committed entry")
+      m = metaOf(spark, root, base.get)
+      planned = p.reput(entry, m).map(e => (p, dir, e))
+      if (planned.isEmpty) discard(spark, dir)
     }
     -1L // unreachable
   }
 
-  private val HistoryDir = "_history"
+  /** The read-modify-write form of [[commitLoop]]: an empty table fails
+    * with [[java.util.NoSuchElementException]], and `plan` gets the head
+    * and its entry and returns None for a no-op or `Some(write)`. Only
+    * an entry put at exactly `head+1` commits, so the head `plan` read
+    * is the true predecessor — the serializability argument of every
+    * caller. */
+  private def onHead(spark: SparkSession, root: String, op: String)(
+      plan: (Long, Meta) => Option[String => Meta]): Long =
+    commitLoop(spark, root) { (base, m) =>
+      val b = base.getOrElse(throw new java.util.NoSuchElementException(
+        s"snapshot table $root has no committed version ($op)"))
+      plan(b, m).map(Plan(_))
+    }
 
-  /** One tiny marker per pointer swap: `_history/v=N` holding the
-    * commit's wall-clock millis — the timestamp axis for
-    * [[readAsOf]]. Written inside the `_ptrlock` critical section, so
-    * markers are serialized; monotonicity is enforced against the
-    * PREDECESSOR version's marker only (`max(now, prev+1)`) — an O(1)
-    * read per commit, never an O(commits) directory scan on the commit
-    * path. A crash between pointer swap and marker write loses that
-    * one version's timestamp: [[versionAsOf]] then resolves
-    * timestamps in the gap to the last MARKED predecessor — time
-    * travel degrades by one version, reads never break. Marker write
-    * failure itself is swallowed for the same reason: the commit has
-    * already happened (the pointer IS the truth); history is an index
-    * over it, not a participant. */
-  private def writeHistoryMarker(spark: SparkSession, root: String,
-                                 prev: Long, v: Long): Unit =
-    try {
-      val dir = new org.apache.hadoop.fs.Path(root, HistoryDir)
-      val fs = fsOf(spark, dir)
-      val prevTs =
-        if (prev <= 0) 0L
-        else readHistoryMarker(spark, root, prev).getOrElse(0L)
-      val ts = math.max(System.currentTimeMillis(), prevTs + 1)
-      val out = fs.create(new org.apache.hadoop.fs.Path(dir, s"v=$v"), true)
-      try out.write(s"$ts\n".getBytes("UTF-8")) finally out.close()
-    } catch { case _: java.io.IOException => () }
+  /** Publish entry `m` as version `v`: ONE put-if-absent of the
+    * complete entry ([[graft.util.Lease.createExclusive]]). Returns
+    * whether this call created it — whoever does owns version `v`. */
+  private def put(spark: SparkSession, root: String, v: Long, m: Meta): Boolean =
+    graft.util.Lease.createExclusive(spark.sparkContext.hadoopConfiguration,
+      recordPath(root, v), entryText(m))
 
-  private def readHistoryMarker(spark: SparkSession, root: String,
-                                v: Long): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root, s"$HistoryDir/v=$v")
+  /** Bytes this JVM wrote into attempts it then deleted after losing a
+    * put: the price of writing before the put, which a commit pays only
+    * under contention. */
+  private[graft] val discardedBytes = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Delete a lost or rejected attempt directory. */
+  private def discard(spark: SparkSession, dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
     val fs = fsOf(spark, p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.BufferedReader(
-          new java.io.InputStreamReader(in, "UTF-8"))
-        Option(buf.readLine()).map(_.trim.toLong)
-      } finally in.close()
+    if (fs.exists(p)) {
+      discardedBytes.addAndGet(fs.getContentSummary(p).getLength)
+      fs.delete(p, true)
     }
   }
 
-  /** The table's commit timeline: (version, commitTimeMillis) sorted by
-    * version — Delta's DESCRIBE HISTORY shape. O(commits) metadata
-    * listing; only [[versionAsOf]] and forensics read it, never the
-    * commit path. */
-  def commitHistory(spark: SparkSession, root: String): Seq[(Long, Long)] = {
-    val dir = new org.apache.hadoop.fs.Path(root, HistoryDir)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.matches("v=\\d+") => n.drop(2).toLong }
+  /** The versions of the log, oldest first (a listing of `_log`). */
+  private def logVersions(spark: SparkSession, root: String): Seq[Long] = {
+    val dir = new org.apache.hadoop.fs.Path(root, LogDir)
+    val listed =
+      try fsOf(spark, dir).listStatus(dir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    listed.map(_.getPath.getName)
+      .collect { case n if n.matches("v=\\d+\\.json") =>
+        n.stripPrefix("v=").stripSuffix(".json").toLong }
       .sorted
-      .flatMap(v => readHistoryMarker(spark, root, v).map(v -> _))
   }
 
+  /** Every entry of the log, oldest first: `(version, time, dir)` from
+    * each entry's header. */
+  private[graft] def logOf(spark: SparkSession,
+                           root: String): Seq[(Long, Long, Option[String])] =
+    logVersions(spark, root).flatMap { v =>
+      entryJson(spark, root, v).map(headerOf).map { case (t, d) => (v, t, d) }
+    }
+
+  /** The table's commit timeline: (version, commitTimeMillis) sorted by
+    * version — Delta's DESCRIBE HISTORY shape, read from the log alone
+    * (a collected version keeps its header). O(commits); only
+    * [[versionAsOf]] and forensics read it, never the commit path. */
+  def commitHistory(spark: SparkSession, root: String): Seq[(Long, Long)] =
+    logOf(spark, root).map { case (v, t, _) => (v, t) }
+
   /** The version the table was at, at wall-clock `tsMillis` — Delta's
-    * `TIMESTAMP AS OF`. Marker timestamps are strictly increasing in
-    * version (enforced at write), so this is the last marked version
-    * at or before the instant. Fails fast when the instant precedes
-    * the first commit, or the table predates history markers. */
+    * `TIMESTAMP AS OF`. Entry times are strictly increasing in version
+    * (enforced at the put), so this is the last version at or before
+    * the instant. Fails fast when the instant precedes the first
+    * commit, or the table is empty. */
   def versionAsOf(spark: SparkSession, root: String, tsMillis: Long): Long = {
     val h = commitHistory(spark, root)
     if (h.isEmpty) throw new java.util.NoSuchElementException(
-      s"snapshot table $root has no commit history " +
-        "(empty, or committed before history markers existed)")
+      s"snapshot table $root has no commit history")
     val eligible = h.filter(_._2 <= tsMillis)
     if (eligible.isEmpty) throw new java.util.NoSuchElementException(
       s"timestamp $tsMillis precedes the first commit of $root " +
@@ -889,39 +762,32 @@ object Snapshot {
 
   /** Timestamp time travel: [[readVersion]] at [[versionAsOf]] the
     * instant. Reading an instant whose version was [[vacuum]]ed fails
-    * fast with the retained inventory (history markers outlive their
-    * data on purpose — they are the audit log of WHEN the table
-    * changed, not a liveness promise). */
+    * fast with the retained inventory (headers outlive their data on
+    * purpose — they are the audit log of WHEN the table changed, not a
+    * liveness promise). */
   def readAsOf(spark: SparkSession, root: String,
                tsMillis: Long): DataFrame =
     readVersion(spark, root, versionAsOf(spark, root, tsMillis))
 
-  // Forfeited-`_ptrlock` recovery lives in
-  // [[graft.util.Lease.breakIfStillStale]] (steal-to-tombstone,
-  // identity re-check by mtime, hand-back of a fresh holder's lock);
-  // the monotonic compare inside the critical section bounds any
-  // residual three-party window to an adjacent-version regression,
-  // never a torn pointer.
-
-  /** Commit `df` as the next snapshot: claim a fresh version, write
-    * `v=N` fully, then swap the pointer atomically. Returns the
-    * committed version. Racing blind commits serialize through the
-    * claim: each gets its own version directory and the pointer ends on
-    * the highest (monotonic advance) — nobody overwrites anybody's
-    * files. Like the data, the metadata is last-writer-wins: the new
-    * record takes the batch's schema and copies the constraints,
-    * column map, dropped set and generation rule of the head the batch
-    * was validated against; an edit a concurrent commit made to the
-    * head in between is not carried. */
+  /** Commit `df` as the next snapshot: write it into a fresh attempt
+    * directory, then put the version's entry. Returns the committed
+    * version. Racing blind commits serialize through the put: each keeps
+    * its own attempt directory, a loser re-puts on top of the winner,
+    * and the last put is the head — nobody overwrites anybody's files.
+    * Like the data, the metadata is last-writer-wins: the new entry
+    * takes the batch's schema and copies the constraints, column map,
+    * dropped set and generation rule of the head the batch was
+    * validated against. When a lost put finds a head whose column map,
+    * dropped set or constraints differ, the batch is rewritten and
+    * revalidated against it ([[binding]]). */
   def commit(df: DataFrame, root: String): Long =
     commitInternal(df, root, Nil)
 
   /** [[commit]] plus per-file min/max/count stats over `statsCols` —
     * the data-skipping index every table format keeps (Delta's per-file
     * stats in its add actions, Iceberg's manifest column bounds). The
-    * bounds ride in the entry's file actions, written BEFORE the
-    * pointer swap, so any version the pointer names has its stats in
-    * place; they come from the written files' footers, or from one
+    * bounds ride in the entry's file actions, so any committed version
+    * has its stats in place; they come from the written files' footers, or from one
     * aggregate over only the files just written ([[freshActions]] — at
     * 100 TB this reads back one commit's files, not the table). Pair with a
     * range layout on the stats column (`repartitionByRange` +
@@ -949,32 +815,42 @@ object Snapshot {
     commitInternal(Layout.zorderCluster(df, c1, c2, nFiles, bits), root,
       Seq(c1, c2), bloomCols)
 
-  /** `gen` replaces the head's generation rule in the new record
+  /** What a blind commit's attempt was validated against on the head
+    * (entry `m`): the names it was written under, the retired names it
+    * was checked against, the constraints it was checked against, and
+    * the columns and types its fresh file actions carry stats for. A
+    * lost put re-puts the attempt on a new head only when this is
+    * unchanged. */
+  private def binding(m: Meta) = (m.colmap, m.dropped, m.constraints,
+    m.stats.map(c => c -> m.schema(c).dataType), m.blooms)
+
+  /** `gen` replaces the head's generation rule in the new entry
     * ([[commitGenerated]]). */
   private def commitInternal(df: DataFrame, root: String,
                              statsCols: Seq[String],
                              bloomCols: Seq[String] = Nil,
                              gen: Option[(String, String, Long)] = None): Long = {
     val spark = df.sparkSession
-    blindClaim(spark, root, "snapshot commit")(_ => ()) { next =>
-      // the live head's record binds the batch (a blind commit replaces
+    commitLoop(spark, root) { (_, hm) =>
+      // the live head's entry binds the batch (a blind commit replaces
       // whatever is current, so current's rules bind); a fresh table
-      // has no map and no constraints
-      val head = currentVersion(spark, root)
-      val hm = head.fold(Meta(new StructType()))(metaOf(spark, root, _))
-      // column mapping: the batch arrives in LOGICAL names — freeze
-      // it back to the table's physical names before parquet sees it
-      // (and the stats columns with it)
+      // has no map and no constraints. Column mapping: the batch
+      // arrives in LOGICAL names — freeze it back to the table's
+      // physical names before parquet sees it (and the stats columns
+      // with it)
       val physDf = toPhysical(df, hm.colmap)
-      physDf.write.mode("overwrite").parquet(s"$root/v=$next")
-      enforceWritten(spark, root, next, head.getOrElse(0L), hm)
-      withFiles(spark, root, next, hm.copy(schema = physDf.schema,
-        gen = gen.orElse(hm.gen), files = Nil, stats = statsCols.map(hm.physical),
-        blooms = bloomCols.map(hm.physical), dv = None), Nil)
+      Some(Plan(
+        dir => {
+          physDf.write.mode("overwrite").parquet(dir)
+          enforceWritten(spark, root, dir, hm)
+          withFiles(spark, dir, hm.copy(schema = physDf.schema,
+            gen = gen.orElse(hm.gen), files = Nil, stats = statsCols.map(hm.physical),
+            blooms = bloomCols.map(hm.physical), dv = None), Nil)
+        },
+        (e, m2) => Option.when(binding(m2) == binding(hm))(
+          e.copy(gen = gen.orElse(m2.gen)))))
     }
   }
-
-  private val DvDir = "_dv"
 
   /** The payload size up to which [[applyDv]] broadcasts the tombstone
     * relation; above it the anti-join falls back to a shuffle — the
@@ -1093,14 +969,16 @@ object Snapshot {
     spark.conf.getOption("graft.snapshot.bloomEstItems")
       .map(_.toLong).getOrElse(100000L)
 
-  /** The parquet data files directly under `dir`. */
+  /** The parquet data files directly under `dir` (none when nothing
+    * was written there). */
   private def parquetFiles(spark: SparkSession, dir: org.apache.hadoop.fs.Path)
       : Seq[org.apache.hadoop.fs.FileStatus] =
-    fsOf(spark, dir).listStatus(dir).toSeq
+    try fsOf(spark, dir).listStatus(dir).toSeq
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    catch { case _: java.io.FileNotFoundException => Nil }
 
   /** The file actions of `files`, the parquet a commit just wrote into
-    * `v=v`, read as the version's physical `schema` (a stats column a
+    * attempt directory `dir`, read as the version's physical `schema` (a stats column a
     * batch lacks reads NULL, so its bounds are NULL, the add-column
     * rule). Rows and `stats` bounds are exactly what parquet footers
     * already record, so they derive from METADATA ([[footerActions]]) —
@@ -1108,11 +986,11 @@ object Snapshot {
     * read-back is a full extra scan of every commit). Only the data
     * selects one aggregate over just these files instead: a stats
     * column that is not a plain int, or a bloom column (a sketch needs
-    * the values). A bloom aggregate is written as the version's bloom
-    * payload `_bloom/v=N`, which holds only these files (a carry never
-    * rewrites sketches), and read back on the driver for the bounds. A
-    * file holding no row gets NULL bounds and no sketch. */
-  private def freshActions(spark: SparkSession, root: String, v: Long,
+    * the values). A bloom aggregate is written as the attempt's bloom
+    * payload, which holds only these files (a carry never rewrites
+    * sketches), and read back on the driver for the bounds. A file
+    * holding no row gets NULL bounds and no sketch. */
+  private def freshActions(spark: SparkSession, dir: String,
                            files: Seq[org.apache.hadoop.fs.FileStatus],
                            schema: StructType, stats: Seq[String],
                            blooms: Seq[String]): Seq[FileAction] = {
@@ -1123,10 +1001,10 @@ object Snapshot {
       else footerActions(spark, files, schema, stats)
     footer.getOrElse {
       val aggs = statsAggs(spark, stats, blooms)
-      val agg = spark.read.schema(schema).parquet(s"$root/v=$v")
+      val agg = spark.read.schema(schema).parquet(dir)
         .groupBy(canonMetaPath(input_file_name()).as("file"))
         .agg(aggs.head, aggs.tail: _*)
-      val payload = Option.when(blooms.nonEmpty)(pathOf(spark, root, s"$BloomDir/v=$v"))
+      val payload = Option.when(blooms.nonEmpty)(payloadOf(dir, "bloom"))
       val rows = payload match {
         case None => agg.collect()
         case Some(p) =>
@@ -1142,8 +1020,8 @@ object Snapshot {
       }.toMap
       val listed = files.map(st => canonFile(st.getPath))
       val strays = byFile.keySet -- listed
-      require(strays.isEmpty, s"stats of version $v in $root name files " +
-        s"the version directory does not list (path form mismatch — " +
+      require(strays.isEmpty, s"stats of attempt $dir name files " +
+        s"the directory does not list (path form mismatch — " +
         s"canonMetaPath vs canonFile): ${strays.head}")
       files.zip(listed).map { case (st, f) =>
         byFile.get(f) match {
@@ -1301,16 +1179,16 @@ object Snapshot {
   def readCurrentPruned(spark: SparkSession, root: String, statsCol: String,
                         lo: org.apache.spark.sql.Column,
                         hi: org.apache.spark.sql.Column): DataFrame = {
-    val v = headOf(spark, root)
-    rangeRead(spark, root, v, metaOf(spark, root, v), Seq((statsCol, lo, hi)))
+    rangeRead(spark, metaOf(spark, root, headOf(spark, root)),
+      Seq((statsCol, lo, hi)))
   }
 
-  /** Read version `v` (entry `m`) filtered to `lo ≤ c ≤ hi` on every
+  /** Read the version of entry `m` filtered to `lo ≤ c ≤ hi` on every
     * dimension `(c, lo, hi)`, `c` a logical name. The files opened are
     * those whose bounds overlap every dimension the entry has stats
     * for; a dimension without stats prunes nothing, and with none the
     * read is the plain filtered read of the version. */
-  private def rangeRead(spark: SparkSession, root: String, v: Long, m: Meta,
+  private def rangeRead(spark: SparkSession, m: Meta,
                         dims: Seq[(String, org.apache.spark.sql.Column,
                           org.apache.spark.sql.Column)]): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -1318,7 +1196,7 @@ object Snapshot {
       col(name(c)) >= lo && col(name(c)) <= hi }.reduce(_ && _)
     val skipping = dims.filter(d => m.stats.contains(m.physical(d._1)))
     if (skipping.isEmpty)
-      readResolved(spark, root, v, m).filter(inRange(identity))
+      readResolved(spark, m).filter(inRange(identity))
     else {
       // physical files: prune and filter on the frozen physical names,
       // then present logical names
@@ -1345,8 +1223,7 @@ object Snapshot {
                            hi1: org.apache.spark.sql.Column,
                            c2: String, lo2: org.apache.spark.sql.Column,
                            hi2: org.apache.spark.sql.Column): DataFrame = {
-    val v = headOf(spark, root)
-    rangeRead(spark, root, v, metaOf(spark, root, v),
+    rangeRead(spark, metaOf(spark, root, headOf(spark, root)),
       Seq((c1, lo1, hi1), (c2, lo2, hi2)))
   }
 
@@ -1398,11 +1275,10 @@ object Snapshot {
   def readCurrentPoint(spark: SparkSession, root: String,
                        pointCol: String, value: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = headOf(spark, root)
-    val m = metaOf(spark, root, v)
+    val m = metaOf(spark, root, headOf(spark, root))
     val physCol = m.physical(pointCol)
     if (!m.blooms.contains(physCol))
-      readResolved(spark, root, v, m).filter(col(pointCol) === lit(value))
+      readResolved(spark, m).filter(col(pointCol) === lit(value))
     else {
       val files = pointFiles(spark, m, physCol, value)
       // definitively absent: no file can contain it
@@ -1413,43 +1289,45 @@ object Snapshot {
     }
   }
 
-  /** Atomic pointer swap: write `_CURRENT.tmp`, then rename over the
-    * pointer. FileContext's OVERWRITE rename is the atomic primitive on
-    * both HDFS and the local FS (plain FileSystem.rename refuses to
-    * replace an existing destination). */
+  /** Rewrite the `_CURRENT` hint to `v`. A concurrent writer may leave
+    * it one version behind; [[currentVersion]]'s probe covers that. */
   private[graft] def setPointer(spark: SparkSession, root: String,
-                                    v: Long): Unit = {
-    val ptr = new org.apache.hadoop.fs.Path(root, Pointer)
-    if ("file" == Option(ptr.toUri.getScheme).getOrElse("file")) {
-      // Local FS: Hadoop's ChecksumFs renames the data file and its
-      // .crc sidecar as TWO operations, so a concurrent pointer read
-      // between them dies with ChecksumException (seen in the racing-
-      // merge spec). NIO ATOMIC_MOVE with no sidecar at all is the
-      // actually-atomic local swap; any historical sidecar is removed
-      // so stale checksums can never shadow the moved content.
-      val dir = java.nio.file.Paths.get(
-        new org.apache.hadoop.fs.Path(root).toUri.getPath)
-      val tmp = dir.resolve(Pointer + ".tmp")
-      java.nio.file.Files.write(tmp, s"$v\n".getBytes("UTF-8"))
-      java.nio.file.Files.deleteIfExists(dir.resolve("." + Pointer + ".crc"))
-      java.nio.file.Files.move(tmp, dir.resolve(Pointer),
+                                v: Long): Unit =
+    replaceFile(spark, root, new org.apache.hadoop.fs.Path(root, Pointer), s"$v\n")
+
+  /** Replace file `p` of table `root` with `body` atomically: a temp
+    * file under `_log` (unique, so concurrent writers never share one),
+    * then a rename over `p`. FileContext's OVERWRITE rename is the
+    * atomic primitive on HDFS (plain FileSystem.rename refuses to
+    * replace an existing destination). On the local FS Hadoop's
+    * ChecksumFs renames the data file and its .crc sidecar as TWO
+    * operations, so a concurrent read between them dies with
+    * ChecksumException; NIO ATOMIC_MOVE with no sidecar at all is the
+    * actually-atomic local swap. */
+  private def replaceFile(spark: SparkSession, root: String,
+                          p: org.apache.hadoop.fs.Path, body: String): Unit = {
+    val tmp = new org.apache.hadoop.fs.Path(root,
+      s"$LogDir/.${p.getName}.${java.util.UUID.randomUUID()}.tmp")
+    if ("file" == Option(p.toUri.getScheme).getOrElse("file")) {
+      val nioTmp = java.nio.file.Paths.get(tmp.toUri.getPath)
+      java.nio.file.Files.createDirectories(nioTmp.getParent)
+      java.nio.file.Files.write(nioTmp, body.getBytes("UTF-8"))
+      java.nio.file.Files.move(nioTmp, java.nio.file.Paths.get(p.toUri.getPath),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     } else {
-      val tmp = new org.apache.hadoop.fs.Path(root, Pointer + ".tmp")
-      val fs = fsOf(spark, ptr)
-      val out = fs.create(tmp, true)
-      try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        ptr.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, ptr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      val out = fsOf(spark, tmp).create(tmp, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+      org.apache.hadoop.fs.FileContext.getFileContext(
+        p.toUri, spark.sparkContext.hadoopConfiguration)
+        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
   }
 
   /** Copy-on-write keyed MERGE as a snapshot commit: replace matching
     * keys with the change batch, keep the rest, commit the result as a
     * new version. Readers concurrent with the merge see the old
-    * snapshot until the single pointer swap. One keyed shuffle over the
+    * snapshot until the single put of the entry. One keyed shuffle over the
     * base (the change side is typically small and broadcasts).
     *
     * FILE-GRANULAR when the table carries per-file stats on the merge
@@ -1473,28 +1351,24 @@ object Snapshot {
     * NULL through the recorded-schema read, exactly as a rewritten
     * NULL would read).
     *
-    * Serializable under concurrent merges: the claim target is exactly
-    * `pointer+1`, so winning it proves the base snapshot read below is
-    * the true predecessor — no other committer can finalize that
-    * version. A loser waits for the winner's pointer swap and RETRIES
-    * the whole merge against the new head (its change batch is never
-    * silently dropped); if a concurrent blind [[commit]] out-versions
-    * the merge before its swap, the merge also retries. A claim held by
-    * a CRASHED writer stalls merges by design (nobody can prove the
-    * version won't appear) — the retry limit surfaces it and
-    * [[vacuum]] `clearStaleClaims=true` is the admin recovery. */
+    * Serializable under concurrent merges: only an entry put at exactly
+    * `head+1` commits, so a put that lands proves the base snapshot
+    * read below is the true predecessor. A loser drops its attempt and
+    * REPLANS the whole merge against the new head (its change batch is
+    * never silently dropped). A crashed writer blocks nothing: it put no
+    * entry, so the next merge takes the same version at once. */
   def mergeCommit(spark: SparkSession, root: String, changes: DataFrame,
                   key: String): Long =
-    onHead(spark, root, "mergeCommit") { (base, m) => Some { next =>
+    onHead(spark, root, "mergeCommit") { (base, m) => Some { dir =>
       // CHECK constraints: validate the CHANGE batch up front —
       // O(batch), and base rows were validated by their own commits,
       // so the merged result cannot introduce a violation elsewhere
-      // (nothing is written yet; the loop releases the claim)
+      // (nothing is written yet)
       violationCounts(changes, m.constraints)
         .filter(_._2 > 0).headOption.foreach { case (n, c) =>
           throw new ConstraintViolation(n, c,
             s"merge into $root rejected: CHECK constraint `$n` " +
-              s"failed on $c change row(s); pointer stays on v=$base")
+              s"failed on $c change row(s); head stays v=$base")
         }
       val cmap = m.colmap
       val physKey = m.physical(key)
@@ -1549,13 +1423,13 @@ object Snapshot {
               if (est.isValidLong) est.toLong else Long.MaxValue, cap)
           }
         toPhysical(merged, cmap).coalesce(width).write.mode("overwrite")
-          .parquet(s"$root/v=$next")
+          .parquet(dir)
         // untouched files ride by reference with their stats; the fresh
         // files' stats are derived and the recorded schema absorbs any
         // add-column evolution
-        withFiles(spark, root, next, m, untouched)
+        withFiles(spark, dir, m, untouched)
       } else {
-        val baseDf = readResolved(spark, root, base, m)
+        val baseDf = readResolved(spark, m)
         // allowMissingColumns: a change batch carrying a NEW column is
         // an add-column evolution (kept rows read NULL there), and a
         // batch without a recently-added column still merges (its rows
@@ -1566,11 +1440,11 @@ object Snapshot {
         // the merge is computed in LOGICAL names (changes and baseDf
         // both are); freeze back to physical before the write
         val physMerged = toPhysical(merged, cmap)
-        physMerged.write.mode("overwrite").parquet(s"$root/v=$next")
+        physMerged.write.mode("overwrite").parquet(dir)
         // the stats columns carry forward, re-derived over the rewrite
         // (same contract as compact: maintenance must not silently
         // kill data skipping)
-        withFiles(spark, root, next, m.copy(schema = physMerged.schema), Nil)
+        withFiles(spark, dir, m.copy(schema = physMerged.schema), Nil)
       }
     } }
 
@@ -1586,16 +1460,15 @@ object Snapshot {
     * selectivity.
     *
     * The carried actions keep their stats and the rewritten files'
-    * stats are re-derived, so data skipping survives the delete. Runs
-    * under the same
-    * claim-exactly-`pointer+1` protocol as [[mergeCommit]] (read-
-    * modify-write serializability). Requires per-file stats on
+    * stats are re-derived, so data skipping survives the delete. A
+    * read-modify-write commit like [[mergeCommit]] (serializable).
+    * Requires per-file stats on
     * `statsCol`: the skipping index is what makes the delete file-
     * granular (a stats-less table would degrade to a blind full
     * rewrite — refuse instead, the caller should commitWithStats).
     *
     * [[compact]] re-materializes a carrying version self-contained,
-    * collapsing the reference chain; [[vacuum]] keeps any version
+    * collapsing the reference chain; [[vacuum]] keeps any attempt
     * directory a retained entry still names. */
   def deleteWhere(spark: SparkSession, root: String, statsCol: String,
                   lo: org.apache.spark.sql.Column,
@@ -1608,7 +1481,7 @@ object Snapshot {
       require(m.stats.contains(physCol),
         s"deleteWhere needs per-file stats on $statsCol (have: ${m.stats}) — " +
           "commit with commitWithStats to make deletes file-granular")
-      Some { next =>
+      Some { dir =>
         val touched = pruned(spark, m, physCol, lo, hi).toSet
         val (rewrite, untouched) = m.files.partition(f => touched(f.path))
         val between = col(physCol) >= lo && col(physCol) <= hi
@@ -1620,17 +1493,15 @@ object Snapshot {
         // range. coalesce pins NULL-key rows as survivors everywhere.
         val keep = !coalesce(between, lit(false))
         // rewrite ONLY the overlapping files, dropping matching rows;
-        // a no-overlap delete only creates the v=N directory for the
-        // claim/observedMax protocol. The touched files are read with
-        // the base's RECORDED schema: after an add-column evolution they
-        // can mix generations, and plain inference would take one
+        // a no-overlap delete writes nothing. The touched files are read
+        // with the base's RECORDED schema: after an add-column evolution
+        // they can mix generations, and plain inference would take one
         // file's schema and drop the later column from the rewrite.
         if (rewrite.nonEmpty) // DV-filtered: a COW rewrite of a file
           // holding MOR tombstones must not resurrect those rows
           applyDv(spark, m, physReader(spark, m).parquet(rewrite.map(_.path): _*))
-            .filter(keep).write.mode("overwrite").parquet(s"$root/v=$next")
-        else mkVersionDir(spark, root, next)
-        withFiles(spark, root, next, m, untouched)
+            .filter(keep).write.mode("overwrite").parquet(dir)
+        withFiles(spark, dir, m, untouched)
       }
     }
   }
@@ -1638,7 +1509,7 @@ object Snapshot {
   /** Row-level DELETE, MERGE-ON-READ — the Delta deletion-vector
     * motion: no data file is rewritten at all. The new entry carries
     * EVERY base file by reference, plus a deletion vector: a tombstone
-    * payload (`_dv/v=N`, rows of `(file, row_index)`) naming exactly
+    * payload (rows of `(file, row_index)`) naming exactly
     * the deleted rows, with the tombstone count per file in the entry;
     * every read path anti-joins the payload against the scan's
     * `_metadata` columns ([[applyDv]]).
@@ -1661,12 +1532,12 @@ object Snapshot {
     * for time travel ([[readVersion]] of the pre-delete version still
     * sees the rows), and are vacuumed with their version. `cond` is
     * evaluated in LOGICAL names with SQL DELETE semantics (a NULL
-    * predicate deletes nothing). Same claim-exactly-`pointer+1`
-    * serialization as every read-modify-write commit.
+    * predicate deletes nothing). Serializable, like every
+    * read-modify-write commit.
     *
     * Streaming append-tails are strictly SAFER under MOR than under
-    * COW deletes: the commit adds no data files (the version dir stays
-    * empty), so a running tail sees nothing —
+    * COW deletes: the commit adds no data files (its attempt holds only
+    * the deletion vector), so a running tail sees nothing —
     * no rewritten files interleaving already-emitted rows, which is
     * the case [[graft.streaming.Streaming.tailVacuumAudit]] exists to
     * refuse. (File tails never retract rows on any engine; deletes
@@ -1681,14 +1552,14 @@ object Snapshot {
   def deleteWhereMor(spark: SparkSession, root: String,
                      cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
-    val v = onHead(spark, root, "deleteWhereMor") { (base, m) => Some { next =>
+    val v = onHead(spark, root, "deleteWhereMor") { (base, m) => Some { dir =>
       // pin (file, row_index) BEFORE the existing-DV anti-join (both
       // relations are parquet scans — `_metadata` goes ambiguous
       // after the join), apply the base's tombstones so already-
       // deleted rows never re-enter, then evaluate the predicate in
       // logical names
       val tagged = applyDv(spark, m, physReader(spark, m)
-        .parquet(scanPaths(spark, root, base, m): _*)
+        .parquet(scanPaths(m): _*)
         .withColumn("__mor_file",
           canonMetaPath(col("_metadata.file_path")))
         .withColumn("__mor_idx", col("_metadata.row_index")))
@@ -1714,13 +1585,11 @@ object Snapshot {
         val inventory = m.files.map(_.path).toSet
         val orphans = tombs.keys.filterNot(inventory.contains)
         require(orphans.isEmpty,
-          s"MOR delete on $root v=$base→$next would tombstone " +
+          s"MOR delete on $root v=$base would tombstone " +
             s"${orphans.size} file(s) absent from the base inventory " +
             s"(byte-wise path mismatch — canonMetaPath vs canonFile " +
             s"canonicalization); first orphan: ${orphans.head}")
-        // all data rides by reference
-        mkVersionDir(spark, root, next)
-        // no new tombstone: the base's payload stands as it is (none at
+        // all data rides by reference; no new tombstone: the base's payload stands as it is (none at
         // all on a DV-less base — an empty payload would tax every read
         // with the anti-join for no effect). Width tracks tombstone
         // volume ([[DvRowsPerSidecarFile]]) so a scattered 10^9-row
@@ -1731,15 +1600,14 @@ object Snapshot {
           val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
           val width = math.min(cap.toLong, (nTomb + DvRowsPerSidecarFile
             - 1) / DvRowsPerSidecarFile).toInt
-          val p = pathOf(spark, root, s"$DvDir/v=$next")
+          val p = payloadOf(dir, "dv")
           merged.coalesce(width).write.mode("overwrite").parquet(p)
           m.copy(dv = Some(DvRef(p, tombs)))
         }
       } finally merged.unpersist()
     } }
-    // The MOR commit is durable once the pointer advances; the
-    // auto-purge is follow-on maintenance. A purge failure (e.g. claim
-    // contention exhausting ITS retries) must not surface as a
+    // The MOR commit is durable once its entry is put; the auto-purge
+    // is follow-on maintenance. A purge failure must not surface as a
     // deleteWhereMor failure — the delete committed. On purge success
     // the returned version is the PURGE's commit (the newest version
     // carrying the delete's effect); on failure or opt-out it is the
@@ -1761,8 +1629,8 @@ object Snapshot {
     * from that point the one-time [[purgeDv]] rewrite is strictly
     * cheaper than the standing read tax, so it runs here unless the
     * operator opts out (`graft.snapshot.dvAutoPurge=false`, which
-    * downgrades to a logged recommendation). Called after the pointer
-    * advance, so the MOR commit itself stays O(matched rows) and the
+    * downgrades to a logged recommendation). Called after the put, so
+    * the MOR commit itself stays O(matched rows) and the
     * purge is an ordinary follow-on maintenance commit. */
   private def maybePurgeOversizedDv(spark: SparkSession, root: String,
                                     v: Long): Long = {
@@ -1805,7 +1673,7 @@ object Snapshot {
     * commit burned) on a table without tombstones. */
   def purgeDv(spark: SparkSession, root: String): Long =
     onHead(spark, root, "purgeDv") { (base, m) =>
-      m.dv.map { d => (next: Long) =>
+      m.dv.map { d => (dir: String) =>
         val (touched, untouched) = m.files.partition(f => d.tombs.contains(f.path))
         // target-file-size width, FLOORED at the touched-file count:
         // bytes alone under-width hyper-compressed tables (the soak
@@ -1818,8 +1686,8 @@ object Snapshot {
           math.min(touched.size, cap))
         applyDv(spark, m, physReader(spark, m).parquet(touched.map(_.path): _*))
           .coalesce(width)
-          .write.mode("overwrite").parquet(s"$root/v=$next")
-        withFiles(spark, root, next, m, untouched)
+          .write.mode("overwrite").parquet(dir)
+        withFiles(spark, dir, m, untouched)
       }
     }
 
@@ -1830,7 +1698,7 @@ object Snapshot {
     * burned), then commit a METADATA-ONLY version carrying every file
     * by reference (zero data I/O at any table size). From
     * that version on, every [[commit]]/[[appendCommit]]/[[mergeCommit]]
-    * batch is validated before the pointer swap and rejected
+    * batch is validated before the put and rejected
     * atomically on violation ([[ConstraintViolation]]) — the
     * write-side quality gate a 100 TB ingest pipeline runs on, where a
     * bad batch must die at the boundary instead of poisoning the
@@ -1843,15 +1711,15 @@ object Snapshot {
     onHead(spark, root, "addCheckConstraint") { (base, m) =>
       require(!m.constraints.exists(_._1 == name),
         s"constraint `$name` already exists on $root")
-      violationCounts(readResolved(spark, root, base, m),
+      violationCounts(readResolved(spark, m),
           Seq((name, exprSql))).filter(_._2 > 0)
         .headOption.foreach { case (n, c) =>
           throw new ConstraintViolation(n, c,
             s"cannot add CHECK constraint `$n` to $root: existing data " +
               s"violates it on $c row(s)")
         }
-      Some { next => carryAll(spark, root, m.copy(constraints =
-        (m.constraints :+ (name -> exprSql)).sortBy(_._1)), next) }
+      Some { _ => m.copy(constraints =
+        (m.constraints :+ (name -> exprSql)).sortBy(_._1)) }
     }
 
   /** DROP a CHECK constraint by name — a metadata-only version whose
@@ -1864,26 +1732,8 @@ object Snapshot {
       require(m.constraints.exists(_._1 == name),
         s"no constraint `$name` on $root (have: " +
           s"${m.constraints.map(_._1).mkString(", ")})")
-      Some { next => carryAll(spark, root,
-        m.copy(constraints = m.constraints.filterNot(_._1 == name)), next) }
+      Some { _ => m.copy(constraints = m.constraints.filterNot(_._1 == name)) }
     }
-
-  /** The empty `v=next` data directory the claim / observedMax
-    * protocol sees for a commit that writes no data file. */
-  private def mkVersionDir(spark: SparkSession, root: String,
-                           next: Long): Unit =
-    fsOf(spark, new org.apache.hadoop.fs.Path(root))
-      .mkdirs(new org.apache.hadoop.fs.Path(root, s"v=$next"))
-
-  /** The body every METADATA-ONLY commit shares: an empty `v=next`
-    * data dir; the entry `m` carries every file action, its stats and
-    * the deletion vector verbatim, so no Spark job runs. Returns `m`,
-    * the new version's entry. */
-  private def carryAll(spark: SparkSession, root: String, m: Meta,
-                       next: Long): Meta = {
-    mkVersionDir(spark, root, next)
-    m
-  }
 
   /** METADATA-ONLY column RENAME (the Delta column-mapping / Iceberg
     * field-ID motion): physical names are frozen at first commit, so a
@@ -1919,7 +1769,7 @@ object Snapshot {
       // entries (renamed back to the physical name) drop out
       val composed = (m.colmap.filterNot(_._1 == phys) :+ (phys -> to))
         .filterNot(p => p._1 == p._2).sortBy(_._1)
-      Some { next => carryAll(spark, root, m.copy(colmap = composed), next) }
+      Some { _ => m.copy(colmap = composed) }
     }
 
   /** METADATA-ONLY column DROP (the other half of the column-mapping
@@ -1964,10 +1814,10 @@ object Snapshot {
           "— recommit with different stats columns first")
       // the physical schema minus the field; the mapping entry (if
       // any) retires with the column and its physical name is retired
-      Some { next => carryAll(spark, root, m.copy(
+      Some { _ => m.copy(
         schema = StructType(m.schema.fields.filterNot(_.name == phys)),
         colmap = m.colmap.filterNot(_._1 == phys),
-        dropped = m.dropped + phys), next) }
+        dropped = m.dropped + phys) }
     }
 
   /** Reference-carrying APPEND: commit `df` as NEW files while every
@@ -1977,20 +1827,14 @@ object Snapshot {
     * batch in one append, and scan cost is controlled afterwards by
     * [[compactSmall]]). Stats carry verbatim for referenced files and
     * are re-derived over just the appended ones. The first commit on
-    * an empty table degrades to a plain [[commit]]. Note appends are
+    * an empty table is the same loop with no head to carry. Note appends are
     * ADDITIVE by contract: same-key rows accumulate (use
     * [[mergeCommit]] for upsert semantics). */
   def appendCommit(df: DataFrame, root: String): Long = {
     val spark = df.sparkSession
-    var attempt = 0
-    while (currentVersion(spark, root).isEmpty) {
-      if (attempt == CommitAttempts) throw lostClaims("appendCommit", root)
-      bootstrapAppend(df, root) match {
-        case Some(v) => return v
-        case None => attempt += 1
-      }
-    }
-    onHead(spark, root, "appendCommit") { (base, m) =>
+    commitLoop(spark, root) { (base, hm) =>
+      // an empty table takes the batch's own schema
+      val m = if (base.isEmpty) Meta(df.schema) else hm
       // tombstone guard (see [[dropColumn]]): a batch whose
       // physical names include a dropped column would make the
       // merged schema resurrect carried files' old values. Only
@@ -2005,125 +1849,74 @@ object Snapshot {
         s"append to $root refused: column(s) ${revived.mkString(", ")} " +
           "were dropped and their physical names are retired — " +
           "use a fresh logical name")
-      Some { next =>
-        // column mapping: logical batch → frozen physical names
-        physBatch.write.mode("overwrite").parquet(s"$root/v=$next")
-        // enforce on the APPENDED files only — carried rows were
-        // validated by the commits that wrote them
-        enforceWritten(spark, root, next, base, m)
-        withFiles(spark, root, next, m, m.files)
-      }
+      var fresh: Fresh = null
+      Some(Plan(
+        dir => {
+          // column mapping: logical batch → frozen physical names
+          physBatch.write.mode("overwrite").parquet(dir)
+          // enforce on the APPENDED files only — carried rows were
+          // validated by the commits that wrote them
+          enforceWritten(spark, root, dir, m)
+          fresh = freshOf(spark, dir, m)
+          carry(spark, m, m.files, fresh)
+        },
+        // a lost put re-carries the winner's actions around the same
+        // fresh files, with no job: the attempt is never rewritten, so
+        // a tail never lists its rows twice
+        (_, m2) => Option.when(binding(m2) == binding(m))(
+          carry(spark, m2, m2.files, fresh))))
     }
   }
 
-  /** One attempt at the empty-table bootstrap of [[appendCommit]]: the
-    * committed version, or None when the attempt lost (the caller
-    * re-reads the head, and appends on top of it once one exists).
-    *
-    * The bootstrap must ALSO serialize through the claim: two appends
-    * racing here as blind [[commit]]s would each land a full-replace
-    * version (v=1, v=2) and the pointer would end on ONE batch — the
-    * other silently lost despite append's additive contract. Claim the
-    * first version ourselves; a lost claim waits for the winner's
-    * pointer swap. */
-  private def bootstrapAppend(df: DataFrame, root: String): Option[Long] = {
-    val spark = df.sparkSession
-    val next = observedMax(spark, root) + 1
-    if (claimVersion(spark, root, next)) {
-      df.write.mode("overwrite").parquet(s"$root/v=$next")
-      writeMeta(spark, root, next, withFiles(spark, root, next, Meta(df.schema), Nil))
-      // Publish is a strict CAS against the EMPTY table: when
-      // `next > 1` this claim sits ahead of other claimants still
-      // mid-bootstrap, and one of them can publish between our
-      // None observation and our swap. An unconditional advance
-      // then replaced their batch with ours — silent loss under a
-      // perfectly contiguous version history (caught by the
-      // two-JVM SnapshotRace soak). On CAS failure the table is
-      // no longer empty: UPGRADE this commit in place to an
-      // append — we still hold the claim on `next`, the data dir
-      // is written, so carry the now-current head's inventory and
-      // CAS against that head; re-carry if it moves again (each
-      // retry means a version below `next` published — finite).
-      while (true) {
-        currentVersion(spark, root) match {
-          case None =>
-            if (pointerAdvance(spark, root, next, expectedPrev = 0L))
-              return Some(next)
-            // else a concurrent bootstrap published: loop — the
-            // re-read sees Some and upgrades to an append
-          case Some(base2) if base2 < next =>
-            // The data dir was written from RAW df (the
-            // bootstrap assumed an empty table). If the
-            // now-current head carries a column map or
-            // tombstones, these files hold LOGICAL names the
-            // head's physical schema may not match, and the
-            // tombstone guard never ran — release the claim and
-            // dir and retry through the normal append loop,
-            // which renames via toPhysical and enforces the
-            // guard before writing.
-            val m2 = metaOf(spark, root, base2)
-            if (m2.colmap.nonEmpty || m2.dropped.nonEmpty) {
-              releaseClaim(spark, root, next)
-              return None
-            }
-            writeClaimed(spark, root, next) {
-              enforceWritten(spark, root, next, base2, m2)
-              writeMeta(spark, root, next,
-                withFiles(spark, root, next, m2, m2.files))
-            }
-            if (pointerAdvance(spark, root, next, expectedPrev = base2))
-              return Some(next)
-            // else the head moved again — re-carry from it
-          case Some(_) =>
-            // the pointer PASSED our claim while we wrote (a
-            // later claimant's CAS won): this version can never
-            // publish — abandon (orphan dir + decided claim are
-            // vacuum's to clean) and retry on the new head
-            return None
-        }
-      }
-      None // unreachable
-    } else {
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      while (currentVersion(spark, root).isEmpty
-             && System.nanoTime() < deadline) Thread.sleep(20)
-      None
-    }
+  /** The files a commit wrote into its attempt directory `dir`: the
+    * schema their footers carry (None when it wrote none) and their
+    * file actions. */
+  private final case class Fresh(dir: String, schema: Option[StructType],
+                                 actions: Seq[FileAction])
+
+  /** The [[Fresh]] files of attempt `dir`, with stats over the columns
+    * of `m`, the entry they are committed on top of (any new column of
+    * the files is appended to its schema: one footer read — a commit
+    * batch is schema-uniform). */
+  private def freshOf(spark: SparkSession, dir: String, m: Meta): Fresh = {
+    val files = parquetFiles(spark, new org.apache.hadoop.fs.Path(dir))
+    val footer = files.headOption.map(Layout.footerSchema(spark, _))
+    Fresh(dir, footer, freshActions(spark, dir, files,
+      footer.fold(m.schema)(mergedSchema(m.schema, _)), m.stats, m.blooms))
   }
 
-  /** Version `next`'s entry for a commit that keeps `carried` of the
-    * actions of `m` (the base's entry, with the commit's metadata
-    * edit) and adds whatever parquet it just wrote into `v=next`. The
-    * carried actions ride verbatim with their stats; the fresh files'
-    * actions are derived ([[freshActions]]); any new column of the
-    * fresh files is appended to the schema (one footer read — a commit
-    * batch is schema-uniform). Merge-on-read tombstones follow their
-    * files: a DV whose tombstoned files are all carried is referenced
-    * as it stands, with no job; one that loses a rewritten file (its
-    * rows are gone from the DV-filtered rewrite) is filtered into
-    * `_dv/v=next`, or dropped when nothing of it is carried. */
-  private def withFiles(spark: SparkSession, root: String, next: Long,
-                        m: Meta, carried: Seq[FileAction]): Meta = {
+  /** The new version's entry for a commit that keeps `carried` of the
+    * actions of `m` (the base's entry, with the commit's metadata edit)
+    * and adds the files of attempt `dir`. */
+  private def withFiles(spark: SparkSession, dir: String, m: Meta,
+                        carried: Seq[FileAction]): Meta =
+    carry(spark, m, carried, freshOf(spark, dir, m))
+
+  /** Entry `m` keeping its `carried` actions and adding the `fresh`
+    * ones. The carried actions ride verbatim with their stats.
+    * Merge-on-read tombstones follow their files: a DV whose tombstoned
+    * files are all carried is referenced as it stands, with no job; one
+    * that loses a rewritten file (its rows are gone from the DV-filtered
+    * rewrite) is filtered into the attempt's own DV payload, or dropped
+    * when nothing of it is carried. */
+  private def carry(spark: SparkSession, m: Meta, carried: Seq[FileAction],
+                    fresh: Fresh): Meta = {
     import org.apache.spark.sql.functions.col
-    val fresh = parquetFiles(spark, new org.apache.hadoop.fs.Path(root, s"v=$next"))
-    val schema =
-      if (fresh.isEmpty) m.schema
-      else mergedSchema(m.schema, Layout.footerSchema(spark, fresh.head))
     val carriedSet = carried.map(_.path).toSet
     val dv = m.dv.flatMap { d =>
       val kept = d.tombs.filter { case (f, _) => carriedSet(f) }
       if (kept.isEmpty) None
       else if (kept.size == d.tombs.size) Some(d)
       else {
-        val p = pathOf(spark, root, s"$DvDir/v=$next")
+        val p = payloadOf(fresh.dir, "dv")
         Layout.readParquet(spark, d.path)
           .filter(col("file").isin(kept.keys.toSeq: _*))
           .coalesce(1).write.mode("overwrite").parquet(p)
         Some(DvRef(p, kept))
       }
     }
-    m.copy(schema = schema, files = carried ++ freshActions(spark, root,
-      next, fresh, schema, m.stats, m.blooms), dv = dv)
+    m.copy(schema = fresh.schema.fold(m.schema)(mergedSchema(m.schema, _)),
+      files = carried ++ fresh.actions, dv = dv)
   }
 
   /** Incremental small-file compaction (the OPTIMIZE maintenance pass
@@ -2140,10 +1933,10 @@ object Snapshot {
   def compactSmall(spark: SparkSession, root: String,
                    smallBytes: Long = 32L * 1024 * 1024,
                    targetBytes: Long = 128L * 1024 * 1024): Long =
-    onHead(spark, root, "compactSmall") { (base, m) =>
+    onHead(spark, root, "compactSmall") { (_, m) =>
       val (small, large) = m.files.partition(_.size < smallBytes)
       // ≤1 small file: already compact, no new version
-      if (small.size <= 1) None else Some { next =>
+      if (small.size <= 1) None else Some { dir =>
         val nOut = math.max(1L,
           (small.map(_.size).sum + targetBytes - 1) / targetBytes).toInt
         // coalesce, not repartition: bin-packing needs no shuffle.
@@ -2152,8 +1945,8 @@ object Snapshot {
         // add-column evolution boundary.
         applyDv(spark, m, physReader(spark, m)
             .parquet(small.map(_.path): _*)).coalesce(nOut)
-          .write.mode("overwrite").parquet(s"$root/v=$next")
-        withFiles(spark, root, next, m, large)
+          .write.mode("overwrite").parquet(dir)
+        withFiles(spark, dir, m, large)
       }
     }
 
@@ -2167,8 +1960,8 @@ object Snapshot {
     * under `dstRoot` while untouched data keeps riding the source's
     * files — the everyday dev/test-against-prod and experiment-branch
     * motion). Data skipping works on the clone from the first read,
-    * and the source's tombstones stay applied. Runs under the claim
-    * protocol on the destination; the target must be a fresh root.
+    * and the source's tombstones stay applied. A metadata-only commit of
+    * version 1 on the destination, which must be a fresh root.
     *
     * Same caveat as Delta documents: the clone borrows the source's
     * RETENTION — vacuuming the source can collect files a clone still
@@ -2181,11 +1974,12 @@ object Snapshot {
       throw new java.util.NoSuchElementException(
         s"snapshot table $srcRoot has no committed version to clone"))
     val srcM = metaOf(spark, srcRoot, srcV)
-    blindClaim(spark, dstRoot, "shallowClone") { next =>
-      require(next == 1L,
+    commitLoop(spark, dstRoot) { (base, _) =>
+      require(base.isEmpty,
         s"shallowClone target $dstRoot already has versions — clone " +
           "into a fresh root")
-    } { next => carryAll(spark, dstRoot, srcM, next) }
+      Some(Plan(_ => srcM))
+    }
   }
 
   /** RESTORE: roll the table back to retained version `toV` as a NEW
@@ -2193,19 +1987,18 @@ object Snapshot {
     * readable for forensics until vacuumed), and the restore itself is
     * a METADATA-ONLY commit: the new entry takes `toV`'s file actions,
     * stats and deletion vector verbatim, so restoring a 100 TB table
-    * writes one entry, never data, and data skipping survives. Runs
-    * under the claim-exactly-`pointer+1` protocol like every
-    * read-modify-write commit. */
+    * writes one entry, never data, and data skipping survives. A
+    * read-modify-write commit like every other. */
   def restore(spark: SparkSession, root: String, toV: Long): Long =
     onHead(spark, root, "restore") { (base, m) =>
       if (base == toV) None else {
         // toV's files come back with toV's schema; the head's
         // constraints, column map, dropped set and rule stay — metadata
         // history is orthogonal to data history
-        val toM = retainedMeta(spark, root, toV)
-        Some { next => carryAll(spark, root, m.copy(schema = toM.schema,
+        val toM = metaOf(spark, root, toV)
+        Some { _ => m.copy(schema = toM.schema,
           files = toM.files, stats = toM.stats, blooms = toM.blooms,
-          dv = toM.dv), next) }
+          dv = toM.dv) }
       }
     }
 
@@ -2230,11 +2023,11 @@ object Snapshot {
     // the feed crosses a metadata-only RENAME boundary as pure renames
     // (same physical column, no spurious delete+insert): re-base the
     // older side physical → toV's map.
-    val toM = retainedMeta(spark, root, toV)
+    val toM = metaOf(spark, root, toV)
     val a = toLogical(
-      readPhysical(spark, root, fromV, retainedMeta(spark, root, fromV)),
+      readPhysical(spark, metaOf(spark, root, fromV)),
       toM.colmap)
-    val b = readResolved(spark, root, toV, toM)
+    val b = readResolved(spark, toM)
     // Align both snapshots to the UNION of their columns so the feed
     // crosses an add-column evolution boundary: a column absent on one
     // side reads as NULL there (its pre-image before the column
@@ -2556,7 +2349,7 @@ object Snapshot {
     * lineitem slice, add a quantity-range constraint (validating the
     * existing data), land a good append, then certify BOTH refusal
     * paths — a batch with negated quantities dies at the commit
-    * boundary with the exact violation count and the pointer parked,
+    * boundary with the exact violation count and the head unmoved,
     * and a constraint the existing data violates is refused without
     * burning a version. The final aggregate proves the bad batch never
     * became visible. The oracle replays every count and the surviving
@@ -2724,7 +2517,7 @@ object Snapshot {
       .withColumn(genName, expr(s"$baseCol div $bucket"))
       .repartitionByRange(nFiles, col(genName), col(baseCol))
       .sortWithinPartitions(genName, baseCol)
-    // the rule is recorded inside the commit, before the pointer swap:
+    // the rule is recorded in the entry the commit puts:
     // a reader of version v must never resolve an older rule (or none)
     commitInternal(withG, root, Seq(genName),
       gen = Some((genName, baseCol, bucket)))
@@ -2739,14 +2532,13 @@ object Snapshot {
   def readCurrentWhereBase(spark: SparkSession, root: String,
                            baseCol: String, lo: Long, hi: Long): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val v = headOf(spark, root)
-    val m = metaOf(spark, root, v)
+    val m = metaOf(spark, root, headOf(spark, root))
     val (gen, base, bucket) = m.gen.getOrElse(
       throw new java.util.NoSuchElementException(
         s"snapshot table $root has no generated-column rule"))
     require(base == baseCol,
       s"generated rule on $root derives from `$base`, not `$baseCol`")
-    rangeRead(spark, root, v, m, Seq((gen,
+    rangeRead(spark, m, Seq((gen,
         lit(Math.floorDiv(lo, bucket)), lit(Math.floorDiv(hi, bucket)))))
       .filter(col(baseCol) >= lo && col(baseCol) <= hi)
   }
@@ -2846,8 +2638,8 @@ object Snapshot {
     * [[deleteWhere]] (v2 — a version still REFERENCING v1's
     * carried files), collapse the chain with [[compact]] (v3,
     * self-contained), then vacuum with the default one-version
-    * retention — v1 and v2 are now unreferenced and their data
-    * directories and entries are reclaimed. The reclamation itself
+    * retention — v1 and v2 are now unreferenced and their attempt
+    * directories are reclaimed. The reclamation itself
     * (directories gone, live version untouched, referenced ancestors
     * surviving while the chain exists) is spec-pinned in SnapshotSpec;
     * this query certifies VALUES — the post-GC table must still read
@@ -2891,9 +2683,9 @@ object Snapshot {
     * read the table AS OF an instant strictly between the two commit
     * timestamps and AS OF the second commit's own timestamp — Delta's
     * `TIMESTAMP AS OF` on both sides of a change. The probe instant is
-    * the midpoint of the two recorded markers, deterministic because
-    * marker timestamps are strictly increasing (enforced under the
-    * pointer lock). DuckDB replays the 'before' slice as the plain
+    * the midpoint of the two recorded commit times, deterministic
+    * because entry times are strictly increasing (enforced at the put).
+    * DuckDB replays the 'before' slice as the plain
     * fixture and the 'current' slice as the delete's survivors. */
   def timeTravelDemo(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -2930,89 +2722,81 @@ object Snapshot {
       .orderBy("snap", "bucket")
   }
 
-  /** Orphan GC, one rule: keep what a LIVE version names, delete
-    * everything else. The live versions are the `retain` newest
-    * committed ones (the time-travel window; the pointer target always
-    * among them) and any in flight — claims ABOVE the pointer are kept
-    * by default, as they may be a live writer's commit, whose data
-    * directory and payloads its pointer swap must not publish deleted.
-    * A `v=N` directory, a bloom payload `_bloom/v=N` or a deletion
-    * vector `_dv/v=N` survives only when it is a live version's own or
-    * a live entry names it (a carried file lives in the directory of
-    * the version that wrote it); a `_log/v=N.json` entry survives only
-    * with its live version, so a version kept only as a file store is
-    * no longer readable. Decided claims (≤ pointer) go too.
-    * `clearStaleClaims = true` also removes claims above the pointer
-    * and what they own (admin asserts no live writers; unblocks merges
-    * stalled on a crashed writer's `pointer+1` claim). Deleting a
-    * DECIDED claim is safe even against a delayed writer still racing
-    * for that version: [[claimVersion]] refuses any version whose data
-    * directory exists or that the pointer has reached, so a vacuumed
-    * claim number can never be re-won for committed content. The
-    * pointer and its target are never touched, and `_history` markers
-    * outlive their versions. Like any GC, vacuum assumes no reader is
-    * still walking an unreferenced snapshot's files. Returns deleted
-    * names. */
-  def vacuum(spark: SparkSession, root: String,
-             clearStaleClaims: Boolean = false,
-             retain: Int = 1): Seq[String] = {
+  /** How long [[vacuum]] spares an attempt directory no entry names: an
+    * attempt in flight has written data but not yet put its entry, and
+    * nothing but its age tells it from a crashed one (Delta's
+    * `deletedFileRetentionDuration` default, one week). A commit must
+    * put its entry within this time of its last write into the
+    * attempt. */
+  private[graft] val AttemptRetentionMs: Long = 7L * 24 * 60 * 60 * 1000
+
+  /** Orphan GC, one rule: keep what a LIVE version names, delete the
+    * rest once it is provably nobody's. The live versions are the
+    * `retain` newest committed ones (the time-travel window; the head
+    * always among them) and any committed while vacuum runs. Every
+    * attempt directory a live entry names survives — its own data, a
+    * carried file's, a bloom payload's, the deletion vector's. Each
+    * version it collects shrinks to its header `{time, dir}`, which
+    * outlives the data ([[commitHistory]], [[readAsOf]]); a collected
+    * version's [[readVersion]] fails fast. Any other attempt directory
+    * a header or a collected entry names is deleted at once. One that
+    * no entry names at all is an attempt in flight or a crashed one: it
+    * is deleted only once older than [[AttemptRetentionMs]], as are
+    * temp files a crashed put or hint write left in `_log`. The head
+    * and the hint are never touched. Like any GC, vacuum assumes no
+    * reader is still walking an unreferenced snapshot's files. Returns
+    * the deleted names, relative to `root`. */
+  def vacuum(spark: SparkSession, root: String, retain: Int = 1): Seq[String] = {
     require(retain >= 1, "retain must keep at least the live version")
     val cur = currentVersion(spark, root).getOrElse(
       throw new java.util.NoSuchElementException(
         s"snapshot table $root has no committed version; nothing to vacuum"))
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = fsOf(spark, rootPath)
-    def children(dir: org.apache.hadoop.fs.Path) =
-      if (!fs.exists(dir)) Seq.empty else fs.listStatus(dir).toSeq.map(_.getPath)
-    val claims = children(new org.apache.hadoop.fs.Path(root, ClaimsDir))
-    val inFlight: Set[Long] =
-      if (clearStaleClaims) Set.empty
-      else claims.map(_.getName)
-        .collect { case n if n.matches("\\d+") => n.toLong }
-        .filter(_ > cur).toSet
-    val versionName = "v=(\\d+)(?:\\.json)?".r
-    val onDisk = children(rootPath).map(_.getName)
-      .collect { case versionName(v) => v.toLong }
-    val live = onDisk.filter(_ <= cur).sorted.takeRight(retain).toSet ++ inFlight
-    // every directory a live entry names: its files' directories, its
-    // bloom payloads, its deletion vector
-    val named: Set[String] = live.toSeq
-      .filter(v => fs.exists(recordPath(root, v)))
-      .flatMap { v =>
-        val m = metaOf(spark, root, v)
-        m.files.map(f => parentOf(f.path)) ++ m.files.flatMap(_.bloom) ++
-          m.dv.map(_.path)
-      }.toSet
-    // a live version's own directory and payloads; anything else only
-    // when named. Abandoned staging (no version name) never survives.
-    def dead(dir: String)(keep: (Long, String) => Boolean): Seq[String] =
-      children(if (dir.isEmpty) rootPath else new org.apache.hadoop.fs.Path(root, dir))
-        .filter { p =>
-          p.getName match {
-            case versionName(v) => !keep(v.toLong, canonFile(fs.makeQualified(p)))
-            case _ => dir.nonEmpty
-          }
-        }.map(p => if (dir.isEmpty) p.getName else s"$dir/${p.getName}")
-    val payload = (v: Long, p: String) => inFlight(v) || named(p)
-    val deadNames =
-      dead("")((v, p) => live(v) || named(p)) ++
-        dead(BloomDir)(payload) ++ dead(DvDir)(payload) ++
-        dead(LogDir)((v, _) => live(v))
-    val deadClaims = claims.filter { p =>
-      p.getName match {
-        case n if n.matches("\\d+") => n.toLong <= cur || clearStaleClaims
-        case _ => true // abandoned .tmp claim staging
+    val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
+    // the attempt directories an entry or header names: its own, its
+    // files', its bloom payloads', its deletion vector's
+    def names(j: org.json4s.JValue): Seq[String] = {
+      import org.json4s._
+      val files = j \ "files" match { case JArray(fs) => fs; case _ => Nil }
+      (files.flatMap(f => Seq(f \ "path", f \ "bloom")) :+ (j \ "dv" \ "path"))
+        .collect { case JString(p) => attemptOf(p) } ++ headerOf(j)._2
+    }
+    val live = scala.collection.mutable.Set[String]()
+    val doomed = scala.collection.mutable.Set[String]()
+    logVersions(spark, root).foreach { v =>
+      val j = entryJson(spark, root, v).get
+      if (isHeaderOnly(j)) doomed ++= names(j)
+      else if (v > cur - retain) live ++= names(j)
+      else {
+        doomed ++= names(j)
+        val (time, dir) = headerOf(j)
+        replaceFile(spark, root, recordPath(root, v),
+          org.json4s.jackson.JsonMethods.compact(
+            org.json4s.JObject(headerFields(time, dir))))
       }
     }
-    deadNames.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
-    deadClaims.foreach(fs.delete(_, true))
-    deadNames ++ deadClaims.map(_.getName)
+    val now = System.currentTimeMillis()
+    def stale(st: org.apache.hadoop.fs.FileStatus) =
+      now - st.getModificationTime > AttemptRetentionMs
+    def children(rel: String) =
+      try fs.listStatus(new org.apache.hadoop.fs.Path(root, rel)).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val dead = children(DataDir).filter { st =>
+      val d = canonFile(fs.makeQualified(st.getPath))
+      !live(d) && (doomed(d) || stale(st))
+    }.map(st => s"$DataDir/${st.getPath.getName}") ++
+      children(LogDir).filter(st =>
+        !st.getPath.getName.matches("v=\\d+\\.json") && stale(st))
+        .map(st => s"$LogDir/${st.getPath.getName}")
+    dead.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
+    dead
   }
 
-  /** Write a snapshot directory WITHOUT swapping the pointer — the
-    * "crashed after data write, before commit" state, exposed so the
-    * spec can construct it deterministically. */
-  private[graft] def writeOrphan(df: DataFrame, root: String,
-                                 v: Long): Unit =
-    df.write.mode("overwrite").parquet(s"$root/v=$v")
+  /** Write `df` into a fresh attempt directory and put no entry — the
+    * "crashed after data write, before the put" state, exposed so the
+    * spec can construct it deterministically. Returns the directory. */
+  private[graft] def writeAttempt(df: DataFrame, root: String): String = {
+    val dir = pathOf(df.sparkSession, root, s"$DataDir/${java.util.UUID.randomUUID()}")
+    df.write.mode("overwrite").parquet(dir)
+    dir
+  }
 }

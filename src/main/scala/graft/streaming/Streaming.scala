@@ -610,10 +610,10 @@ object Streaming {
     * orders changes within the batch) and is merge-committed
     * atomically via [[graft.operators.Snapshot.mergeCommit]] — the
     * streaming twin of the batch MERGE/CDC queries (of4/of5) and the
-    * production landing shape for a change feed: readers following the
-    * table pointer always see a complete point-in-time version, the
-    * claim protocol serializes this writer against any concurrent
-    * committer, and a replayed micro-batch (restart between sink
+    * production landing shape for a change feed: readers always see a
+    * complete point-in-time version, the put of the log entry
+    * serializes this writer against any concurrent committer, and a
+    * replayed micro-batch (restart between sink
     * commit and checkpoint advance) re-merges as a content no-op
     * because upserting the same changes twice is idempotent. A
     * never-committed table bootstraps from the first non-empty batch
@@ -1077,7 +1077,7 @@ object Streaming {
         col("n_events"))
 
   /** Tail a snapshot table's APPEND stream: Spark's file-stream source
-    * over the `v=*` version directories picks up each
+    * over the attempt directories under `_data` picks up each
     * [[graft.operators.Snapshot.appendCommit]]'s new files
     * incrementally — committed files are immutable and every append
     * lands whole new files, so the battle-tested file source IS the
@@ -1090,8 +1090,8 @@ object Streaming {
     *
     * VACUUM interplay (the documented contract, spec-pinned):
     *  - Pure append chains are SAFE under vacuum at any lag: every
-    *    older version directory the current manifest carries files
-    *    from is `referenced` and survives the sweep, so a lagging tail
+    *    older attempt directory the current entry carries files from is
+    *    named by it and survives the sweep, so a lagging tail
     *    always finds its unread files and catches up exactly — pinned,
     *    not assumed.
     *  - A REWRITE commit (compact/deleteWhere/restore) followed by
@@ -1104,10 +1104,11 @@ object Streaming {
     *    re-emit everything) — no error surfaces in either direction.
     * Resuming a checkpointed tail against a table that may have been
     * vacuumed therefore goes through [[tailVacuumAudit]]: it diffs the
-    * checkpoint's seen-file log against the table's full commit
-    * history (the `_history` markers outlive vacuum) and classes every
-    * committed version as seen/available/vacuumed_seen/
-    * vacuumed_unseen. `vacuumed_unseen` means exactly-once resume is
+    * checkpoint's seen-file log against the table's full commit log
+    * (each version's header — its attempt directory — outlives vacuum)
+    * and classes every committed version as seen/available/
+    * vacuumed_seen/vacuumed_unseen/no_files. `vacuumed_unseen` means
+    * exactly-once resume is
     * impossible for THIS tail — [[resumeTailChecked]] fails fast with
     * the full inventory; rebuild the tail (fresh checkpoint over
     * `readCurrent`, then stream) or consume rewrites through
@@ -1117,10 +1118,11 @@ object Streaming {
                       schema: StructType): DataFrame =
     spark.readStream.schema(schema)
       .option("pathGlobFilter", "*.parquet")
-      .parquet(s"$root/v=*")
+      .parquet(s"$root/_data/*")
 
   /** Inventory of every committed version of `root` as the tail at
-    * `checkpointDir` would account for it:
+    * `checkpointDir` would account for it, by the attempt directory the
+    * version added its data files to (its entry's or header's `dir`):
     *  - `seen`            — the checkpoint's file log covers it;
     *  - `available`       — never listed, directory still on disk (the
     *                        tail will catch up normally);
@@ -1131,9 +1133,12 @@ object Streaming {
     *                        rows survive (if at all) only inside a
     *                        rewrite commit's files, interleaved with
     *                        rows already emitted — exactly-once resume
-    *                        is impossible; the guard refuses on these.
+    *                        is impossible; the guard refuses on these;
+    *  - `no_files`        — the version added no data file (a
+    *                        metadata-only commit, a MOR delete): there
+    *                        was never anything for a tail to list.
     * Driver-side metadata only: the checkpoint's seen-file log and the
-    * table's `_history`/directory listings — no data files open. */
+    * table's log — no data files open. */
   def tailVacuumAudit(spark: SparkSession, root: String,
                       checkpointDir: String): DataFrame = {
     import spark.implicits._
@@ -1141,7 +1146,7 @@ object Streaming {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     // the file source's seen-file log: sources/<i>/<batch> files of
     // JSON lines carrying the listed paths
-    val seenVersions: Set[Long] = {
+    val seenDirs: Set[String] = {
       val src = new org.apache.hadoop.fs.Path(checkpointDir, "sources")
       if (!fs.exists(src)) Set.empty
       else {
@@ -1157,29 +1162,25 @@ object Streaming {
           .filter(p => p.getName.matches("\\d+")
             || p.getName.matches("\\d+\\.compact"))
         val pathRe = """"path":"([^"]+)"""".r
-        val vRe = """v=(\d+)/""".r
         logFiles.flatMap { p =>
           val in = fs.open(p)
           val txt = try scala.io.Source.fromInputStream(in, "UTF-8")
             .mkString finally in.close()
-          pathRe.findAllMatchIn(txt).map(_.group(1)).flatMap(f =>
-            vRe.findAllMatchIn(f).toSeq.lastOption.map(_.group(1).toLong))
+          // the log holds URIs; entries name directories in their
+          // decoded canonical form
+          pathRe.findAllMatchIn(txt).map(m => graft.operators.Snapshot
+            .canonFile(new org.apache.hadoop.fs.Path(new java.net.URI(m.group(1))).getParent))
         }.toSet
       }
     }
-    val onDisk: Set[Long] = fs
-      .listStatus(new org.apache.hadoop.fs.Path(root)).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.matches("v=\\d+") => n.drop(2).toLong }
-      .toSet
-    val committed = graft.operators.Snapshot
-      .commitHistory(spark, root).map(_._1)
-    committed.map { v =>
-      val status = (seenVersions.contains(v), onDisk.contains(v)) match {
-        case (true, true)   => "seen"
-        case (true, false)  => "vacuumed_seen"
-        case (false, true)  => "available"
-        case (false, false) => "vacuumed_unseen"
+    graft.operators.Snapshot.logOf(spark, root).map { case (v, _, dir) =>
+      val status = dir.fold("no_files") { d =>
+        (seenDirs.contains(d), fs.exists(new org.apache.hadoop.fs.Path(d))) match {
+          case (true, true)   => "seen"
+          case (true, false)  => "vacuumed_seen"
+          case (false, true)  => "available"
+          case (false, false) => "vacuumed_unseen"
+        }
       }
       (v, status)
     }.toDF("version", "status").orderBy("version")

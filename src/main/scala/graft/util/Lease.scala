@@ -3,16 +3,12 @@ package graft.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 
-/** The ONE lease discipline for every "is the claimant still alive?"
-  * question in the engine (VERDICT r10 #4). Before this util three
-  * ad-hoc idioms guarded the same failure — a dead claimant holding a
-  * shared resource: `Snapshot`'s `_ptrlock` age-break, its
-  * `awaitAdvance` 5 s no-progress rule, and the ANN index root's
-  * 30-minute mtime reclaim. Three timeout idioms = three places for
-  * the next liveness race to hide; they now share these primitives:
+/** The atomic-creation and liveness primitives of the engine.
   *
   *  - '''create-exclusive''' ([[createExclusive]]): kernel/namenode-
-  *    atomic claim; losing the race is the ONLY swallowed error.
+  *    atomic put-if-absent of a whole file; losing the race is the ONLY
+  *    swallowed error. `Snapshot`'s commit is one such put of its log
+  *    entry.
   *  - '''staleness''' ([[isLive]]): a lease file is live iff its
   *    mtime is within `staleMs` of now. Liveness is something the
   *    holder must actively MAINTAIN ([[heartbeat]]) for long critical
@@ -20,18 +16,6 @@ import org.apache.hadoop.fs.{FileContext, Options, Path}
   *    certificate, which is exactly what made the old ANN 30-minute
   *    rule wrong: writing into SUBdirectories never bumps the claimed
   *    root's own mtime, so a live >30-min build looked dead.
-  *  - '''identity-checked break''' ([[breakIfStillStale]]): reclaim
-  *    a stale lease by STEALING it to a tombstone first (atomic
-  *    rename), re-verifying the observed mtime, and handing back a
-  *    fresh holder's lease caught in the observe→break gap — the
-  *    `_ptrlock` recovery discipline verbatim, now shared.
-  *  - '''blocking acquire''' ([[acquire]]): the create / stale-break
-  *    / sleep loop every lock-shaped caller was hand-rolling.
-  *  - '''progress liveness''' ([[awaitProgress]]): for optimistic-
-  *    concurrency retry loops the question is not "is a FILE fresh"
-  *    but "did the WORLD advance"; budget is only charged when
-  *    nothing moved for the whole deadline (a stalled/dead
-  *    competitor), never when losing races to live ones.
   *  - '''exit GC''' ([[gcOnExit]]): session-local scratch (an ANN
   *    loser-path index copy) registered for recursive deletion at JVM
   *    exit, with a test-visible registry so specs can assert
@@ -48,30 +32,29 @@ object Lease {
   private def isLocal(p: Path): Boolean =
     "file" == Option(p.toUri.getScheme).getOrElse("file")
 
-  /** Atomically create `p` with `body`, returning whether WE created
-    * it. HDFS create-no-overwrite is namenode-atomic; local
-    * `FileSystem.create` is NOT (create-then-truncate), so the local
-    * scheme uses NIO `Files.createFile` (O_CREAT|O_EXCL). Only the
-    * exists-conflict means "lost the race"; any other FS error
-    * propagates (swallowing it would misdiagnose a permission or
-    * connectivity fault as contention and spin the caller's retry
-    * loop). */
+  /** Atomically create `p` with the whole of `body`, returning whether
+    * WE created it: the body goes to a unique temp file beside `p`
+    * first, which is then published under `p` only if `p` does not
+    * exist — a rename-without-overwrite on HDFS (namenode-atomic), a
+    * hard link on the local FS (`link(2)` fails with EEXIST
+    * atomically; NIO writes no `.crc` sidecar). A reader therefore sees
+    * `p` whole or not at all. Only the exists-conflict means "lost the
+    * race"; any other FS error propagates (swallowing it would
+    * misdiagnose a permission or connectivity fault as contention and
+    * spin the caller's retry loop). */
   def createExclusive(conf: Configuration, p: Path, body: String): Boolean = {
+    val tmpName = s".${p.getName}.${java.util.UUID.randomUUID()}.tmp"
     if (isLocal(p)) {
-      try {
-        java.nio.file.Files.createFile(
-          java.nio.file.Paths.get(p.toUri.getPath))
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(p.toUri.getPath),
-          body.getBytes("UTF-8"))
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      }
+      val target = java.nio.file.Paths.get(p.toUri.getPath)
+      java.nio.file.Files.createDirectories(target.getParent)
+      val tmp = target.resolveSibling(tmpName)
+      java.nio.file.Files.write(tmp, body.getBytes("UTF-8"))
+      try { java.nio.file.Files.createLink(target, tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally java.nio.file.Files.deleteIfExists(tmp)
     } else {
       val fs = fsOf(conf, p)
-      val tmp = new Path(p.getParent,
-        s"${p.getName}.${java.util.UUID.randomUUID()}.tmp")
+      val tmp = new Path(p.getParent, tmpName)
       val out = fs.create(tmp, true)
       try out.write(body.getBytes("UTF-8")) finally out.close()
       val fc = FileContext.getFileContext(p.toUri, conf)
@@ -110,81 +93,6 @@ object Lease {
     else fsOf(conf, p).setTimes(p, System.currentTimeMillis(), -1)
   }
 
-  /** Break a forfeited lease ONLY if it is still the one we observed
-    * stale: STEAL it to a unique tombstone first (atomic rename —
-    * after which no other process can touch it), re-verify identity
-    * by modification time, then either discard it (it really was the
-    * forfeited lease) or hand it back via a no-overwrite rename (a
-    * fresh holder's lease caught in the observe→break gap). The
-    * hand-back can itself lose to a brand-new creator — then the
-    * displaced fresh holder runs unlocked, a three-party microsecond
-    * window strictly narrower than the unconditional delete this
-    * replaces; the caller's own post-acquire validation bounds the
-    * damage (Snapshot's monotonic pointer compare is the canonical
-    * example). */
-  def breakIfStillStale(conf: Configuration, lock: Path,
-                        observedMtime: Long): Unit = {
-    val fs = fsOf(conf, lock)
-    val tomb = new Path(lock.getParent,
-      s"${lock.getName}.break.${java.util.UUID.randomUUID()}")
-    val stolen =
-      if (isLocal(lock)) {
-        try {
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(lock.toUri.getPath),
-            java.nio.file.Paths.get(tomb.toUri.getPath),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          true
-        } catch { case _: java.nio.file.NoSuchFileException => false }
-      } else {
-        try {
-          FileContext.getFileContext(lock.toUri, conf)
-            .rename(lock, tomb, Options.Rename.NONE)
-          true
-        } catch { case _: java.io.FileNotFoundException => false }
-      }
-    if (!stolen) return // released in the meantime; caller retries
-    val stillStale =
-      try fs.getFileStatus(tomb).getModificationTime == observedMtime
-      catch { case _: java.io.FileNotFoundException => false }
-    if (stillStale) { fs.delete(tomb, false); return } // lease broken
-    // a fresh holder's lease: give it back without clobbering any even
-    // newer one (plain no-REPLACE move / Rename.NONE both refuse an
-    // existing destination)
-    try {
-      if (isLocal(lock))
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(tomb.toUri.getPath),
-          java.nio.file.Paths.get(lock.toUri.getPath))
-      else
-        FileContext.getFileContext(lock.toUri, conf)
-          .rename(tomb, lock, Options.Rename.NONE)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException |
-           _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        fs.delete(tomb, false)
-    }
-  }
-
-  /** Blocking lock acquire: loop create-exclusive, breaking leases
-    * whose mtime is older than `staleMs` via the identity-checked
-    * steal. The caller MUST release (delete) the lock when done; for
-    * critical sections longer than `staleMs`, hold a [[heartbeat]] on
-    * the lock to keep it live. */
-  def acquire(conf: Configuration, lock: Path, body: String,
-              staleMs: Long, pollMs: Long = 20L): Unit = {
-    var held = false
-    while (!held) {
-      if (createExclusive(conf, lock, body)) held = true
-      else mtimeOf(conf, lock) match {
-        case Some(m)
-            if System.currentTimeMillis() - m > staleMs =>
-          breakIfStillStale(conf, lock, m)
-        case _ => Thread.sleep(pollMs)
-      }
-    }
-  }
-
   /** A held lease kept live by a daemon thread that refreshes its
     * mtime every `intervalMs` (choose staleMs/6 or tighter — one
     * missed beat must never look like death). `close()` stops the
@@ -193,8 +101,7 @@ object Lease {
     * id stamped in the body, and hands back any lease that turns out
     * to belong to a successor. An unconditional delete here would let
     * a broken-then-superseded holder kill the NEW holder's live lease
-    * at close time (the same three-party shape [[breakIfStillStale]]
-    * closes on the break side). Refresh failures are swallowed: the
+    * at close time. Refresh failures are swallowed: the
     * holder losing its lease to a breaker is the protocol working,
     * not an error to crash a build over. */
   final class Heartbeat private[Lease] (conf: Configuration, lease: Path,
@@ -241,10 +148,9 @@ object Lease {
     * rename — after which nobody else can touch it), verify the holder
     * id stamped in its body is OURS, and either discard it (a real
     * release) or hand it back via a no-overwrite rename (a successor's
-    * lease caught by a holder that was broken and superseded). The
-    * [[breakIfStillStale]] discipline with body identity instead of
-    * mtime identity — mtime can't identify a lease whose whole point
-    * is to have its mtime refreshed. */
+    * lease caught by a holder that was broken and superseded). Identity
+    * is the holder id in the body, not the mtime — mtime can't identify
+    * a lease whose whole point is to have its mtime refreshed. */
   private def releaseIfHeldBy(conf: Configuration, lease: Path,
                               holderId: String): Unit = {
     val fs = fsOf(conf, lease)
@@ -290,7 +196,8 @@ object Lease {
       catch { case _: Exception => false }
     if (mine) { fs.delete(tomb, false); return } // released
     // a successor's lease: give it back without clobbering any even
-    // newer one (same hand-back as breakIfStillStale)
+    // newer one (plain no-REPLACE move / Rename.NONE both refuse an
+    // existing destination)
     try {
       if (isLocal(lease))
         java.nio.file.Files.move(
@@ -324,24 +231,6 @@ object Lease {
       try out.write(stamped.getBytes("UTF-8")) finally out.close()
     }
     new Heartbeat(conf, lease, intervalMs, holderId)
-  }
-
-  /** Progress-based liveness for optimistic-concurrency retry loops:
-    * poll `probe` until it exceeds `base` or `deadlineMs` elapses.
-    * Returns whether progress happened. TRUE means a LIVE competitor
-    * won the race — the caller should retry for free (each free retry
-    * is matched by ≥1 competitor commit, so the shared resource is at
-    * maximal throughput). FALSE — nothing moved for the whole
-    * deadline, a stalled or dead claimant — is the budget-worthy
-    * case. Standard optimistic-concurrency liveness: a caller can
-    * wait out an arbitrarily long competitor train but can never spin
-    * without either global progress or budget burn. */
-  def awaitProgress(deadlineMs: Long, base: Long, pollMs: Long = 20L)(
-      probe: => Long): Boolean = {
-    val deadline = System.nanoTime() + deadlineMs * 1000000L
-    while (probe <= base && System.nanoTime() < deadline)
-      Thread.sleep(pollMs)
-    probe > base
   }
 
   // ---- exit GC for session-local scratch ------------------------------

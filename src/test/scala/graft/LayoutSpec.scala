@@ -329,7 +329,7 @@ class LayoutSpec extends SparkSuite {
       val fast = Snapshot.statsFrame(spark, Snapshot.metaOf(spark, root, 1L))
       val aggs = cols.flatMap(c => Seq(min(c).as(s"min_$c"), max(c).as(s"max_$c"))) :+
         count(lit(1)).as("n_rows")
-      val slow = spark.read.parquet(s"$root/v=1")
+      val slow = spark.read.parquet(Snapshot.metaOf(spark, root, 1L).dir.get)
         .groupBy(input_file_name().as("file"))
         .agg(aggs.head, aggs.tail: _*)
       // same schema (names + types, the contract readers prune on) …

@@ -3,16 +3,11 @@ package graft
 import graft.util.Lease
 import java.nio.file.{Files, Paths}
 
-/** The shared lease primitive's contract (VERDICT r10 #4 — ONE
-  * liveness discipline for `_ptrlock`, `awaitAdvance`, and the ANN
-  * index root, replacing three ad-hoc timeout idioms):
-  *   - create-exclusive elects exactly one winner under contention;
-  *   - a stale lease is broken identity-checked, and a FRESH lease
-  *     observed stale by a laggard breaker is handed back untouched;
+/** The lease primitives' contract:
+  *   - create-exclusive elects exactly one winner under contention, and
+  *     the winner's body is whole the moment the file exists;
   *   - a heartbeat keeps a lease live past any stale window and
-  *     releases (deletes) it on close;
-  *   - awaitProgress distinguishes live competition (free retry)
-  *     from a dead claimant (budget burn).
+  *     releases (deletes) it on close, never a successor's lease.
   */
 class LeaseSpec extends SparkSuite {
 
@@ -34,37 +29,28 @@ class LeaseSpec extends SparkSuite {
     assert(wins.get() == 1)
   }
 
-  test("a stale lease is broken; a refreshed one observed stale is handed back") {
+  test("create-exclusive publishes the whole body or nothing, and leaves no temp file") {
     val (nio, lock) = tmpLock()
-    assert(Lease.createExclusive(conf, lock, "holder\n"))
-    val observed = Lease.mtimeOf(conf, lock).get
-    // holder refreshes between the breaker's observation and its break:
-    // the identity check must hand the lease back, not kill it
-    Thread.sleep(1100) // local-FS mtime granularity can be 1 s
-    Lease.refresh(conf, lock)
-    val refreshed = Lease.mtimeOf(conf, lock).get
-    assert(refreshed != observed, "refresh must move the mtime")
-    Lease.breakIfStillStale(conf, lock, observed)
-    assert(Files.exists(nio), "a refreshed lease must survive a stale break")
-    assert(Lease.mtimeOf(conf, lock).contains(refreshed))
-    // genuinely stale: same observation, no refresh — the break lands
-    Lease.breakIfStillStale(conf, lock, refreshed)
-    assert(!Files.exists(nio), "an unrefreshed stale lease must be broken")
-  }
-
-  test("acquire blocks on a live lease and steals a dead one") {
-    val (nio, lock) = tmpLock()
-    // dead claimant: lease exists, nobody refreshes it
-    assert(Lease.createExclusive(conf, lock, "dead\n"))
-    Files.setLastModifiedTime(nio,
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 10000))
-    val t0 = System.nanoTime()
-    Lease.acquire(conf, lock, "me\n", staleMs = 2000)
-    assert((System.nanoTime() - t0) / 1e6 < 2000,
-      "a dead lease must be stolen without waiting out the window again")
-    assert(new String(Files.readAllBytes(nio), "UTF-8").startsWith("me"))
-    Files.delete(nio)
+    // a long body: a create-then-write would expose a short read here
+    val bodies = (1 to 8).map(i => s"t$i\n" + "x" * 200000)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var writing = true
+    val reader = new Thread(() => while (writing) {
+      try seen.add(new String(Files.readAllBytes(nio), "UTF-8"))
+      catch { case _: java.nio.file.NoSuchFileException => () }
+    })
+    reader.start()
+    val wins = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = bodies.map(b =>
+      new Thread(() => if (Lease.createExclusive(conf, lock, b)) wins.add(b)))
+    threads.foreach(_.start()); threads.foreach(_.join())
+    writing = false
+    reader.join()
+    assert(wins.size == 1)
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.forall(_ == wins.peek()), "a reader saw a partial body")
+    assert(new String(Files.readAllBytes(nio), "UTF-8") == wins.peek())
+    assert(Files.list(nio.getParent).count() == 1L, "a temp file was left")
   }
 
   test("heartbeat keeps a lease live past the stale window; close releases it") {
@@ -99,16 +85,5 @@ class LeaseSpec extends SparkSuite {
       } finally b.close()
       assert(!Files.exists(nio), "the successor's own close still releases")
     } finally a.close() // idempotent: nothing of A's remains to release
-  }
-
-  test("awaitProgress: free retry on live competition, budget burn on a dead world") {
-    @volatile var v = 0L
-    val mover = new Thread(() => { Thread.sleep(150); v = 1L })
-    mover.start()
-    assert(Lease.awaitProgress(5000, 0L)(v), "a live competitor = progress")
-    mover.join()
-    val t0 = System.nanoTime()
-    assert(!Lease.awaitProgress(300, 5L)(v), "nothing moved = no progress")
-    assert((System.nanoTime() - t0) / 1e6 >= 300, "the full deadline is waited")
   }
 }

@@ -103,16 +103,20 @@ object MergeSoak {
         Snapshot.derivedCommitFiles(nRows), col("o_orderkey"))
       .sortWithinPartitions("o_orderkey")
 
-    // bytes a merge WROTE = its new version directory's size — the
+    // bytes a merge WROTE = its attempt directory's size — the
     // cluster-relevant measure (this box's page cache and 32 threads
     // make a sub-GB full rewrite cheap on wall; a 100 TB table's is not)
-    def dirBytes(root: String, v: Long): Long = {
+    def treeBytes(dir: String): Long = {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/v=$v"))
+      java.nio.file.Files.walk(java.nio.file.Paths.get(
+          new org.apache.hadoop.fs.Path(dir).toUri.getPath))
         .iterator().asScala
         .filter(java.nio.file.Files.isRegularFile(_))
         .map(java.nio.file.Files.size(_)).sum
     }
+    def dirOf(root: String, v: Long): String =
+      Snapshot.metaOf(spark, root, v).dir.get
+    def dirBytes(root: String, v: Long): Long = treeBytes(dirOf(root, v))
 
     // ---- leg A: stats-backed table, file-granular merge ----
     val tA = s"$base/pruned"
@@ -124,7 +128,7 @@ object MergeSoak {
     probeLine("pruned_merge")
     drainJobs("pruned_merge")
     val mf = Snapshot.fileInventory(spark, tA, vA).map(_._1)
-    val carried = mf.count(!_.contains(s"/v=$vA/"))
+    val carried = mf.count(!_.startsWith(dirOf(tA, vA) + "/"))
     val rewritten = mf.length - carried
     val bytesA = dirBytes(tA, vA)
 
@@ -170,14 +174,7 @@ object MergeSoak {
     val (_, readBefore) = digestTimed()
     val (dvV, morSec) = sec(Snapshot.deleteWhereMor(spark, tA,
       col("o_orderkey") % 97 === 0))
-    val dvBytes = {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(
-          java.nio.file.Paths.get(s"$tA/_dv/v=$dvV"))
-        .iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size(_)).sum
-    }
+    val dvBytes = treeBytes(Snapshot.metaOf(spark, tA, dvV).dv.get.path)
     val (d1, readAfter) = digestTimed()
     drainJobs("read_mor")
     // scattered tombstones touch every file — purge's worst case
@@ -186,7 +183,7 @@ object MergeSoak {
     probeLine("purge_scattered")
     val (d2, readPurged) = digestTimed()
     require(d1 == d2, s"purge changed the MOR table's digest: $d1 vs $d2")
-    assert(!new java.io.File(s"$tA/_dv/v=$pv").exists, "purge left a sidecar")
+    assert(Snapshot.metaOf(spark, tA, pv).dv.isEmpty, "purge left a sidecar")
     println(f"[msoak] mor_delete=$morSec%.2f s " +
       f"sidecar=${dvBytes / 1e3}%.1f KB (vs full rewrite " +
       f"${bytesB / 1e6}%.1f MB)")
@@ -201,11 +198,27 @@ object MergeSoak {
       col("o_orderkey").between(bandLo, bandHi)))
     val (ppv, purgeClustered) = sec(Snapshot.purgeDv(spark, tA))
     val pmf = Snapshot.fileInventory(spark, tA, ppv).map(_._1)
-    val pRewrote = pmf.count(_.contains(s"/v=$ppv/"))
+    val pRewrote = pmf.count(_.startsWith(dirOf(tA, ppv) + "/"))
     probeLine("end")
     println(f"[msoak] mor_band_delete=$morBand%.2f s " +
       f"purge_clustered=$purgeClustered%.2f s " +
       f"rewrote=$pRewrote of ${pmf.length} files")
+
+    // ---- the log's shape: dense history, no stale attempt after GC ----
+    for (t <- Seq(tA, tB)) {
+      val cur = Snapshot.currentVersion(spark, t).get
+      require(Snapshot.commitHistory(spark, t).map(_._1) == (1L to cur),
+        s"$t: history not dense 1..$cur")
+      Snapshot.vacuum(spark, t)
+      val named = Snapshot.metaOf(spark, t, cur).files.map(_.path)
+      val stale = Option(new java.io.File(t, "_data").listFiles()).toSeq.flatten
+        .filterNot(d => named.exists(_.contains(s"/_data/${d.getName}/")))
+        .filter(d => System.currentTimeMillis() - d.lastModified() >
+          Snapshot.AttemptRetentionMs)
+      require(stale.isEmpty, s"$t: unnamed attempts older than the retention: $stale")
+    }
+    println(f"[msoak] history dense, vacuum clean; bytes written by lost " +
+      f"puts and discarded: ${Snapshot.discardedBytes.get()}")
     spark.stop()
   }
 }

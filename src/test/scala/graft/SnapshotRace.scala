@@ -4,12 +4,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One racing writer PROCESS for [[SnapshotRace]] — a real separate
-  * JVM with its own SparkSession, filesystem client, and claim
-  * attempts, because the in-suite race pins (SnapshotSpec "racing
-  * merge commits") share one JVM and therefore one Hadoop FileSystem
-  * cache and one process scheduler: cross-PROCESS atomicity of the
-  * claim protocol (mkdir/rename on the shared filesystem) is exactly
-  * what they cannot witness.
+  * JVM with its own SparkSession, filesystem client, and puts, because
+  * the in-suite race pins (SnapshotSpec "racing merge commits") share
+  * one JVM and therefore one Hadoop FileSystem cache and one process
+  * scheduler: cross-PROCESS atomicity of the put (link/rename on the
+  * shared filesystem) is exactly what they cannot witness.
   *
   * Args: root writerId nCommits rowsPerCommit [mode]. Modes:
   *  - `append`        — [[graft.operators.Snapshot.appendCommit]] per op (r9 soak);
@@ -24,7 +23,9 @@ import org.apache.spark.sql.functions._
   * Every op that may publish a version prints ONE machine-parseable
   * `[raceop] v=<v> op=<op> writer=<id> seq=<i> [target=<tv>]` line —
   * the verifier reconstructs the serialized history from these and
-  * replays it against an in-memory model. */
+  * replays it against an in-memory model. The last line,
+  * `[racebytes] writer=<id> discarded=<bytes>`, is what the writer's
+  * lost puts wrote and then deleted. */
 object SnapshotRaceWriter {
   def main(args: Array[String]): Unit = {
     val Array(root, writerId, nCommitsS, rowsS) = args.take(4)
@@ -53,8 +54,8 @@ object SnapshotRaceWriter {
           val v = Snapshot.deleteWhere(spark, root, "k", lit(k), lit(k))
           println(s"[raceop] v=$v op=delete writer=$writerId seq=$i")
         case "mordelete" =>
-          // same seeded victims, MERGE-ON-READ: the tombstone sidecar
-          // commit races the claim protocol exactly like a rewrite,
+          // same seeded victims, MERGE-ON-READ: the tombstone payload
+          // commit races for the put exactly like a rewrite,
           // and its carry rule must hold under concurrent merges
           val k = 1000000L + i
           val v = Snapshot.deleteWhereMor(spark, root, col("k") === lit(k))
@@ -102,16 +103,21 @@ object SnapshotRaceWriter {
           throw new IllegalArgumentException(s"unknown mode $other")
       }
     }
+    println(s"[racebytes] writer=$writerId discarded=${Snapshot.discardedBytes.get()}")
     spark.stop()
   }
 }
 
 /** Two-PROCESS snapshot contention soak (r8 #5, extended r10 per
   * VERDICT r9 #3 beyond the append bootstrap): spawn two independent
-  * JVM writers against ONE table root and assert the claim protocol's
-  * cross-process guarantees on every commit path. Scenarios:
+  * JVM writers against ONE table root and assert the put protocol's
+  * cross-process guarantees on every commit path: a dense version
+  * history, exact content, and after a final vacuum no attempt
+  * directory that no entry names and that is older than the
+  * retention. Each scenario also reports the bytes losers wrote and
+  * then discarded. Scenarios:
   *  - `append`        — A+B appendCommit from an EMPTY table (the
-  *                      bootstrap claim races; r9's lost-commit find);
+  *                      first puts race; r9's lost-commit find);
   *  - `mergedelete`   — A mergeCommit upserts its key range while B
   *                      deleteWhere's seeded keys: disjoint semantics,
   *                      so the final content is exactly determined
@@ -125,8 +131,8 @@ object SnapshotRaceWriter {
   *                      the replay;
   *  - `vacuumappend`  — A appends (with periodic compact REWRITES
   *                      that strand ancestors) while B vacuums with
-  *                      retain=2: vacuum must never reclaim a claimed
-  *                      in-flight version or any carried live file —
+  *                      retain=2: vacuum must never reclaim an
+  *                      in-flight attempt or any carried live file —
   *                      the final table must hold every batch.
   * Run:
   *   sbt "Test/runMain graft.SnapshotRace [scenario|all] [nCommits] [rows]"
@@ -172,11 +178,35 @@ object SnapshotRace {
     import graft.operators.Snapshot
     val cur = Snapshot.currentVersion(spark, root).get
     val hist = Snapshot.commitHistory(spark, root).map(_._1)
-    require(hist == hist.sorted && hist.distinct.size == hist.size,
-      s"version history not strictly serialized: $hist")
-    require(cur == hist.last,
-      s"pointer v=$cur != newest history ${hist.last}")
+    require(hist == (1L to cur),
+      s"version history not dense 1..$cur: $hist")
+    val times = Snapshot.commitHistory(spark, root).map(_._2)
+    require(times == times.sorted && times.distinct.size == times.size,
+      s"commit times not strictly increasing: $times")
     hist
+  }
+
+  /** After a final vacuum: every attempt directory left is named by a
+    * retained entry or younger than the retention. */
+  private def assertNoStaleAttempts(spark: SparkSession, root: String): Int = {
+    import graft.operators.Snapshot
+    Snapshot.vacuum(spark, root, retain = 2)
+    val named = Snapshot.logOf(spark, root).map(_._1)
+      .flatMap(v => scala.util.Try(Snapshot.metaOf(spark, root, v)).toOption)
+      .flatMap(m => m.files.map(_.path) ++ m.dv.map(_.path))
+    val dataDir = new java.io.File(root, "_data")
+    val left = Option(dataDir.listFiles()).toSeq.flatten
+    val stale = left.filterNot(d => named.exists(_.contains(s"/_data/${d.getName}/")))
+      .filter(d => System.currentTimeMillis() - d.lastModified() >
+        Snapshot.AttemptRetentionMs)
+    require(stale.isEmpty, s"unnamed attempts older than the retention: $stale")
+    left.size
+  }
+
+  private def discardedBytes(logs: Seq[java.io.File]): Long = {
+    val re = """\[racebytes\]\s+writer=\S+\s+discarded=(\d+)""".r
+    logs.flatMap(f => scala.io.Source.fromFile(f).getLines().collect {
+      case re(n) => n.toLong }).sum
   }
 
   def main(args: Array[String]): Unit = {
@@ -221,9 +251,9 @@ object SnapshotRace {
         ("merge", "delete")
       case "mormerge" =>
         // the merge-on-read analogue of mergedelete: B's tombstone
-        // sidecar commits race A's file-granular merges — the carried
-        // sidecar must survive every interleaving (a merge that wins
-        // the claim between B's read and write must not resurrect or
+        // payload commits race A's file-granular merges — the carried
+        // payload must survive every interleaving (a merge that wins
+        // the put between B's read and its put must not resurrect or
         // double-drop a victim)
         Snapshot.commitWithStats(
           seedBatch(1000000L, nCommits.toLong), root, Seq("k"))
@@ -334,8 +364,12 @@ object SnapshotRace {
           s"missing=${want.keySet -- got.keySet} " +
           s"extra=${got.keySet -- want.keySet}")
     }
+    val nAttempts = assertNoStaleAttempts(spark, root)
     println(f"[race:$scenario] 2 JVMs x $nCommits ops x $rows rows: " +
-      f"${hist.size} versions serialized, content verified, $wall%.1f s wall")
+      f"${hist.size} versions serialized (dense), content verified, " +
+      f"$nAttempts attempt dirs after vacuum, " +
+      f"${discardedBytes(Seq(la, lb))} bytes written by losers and discarded, " +
+      f"$wall%.1f s wall")
     spark.stop()
   }
 }

@@ -10,19 +10,61 @@ class SnapshotSpec extends SparkSuite {
   private def freshTable(): String =
     java.nio.file.Files.createTempDirectory("graft_snap_").toString
 
-  /** Run `op` as a writer killed between its last write and its
-    * pointer swap: a directory where the swap stages `_CURRENT.tmp`
-    * makes the swap throw, leaving the claim, the data directory and
-    * the metadata exactly as the writer wrote them. */
-  private def killedBeforeSwap(root: String)(op: => Any): Unit = {
-    val stage = new java.io.File(root, "_CURRENT.tmp")
-    assert(stage.mkdir())
+  /** Run `op` as a writer killed just before its put: a directory
+    * squatting on the next version's entry path makes the put throw,
+    * leaving the attempt directory exactly as the writer wrote it. */
+  private def killedBeforePut(root: String)(op: => Any): Unit = {
+    val next = Snapshot.currentVersion(spark, root).get + 1
+    val squat = new java.io.File(root, s"_log/v=$next.json")
+    assert(squat.mkdirs())
     try intercept[java.io.IOException](op)
-    finally stage.delete()
+    finally squat.delete()
   }
 
   private def exists(root: String, rel: String): Boolean =
     new java.io.File(root, rel).exists()
+
+  /** Version `v`'s attempt directory, as its entry (or header) names it. */
+  private def dirOf(root: String, v: Long): String =
+    Snapshot.logOf(spark, root).collectFirst { case (`v`, _, Some(d)) => d }
+      .getOrElse(fail(s"v=$v of $root added no data files"))
+
+  /** Attempt directory `dir` relative to its table root: the name
+    * vacuum reports. */
+  private def rel(dir: String): String =
+    "_data/" + dir.substring(dir.lastIndexOf('/') + 1)
+
+  /** The attempt directories of `root`, relative to it. */
+  private def attempts(root: String): Set[String] =
+    Option(new java.io.File(root, "_data").list()).toSet.flatten.map("_data/" + _)
+
+  /** Run `loser` on a one-row batch `(k = 100, v = "late")` whose write
+    * blocks until `winner` has committed, so the loser's put loses
+    * exactly once. Returns the winner's version, the loser's outcome and
+    * the bytes the loser discarded. */
+  private def lostPut(loser: org.apache.spark.sql.DataFrame => Long)(
+      winner: => Long): (Long, scala.util.Try[Long], Long) = {
+    SnapshotSpec.gate = new java.util.concurrent.CountDownLatch(1)
+    val blocked = spark.range(0, 1, 1, 1).select(
+      udf { (id: Long) => SnapshotSpec.gate.await(); id + 100L }
+        .asNondeterministic()(col("id")).as("k"), lit("late").as("v"))
+    val discarded0 = Snapshot.discardedBytes.get()
+    @volatile var lost: scala.util.Try[Long] = null
+    val t = new Thread(() => lost = scala.util.Try(loser(blocked)))
+    t.start()
+    Thread.sleep(2000) // the loser has read its head and is writing
+    val won = winner
+    SnapshotSpec.gate.countDown()
+    t.join(120000)
+    (won, lost, Snapshot.discardedBytes.get() - discarded0)
+  }
+
+  /** Age `rel` under `root` past vacuum's attempt retention. */
+  private def backdate(root: String, rel: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(root, rel)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).setTimes(p,
+      System.currentTimeMillis() - Snapshot.AttemptRetentionMs - 60000L, -1L)
+  }
 
   private def rows(root: String): Set[(Long, String)] =
     Snapshot.readCurrent(spark, root).collect()
@@ -67,25 +109,24 @@ class SnapshotSpec extends SparkSuite {
     import spark.implicits._
     val root = freshTable()
     Snapshot.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
-    // the crashed merge under the claim protocol: claim won, v=2 fully
-    // written, writer died before the pointer swap
-    assert(Snapshot.claimVersion(spark, root, 2L))
-    Snapshot.writeOrphan(
-      Seq((1L, "HALF"), (2L, "MERGE")).toDF("k", "v"), root, 2L)
+    // the crashed merge: its attempt fully written, no entry put
+    val dead = Snapshot.writeAttempt(
+      Seq((1L, "HALF"), (2L, "MERGE")).toDF("k", "v"), root)
     assert(Snapshot.currentVersion(spark, root).contains(1L))
     assert(rows(root) == Set((1L, "a"), (2L, "b")),
-      "reader saw a committed-but-unreferenced snapshot")
-    // a blind commit recovers immediately: it claims a strictly higher
-    // version, never re-pointing at the orphan's name while it exists
-    val v = Snapshot.commit(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
-    assert(v == 3L, s"recovered commit reused orphan version: $v")
-    // the blind recovery moved the head past the dead claim, so merges
-    // flow again (they claim pointer+1 = 4); vacuum then clears the
-    // orphan dir and the decided claims
-    Snapshot.vacuum(spark, root, clearStaleClaims = true)
+      "reader saw an attempt no entry names")
+    // the next merge takes v2 on top of v1 at once; the dead attempt
+    // is nobody's data
     val v2 = Snapshot.mergeCommit(spark, root,
       Seq((2L, "B")).toDF("k", "v"), "k")
-    assert(v2 == 4L)
+    assert(v2 == 2L)
+    assert(rows(root) == Set((1L, "a"), (2L, "B")))
+    assert(dirOf(root, 2L) != dead)
+    // vacuum spares the dead attempt while it could still be in flight,
+    // and collects it once older than the retention
+    assert(!Snapshot.vacuum(spark, root).contains(rel(dead)))
+    backdate(root, rel(dead))
+    assert(Snapshot.vacuum(spark, root).contains(rel(dead)))
     assert(rows(root) == Set((1L, "a"), (2L, "B")))
   }
 
@@ -93,14 +134,19 @@ class SnapshotSpec extends SparkSuite {
     import spark.implicits._
     val root = freshTable()
     // a 2-digit version followed by a 1-digit one would corrupt a
-    // pointer updated in place; the rename-over swap replaces wholesale
+    // hint updated in place; the rename-over swap replaces wholesale
     (1 to 11).foreach { i =>
       Snapshot.commit(Seq((i.toLong, s"r$i")).toDF("k", "v"), root)
     }
     assert(Snapshot.currentVersion(spark, root).contains(11L))
     Snapshot.setPointer(spark, root, 9L)
-    assert(Snapshot.currentVersion(spark, root).contains(9L))
-    assert(rows(root) == Set((9L, "r9")))
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "_CURRENT")), "UTF-8") == "9\n")
+    // a stale hint is slower, never wrong: the probe finds v10 and v11
+    assert(Snapshot.currentVersion(spark, root).contains(11L))
+    assert(rows(root) == Set((11L, "r11")))
+    assert(Snapshot.commit(Seq((12L, "r12")).toDF("k", "v"), root) == 12L)
+    assert(Snapshot.currentVersion(spark, root).contains(12L))
   }
 
   test("racing merge commits serialize: one claim winner, loser retries, no lost update") {
@@ -108,10 +154,8 @@ class SnapshotSpec extends SparkSuite {
     val root = freshTable()
     Snapshot.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"), root)
     // two concurrent read-modify-write committers with DISJOINT changes:
-    // under the old protocol both compute next=2 and the second silently
-    // overwrites the first's data dir and pointer; under the claim
-    // protocol exactly one wins v2, the other observes the conflict,
-    // re-reads, and commits v3 ON TOP of the winner's merge.
+    // exactly one put of v2 lands, the other loses it, replans on the
+    // new head, and commits v3 ON TOP of the winner's merge.
     val results = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val ts = Seq(Seq((2L, "X")), Seq((9L, "Y"))).map { change =>
@@ -129,31 +173,30 @@ class SnapshotSpec extends SparkSuite {
     // BOTH changes present — the retry recomputed on the winner's head
     assert(rows(root) == Set((1L, "a"), (2L, "X"), (3L, "c"), (9L, "Y")))
     // and the intermediate v2 holds exactly one of the two changes
-    val v2 = spark.read.parquet(s"$root/v=2").collect()
+    val v2 = Snapshot.readVersion(spark, root, 2L).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(v2 == Set((1L, "a"), (2L, "X"), (3L, "c"))
       || v2 == Set((1L, "a"), (2L, "b"), (3L, "c"), (9L, "Y")))
   }
 
-  test("a held claim blocks its version: blind commits skip it, vacuum recovers it") {
+  test("a crashed writer blocks nothing: the next commit takes head+1 at once") {
     import spark.implicits._
     val root = freshTable()
     Snapshot.commit(Seq((1L, "a")).toDF("k", "v"), root)
-    // simulate an in-flight/crashed writer holding v2
-    assert(Snapshot.claimVersion(spark, root, 2L))
-    assert(!Snapshot.claimVersion(spark, root, 2L), "claim must be exclusive")
-    // a blind commit never reuses the claimed name — it goes above it
-    val v = Snapshot.commit(Seq((1L, "b")).toDF("k", "v"), root)
-    assert(v == 3L, s"blind commit must skip the held claim, got $v")
-    assert(rows(root) == Set((1L, "b")))
-    // a merge against head 3 claims 4 — unaffected by the stale v2 claim
+    // two writers that died before their put: an attempt with data, and
+    // a merge killed at the put itself
+    Snapshot.writeAttempt(Seq((9L, "dead")).toDF("k", "v"), root)
+    killedBeforePut(root)(Snapshot.mergeCommit(spark, root,
+      Seq((8L, "dead")).toDF("k", "v"), "k"))
+    assert(attempts(root).size == 3)
+    // nothing waits on them: a merge takes v2, a blind commit v3
+    val t0 = System.nanoTime()
     assert(Snapshot.mergeCommit(spark, root,
-      Seq((5L, "e")).toDF("k", "v"), "k") == 4L)
-    // admin recovery: clearStaleClaims drops the dead claim; the pointer
-    // target survives and the table keeps working
-    val deleted = Snapshot.vacuum(spark, root, clearStaleClaims = true)
-    assert(deleted.contains("2"), s"stale claim not vacuumed: $deleted")
-    assert(rows(root) == Set((1L, "b"), (5L, "e")))
+      Seq((5L, "e")).toDF("k", "v"), "k") == 2L)
+    assert(Snapshot.commit(Seq((1L, "b")).toDF("k", "v"), root) == 3L)
+    assert((System.nanoTime() - t0) / 1e9 < 60, "a commit waited on a dead writer")
+    assert(rows(root) == Set((1L, "b")))
+    assert(Snapshot.commitHistory(spark, root).map(_._1) == Seq(1L, 2L, 3L))
   }
 
   test("vacuum deletes unreferenced snapshots and decided claims, never the live one") {
@@ -162,71 +205,106 @@ class SnapshotSpec extends SparkSuite {
     (1 to 3).foreach { i =>
       Snapshot.commit(Seq((i.toLong, s"r$i")).toDF("k", "v"), root)
     }
-    // a crashed writer's orphan above the pointer is garbage too
-    Snapshot.writeOrphan(Seq((99L, "orphan")).toDF("k", "v"), root, 5L)
+    val Seq(d1, d2, d3) = (1L to 3L).map(dirOf(root, _))
+    // a crashed writer's attempt, aged past the retention, is garbage too
+    val orphan = Snapshot.writeAttempt(Seq((99L, "orphan")).toDF("k", "v"), root)
+    backdate(root, rel(orphan))
     val before = rows(root)
     val deleted = Snapshot.vacuum(spark, root)
-    assert(deleted.toSet.intersect(Set("v=1", "v=2", "v=5")) == Set("v=1", "v=2", "v=5"),
+    assert(deleted.toSet == Set(d1, d2, orphan).map(rel),
       s"expected old + orphan dirs deleted, got $deleted")
-    assert(!deleted.contains("v=3"), "vacuum must leave the pointer target")
+    assert(attempts(root) == Set(rel(d3)), "vacuum must leave the head's directory")
     assert(Snapshot.currentVersion(spark, root).contains(3L))
     assert(rows(root) == before, "live snapshot must survive vacuum intact")
-    // version numbers are not reused after GC
+    // the collected versions keep their headers: the log stays dense
+    assert(Snapshot.commitHistory(spark, root).map(_._1) == Seq(1L, 2L, 3L))
     assert(Snapshot.commit(Seq((7L, "g")).toDF("k", "v"), root) == 4L)
   }
 
-  test("a vacuumed decided claim cannot be re-won (no committed-version reuse)") {
+  test("a put on an existing version fails; the loser commits on top of the winner") {
     import spark.implicits._
     val root = freshTable()
     Snapshot.commit(Seq((1L, "a")).toDF("k", "v"), root)
     Snapshot.commit(Seq((2L, "b")).toDF("k", "v"), root)
-    // vacuum removes the decided claim files for v1 and v2
-    Snapshot.vacuum(spark, root)
-    // a delayed writer racing for an already-committed version must be
-    // refused even though the claim FILE is gone: v=2 is the live
-    // pointer target, v=1 is decided by pointer position
-    assert(!Snapshot.claimVersion(spark, root, 2L),
-      "reclaimed the live version — would overwrite committed data")
-    assert(!Snapshot.claimVersion(spark, root, 1L),
-      "reclaimed a superseded version below the pointer")
+    // a delayed writer putting a committed version is refused, whatever
+    // it carries, and the committed entry is untouched
+    val entry = java.nio.file.Paths.get(root, "_log", "v=2.json")
+    val committed = java.nio.file.Files.readAllBytes(entry).toSeq
+    assert(!graft.util.Lease.createExclusive(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(root, "_log/v=2.json"), "{}"))
+    assert(java.nio.file.Files.readAllBytes(entry).toSeq == committed)
     assert(rows(root) == Set((2L, "b")))
-    // fresh versions are still claimable
-    assert(Snapshot.claimVersion(spark, root, 3L))
+    def racing(loser: org.apache.spark.sql.DataFrame => Long): (Long, Long, Long) = {
+      val (won, lost, disc) = lostPut(loser)(
+        Snapshot.appendCommit(Seq((50L, "won")).toDF("k", "v"), root))
+      (won, lost.get, disc)
+    }
+    // blind: the append keeps its attempt and re-puts on the winner
+    val (w1, l1, disc1) = racing(df => Snapshot.appendCommit(df, root))
+    assert((w1, l1) == (3L, 4L), s"winner $w1, loser $l1")
+    assert(disc1 == 0L, s"an append discarded $disc1 bytes")
+    assert(rows(root) == Set((2L, "b"), (50L, "won"), (100L, "late")))
+    // read-modify-write: the merge drops its attempt and replans on v5
+    val (w2, l2, disc2) = racing(df => Snapshot.mergeCommit(spark, root, df, "k"))
+    assert((w2, l2) == (5L, 6L), s"winner $w2, loser $l2")
+    assert(disc2 > 0L, "the losing merge kept its attempt")
+    assert(rows(root) == Set((2L, "b"), (50L, "won"), (100L, "late")))
+    assert(Snapshot.commitHistory(spark, root).map(_._1) == (1L to 6L))
+  }
+
+  test("a blind commit that loses to a new constraint is revalidated against it") {
+    import spark.implicits._
+    val root = freshTable()
+    Snapshot.commit(Seq((1L, "a")).toDF("k", "v"), root)
+    val before = attempts(root)
+    // the append was checked against no constraint; the winner adds one
+    // its batch (k = 100) violates: re-putting the attempt would commit
+    // a violating row, so the loser replans and is refused
+    val (won, lost, discarded) = lostPut(df => Snapshot.appendCommit(df, root))(
+      Snapshot.addCheckConstraint(spark, root, "k_small", "k < 100"))
+    assert(won == 2L)
+    assert(lost.failed.toOption.exists(_.isInstanceOf[Snapshot.ConstraintViolation]),
+      s"loser: $lost")
+    assert(discarded > 0L && attempts(root) == before, "the refused attempt was left")
+    assert(Snapshot.commitHistory(spark, root).map(_._1) == Seq(1L, 2L))
+    assert(rows(root) == Set((1L, "a")))
   }
 
   test("vacuum spares an in-flight writer's fully-written data directory") {
     import spark.implicits._
     val root = freshTable()
     Snapshot.commit(Seq((1L, "a")).toDF("k", "v"), root)
-    // a live writer mid-commit: claim held, v=2 written, pointer not yet
-    // swapped — default vacuum must not delete the directory its
-    // imminent pointer swap will publish
-    assert(Snapshot.claimVersion(spark, root, 2L))
-    Snapshot.writeOrphan(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root, 2L)
+    // a live writer mid-commit: attempt written, entry not yet put — no
+    // entry names it, and only its age tells it from a crashed one
+    val young = Snapshot.writeAttempt(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), root)
+    val old = Snapshot.writeAttempt(Seq((3L, "c")).toDF("k", "v"), root)
+    backdate(root, rel(old))
+    // a crashed put's temp file, aged too
+    val tmp = new java.io.File(root, "_log/.v=2.json.dead.tmp")
+    java.nio.file.Files.write(tmp.toPath, "{}".getBytes("UTF-8"))
+    backdate(root, "_log/.v=2.json.dead.tmp")
     val deleted = Snapshot.vacuum(spark, root)
-    assert(!deleted.contains("v=2"),
-      s"vacuum deleted an in-flight writer's data dir: $deleted")
-    assert(!deleted.contains("2"), "vacuum deleted a live claim")
-    // admin recovery sweeps both the stale claim and its directory
-    val swept = Snapshot.vacuum(spark, root, clearStaleClaims = true)
-    assert(swept.contains("v=2") && swept.contains("2"), s"got $swept")
+    assert(!deleted.contains(rel(young)) && exists(root, rel(young)),
+      s"vacuum deleted an in-flight writer's attempt: $deleted")
+    assert(deleted.toSet == Set(rel(old), "_log/.v=2.json.dead.tmp"), s"got $deleted")
     assert(rows(root) == Set((1L, "a")))
   }
 
-  test("a stale pointer lock is broken by lease age, not waited on forever") {
+  test("an entry put but never hinted is visible to a fresh reader") {
     import spark.implicits._
     val root = freshTable()
     Snapshot.commit(Seq((1L, "a")).toDF("k", "v"), root)
-    // a dead writer's abandoned _ptrlock, older than the lease
-    val lock = new org.apache.hadoop.fs.Path(root, "_ptrlock")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(lock, true)
-    try out.write("9\n".getBytes("UTF-8")) finally out.close()
-    fs.setTimes(lock, System.currentTimeMillis() - 120000L, -1L)
-    // the next commit must break the lease and land, not hang
-    assert(Snapshot.commit(Seq((2L, "b")).toDF("k", "v"), root) == 2L)
+    Snapshot.commit(Seq((2L, "b")).toDF("k", "v"), root)
+    // a writer that died between its put of v2 and its hint
+    Snapshot.setPointer(spark, root, 1L)
+    assert(Snapshot.currentVersion(spark, root).contains(2L))
     assert(rows(root) == Set((2L, "b")))
-    assert(!fs.exists(lock), "lock must be released after the swap")
+    // no hint at all: the probe walks the log from v1
+    assert(new java.io.File(root, "_CURRENT").delete())
+    assert(Snapshot.currentVersion(spark, root).contains(2L))
+    assert(rows(root) == Set((2L, "b")))
+    assert(Snapshot.commit(Seq((3L, "c")).toDF("k", "v"), root) == 3L)
+    assert(rows(root) == Set((3L, "c")))
   }
 
   test("compaction rewrites files without changing content, under the claim protocol") {
@@ -240,11 +318,8 @@ class SnapshotSpec extends SparkSuite {
         Seq((i.toLong, s"r$i")).toDF("k", "v").repartition(3), "k")
     }
     val before = rows(root)
-    def fileCount(v: Long): Int = {
-      val p = new org.apache.hadoop.fs.Path(s"$root/v=$v")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
-    }
+    def fileCount(v: Long): Int =
+      Snapshot.fileInventory(spark, root, v).count(_._1.startsWith(dirOf(root, v) + "/"))
     assert(fileCount(4L) > 1, "precondition: fragmented current version")
     val v = Snapshot.compact(spark, root, numFiles = 1)
     assert(v == 5L && Snapshot.currentVersion(spark, root).contains(5L))
@@ -280,7 +355,8 @@ class SnapshotSpec extends SparkSuite {
     assert(at(3L) == Set((1L, "A"), (2L, "b")))
     // keep a 2-version time-travel window: v1 goes, v2 and v3 stay
     val deleted = Snapshot.vacuum(spark, root, retain = 2)
-    assert(deleted.contains("v=1") && !deleted.contains("v=2"),
+    assert(deleted.contains(rel(dirOf(root, 1L))) &&
+      !deleted.contains(rel(dirOf(root, 2L))),
       s"retain=2 must keep the two newest versions, deleted $deleted")
     assert(at(2L) == Set((1L, "a"), (2L, "b")), "retained version readable")
     val e = intercept[java.util.NoSuchElementException](at(1L))
@@ -296,7 +372,7 @@ class SnapshotSpec extends SparkSuite {
       .repartitionByRange(8, col("k")).sortWithinPartitions("k")
     Snapshot.commitWithStats(df, root, Seq("k"))
     // one file action with stats per data file
-    val nFiles = spark.read.parquet(s"$root/v=1")
+    val nFiles = spark.read.parquet(dirOf(root, 1L))
       .select(input_file_name()).distinct().count()
     val manifest = Snapshot.statsFrame(spark, Snapshot.metaOf(spark, root, 1L))
       .collect()
@@ -325,10 +401,10 @@ class SnapshotSpec extends SparkSuite {
     // superseding commit + vacuum sweeps the old version's entry too
     Snapshot.commitWithStats(df.filter(col("k") < 100), root, Seq("k"))
     val deleted = Snapshot.vacuum(spark, root)
-    assert(deleted.contains("v=1") && deleted.contains("_log/v=1.json"))
-    val statsLeft = new java.io.File(s"$root/_log").list().toSeq
-      .filter(_.endsWith(".json"))
-    assert(statsLeft == Seq("v=2.json"), s"stale entries: $statsLeft")
+    assert(deleted == Seq(rel(dirOf(root, 1L))), s"deleted $deleted")
+    // v1's entry is now its header: no stats left, only when it was
+    intercept[java.util.NoSuchElementException](Snapshot.metaOf(spark, root, 1L))
+    assert(Snapshot.commitHistory(spark, root).map(_._1) == Seq(1L, 2L))
     assert(!exists(root, "_stats") && !exists(root, "_manifest"))
     // the surviving version still prunes
     assert(Snapshot.readCurrentPruned(spark, root, "k",
@@ -360,7 +436,8 @@ class SnapshotSpec extends SparkSuite {
         (col("id") % 7).as("v"))
       .repartitionByRange(8, col("k")).sortWithinPartitions("k")
     Snapshot.commitWithStats(df, root, Seq("k"))
-    val v1Files = spark.read.parquet(s"$root/v=1")
+    val d1 = dirOf(root, 1L)
+    val v1Files = spark.read.parquet(d1)
       .select(input_file_name()).distinct().count()
     // delete one ~1.5-file band
     val dv = Snapshot.deleteWhere(spark, root, "k", lit(100L), lit(150L))
@@ -373,8 +450,9 @@ class SnapshotSpec extends SparkSuite {
     assert(kept == expect)
     // file granularity: most v1 files are REFERENCED, not rewritten
     val mf = Snapshot.fileInventory(spark, root, 2L).map(_._1)
-    val referenced = mf.count(_.contains("/v=1/"))
-    val rewritten = mf.count(_.contains("/v=2/"))
+    val d2 = dirOf(root, 2L)
+    val referenced = mf.count(_.startsWith(d1 + "/"))
+    val rewritten = mf.count(_.startsWith(d2 + "/"))
     assert(referenced > 0 && referenced >= v1Files - 2,
       s"expected ~all-but-overlapping files referenced: " +
         s"$referenced of $v1Files referenced, $rewritten rewritten")
@@ -392,16 +470,16 @@ class SnapshotSpec extends SparkSuite {
     val feed = Snapshot.changeFeed(spark, root, "k", 1L, 2L).collect()
     assert(feed.length == 51 &&
       feed.forall(_.getAs[String]("_change") == "delete"))
-    // vacuum(retain=1) must SPARE v=1: the live manifest references it
+    // vacuum(retain=1) must SPARE v1's directory: the live entry names it
     val swept = Snapshot.vacuum(spark, root)
-    assert(!swept.contains("v=1"),
+    assert(!swept.contains(rel(d1)),
       s"vacuum deleted a referenced version dir: $swept")
     assert(kept == Snapshot.readCurrent(spark, root)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     // compaction collapses the reference chain; then vacuum reclaims v1
     val cv = Snapshot.compact(spark, root, numFiles = 4)
     val swept2 = Snapshot.vacuum(spark, root)
-    assert(swept2.contains("v=1") && swept2.contains("v=2"),
+    assert(swept2.contains(rel(d1)) && swept2.contains(rel(d2)),
       s"expected v1/v2 reclaimed after compaction: $swept2")
     assert(Snapshot.readCurrent(spark, root)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == kept)
@@ -424,7 +502,7 @@ class SnapshotSpec extends SparkSuite {
         (col("id") % 7).as("v"))
       .repartitionByRange(8, col("k")).sortWithinPartitions("k")
     Snapshot.commitWithStats(df, root, Seq("k"))
-    val v1Files = spark.read.parquet(s"$root/v=1")
+    val v1Files = spark.read.parquet(dirOf(root, 1L))
       .select(input_file_name()).distinct().count()
     // change batch: update one ~half-file band + insert keys beyond
     // every file's range
@@ -440,14 +518,14 @@ class SnapshotSpec extends SparkSuite {
       (10000L until 10005L).map(k => (k, -k))).toSet
     assert(got == expect)
     // file granularity: the band lives in at most 2 of the 8 files —
-    // everything else is REFERENCED into v=2, not rewritten
+    // everything else is REFERENCED into v2, not rewritten
     val mf = Snapshot.fileInventory(spark, root, 2L).map(_._1)
-    val referenced = mf.count(_.contains("/v=1/"))
+    val referenced = mf.count(_.startsWith(dirOf(root, 1L) + "/"))
     assert(referenced >= v1Files - 2,
       s"expected ~all-but-overlapping files referenced: " +
         s"$referenced of $v1Files")
     // insert-only merge (keys beyond every bound): ZERO files rewritten —
-    // the merge degenerates to an append, v=2's files all carried
+    // the merge degenerates to an append, v2's files all carried
     val v2Inventory = mf.toSet
     val iv = Snapshot.mergeCommit(spark, root,
       (20000L until 20010L).map(k => (k, k)).toDF("k", "v"), "k")
@@ -542,9 +620,10 @@ class SnapshotSpec extends SparkSuite {
     assert(rv == 3L, "restore must commit a NEW version, not rewind")
     // full content is back
     assert(Snapshot.readCurrent(spark, root).count() == 8000L)
-    // metadata-only: every file is a v=1 reference, and v=3 holds none
+    // metadata-only: every file is a v1 reference, and v3 wrote none
     val inv = Snapshot.fileInventory(spark, root, rv)
-    val refs = inv.map(_._1).filter(_.contains("/v=1/"))
+    val refs = inv.map(_._1).filter(_.startsWith(dirOf(root, 1L) + "/"))
+    assert(Snapshot.metaOf(spark, root, rv).dir.isEmpty)
     assert(refs.size >= 4 && refs.size == inv.size,
       s"expected only v1 files referenced, got: $inv")
     // the damaged version stays readable for forensics
@@ -611,7 +690,7 @@ class SnapshotSpec extends SparkSuite {
     val inv2 = Snapshot.fileInventory(spark, root, 2L).map(_._1).toSet
     assert(v1Files.subsetOf(inv2), "append must reference the base files")
     val added = inv2 -- v1Files
-    assert(added.nonEmpty && added.forall(_.contains("/v=2/")),
+    assert(added.nonEmpty && added.forall(_.startsWith(dirOf(root, 2L) + "/")),
       s"append leaked non-batch files: $added")
     // content is the union, and carried+fresh stats prune across it
     assert(Snapshot.readCurrent(spark, root).count() == 2000L)
@@ -624,6 +703,7 @@ class SnapshotSpec extends SparkSuite {
   }
 
   test("racing append and delete serialize through the claim protocol") {
+    // (the put: one entry per version, a loser re-puts or replans)
     val root = freshTable()
     val mk = (lo: Long, hi: Long) => spark.range(lo, hi)
       .select(col("id").as("k"), (col("id") % 7).as("v"))
@@ -654,10 +734,10 @@ class SnapshotSpec extends SparkSuite {
     val root = freshTable()
     val mk = (lo: Long, hi: Long) => spark.range(lo, hi)
       .select(col("id").as("k"), (col("id") % 7).as("v"))
-    // plain commit (NO stats) then an append: v2 has a file MANIFEST
-    // referencing v1's files but no stats manifest — the fallback that
-    // read the v=2 directory directly would silently return only the
-    // appended batch
+    // plain commit (NO stats) then an append: v2's entry references
+    // v1's files but carries no stats — a fallback that read v2's
+    // attempt directory alone would silently return only the appended
+    // batch
     Snapshot.commit(mk(0L, 1000L), root)
     Snapshot.appendCommit(mk(1000L, 2000L), root)
     assert(Snapshot.readCurrentPruned(spark, root, "k",
@@ -665,8 +745,8 @@ class SnapshotSpec extends SparkSuite {
       "fallback dropped manifest-referenced rows")
     assert(Snapshot.readCurrentPruned(spark, root, "k",
       lit(500L), lit(1500L)).count() == 1001L)
-    // the degenerate case: a stats-less RESTORE's directory is EMPTY —
-    // the directory fallback returns nothing
+    // the degenerate case: a stats-less RESTORE writes no directory —
+    // a directory fallback would return nothing
     Snapshot.commit(mk(0L, 10L), root)
     Snapshot.restore(spark, root, 1L)
     assert(Snapshot.readCurrentPruned(spark, root, "k",
@@ -837,15 +917,16 @@ class SnapshotSpec extends SparkSuite {
     val before = rows(root)
     // v2's manifest still references v1's carried files: retention
     // would reclaim v1, reference-tracking must keep it
+    val (a1, a2) = (rel(dirOf(root, 1L)), rel(dirOf(root, 2L)))
     val d1 = Snapshot.vacuum(spark, root)
-    assert(!d1.contains("v=1"),
+    assert(!d1.contains(a1),
       s"vacuum reclaimed a manifest-referenced ancestor: $d1")
     assert(rows(root) == before, "chain read broken after vacuum")
     // compact re-materializes v3 self-contained; now v1 AND v2 are
     // unreferenced and reclaimable
     Snapshot.compact(spark, root, 2)
     val d2 = Snapshot.vacuum(spark, root)
-    assert(d2.contains("v=1") && d2.contains("v=2"),
+    assert(d2.contains(a1) && d2.contains(a2),
       s"collapsed chain not reclaimed: $d2")
     assert(rows(root) == before, "content changed across compact+vacuum")
     val ex = intercept[java.util.NoSuchElementException] {
@@ -883,6 +964,26 @@ class SnapshotSpec extends SparkSuite {
     }
   }
 
+  test("vacuum shrinks collected versions to headers: history and as-of outlive the data") {
+    import spark.implicits._
+    val root = freshTable()
+    (1 to 3).foreach(i => Snapshot.commit(Seq((i.toLong, s"r$i")).toDF("k", "v"), root))
+    val log = Snapshot.logOf(spark, root)
+    Snapshot.vacuum(spark, root, retain = 1)
+    // the headers keep every version's time and directory
+    assert(Snapshot.logOf(spark, root) == log)
+    val ts = Snapshot.commitHistory(spark, root).toMap
+    assert(Snapshot.versionAsOf(spark, root, ts(2L)) == 2L)
+    val e = intercept[java.util.NoSuchElementException](
+      Snapshot.readAsOf(spark, root, ts(2L)).collect())
+    assert(e.getMessage.contains("retained: v=3"), e.getMessage)
+    assert(Snapshot.readAsOf(spark, root, ts(3L)).count() == 1L)
+    // a header is two fields, not the version's file list
+    val header = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "_log", "v=1.json")), "UTF-8")
+    assert(!header.contains("files") && !header.contains("schema"), header)
+  }
+
   test("of4 upsert-merge through snapshots equals the logical merge") {
     val got = graft.operators.Etl.upsertMerge(spark, sf).collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
@@ -905,11 +1006,12 @@ class SnapshotSpec extends SparkSuite {
         .sortWithinPartitions("k"),
       src, Seq("k"))
     Snapshot.shallowClone(spark, src, dst)
-    // the clone's v=1 holds NO data files of its own — pure reference
+    // the clone's v1 wrote NO data files of its own — pure reference
     val cloned = Snapshot.fileInventory(spark, dst, 1L).map(_._1)
     assert(cloned.nonEmpty)
     assert(cloned.forall(_.contains("/src/")),
       s"clone entry should reference source files: $cloned")
+    assert(!exists(dst, "_data"), "the clone wrote an attempt directory")
     assert(rows(dst) == rows(src))
     // delete a band on the CLONE: only overlapping files rewrite (under
     // the clone's root); the rest keep riding the source's files
@@ -1141,7 +1243,8 @@ class SnapshotSpec extends SparkSuite {
 
   private def dataFiles(root: String, v: Long): Set[String] = {
     import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(java.nio.file.Paths.get(root, s"v=$v"))
+    java.nio.file.Files.list(java.nio.file.Paths.get(
+        new org.apache.hadoop.fs.Path(dirOf(root, v)).toUri.getPath))
       .iterator().asScala.map(_.toString)
       .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
       .toSet
@@ -1167,10 +1270,10 @@ class SnapshotSpec extends SparkSuite {
     // every base file rides by reference, only the sidecar is new
     val mf = Snapshot.fileInventory(spark, root, v2).map(_._1)
     assert(v1Files.subsetOf(mf.map(_.stripPrefix("file://")).toSet)
-      || mf.count(_.contains("/v=1/")) == v1Files.size,
+      || mf.count(_.startsWith(dirOf(root, 1L) + "/")) == v1Files.size,
       "MOR delete failed to carry every base file by reference")
-    assert(!mf.exists(_.contains(s"/v=$v2/")),
-      "MOR delete wrote a file into its own version dir")
+    assert(mf.size == v1Files.size && Snapshot.metaOf(spark, root, v2).dir.isEmpty,
+      "MOR delete wrote a data file")
     // time travel: the pre-delete version still shows the rows
     assert(Snapshot.readVersion(spark, root, 1L).count() == 800L)
     // composition: a second MOR delete unions into the sidecar
@@ -1257,7 +1360,8 @@ class SnapshotSpec extends SparkSuite {
     assert(k30 == Seq(-30L), s"re-inserted tombstoned key read $k30")
     // compact re-materializes the survivors and CLEARS the sidecar
     val cv = Snapshot.compact(spark, root, numFiles = 2)
-    assert(!new java.io.File(root, s"_dv/v=$cv").exists(),
+    assert(Snapshot.metaOf(spark, root, cv).dv.isEmpty &&
+      !exists(root, rel(dirOf(root, cv)) + "/_payload/dv"),
       "compact must clear the deletion-vector sidecar")
     assert(Snapshot.readCurrent(spark, root)
       .filter(col("k") % 10 === 0 && col("k") < 400).count() == 1L)
@@ -1275,15 +1379,16 @@ class SnapshotSpec extends SparkSuite {
     Snapshot.deleteWhereMor(spark, root, col("k") < 50)
     val pv = Snapshot.purgeDv(spark, root)
     assert(pv == 3L)
-    assert(!new java.io.File(root, s"_dv/v=$pv").exists,
+    assert(Snapshot.metaOf(spark, root, pv).dv.isEmpty &&
+      !exists(root, rel(dirOf(root, pv)) + "/_payload/dv"),
       "purge left the sidecar behind")
     // only the tombstoned file(s) rewrote; the rest carried by reference
     val mfp = Snapshot.fileInventory(spark, root, pv).map(_._1)
-    assert(mfp.count(_.contains("/v=1/")) >= 2,
+    assert(mfp.count(_.startsWith(dirOf(root, 1L) + "/")) >= 2,
       s"purge rewrote clean files: $mfp")
     assert(Snapshot.readCurrent(spark, root).count() == 350L)
     // the purged bytes really dropped the rows (read the fresh files raw)
-    val freshP = mfp.filter(_.contains(s"/v=$pv/"))
+    val freshP = mfp.filter(_.startsWith(dirOf(root, pv) + "/"))
     if (freshP.nonEmpty)
       assert(spark.read.parquet(freshP: _*)
         .filter(col("k") < 50).count() == 0L)
@@ -1312,7 +1417,8 @@ class SnapshotSpec extends SparkSuite {
       .select(col("id").as("k"), col("id").as("v")), root)
     val v2 = Snapshot.deleteWhereMor(spark, root, col("k") < 0)
     assert(v2 == 2L)
-    assert(!new java.io.File(root, s"_dv/v=$v2").exists(),
+    assert(Snapshot.metaOf(spark, root, v2).dv.isEmpty &&
+      attempts(root).size == 1,
       "an empty tombstone set must not write a sidecar — every read " +
         "would pay the anti-join plus the inventory-hash check for nothing")
     assert(Snapshot.readCurrent(spark, root).count() == 50L)
@@ -1352,13 +1458,15 @@ class SnapshotSpec extends SparkSuite {
       // opted out: the delete commits MOR-style and the sidecar stays
       spark.conf.set("graft.snapshot.dvAutoPurge", "false")
       val v2 = Snapshot.deleteWhereMor(spark, root, col("k") < 20)
-      assert(v2 == 2L && new java.io.File(root, "_dv/v=2").exists(),
+      assert(v2 == 2L && Snapshot.metaOf(spark, root, v2).dv
+        .exists(d => new java.io.File(
+          new org.apache.hadoop.fs.Path(d.path).toUri.getPath).exists()),
         "opt-out must leave the sidecar in place (logged recommendation only)")
       // default: the follow-on purge runs and clears it
       spark.conf.unset("graft.snapshot.dvAutoPurge")
       val v = Snapshot.deleteWhereMor(spark, root, col("k") >= 20 && col("k") < 40)
       assert(v == 4L, s"expected the returned version to be the purge's (v=4), got $v")
-      assert(!new java.io.File(root, s"_dv/v=$v").exists(),
+      assert(Snapshot.metaOf(spark, root, v).dv.isEmpty,
         "auto-purge must clear the sidecar")
       assert(Snapshot.readCurrent(spark, root).count() == 360L)
     } finally {
@@ -1378,25 +1486,25 @@ class SnapshotSpec extends SparkSuite {
     val cloneRoot = freshTable() + "/clone"
     Snapshot.shallowClone(spark, root, cloneRoot)
     assert(Snapshot.readCurrent(spark, cloneRoot).count() == 90L)
-    // vacuum with retain=1: v=1's sidecar-less dir dies, v=2's sidecar
-    // stays (it belongs to the live version)
+    // vacuum with retain=1: the payload of the dead v2 dies, v3's
+    // stays (it belongs to the live version), and v1's directory stays
+    // for the files v3 carries
+    val dv2 = Snapshot.metaOf(spark, root, 2L).dv.get.path
     Snapshot.deleteWhereMor(spark, root, col("k") === 50L) // v=3
+    val dv3 = Snapshot.metaOf(spark, root, 3L).dv.get.path
+    def onDisk(p: String) =
+      new java.io.File(new org.apache.hadoop.fs.Path(p).toUri.getPath).exists()
     val swept = Snapshot.vacuum(spark, root, retain = 1)
-    assert(new java.io.File(root, "_dv/v=3").exists(),
-      "vacuum swept the live version's deletion vector")
-    assert(swept.exists(_.startsWith("_dv/")) ||
-      !new java.io.File(root, "_dv/v=2").exists(),
-      "vacuum left a dead version's deletion vector behind")
+    assert(onDisk(dv3), "vacuum swept the live version's deletion vector")
+    assert(!onDisk(dv2), s"vacuum left a dead version's deletion vector behind: $swept")
     assert(Snapshot.readCurrent(spark, root).count() == 89L)
-    // metadata records follow the retained versions: the v=1 directory
-    // v=3's manifest still references keeps its files, not its record
-    def records(): Set[Long] =
-      Option(new java.io.File(root, "_log").list()).toSet.flatten
-        .collect { case n if n.matches("v=\\d+\\.json") =>
-          n.stripPrefix("v=").stripSuffix(".json").toLong }
-    assert(records() == Set(3L) && exists(root, "v=1"))
+    // entries follow the retained versions: the v1 directory v3's entry
+    // still names keeps its files, not its entry
+    def entries(): Set[Long] = (1L to Snapshot.currentVersion(spark, root).get)
+      .filter(v => scala.util.Try(Snapshot.metaOf(spark, root, v)).isSuccess).toSet
+    assert(entries() == Set(3L) && exists(root, rel(dirOf(root, 1L))))
     // generated, rename, constraint, append and drop commits, then a
-    // writer killed before its swap (in flight)
+    // writer killed before its put (in flight)
     Snapshot.commitGenerated(Snapshot.readCurrent(spark, root), root,
       "k", 10L, "kb", nFiles = 2) // v=4, self-contained
     Snapshot.renameColumn(spark, root, "v", "val")
@@ -1404,32 +1512,36 @@ class SnapshotSpec extends SparkSuite {
     Snapshot.appendCommit(
       Seq((200L, 1L, 20L, 7L)).toDF("k", "val", "kb", "w"), root)
     Snapshot.dropColumn(spark, root, "w") // v=8
-    killedBeforeSwap(root)(Snapshot.appendCommit(
-      Seq((201L, 2L, 20L)).toDF("k", "val", "kb"), root)) // v=9, in flight
-    // retained v=7 and v=8, v=4 and v=7 referenced by them and by the
-    // in-flight v=9's manifest
+    val before = attempts(root)
+    killedBeforePut(root)(Snapshot.appendCommit(
+      Seq((201L, 2L, 20L)).toDF("k", "val", "kb"), root)) // in flight
+    val inFlight = attempts(root) -- before
+    assert(inFlight.size == 1)
+    // retained v7 and v8 name the attempts of v4 and v7; the in-flight
+    // attempt is young, so it stays too
     Snapshot.vacuum(spark, root, retain = 2)
-    assert(records() == Set(7L, 8L, 9L))
-    Seq(4L, 7L, 8L, 9L).foreach(v => assert(exists(root, s"v=$v")))
-    Seq(1L, 3L, 5L, 6L).foreach(v => assert(!exists(root, s"v=$v")))
-    // the head's record carries every edit
+    assert(entries() == Set(7L, 8L))
+    assert(attempts(root) == Set(rel(dirOf(root, 4L)), rel(dirOf(root, 7L))) ++ inFlight)
+    // the head's entry carries every edit
     val head = Snapshot.readCurrent(spark, root)
     assert(head.columns.toSeq == Seq("k", "val", "kb") && head.count() == 90L)
     assert(Snapshot.checkConstraintsOf(spark, root, 8L) == Seq(("k_nonneg", "k >= 0")))
     assert(Snapshot.readCurrentWhereBase(spark, root, "k", 20L, 29L).count() == 10L)
-    // the dead writer's record goes with its claim
-    Snapshot.vacuum(spark, root, clearStaleClaims = true, retain = 2)
-    assert(records() == Set(7L, 8L))
+    // the dead writer's attempt goes once older than the retention
+    inFlight.foreach(backdate(root, _))
+    Snapshot.vacuum(spark, root, retain = 2)
+    assert(attempts(root) == Set(rel(dirOf(root, 4L)), rel(dirOf(root, 7L))))
     for (r <- Seq(root, cloneRoot);
-         d <- Seq("_schema", "_constraints", "_colmap", "_dropped", "_gencol"))
+         d <- Seq("_schema", "_constraints", "_colmap", "_dropped", "_gencol",
+           "_claims", "_history", "_ptrlock"))
       assert(!exists(r, d), s"$r/$d exists")
   }
 
   test("commitGenerated writes its rule before the pointer swap") {
     val root = freshTable()
     Snapshot.commit(spark.range(0, 10).select(col("id").as("k")), root)
-    // a directory where the next version's record belongs: the record
-    // (and with it the rule) cannot be written
+    // a directory where the next version's entry belongs: the entry
+    // (and with it the rule) cannot be put
     assert(new java.io.File(root, "_log/v=2.json").mkdirs())
     intercept[java.io.IOException] {
       Snapshot.commitGenerated(spark.range(0, 10).select(col("id").as("k")),
@@ -1437,6 +1549,7 @@ class SnapshotSpec extends SparkSuite {
     }
     // the version whose rule never landed was never published
     assert(Snapshot.currentVersion(spark, root).contains(1L))
+    assert(Snapshot.readCurrent(spark, root).columns.toSeq == Seq("k"))
   }
 
   test("a commit killed before its pointer swap leaks none of its metadata into later versions") {
@@ -1453,16 +1566,18 @@ class SnapshotSpec extends SparkSuite {
     killed.foreach { case (name, op) =>
       val root = freshTable()
       Snapshot.commit(batch(0 until 10), root)
-      // claim, data directory and record of v=2 written; no swap
-      killedBeforeSwap(root)(op(root))
+      val before = attempts(root)
+      // the attempt written (if the commit writes data); no put
+      killedBeforePut(root)(op(root))
       assert(Snapshot.currentVersion(spark, root).contains(1L), name)
-      assert(exists(root, "_claims/2") && exists(root, "v=2"), name)
-      // the next commit and append see only v=1's metadata: no rename,
+      val dead = attempts(root) -- before
+      assert(dead.size == (if (name == "commitGenerated") 1 else 0), s"$name: $dead")
+      // the next commit and append see only v1's metadata: no rename,
       // no constraint, no retired name, no rule
-      assert(Snapshot.commit(batch(0 until 10).drop("w"), root) == 3L, name)
+      assert(Snapshot.commit(batch(0 until 10).drop("w"), root) == 2L, name)
       assert(Snapshot.readCurrent(spark, root).columns.toSeq == Seq("k", "qty"),
         s"$name: the killed commit's column map or schema leaked")
-      assert(Snapshot.checkConstraintsOf(spark, root, 3L).isEmpty,
+      assert(Snapshot.checkConstraintsOf(spark, root, 2L).isEmpty,
         s"$name: the killed commit's constraint leaked")
       intercept[java.util.NoSuchElementException] {
         Snapshot.readCurrentWhereBase(spark, root, "k", 0L, 3L)
@@ -1471,11 +1586,10 @@ class SnapshotSpec extends SparkSuite {
       val head = Snapshot.readCurrent(spark, root)
       assert(head.columns.toSeq == Seq("k", "qty", "w") && head.count() == 15L,
         name)
-      // vacuum collects the dead writer's record with its claim and dir
-      assert(exists(root, "_log/v=2.json"), name)
-      Snapshot.vacuum(spark, root, clearStaleClaims = true)
-      Seq("_log/v=2.json", "v=2", "_claims/2").foreach(a =>
-        assert(!exists(root, a), s"$name: $a survived vacuum"))
+      // vacuum collects the dead writer's attempt once it is old
+      dead.foreach(backdate(root, _))
+      Snapshot.vacuum(spark, root)
+      dead.foreach(a => assert(!exists(root, a), s"$name: $a survived vacuum"))
     }
   }
 
@@ -1522,35 +1636,40 @@ class SnapshotSpec extends SparkSuite {
         r => Snapshot.restore(spark, r, 1L), true))
     assert(cases.map(_._1).distinct.size == 12)
     cases.foreach { case (name, setup, call, advances) =>
-      // empty root: the head read fails before any claim. appendCommit
-      // is the exception by contract — it bootstraps the first version
+      // empty root: the head read fails before any write. appendCommit
+      // is the exception by contract — it commits the first version
       val empty = freshTable() + "/empty"
       if (name == "appendCommit")
         assert(call(empty) == 1L, s"$name: bootstrap did not land v=1")
       else {
         intercept[java.util.NoSuchElementException](call(empty))
-        assert(!exists(empty, "_claims/1") && !exists(empty, "v=1"),
-          s"$name left a claim or version behind on an empty table")
+        assert(!exists(empty, "_data") && !exists(empty, "_log"),
+          s"$name left an attempt or entry behind on an empty table")
       }
       // committed table
       val root = table()
       setup(root)
       val head = Snapshot.currentVersion(spark, root).get
+      val before = attempts(root)
       val got = call(root)
       assert(Snapshot.currentVersion(spark, root).contains(got))
       if (!advances) {
         assert(got == head, s"$name: no-op moved the head $head → $got")
-        assert(!exists(root, s"_claims/${head + 1}") &&
-          !exists(root, s"v=${head + 1}"), s"$name: no-op claimed a version")
+        assert(!exists(root, s"_log/v=${head + 1}.json") && attempts(root) == before,
+          s"$name: no-op wrote an entry or attempt")
       } else {
         assert(got == head + 1, s"$name: $head → $got, expected head+1")
-        Seq(s"v=$got", s"_log/v=$got.json", s"_history/v=$got").foreach { a =>
-          assert(exists(root, a), s"$name: $a missing after the commit")
-        }
+        assert(exists(root, s"_log/v=$got.json"), s"$name: entry missing")
+        // an attempt directory exactly when the version added files
+        val m = Snapshot.metaOf(spark, root, got)
+        val added = attempts(root) -- before
+        assert(added.toSet.subsetOf(m.dir.map(rel).toSet ++
+            m.dv.map(d => rel(d.path.stripSuffix("/_payload/dv")))),
+          s"$name: stray attempt $added")
+        m.dir.foreach(d => assert(exists(root, rel(d)), s"$name: $d missing"))
         // the entry is the whole version: it keeps the stats columns,
         // every action carries their bounds, and its row count is the
         // count of what every file it names reads back
-        val m = Snapshot.metaOf(spark, root, got)
         assert(m.stats == Seq("k") && m.files.forall(_.bounds.size == 1),
           s"$name: the entry lost its stats")
         assert(Snapshot.currentRowCount(spark, root) ==
@@ -1608,11 +1727,15 @@ class SnapshotSpec extends SparkSuite {
     }
     val (deleted, vacuumJobs) = jobsOf(Snapshot.vacuum(spark, root))
     assert(vacuumJobs == 0, s"vacuum ran $vacuumJobs jobs")
-    assert(deleted.nonEmpty)
+    // v3 carries every file and payload: vacuum deletes nothing, but
+    // collects v1 and v2 down to their headers
+    assert(deleted.isEmpty, s"deleted $deleted")
+    Seq(1L, 2L).foreach(v =>
+      intercept[java.util.NoSuchElementException](Snapshot.metaOf(spark, root, v)))
     assert(Snapshot.readCurrent(spark, root).count() == 900L)
   }
 
-  test("commits that write no data file leave an empty version directory, with pinned Spark jobs") {
+  test("commits that write no data file create no directory, with pinned Spark jobs") {
     import spark.implicits._
     val root = freshTable()
     Snapshot.commitWithStats(spark.range(0, 1000)
@@ -1634,16 +1757,19 @@ class SnapshotSpec extends SparkSuite {
       ("deleteWhere", () => Snapshot.deleteWhere(spark, root, "k",
         lit(5000L), lit(6000L)), 0))
     val ran = cases.map { case (name, call, _) =>
+      val before = attempts(root)
       val (v, jobs) = jobsOf(call())
-      assert(new java.io.File(root, s"v=$v").list().isEmpty,
-        s"$name wrote a file into v=$v")
+      val m = Snapshot.metaOf(spark, root, v)
+      // only the MOR delete makes a directory: its DV payload's
+      assert(m.dir.isEmpty && (attempts(root) -- before).size ==
+        (if (name == "deleteWhereMor") 1 else 0), s"$name wrote a data file at v=$v")
       name -> jobs
     }
     assert(ran == cases.map(c => c._1 -> c._3))
     val clone = freshTable() + "/clone"
     val (cv, cloneJobs) = jobsOf(Snapshot.shallowClone(spark, root, clone))
     assert(cloneJobs == 0, s"shallowClone ran $cloneJobs jobs, pinned 0")
-    assert(new java.io.File(clone, s"v=$cv").list().isEmpty)
+    assert(cv == 1L && !exists(clone, "_data"))
     assert(Snapshot.readCurrent(spark, clone).columns.toSeq == Seq("k", "v2"))
     assert(Snapshot.currentRowCount(spark, clone) == 1000L)
   }
@@ -1665,13 +1791,14 @@ class SnapshotSpec extends SparkSuite {
     assert(driverJobs == 0, s"driver-branch sidecar reads ran $driverJobs jobs")
     assert(onDriver._1._1.size >= 8 && onDriver._1._2.nonEmpty && onDriver._2.nonEmpty)
     val driverRows = liveRows()
-    assert(driverRows.size == 900 && !live().inputFiles.exists(_.contains("/_dv/")))
+    assert(driverRows.size == 900 &&
+      !live().inputFiles.exists(_.contains("/_payload/dv/")))
     // every payload the reads resolve (the two bloom payloads, the
     // deletion vector) is larger than the forced split
     val split = 512L
     val payloads = m.files.flatMap(_.bloom).distinct ++ m.dv.map(_.path)
-    assert(payloads.map(_.split('/').takeRight(2).mkString("/")).sorted ==
-      Seq("_bloom/v=1", "_bloom/v=2", "_dv/v=3"), payloads)
+    assert(payloads == Seq(dirOf(root, 1L), dirOf(root, 2L)).map(_ + "/_payload/bloom") ++
+      m.dv.map(_.path) && m.dv.exists(_.path.endsWith("/_payload/dv")), payloads)
     payloads.foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1686,7 +1813,7 @@ class SnapshotSpec extends SparkSuite {
       assert(scanJobs >= 1, s"above one split the bloom probe scans: $scanJobs jobs")
       assert(scanned == onDriver._2)
       // the DV-applied read anti-joins a scanned payload
-      assert(live().inputFiles.exists(_.contains("/_dv/")))
+      assert(live().inputFiles.exists(_.contains("/_payload/dv/")))
       assert(liveRows() == driverRows)
     }
   }
@@ -1706,11 +1833,11 @@ class SnapshotSpec extends SparkSuite {
     }
     assert(count(2L) == 94L && count(3L) == 95L)
     Snapshot.vacuum(spark, root, retain = 2)
-    assert(exists(root, "v=1"), "v=2's manifest still references v=1")
+    assert(exists(root, rel(dirOf(root, 1L))), "v2's entry still names v1's directory")
     collected(1L)
     assert(count(2L) == 94L && count(3L) == 95L)
     Snapshot.vacuum(spark, root, retain = 1)
-    assert(exists(root, "v=2"), "v=3's manifest still references v=2")
+    assert(exists(root, rel(dirOf(root, 2L))), "v3's entry still names v2's directory")
     collected(2L)
     assert(count(3L) == 95L && Snapshot.readCurrent(spark, root).count() == 95L)
   }
@@ -1758,12 +1885,20 @@ class SnapshotSpec extends SparkSuite {
     // an append references the MOR delete's payload as it stands, and
     // vacuum keeps that payload for the live entry that names it
     val kept = sidecarTable()
+    val dv3 = Snapshot.metaOf(spark, kept, 3L).dv.get.path
     Snapshot.appendCommit(Seq((2000L, 1L)).toDF("k", "v"), kept)
+    assert(Snapshot.metaOf(spark, kept, 4L).dv.map(_.path).contains(dv3))
     val swept = Snapshot.vacuum(spark, kept, retain = 1)
-    assert(swept.contains("_log/v=3.json") && exists(kept, "_dv/v=3") &&
-      !exists(kept, "_dv/v=4"), s"swept $swept")
+    assert(!swept.contains(rel(dv3.stripSuffix("/_payload/dv"))) &&
+      exists(kept, rel(dv3.stripSuffix("/_payload/dv")) + "/_payload/dv"),
+      s"swept $swept")
+    intercept[java.util.NoSuchElementException](Snapshot.metaOf(spark, kept, 3L))
     val left = Snapshot.readCurrent(spark, kept).collect().map(_.getLong(0))
     assert(left.length == 901 && !left.exists(k => k < 1000 && k % 10 == 3))
     assert(Snapshot.currentRowCount(spark, kept) == 901L)
   }
+}
+object SnapshotSpec {
+  /** Holds a racing writer's batch in its write until released. */
+  @volatile var gate: java.util.concurrent.CountDownLatch = _
 }

@@ -708,6 +708,38 @@ class StreamingSpec extends SparkSuite {
     assert(ks.size == 50 && ks.distinct.size == 30,
       s"expected 20 silent duplicates after rewrite+vacuum resume; " +
         s"got ${ks.size} rows, ${ks.distinct.size} distinct")
+    // CONTRACT HALF 3 — versions that add no data file (a MOR delete, a
+    // metadata-only commit) gave a tail nothing to list, so vacuuming
+    // them never blocks a resume
+    val ckpt3 = java.nio.file.Files
+      .createTempDirectory("graft_tailvac_c3_").toString
+    val out3 = java.nio.file.Files
+      .createTempDirectory("graft_tailvac_o3_").toString
+    val root3 = java.nio.file.Files
+      .createTempDirectory("graft_tailvac_r3_").toString
+    def drain3(): Unit = {
+      val q = Streaming.snapshotAppends(spark, root3, schema)
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", out3).option("checkpointLocation", ckpt3)
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000), "tail drain timed out")
+    }
+    Snapshot.commit(mk(0L), root3)        // v1
+    Snapshot.appendCommit(mk(10L), root3) // v2
+    drain3() // saw v1, v2
+    Snapshot.deleteWhereMor(spark, root3, col("k") === 3L)        // v3
+    Snapshot.addCheckConstraint(spark, root3, "k_nonneg", "k >= 0") // v4
+    Snapshot.appendCommit(mk(20L), root3) // v5
+    Snapshot.vacuum(spark, root3, retain = 1)
+    val a3 = Streaming.tailVacuumAudit(spark, root3, ckpt3).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(!a3.values.exists(_ == "vacuumed_unseen"), s"audit: $a3")
+    assert(a3 == Map(1L -> "seen", 2L -> "seen", 3L -> "no_files",
+      4L -> "no_files", 5L -> "available"), s"audit: $a3")
+    Streaming.resumeTailChecked(spark, root3, ckpt3, schema)
+    drain3()
+    assert(spark.read.parquet(out3).count() == 30L,
+      "resume must emit exactly v5's rows")
   }
 
   test("tail audit reads COMPACTED file-source logs (tails past the compact interval)") {

@@ -11,10 +11,12 @@ kind and side the table gives the operation count, the median and 75th
 percentile wall time (`end_ms - start_ms`), the mean Spark jobs per operation
 with their range, and the median time the driver spent outside any job
 (`offjob_ms`), and the kind's share of the run: its summed wall time as a
-percentage of the summed wall time of all operations. The last column is the
-change's mean jobs minus the parent's, and the last line names every kind whose
-mean jobs rose (or `none`). Run the two sides on the same workload and seed so
-the operation sequences match.
+percentage of the summed wall time of all operations. The last two columns are
+the change's mean jobs minus the parent's (Δjobs) and the change's median
+`offjob_ms` minus the parent's (Δoffjob). The last two lines name every kind
+whose mean jobs rose and every kind whose median off-job time rose (or `none`).
+Run the two sides on the same workload and seed so the operation sequences
+match.
 """
 import json
 import statistics
@@ -62,6 +64,10 @@ def mean_jobs(spans):
     return statistics.mean(s.get("jobs", 0) for s in spans) if spans else None
 
 
+def median_offjob(spans):
+    return statistics.median(s.get("offjob_ms", 0) for s in spans) if spans else None
+
+
 def main(argv):
     if len(argv) != 3:
         sys.exit("usage: " + __doc__.strip().splitlines()[2].strip())
@@ -69,17 +75,23 @@ def main(argv):
     totals = total_wall(parent), total_wall(change)
     cols = (f"{'n':>4} {'ms p50':>9} {'ms p75':>9} {'jobs':>6} {'range':>8} "
             f"{'offjob':>9} {'share%':>6}")
-    print(f"{'kind':<14} | {'parent':^57} | {'change':^57} | {'Δjobs':>6}")
+    print(f"{'kind':<14} | {'parent':^57} | {'change':^57} | {'Δjobs':>6} {'Δoffjob':>8}")
     print(f"{'':<14} | {cols} | {cols} |")
-    rose = []
+    rose, off_rose = [], []
     for kind in sorted(set(parent) | set(change)):
-        p, c = mean_jobs(parent.get(kind, [])), mean_jobs(change.get(kind, []))
+        ps, cs = parent.get(kind, []), change.get(kind, [])
+        p, c = mean_jobs(ps), mean_jobs(cs)
         delta = "-" if p is None or c is None else f"{c - p:+.2f}"
         if p is not None and c is not None and c > p:
             rose.append(kind)
-        print(f"{kind:<14} | {summary(parent.get(kind, []), totals[0]):>57} | "
-              f"{summary(change.get(kind, []), totals[1]):>57} | {delta:>6}")
+        po, co = median_offjob(ps), median_offjob(cs)
+        doff = "-" if po is None or co is None else f"{co - po:+.1f}"
+        if po is not None and co is not None and co > po:
+            off_rose.append(kind)
+        print(f"{kind:<14} | {summary(ps, totals[0]):>57} | "
+              f"{summary(cs, totals[1]):>57} | {delta:>6} {doff:>8}")
     print("mean jobs rose: " + (", ".join(rose) if rose else "none"))
+    print("median offjob rose: " + (", ".join(off_rose) if off_rose else "none"))
 
 
 if __name__ == "__main__":
