@@ -55,7 +55,7 @@ object SparkEntry {
     "of6_snapshot_prune"  -> (Etl.snapshotPrune(_, _)),
     // file-granular keyed MERGE through the stats manifest
     "of22_pruned_merge"   -> (Etl.prunedMerge(_, _)),
-    // merge-on-read scattered delete through the tombstone sidecar
+    // merge-on-read scattered delete through per-file deletion vectors
     "of23_mor_delete"     -> (Etl.morDelete(_, _)),
     "x16c_scd2_history"   -> (Relational.scd2History(_, _)),
     "o16_row_count"       -> (Etl.rowCount(_, _)),
@@ -447,7 +447,7 @@ object SparkEntry {
         |            AS DOUBLE) AS sum_price
         |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
     // The merge-on-read delete must equal the plain filtered source —
-    // the tombstone sidecar is a storage mechanism, invisible to the
+    // the deletion vectors are a storage mechanism, invisible to the
     // values (zero-rewrite granularity itself is pinned in SnapshotSpec).
     "of23_mor_delete" ->
       """SELECT o_orderstatus, COUNT(*) AS n,

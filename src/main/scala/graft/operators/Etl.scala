@@ -301,8 +301,9 @@ object Etl {
     * set — every 97th key, present in every file, the shape whose COW
     * delete would rewrite the whole table because every file's key
     * interval overlaps the predicate. The MOR delete writes only a
-    * (file, row_index) tombstone sidecar — zero data files rewritten
-    * (pinned in SnapshotSpec) — and every read anti-joins it. This
+    * bitmap of deleted row positions into each file's action — zero
+    * data files rewritten (pinned in SnapshotSpec) — and every read
+    * filters through them. This
     * query pins the VALUES: the post-delete table must equal the plain
     * filtered source. */
   def morDelete(spark: SparkSession, sfDir: String): DataFrame = {

@@ -1,14 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.types.StructType
+import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 /** Poor-man's ACID table commits over plain parquet, on Delta's log
   * protocol (Armbrust et al., VLDB 2020, §3): version N IS its log
-  * entry, `_log/v=N.json` ([[Meta]]) — the version's metadata, an
-  * action per live data file with the file's stats, and the reference
-  * to its deletion vector. A reader opens that entry and the files it
-  * names, nothing else; superseded versions stay readable by number or
+  * entry, `_log/v=N.json` ([[Meta]]) — the version's metadata and an
+  * action per live data file with the file's stats and its deletion
+  * vector. A reader opens that entry and the files it names, nothing
+  * else; superseded versions stay readable by number or
   * instant — [[readVersion]], [[readAsOf]] — until [[vacuum]] collects
   * them.
   *
@@ -70,16 +71,27 @@ object Snapshot {
     try fs.getFileStatus(p).isFile
     catch { case _: java.io.FileNotFoundException => false }
 
-  /** `input_file_name`-format URI for a listed file. The local FS
-    * prints `file:/x` from `Path.toString` but `file:///x` from the
-    * scan's `input_file_name` — one canonical form keeps file actions,
-    * bloom payload rows and tombstones joinable (schemes with an
-    * authority, e.g. `hdfs://nn/x`, already agree). */
+  /** How a file action names a listed file: the decoded path, in the
+    * `file:///x` spelling on the local FS, whose `Path.toString` prints
+    * `file:/x` (schemes with an authority, e.g. `hdfs://nn/x`, pass
+    * through). File actions and bloom payload rows use this form; a
+    * scan names a file by [[scanForm]]. */
   private[graft] def canonFile(p: org.apache.hadoop.fs.Path): String = {
     val s = p.toString
     if (s.startsWith("file:/") && !s.startsWith("file://"))
       "file://" + s.stripPrefix("file:")
     else s
+  }
+
+  /** How a parquet scan's `_metadata.file_path` names the file of
+    * action path `path` ([[canonFile]] form): the URI-encoded path
+    * (`a b` → `a%20b`, `%` → `%25`), in the local FS's `file:/x`
+    * spelling. Computed once per action on the driver, so no row of a
+    * scan is ever decoded. (`input_file_name()` spells the local FS
+    * `file:///x`; LayoutSpec pins both forms.) */
+  private[graft] def scanForm(path: String): String = {
+    val s = org.apache.spark.paths.SparkPath.fromPathString(path).urlEncoded
+    if (s.startsWith("file:///")) "file:/" + s.stripPrefix("file:///") else s
   }
 
   /** `rel` under `root`, qualified, in [[canonFile]] form: how an entry
@@ -97,15 +109,10 @@ object Snapshot {
 
   /** Every commit attempt's private directory lives in `_data`, named
     * by a fresh UUID: two writers racing for one version never share
-    * one. Its payloads live under `_payload/` inside it (Spark's
-    * listing skips `_`-prefixed children, so a directory read of the
-    * attempt returns only its data files). */
+    * one. Its bloom payload lives under `_payload/bloom` inside it
+    * (Spark's listing skips `_`-prefixed children, so a directory read
+    * of the attempt returns only its data files). */
   private val DataDir = "_data"
-
-  /** The payload directory of kind `kind` (`bloom`, `dv`) of attempt
-    * directory `dir`. */
-  private def payloadOf(dir: String, kind: String): String =
-    s"$dir/_payload/$kind"
 
   /** The attempt directory (`…/_data/<uuid>`) a file or payload path
     * lives in. */
@@ -122,7 +129,7 @@ object Snapshot {
     *    (the axis of [[readAsOf]]).
     *  - `dir`: the attempt directory the version added its data files
     *    to; None when it added none (a metadata-only commit, or a MOR
-    *    delete whose attempt holds only its deletion vector).
+    *    delete that rewrote no file).
     *  - `schema`: the PHYSICAL schema. A version whose files mix
     *    generations (old files without a later-added column) is read
     *    with it EXPLICITLY, so parquet fills the missing columns with
@@ -137,7 +144,6 @@ object Snapshot {
     *  - `stats` / `blooms`: the physical columns every action carries
     *    `[min, max]` bounds for, and the columns with a bloom sketch
     *    per file.
-    *  - `dv`: the deletion vector ([[DvRef]]), if any row is tombstoned.
     *
     * Read-modify-write commits copy the head's entry and apply their
     * edit; blind commits copy the metadata of the head they validated
@@ -156,7 +162,6 @@ object Snapshot {
       files: Seq[FileAction] = Nil,
       stats: Seq[String] = Nil,
       blooms: Seq[String] = Nil,
-      dv: Option[DvRef] = None,
       time: Long = 0L,
       dir: Option[String] = None) {
 
@@ -171,25 +176,44 @@ object Snapshot {
       schema.fieldNames.toSeq.map(c => byPhys.getOrElse(c, c))
     }
 
-    /** Exact live rows: Σ file rows − Σ tombstones. Every tombstone
-      * names one row of a live file ([[deleteWhereMor]] checks it when
-      * it builds the tombstone set), so the subtraction is exact. */
-    def rowCount: Long =
-      files.map(_.rows).sum - dv.fold(0L)(_.tombs.values.sum)
+    /** Exact live rows: Σ (file rows − deleted rows). A deletion
+      * vector holds row positions of its own file only, so the
+      * subtraction is exact. */
+    def rowCount: Long = files.map(f => f.rows - f.deleted).sum
   }
 
   /** One live data file of a version: its path ([[canonFile]] form),
     * bytes, rows, `[min, max]` per stats column of the entry (Catalyst
     * internal values, both NULL when the file holds no non-NULL value
-    * there), and on a bloom table the bloom payload of the attempt that
-    * wrote it, holding its sketches. A carry copies the action
-    * verbatim. */
+    * there), on a bloom table the bloom payload of the attempt that
+    * wrote it, holding its sketches, and its DELETION VECTOR: the
+    * positions (`_metadata.row_index`) of the file's rows a
+    * [[deleteWhereMor]] deleted, None when none is (Delta's deletion
+    * vectors, inline; Lemire et al., SPE 2016, for the bitmap). Row
+    * positions are stable for as long as the file is immutable, which
+    * a version's files are by construction. A carry copies the action
+    * verbatim, bitmap included; never mutate one in place. */
   private[graft] final case class FileAction(path: String, size: Long,
-      rows: Long, bounds: Seq[(Any, Any)] = Nil, bloom: Option[String] = None)
+      rows: Long, bounds: Seq[(Any, Any)] = Nil, bloom: Option[String] = None,
+      dv: Option[Roaring64NavigableMap] = None) {
+    def deleted: Long = dv.fold(0L)(_.getLongCardinality)
+  }
 
-  /** A version's deletion vector: the payload of tombstone rows
-    * `(file, row_index)` and the tombstone count per file. */
-  private[graft] final case class DvRef(path: String, tombs: Map[String, Long])
+  /** A deletion vector's portable serialization; an entry holds it in
+    * base64. */
+  private def bitmapBytes(b: Roaring64NavigableMap): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    b.serializePortable(new java.io.DataOutputStream(bytes))
+    bytes.toByteArray
+  }
+
+  /** The inverse of [[bitmapBytes]]. */
+  private def bitmapOf(bytes: Array[Byte]): Roaring64NavigableMap = {
+    val b = new Roaring64NavigableMap()
+    b.deserializePortable(new java.io.DataInputStream(
+      new java.io.ByteArrayInputStream(bytes)))
+    b
+  }
 
   private def recordPath(root: String, v: Long) =
     new org.apache.hadoop.fs.Path(root, s"$LogDir/v=$v.json")
@@ -256,7 +280,9 @@ object Snapshot {
         Option.when(types.nonEmpty)("bounds" -> JArray(f.bounds.zip(types).map {
           case ((lo, hi), t) => JArray(List(boundJson(lo, t), boundJson(hi, t)))
         }.toList)) ++
-        f.bloom.map("bloom" -> JString(_)))
+        f.bloom.map("bloom" -> JString(_)) ++
+        f.dv.map(b => "dv" ->
+          JString(java.util.Base64.getEncoder.encodeToString(bitmapBytes(b)))))
     }
     val fields = headerFields(m.time, m.dir) ++
       List("schema" -> parse(m.schema.json)) ++
@@ -268,10 +294,7 @@ object Snapshot {
           "bucket" -> JLong(k)) } ++
       Option.when(m.stats.nonEmpty)("stats" -> names(m.stats)) ++
       Option.when(m.blooms.nonEmpty)("blooms" -> names(m.blooms)) ++
-      List("files" -> JArray(files.toList)) ++
-      m.dv.map(d => "dv" -> JObject("path" -> JString(d.path),
-        "tombs" -> JObject(d.tombs.toList.sorted.map { case (f, n) =>
-          f -> (JLong(n): JValue) })))
+      List("files" -> JArray(files.toList))
     jsonText(render(JObject(fields)))
   }
 
@@ -348,6 +371,11 @@ object Snapshot {
       case JInt(n) => n.toLong
       case _ => malformed()
     }
+    def text(j: JValue): Option[String] = j match {
+      case JNothing => None
+      case JString(x) => Some(x)
+      case _ => malformed()
+    }
     val (time, dir) = try headerOf(j) catch { case NonFatal(e) => malformed(e) }
     val schema =
       try org.apache.spark.sql.types.DataType
@@ -369,13 +397,11 @@ object Snapshot {
           }
           case _ => malformed()
         }
-        (f \ "path", f \ "bloom") match {
-          case (JString(path), JNothing) =>
-            FileAction(path, long(f \ "size"), long(f \ "rows"), bounds)
-          case (JString(path), JString(b)) =>
-            FileAction(path, long(f \ "size"), long(f \ "rows"), bounds, Some(b))
-          case _ => malformed()
-        }
+        val dv =
+          try text(f \ "dv").map(t => bitmapOf(java.util.Base64.getDecoder.decode(t)))
+          catch { case NonFatal(e) => malformed(e) }
+        FileAction(text(f \ "path").getOrElse(malformed()), long(f \ "size"),
+          long(f \ "rows"), bounds, text(f \ "bloom"), dv)
       }
       case _ => malformed()
     }
@@ -388,15 +414,7 @@ object Snapshot {
           case _ => malformed()
         }
       },
-      files, stats, names(j \ "blooms"),
-      j \ "dv" match {
-        case JNothing => None
-        case d => (d \ "path", d \ "tombs") match {
-          case (JString(path), JObject(ts)) =>
-            Some(DvRef(path, ts.map { case (f, n) => f -> long(n) }.toMap))
-          case _ => malformed()
-        }
-      }, time, dir)
+      files, stats, names(j \ "blooms"), time, dir)
   }
 
   /** ADD-COLUMN evolution: base columns keep their position, batch-only
@@ -531,10 +549,9 @@ object Snapshot {
                          m: Meta): org.apache.spark.sql.DataFrameReader =
     spark.read.schema(m.schema)
 
-  /** The version of entry `m` in PHYSICAL names with its tombstones
-    * applied. */
+  /** The version of entry `m` in PHYSICAL names with its deletion
+    * vectors applied. */
   private def readPhysical(spark: SparkSession, m: Meta): DataFrame =
-    // merge-on-read tombstones key on the physical scan's _metadata
     applyDv(spark, m, physReader(spark, m).parquet(scanPaths(m): _*))
 
   /** The version of entry `m` in LOGICAL names. */
@@ -569,7 +586,7 @@ object Snapshot {
   /** Exact row count of the LIVE version from its entry alone — the
     * table-format count every log supports (Delta's `numRecords`
     * stats, Iceberg's manifest `record_count`): Σ file rows minus Σ
-    * tombstones ([[Meta.rowCount]]). No file is opened and no job
+    * deleted rows ([[Meta.rowCount]]). No file is opened and no job
     * runs, where `readCurrent(...).count()` re-read every committed
     * byte (at 100 TB: the table, again, per post-commit visibility
     * check). SnapshotSpec pins it equal to `readCurrent(...).count()`
@@ -618,7 +635,7 @@ object Snapshot {
     onHead(spark, root, "compact") { (_, m) => Some { dir =>
       // the new version is self-contained, collapsing any reference
       // chain so vacuum can reclaim the referenced ancestors; the
-      // tombstones die with the rewrite and the stats are re-derived
+      // deletion vectors die with the rewrite and the stats are re-derived
       val nF = if (numFiles > 0) numFiles
                else compactWidthFor(m.files.map(_.size).sum,
                  spark.sessionState.conf.numShufflePartitions)
@@ -845,116 +862,32 @@ object Snapshot {
           enforceWritten(spark, root, dir, hm)
           withFiles(spark, dir, hm.copy(schema = physDf.schema,
             gen = gen.orElse(hm.gen), files = Nil, stats = statsCols.map(hm.physical),
-            blooms = bloomCols.map(hm.physical), dv = None), Nil)
+            blooms = bloomCols.map(hm.physical)), Nil)
         },
         (e, m2) => Option.when(binding(m2) == binding(hm))(
           e.copy(gen = gen.orElse(m2.gen)))))
     }
   }
 
-  /** The payload size up to which [[applyDv]] broadcasts the tombstone
-    * relation; above it the anti-join falls back to a shuffle — the
-    * operational signal that [[purgeDv]] is due (README's COW-vs-MOR
-    * rule, enforced by [[maybePurgeOversizedDv]]). */
-  private[graft] val DvBroadcastBytes = 64L * 1024 * 1024
-
-  /** Target tombstone rows per payload parquet file: ~4M `(file,
-    * row_index)` pairs (dictionary-encoded file column) keep each file
-    * in the tens of MB, so a 10^9-row tombstone wave writes wide
-    * instead of serializing through one task, while a toy delete still
-    * writes exactly one file. */
-  private val DvRowsPerSidecarFile = 4L * 1000 * 1000
-
-  /** A version's DELETION VECTOR is the merge-on-read tombstone
-    * relation `(file, row_index)` written by [[deleteWhereMor]], named
-    * by the entry's [[DvRef]]. `file` is the scan's `_metadata.file_path`
-    * URI in the form the file actions use, and `row_index` is parquet's
-    * stable in-file row ordinal (`_metadata.row_index`) — valid for
-    * exactly as long as the file is immutable, which snapshot version
-    * files are by construction.
-    *
-    * `_metadata.file_path` surfaces the local FS as `file:/x` while
-    * every file action carries [[canonFile]]'s `file:///x` — normalize
-    * scan-side paths to that form so tombstones, bloom payload rows and
-    * file actions all name a file the same way (other schemes —
-    * hdfs://, s3a:// — are already consistent and pass through
-    * untouched). */
-  private def canonMetaPath(c: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    val slashed = regexp_replace(c, "^file:/(?!/)", "file:///")
-    // Scan-derived paths are URI-ENCODED (`a b` → `a%20b`; a literal
-    // `%` → `%25`), but the canonical form is the DECODED one: only it
-    // is accepted back by `spark.read.parquet` (Hadoop `Path(String)`
-    // treats `%20` as three literal chars), and it is what
-    // `Path.toString`-derived file actions already hold — measured in
-    // SnapshotSpec's spaced-root pin, where the undecoded form dropped
-    // every carried tombstone. `url_decode` is form-decoding (`+` →
-    // space), so literal `+` — legal raw in a URI path — is protected
-    // by pre-escaping it; every other `%` in scan output begins a valid
-    // escape, making the decode total. try_ + fallback keeps a
-    // malformed string inert rather than failing the whole plan.
-    val plusSafe = regexp_replace(slashed, "\\+", "%2B")
-    coalesce(try_url_decode(plusSafe), slashed)
-  }
-
-  /** Filter the tombstoned rows of a version (entry `m`) out of a
+  /** Filter the rows the deletion vectors of entry `m` delete out of a
     * PHYSICAL parquet scan — the merge-on-read half of every read path.
     * MUST be applied directly on (a projection of) the file scan: it
-    * reads the scan's constant `_metadata` columns, which do not
-    * survive a join. A version without tombstones returns the scan
-    * untouched — zero cost for every non-MOR table. The tombstone
-    * relation is metadata-sized by contract ([[purgeDv]]/[[compact]]
-    * re-materialize and clear it; those maintenance passes ARE the
-    * DV-growth bound), so the anti-join broadcasts below a 64 MB
-    * payload and falls back to a shuffled anti-join above it rather
-    * than OOMing the driver.
-    *
-    * The join keys on `(xxhash64(file), row_index)` — long pairs —
-    * instead of the raw path string: the corpus side evaluates the
-    * probe per ROW, and hashing a ~90-char URI beats string-equality
-    * probing by ~4× at 150M rows (measured, the sf100 read-tax line in
-    * BENCH_NOTES). Exactness is not delegated to the hash: hash
-    * uniqueness across the entry's file actions is CHECKED on the
-    * driver per apply, and a collision (never, at ~10⁻¹² for 10k
-    * files) falls back to the string-keyed join rather than trusting
-    * 64 bits. */
+    * reads the scan's `_metadata` columns. A version without a deletion
+    * vector returns the scan untouched. Otherwise one filter: a UDF
+    * over `(_metadata.file_path, _metadata.row_index)` closing over each
+    * action's [[scanForm]] and bitmap — a metadata-sized map, shipped
+    * with the task like any closure. A scanned file no action names
+    * fails the lookup loudly rather than passing its rows unfiltered. */
   private def applyDv(spark: SparkSession, m: Meta,
                       phys: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val d = m.dv.getOrElse(return phys)
-    val p = new org.apache.hadoop.fs.Path(d.path)
-    val dv = Layout.readParquet(spark, d.path)
-    def sized(df: DataFrame): DataFrame =
-      if (fsOf(spark, p).getContentSummary(p).getLength <= DvBroadcastBytes)
-        broadcast(df)
-      else df
-    // the driver replays the SQL function's exact hash (same code
-    // path, same seed) over the O(files) inventory — uniqueness there
-    // makes the long-keyed join provably equal to the string-keyed one
-    def xx(f: String): Long =
-      org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(
-        org.apache.spark.unsafe.types.UTF8String.fromString(f),
-        org.apache.spark.sql.types.StringType, 42L)
-    if (m.files.iterator.map(f => xx(f.path)).toSet.size == m.files.size) {
-      val right = sized(dv.select(xxhash64(col("file")).as("__dv_fh"),
-        col("row_index").as("__dv_ri")))
-      phys
-        .withColumn("__dv_file",
-          xxhash64(canonMetaPath(col("_metadata.file_path"))))
-        .withColumn("__dv_idx", col("_metadata.row_index"))
-        .join(right, col("__dv_file") === col("__dv_fh") &&
-          col("__dv_idx") === col("__dv_ri"), "left_anti")
-        .drop("__dv_file", "__dv_idx")
-    } else {
-      val right = sized(dv)
-      phys
-        .withColumn("__dv_file", canonMetaPath(col("_metadata.file_path")))
-        .withColumn("__dv_idx", col("_metadata.row_index"))
-        .join(right, col("__dv_file") === right("file") &&
-          col("__dv_idx") === right("row_index"), "left_anti")
-        .drop("__dv_file", "__dv_idx")
+    import org.apache.spark.sql.functions.{col, udf}
+    if (m.files.forall(_.dv.isEmpty)) return phys
+    val deleted = m.files.map(f => scanForm(f.path) -> f.dv.orNull).toMap
+    val live = udf { (file: String, row: Long) =>
+      val d = deleted(file)
+      d == null || !d.contains(row)
     }
+    phys.filter(live(col("_metadata.file_path"), col("_metadata.row_index")))
   }
 
   /** Per-file bloom sketch size target: estimated distinct values per
@@ -988,8 +921,11 @@ object Snapshot {
     * column that is not a plain int, or a bloom column (a sketch needs
     * the values). A bloom aggregate is written as the attempt's bloom
     * payload, which holds only these files (a carry never rewrites
-    * sketches), and read back on the driver for the bounds. A file
-    * holding no row gets NULL bounds and no sketch. */
+    * sketches), and read back on the driver for the bounds. The
+    * aggregate keys on each listed file's [[scanForm]], mapped back to
+    * its [[canonFile]] name; a scanned file the listing lacks is a
+    * stray and fails. A file holding no row gets NULL bounds and no
+    * sketch. */
   private def freshActions(spark: SparkSession, dir: String,
                            files: Seq[org.apache.hadoop.fs.FileStatus],
                            schema: StructType, stats: Seq[String],
@@ -1001,10 +937,14 @@ object Snapshot {
       else footerActions(spark, files, schema, stats)
     footer.getOrElse {
       val aggs = statsAggs(spark, stats, blooms)
+      val listed = files.map(st => canonFile(st.getPath))
+      val named = typedLit(listed.map(f => scanForm(f) -> f).toMap)
+      val scanned = col("_metadata.file_path")
+      // a scanned file the listing lacks keeps its scan form: a stray
       val agg = spark.read.schema(schema).parquet(dir)
-        .groupBy(canonMetaPath(input_file_name()).as("file"))
+        .groupBy(coalesce(element_at(named, scanned), scanned).as("file"))
         .agg(aggs.head, aggs.tail: _*)
-      val payload = Option.when(blooms.nonEmpty)(payloadOf(dir, "bloom"))
+      val payload = Option.when(blooms.nonEmpty)(s"$dir/_payload/bloom")
       val rows = payload match {
         case None => agg.collect()
         case Some(p) =>
@@ -1018,11 +958,10 @@ object Snapshot {
           stats.zip(toBound).map { case (c, bound) =>
             (bound(r.getAs[Any](s"min_$c")), bound(r.getAs[Any](s"max_$c"))) })
       }.toMap
-      val listed = files.map(st => canonFile(st.getPath))
       val strays = byFile.keySet -- listed
       require(strays.isEmpty, s"stats of attempt $dir name files " +
         s"the directory does not list (path form mismatch — " +
-        s"canonMetaPath vs canonFile): ${strays.head}")
+        s"scanForm vs _metadata.file_path): ${strays.head}")
       files.zip(listed).map { case (st, f) =>
         byFile.get(f) match {
           case Some((n, bounds)) => FileAction(f, st.getLen, n, bounds, payload)
@@ -1395,7 +1334,7 @@ object Snapshot {
         // relation when no file overlaps (pure insert).
         val survivors =
           if (rewrite.nonEmpty)
-            // tombstones apply to the rewrite read, so a MOR-deleted
+            // deletion vectors apply to the rewrite read, so a MOR-deleted
             // row never re-materializes through a merge's rewrite
             toLogical(applyDv(spark, m,
                 physReader(spark, m).parquet(rewrite.map(_.path): _*)),
@@ -1498,7 +1437,7 @@ object Snapshot {
         // they can mix generations, and plain inference would take one
         // file's schema and drop the later column from the rewrite.
         if (rewrite.nonEmpty) // DV-filtered: a COW rewrite of a file
-          // holding MOR tombstones must not resurrect those rows
+          // with a deletion vector must not resurrect its deleted rows
           applyDv(spark, m, physReader(spark, m).parquet(rewrite.map(_.path): _*))
             .filter(keep).write.mode("overwrite").parquet(dir)
         withFiles(spark, dir, m, untouched)
@@ -1506,189 +1445,135 @@ object Snapshot {
     }
   }
 
-  /** Row-level DELETE, MERGE-ON-READ — the Delta deletion-vector
-    * motion: no data file is rewritten at all. The new entry carries
-    * EVERY base file by reference, plus a deletion vector: a tombstone
-    * payload (rows of `(file, row_index)`) naming exactly
-    * the deleted rows, with the tombstone count per file in the entry;
-    * every read path anti-joins the payload against the scan's
-    * `_metadata` columns ([[applyDv]]).
+  /** Row-level DELETE, MERGE-ON-READ — Delta's deletion vectors: no
+    * data file is rewritten for the delete itself. One aggregate job
+    * over the base's files collects, per file, the positions
+    * (`_metadata.row_index`) of the rows `cond` matches into a Roaring
+    * bitmap; the driver ORs each into its file action's deletion
+    * vector, which the entry holds inline. Every read path filters the
+    * scan through the bitmaps ([[applyDv]]); [[Meta.rowCount]]
+    * subtracts their cardinalities.
     *
     * This is the complement of [[deleteWhere]]'s copy-on-write: COW
     * wins when deletes CLUSTER (a range on the layout key rewrites few
     * files), MOR wins when they SCATTER — a predicate matching one row
     * in every file of a 100 TB table (the GDPR/right-to-be-forgotten
-    * erasure shape, per-id scrubs) costs O(matched rows) of tombstone
-    * metadata here versus a full table rewrite there. The read-side
-    * price is one broadcast anti-join per scan until [[compact]] (or
-    * any rewriting maintenance pass) re-materializes the rows and
-    * clears the deletion vector — run it when the payload grows past the
-    * broadcast bound, exactly Delta's PURGE discipline.
+    * erasure shape, per-id scrubs) costs O(matched rows) of bitmap
+    * here versus a full table rewrite there. The read-side price is one
+    * per-row bitmap probe while a file carries a deletion vector. A
+    * file whose deleted rows would pass [[MaxDeletedShare]] of its rows
+    * is mostly dead weight to every read, so the same commit rewrites
+    * it without them ([[rewriteLive]], as [[purgeDv]] does) — its
+    * bitmap dies with it; every other file rides by reference.
     *
-    * Composes with the rest of the layer: tombstones survive appends
-    * and metadata-only commits verbatim, follow carried files through
-    * file-granular merges/deletes (rewritten files' entries die with
-    * the DV-filtered rewrite), ride shallow clones, stay version-pinned
-    * for time travel ([[readVersion]] of the pre-delete version still
-    * sees the rows), and are vacuumed with their version. `cond` is
-    * evaluated in LOGICAL names with SQL DELETE semantics (a NULL
-    * predicate deletes nothing). Serializable, like every
-    * read-modify-write commit.
+    * Composes with the rest of the layer: deletion vectors ride in the
+    * file actions, so appends, metadata-only commits, restores and
+    * shallow clones carry them verbatim; a file-granular merge or
+    * delete drops them with the files it rewrites (DV-filtered);
+    * [[compact]] and [[purgeDv]] clear them; time travel stays
+    * version-pinned ([[readVersion]] of the pre-delete version still
+    * sees the rows). `cond` is evaluated in LOGICAL names with SQL
+    * DELETE semantics (a NULL predicate deletes nothing).
+    * Serializable, like every read-modify-write commit.
     *
     * Streaming append-tails are strictly SAFER under MOR than under
-    * COW deletes: the commit adds no data files (its attempt holds only
-    * the deletion vector), so a running tail sees nothing —
-    * no rewritten files interleaving already-emitted rows, which is
-    * the case [[graft.streaming.Streaming.tailVacuumAudit]] exists to
-    * refuse. (File tails never retract rows on any engine; deletes
-    * reach streaming consumers through [[changeFeed]].)
-    *
-    * @return the newest committed version carrying this delete's
-    *         effect: normally the MOR commit itself, but when the new
-    *         payload crosses the broadcast bound and the auto-purge
-    *         ([[maybePurgeOversizedDv]]) runs and succeeds, the
-    *         follow-on purge's commit. Purge failure is logged and
-    *         swallowed — the delete is durable either way. */
+    * COW deletes: a commit that rewrites no file adds no data file, so
+    * a running tail sees nothing — no rewritten files interleaving
+    * already-emitted rows, which is the case
+    * [[graft.streaming.Streaming.tailVacuumAudit]] exists to refuse.
+    * (File tails never retract rows on any engine; deletes reach
+    * streaming consumers through [[changeFeed]].) Returns the
+    * committed version. */
   def deleteWhereMor(spark: SparkSession, root: String,
-                     cond: org.apache.spark.sql.Column): Long = {
-    import org.apache.spark.sql.functions._
-    val v = onHead(spark, root, "deleteWhereMor") { (base, m) => Some { dir =>
-      // pin (file, row_index) BEFORE the existing-DV anti-join (both
-      // relations are parquet scans — `_metadata` goes ambiguous
-      // after the join), apply the base's tombstones so already-
-      // deleted rows never re-enter, then evaluate the predicate in
-      // logical names
-      val tagged = applyDv(spark, m, physReader(spark, m)
-        .parquet(scanPaths(m): _*)
-        .withColumn("__mor_file",
-          canonMetaPath(col("_metadata.file_path")))
-        .withColumn("__mor_idx", col("_metadata.row_index")))
-      val fresh = toLogical(tagged, m.colmap)
+                     cond: org.apache.spark.sql.Column): Long =
+    onHead(spark, root, "deleteWhereMor") { (_, m) => Some { dir =>
+      import org.apache.spark.sql.functions._
+      // rows an existing bitmap already deletes may match again: the
+      // OR below absorbs them, so the scan needs no DV filter
+      val hits = toLogical(physReader(spark, m).parquet(scanPaths(m): _*)
+          .withColumn("__mor_file", col("_metadata.file_path"))
+          .withColumn("__mor_idx", col("_metadata.row_index")), m.colmap)
         .filter(coalesce(cond, lit(false)))
-        .select(col("__mor_file").as("file"),
-          col("__mor_idx").as("row_index"))
-      // persisted: the per-file counts below and the payload write
-      // would otherwise each re-run the corpus-sized predicate scan
-      val merged = m.dv.map(d => Layout.readParquet(spark, d.path)
-        .unionByName(fresh)).getOrElse(fresh).distinct().persist()
-      try {
-        val tombs = merged.groupBy("file").count().collect()
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        // Loud invariant, not a silent filter: every tombstone must
-        // byte-match a file action, or a carry would silently DROP it
-        // and the MOR-deleted row would resurrect on the next commit
-        // (the GDPR-erasure shape this feature exists for). Tombstones
-        // come from `_metadata.file_path` via canonMetaPath, actions
-        // from `Path.toString` via canonFile — a table root whose
-        // URI-encoding differs between the two (spaces, percent,
-        // non-ASCII) is exactly the mismatch this catches.
-        val inventory = m.files.map(_.path).toSet
-        val orphans = tombs.keys.filterNot(inventory.contains)
-        require(orphans.isEmpty,
-          s"MOR delete on $root v=$base would tombstone " +
-            s"${orphans.size} file(s) absent from the base inventory " +
-            s"(byte-wise path mismatch — canonMetaPath vs canonFile " +
-            s"canonicalization); first orphan: ${orphans.head}")
-        // all data rides by reference; no new tombstone: the base's payload stands as it is (none at
-        // all on a DV-less base — an empty payload would tax every read
-        // with the anti-join for no effect). Width tracks tombstone
-        // volume ([[DvRowsPerSidecarFile]]) so a scattered 10^9-row
-        // erasure never funnels through one writer task.
-        if (m.dv.exists(_.tombs == tombs) || tombs.isEmpty) m
-        else {
-          val nTomb = tombs.values.sum
-          val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-          val width = math.min(cap.toLong, (nTomb + DvRowsPerSidecarFile
-            - 1) / DvRowsPerSidecarFile).toInt
-          val p = payloadOf(dir, "dv")
-          merged.coalesce(width).write.mode("overwrite").parquet(p)
-          m.copy(dv = Some(DvRef(p, tombs)))
-        }
-      } finally merged.unpersist()
+        .groupBy("__mor_file")
+        .agg(udaf(RowSet, Encoders.scalaLong)(col("__mor_idx")))
+        .collect()
+      // a hit on a file no action names fails the lookup loudly: it
+      // would otherwise be dropped and the row resurrect
+      val byScan = m.files.map(f => scanForm(f.path) -> f.path).toMap
+      val fresh = hits.map(r =>
+        byScan(r.getString(0)) -> bitmapOf(r.getAs[Array[Byte]](1))).toMap
+      // each fresh bitmap is this commit's own: OR the base's into it
+      val files = m.files.map(f => fresh.get(f.path).fold(f) { b =>
+        f.dv.foreach(b.or)
+        f.copy(dv = Some(b))
+      })
+      val (heavy, light) = files.partition(f => f.deleted > f.rows * MaxDeletedShare)
+      val next = m.copy(files = files)
+      if (heavy.isEmpty) next else rewriteLive(spark, dir, next, heavy, light)
     } }
-    // The MOR commit is durable once its entry is put; the auto-purge
-    // is follow-on maintenance. A purge failure must not surface as a
-    // deleteWhereMor failure — the delete committed. On purge success
-    // the returned version is the PURGE's commit (the newest version
-    // carrying the delete's effect); on failure or opt-out it is the
-    // MOR commit itself.
-    try maybePurgeOversizedDv(spark, root, v)
-    catch {
-      case e: Exception =>
-        System.err.println(s"graft: post-MOR DV auto-purge on " +
-          s"$root failed (${e.getMessage}); the MOR delete at " +
-          s"v=$v is committed — run Snapshot.purgeDv manually")
-        v
+
+  /** The share of a file's rows past which [[deleteWhereMor]] rewrites
+    * the file without its deleted rows instead of extending its
+    * deletion vector. */
+  private val MaxDeletedShare = 0.5
+
+  /** The row positions of one file as a typed aggregate: a Roaring
+    * bitmap buffer per group, merged across partitions, finished as its
+    * portable serialization ([[bitmapOf]] reads it back). */
+  private object RowSet extends org.apache.spark.sql.expressions.Aggregator[
+      Long, Roaring64NavigableMap, Array[Byte]] {
+    def zero: Roaring64NavigableMap = new Roaring64NavigableMap()
+    def reduce(b: Roaring64NavigableMap, row: Long): Roaring64NavigableMap = {
+      b.addLong(row); b
     }
+    def merge(a: Roaring64NavigableMap, b: Roaring64NavigableMap): Roaring64NavigableMap = {
+      a.or(b); a
+    }
+    def finish(b: Roaring64NavigableMap): Array[Byte] = bitmapBytes(b)
+    def bufferEncoder: Encoder[Roaring64NavigableMap] =
+      Encoders.javaSerialization[Roaring64NavigableMap]
+    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** The README's COW-vs-MOR operational rule, self-executing: once a
-    * just-committed payload exceeds the [[DvBroadcastBytes]] bound
-    * (overridable via `graft.snapshot.dvAutoPurgeBytes`), every read
-    * of the version pays a SHUFFLED anti-join instead of a broadcast —
-    * from that point the one-time [[purgeDv]] rewrite is strictly
-    * cheaper than the standing read tax, so it runs here unless the
-    * operator opts out (`graft.snapshot.dvAutoPurge=false`, which
-    * downgrades to a logged recommendation). Called after the put, so
-    * the MOR commit itself stays O(matched rows) and the
-    * purge is an ordinary follow-on maintenance commit. */
-  private def maybePurgeOversizedDv(spark: SparkSession, root: String,
-                                    v: Long): Long = {
-    val d = metaOf(spark, root, v).dv.getOrElse(return v)
-    val p = new org.apache.hadoop.fs.Path(d.path)
-    val bytes = fsOf(spark, p).getContentSummary(p).getLength
-    val bound = spark.conf.getOption("graft.snapshot.dvAutoPurgeBytes")
-      .map(_.toLong).getOrElse(DvBroadcastBytes)
-    if (bytes <= bound) return v
-    val auto = spark.conf.getOption("graft.snapshot.dvAutoPurge")
-      .forall(_.toBoolean)
-    if (auto) {
-      System.err.println(s"graft: DV payload on $root v=$v is $bytes B " +
-        s"(> $bound B broadcast bound) — auto-purging (set " +
-        "graft.snapshot.dvAutoPurge=false to defer)")
-      purgeDv(spark, root)
-    } else {
-      System.err.println(s"graft: DV payload on $root v=$v is $bytes B " +
-        s"(> $bound B broadcast bound) — reads now pay a shuffled " +
-        "anti-join; run Snapshot.purgeDv to clear it")
-      v
+  /** The entry of a commit into attempt directory `dir` that rewrites
+    * the `touched` actions of `m` without their deleted rows and
+    * carries `kept` by reference; a file whose every row is deleted is
+    * dropped unread. Output width follows the rewritten bytes, FLOORED
+    * at their file count: bytes alone under-width hyper-compressed
+    * tables (the soak fixture packs 150M rows into 119 MB → width 1 → a
+    * one-task whole-corpus rewrite, measured 277 s at sf100); matching
+    * the input file count keeps one reader ≈ one writer and never
+    * explodes small files. */
+  private def rewriteLive(spark: SparkSession, dir: String, m: Meta,
+                          touched: Seq[FileAction], kept: Seq[FileAction]): Meta = {
+    val read = touched.filter(f => f.deleted < f.rows)
+    if (read.nonEmpty) {
+      val cap = spark.sessionState.conf.numShufflePartitions
+      val width = math.max(compactWidthFor(read.map(_.size).sum, cap),
+        math.min(read.size, cap))
+      applyDv(spark, m, physReader(spark, m).parquet(read.map(_.path): _*))
+        .coalesce(width)
+        .write.mode("overwrite").parquet(dir)
     }
+    withFiles(spark, dir, m, kept)
   }
 
-  /** PURGE the deletion vector — Delta's `REORG TABLE … APPLY
-    * (PURGE)` as a first-class maintenance pass: rewrite ONLY the
-    * files that carry tombstones (DV-filtered, so the deleted rows
-    * vanish from the bytes), carry every clean file into the new
-    * version by reference, and drop the deletion vector — after
-    * which reads pay zero anti-join tax again. Where [[compact]]
-    * rewrites the whole table, this touches O(tombstoned-file bytes):
-    * on a table whose deletes clustered in a few files, the purge
-    * reads those files, not the table. (A fully scattered delete —
-    * of23's GDPR shape — tombstones every file, and purge degrades to
-    * compact's cost; both points measured in BENCH_NOTES.) The
-    * tombstoned files come from the entry's per-file counts, and the
-    * deletion vector clears through [[withFiles]]'s carry rule
-    * itself: every tombstone names a rewritten file, so none is
-    * carried — no special case. No-op (current version returned, no
-    * commit burned) on a table without tombstones. */
+  /** PURGE the deletion vectors — Delta's `REORG TABLE … APPLY
+    * (PURGE)` as a first-class maintenance pass: rewrite exactly the
+    * files whose actions carry a bitmap ([[rewriteLive]]: DV-filtered,
+    * so the deleted rows vanish from the bytes) and carry every clean
+    * file into the new version by reference, after which reads pay no
+    * filter again. Where [[compact]] rewrites the whole table, this
+    * touches O(deleted-from file bytes): on a table whose deletes
+    * clustered in a few files, the purge reads those files, not the
+    * table. (A fully scattered delete — of23's GDPR shape — marks every
+    * file, and purge degrades to compact's cost; both points measured
+    * in BENCH_NOTES.) No-op (current version returned, no commit
+    * burned) on a table without deletion vectors. */
   def purgeDv(spark: SparkSession, root: String): Long =
-    onHead(spark, root, "purgeDv") { (base, m) =>
-      m.dv.map { d => (dir: String) =>
-        val (touched, untouched) = m.files.partition(f => d.tombs.contains(f.path))
-        // target-file-size width, FLOORED at the touched-file count:
-        // bytes alone under-width hyper-compressed tables (the soak
-        // fixture packs 150M rows into 119 MB → width 1 → a one-task
-        // whole-corpus rewrite, measured 277 s at sf100); matching the
-        // input file count keeps one reader≈one writer parallelism and
-        // never explodes small files
-        val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        val width = math.max(compactWidthFor(touched.map(_.size).sum, cap),
-          math.min(touched.size, cap))
-        applyDv(spark, m, physReader(spark, m).parquet(touched.map(_.path): _*))
-          .coalesce(width)
-          .write.mode("overwrite").parquet(dir)
-        withFiles(spark, dir, m, untouched)
-      }
+    onHead(spark, root, "purgeDv") { (_, m) =>
+      val (touched, clean) = m.files.partition(_.dv.isDefined)
+      Option.when(touched.nonEmpty)(dir => rewriteLive(spark, dir, m, touched, clean))
     }
 
   /** ADD a named CHECK constraint (the Delta `ALTER TABLE ... ADD
@@ -1858,20 +1743,20 @@ object Snapshot {
           // validated by the commits that wrote them
           enforceWritten(spark, root, dir, m)
           fresh = freshOf(spark, dir, m)
-          carry(spark, m, m.files, fresh)
+          carry(m, m.files, fresh)
         },
         // a lost put re-carries the winner's actions around the same
         // fresh files, with no job: the attempt is never rewritten, so
         // a tail never lists its rows twice
         (_, m2) => Option.when(binding(m2) == binding(m))(
-          carry(spark, m2, m2.files, fresh))))
+          carry(m2, m2.files, fresh))))
     }
   }
 
-  /** The files a commit wrote into its attempt directory `dir`: the
-    * schema their footers carry (None when it wrote none) and their
-    * file actions. */
-  private final case class Fresh(dir: String, schema: Option[StructType],
+  /** The files a commit wrote into its attempt directory: the schema
+    * their footers carry (None when it wrote none) and their file
+    * actions. */
+  private final case class Fresh(schema: Option[StructType],
                                  actions: Seq[FileAction])
 
   /** The [[Fresh]] files of attempt `dir`, with stats over the columns
@@ -1881,7 +1766,7 @@ object Snapshot {
   private def freshOf(spark: SparkSession, dir: String, m: Meta): Fresh = {
     val files = parquetFiles(spark, new org.apache.hadoop.fs.Path(dir))
     val footer = files.headOption.map(Layout.footerSchema(spark, _))
-    Fresh(dir, footer, freshActions(spark, dir, files,
+    Fresh(footer, freshActions(spark, dir, files,
       footer.fold(m.schema)(mergedSchema(m.schema, _)), m.stats, m.blooms))
   }
 
@@ -1890,34 +1775,14 @@ object Snapshot {
     * and adds the files of attempt `dir`. */
   private def withFiles(spark: SparkSession, dir: String, m: Meta,
                         carried: Seq[FileAction]): Meta =
-    carry(spark, m, carried, freshOf(spark, dir, m))
+    carry(m, carried, freshOf(spark, dir, m))
 
   /** Entry `m` keeping its `carried` actions and adding the `fresh`
-    * ones. The carried actions ride verbatim with their stats.
-    * Merge-on-read tombstones follow their files: a DV whose tombstoned
-    * files are all carried is referenced as it stands, with no job; one
-    * that loses a rewritten file (its rows are gone from the DV-filtered
-    * rewrite) is filtered into the attempt's own DV payload, or dropped
-    * when nothing of it is carried. */
-  private def carry(spark: SparkSession, m: Meta, carried: Seq[FileAction],
-                    fresh: Fresh): Meta = {
-    import org.apache.spark.sql.functions.col
-    val carriedSet = carried.map(_.path).toSet
-    val dv = m.dv.flatMap { d =>
-      val kept = d.tombs.filter { case (f, _) => carriedSet(f) }
-      if (kept.isEmpty) None
-      else if (kept.size == d.tombs.size) Some(d)
-      else {
-        val p = payloadOf(fresh.dir, "dv")
-        Layout.readParquet(spark, d.path)
-          .filter(col("file").isin(kept.keys.toSeq: _*))
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        Some(DvRef(p, kept))
-      }
-    }
+    * ones. The carried actions ride verbatim with their stats and
+    * deletion vectors, so a carry runs no job. */
+  private def carry(m: Meta, carried: Seq[FileAction], fresh: Fresh): Meta =
     m.copy(schema = fresh.schema.fold(m.schema)(mergedSchema(m.schema, _)),
-      files = carried ++ fresh.actions, dv = dv)
-  }
+      files = carried ++ fresh.actions)
 
   /** Incremental small-file compaction (the OPTIMIZE maintenance pass
     * a CDC- or delete-churned table needs): bin-pack ONLY the files
@@ -1954,14 +1819,15 @@ object Snapshot {
     * version REFERENCES the source's current files — the Delta
     * `CREATE TABLE ... SHALLOW CLONE` shape: zero data I/O at any table
     * size and no Spark job (one entry: the source head's, whose
-    * actions name the source's files, bloom payloads and deletion
-    * vector by absolute path), after which the clone evolves
-    * independently (merges/deletes on the clone write THEIR new files
-    * under `dstRoot` while untouched data keeps riding the source's
-    * files — the everyday dev/test-against-prod and experiment-branch
-    * motion). Data skipping works on the clone from the first read,
-    * and the source's tombstones stay applied. A metadata-only commit of
-    * version 1 on the destination, which must be a fresh root.
+    * actions name the source's files and bloom payloads by absolute
+    * path and hold their deletion vectors), after which the clone
+    * evolves independently (merges/deletes on the clone write THEIR new
+    * files under `dstRoot` while untouched data keeps riding the
+    * source's files — the everyday dev/test-against-prod and
+    * experiment-branch motion). Data skipping works on the clone from
+    * the first read, and the source's deletion vectors stay applied. A
+    * metadata-only commit of version 1 on the destination, which must
+    * be a fresh root.
     *
     * Same caveat as Delta documents: the clone borrows the source's
     * RETENTION — vacuuming the source can collect files a clone still
@@ -1986,7 +1852,7 @@ object Snapshot {
     * commit — history moves forward only (the bad versions stay
     * readable for forensics until vacuumed), and the restore itself is
     * a METADATA-ONLY commit: the new entry takes `toV`'s file actions,
-    * stats and deletion vector verbatim, so restoring a 100 TB table
+    * stats and deletion vectors verbatim, so restoring a 100 TB table
     * writes one entry, never data, and data skipping survives. A
     * read-modify-write commit like every other. */
   def restore(spark: SparkSession, root: String, toV: Long): Long =
@@ -1997,8 +1863,7 @@ object Snapshot {
         // history is orthogonal to data history
         val toM = metaOf(spark, root, toV)
         Some { _ => m.copy(schema = toM.schema,
-          files = toM.files, stats = toM.stats, blooms = toM.blooms,
-          dv = toM.dv) }
+          files = toM.files, stats = toM.stats, blooms = toM.blooms) }
       }
     }
 
@@ -2733,18 +2598,25 @@ object Snapshot {
   /** Orphan GC, one rule: keep what a LIVE version names, delete the
     * rest once it is provably nobody's. The live versions are the
     * `retain` newest committed ones (the time-travel window; the head
-    * always among them) and any committed while vacuum runs. Every
-    * attempt directory a live entry names survives — its own data, a
-    * carried file's, a bloom payload's, the deletion vector's. Each
+    * always among them). Every attempt directory a live entry names
+    * survives — its own data, a carried file's, a bloom payload's. Each
     * version it collects shrinks to its header `{time, dir}`, which
     * outlives the data ([[commitHistory]], [[readAsOf]]); a collected
     * version's [[readVersion]] fails fast. Any other attempt directory
-    * a header or a collected entry names is deleted at once. One that
-    * no entry names at all is an attempt in flight or a crashed one: it
-    * is deleted only once older than [[AttemptRetentionMs]], as are
-    * temp files a crashed put or hint write left in `_log`. The head
-    * and the hint are never touched. Like any GC, vacuum assumes no
-    * reader is still walking an unreferenced snapshot's files. Returns
+    * a collected entry names is deleted at once. One that no entry
+    * names at all is an attempt in flight or a crashed one: it is
+    * deleted only once older than [[AttemptRetentionMs]], as are temp
+    * files a crashed put or hint write left in `_log`. The head and the
+    * hint are never touched. Like any GC, vacuum assumes no reader is
+    * still walking an unreferenced snapshot's files.
+    *
+    * Cost: O(versions since the last vacuum). Collected versions form a
+    * prefix 1..H of the log, so the walk goes from the head down and
+    * stops at the first header; what the headers below it named went
+    * with the vacuum that wrote them. The doomed directories are
+    * deleted BEFORE any entry shrinks, and entries shrink oldest first:
+    * a vacuum killed part-way leaves full entries above a header
+    * prefix, which the next vacuum reads and reclaims again. Returns
     * the deleted names, relative to `root`. */
   def vacuum(spark: SparkSession, root: String, retain: Int = 1): Seq[String] = {
     require(retain >= 1, "retain must keep at least the live version")
@@ -2752,28 +2624,20 @@ object Snapshot {
       throw new java.util.NoSuchElementException(
         s"snapshot table $root has no committed version; nothing to vacuum"))
     val fs = fsOf(spark, new org.apache.hadoop.fs.Path(root))
-    // the attempt directories an entry or header names: its own, its
-    // files', its bloom payloads', its deletion vector's
+    // the attempt directories an entry names: its own, its files', its
+    // bloom payloads'
     def names(j: org.json4s.JValue): Seq[String] = {
       import org.json4s._
       val files = j \ "files" match { case JArray(fs) => fs; case _ => Nil }
-      (files.flatMap(f => Seq(f \ "path", f \ "bloom")) :+ (j \ "dv" \ "path"))
+      files.flatMap(f => Seq(f \ "path", f \ "bloom"))
         .collect { case JString(p) => attemptOf(p) } ++ headerOf(j)._2
     }
-    val live = scala.collection.mutable.Set[String]()
-    val doomed = scala.collection.mutable.Set[String]()
-    logVersions(spark, root).foreach { v =>
-      val j = entryJson(spark, root, v).get
-      if (isHeaderOnly(j)) doomed ++= names(j)
-      else if (v > cur - retain) live ++= names(j)
-      else {
-        doomed ++= names(j)
-        val (time, dir) = headerOf(j)
-        replaceFile(spark, root, recordPath(root, v),
-          org.json4s.jackson.JsonMethods.compact(
-            org.json4s.JObject(headerFields(time, dir))))
-      }
-    }
+    val (kept, collected) = Iterator.iterate(cur)(_ - 1).takeWhile(_ >= 1)
+      .map(v => v -> entryJson(spark, root, v).get)
+      .takeWhile { case (_, j) => !isHeaderOnly(j) }.toList
+      .partition(_._1 > cur - retain)
+    val live = kept.flatMap(e => names(e._2)).toSet
+    val doomed = collected.flatMap(e => names(e._2)).toSet
     val now = System.currentTimeMillis()
     def stale(st: org.apache.hadoop.fs.FileStatus) =
       now - st.getModificationTime > AttemptRetentionMs
@@ -2788,6 +2652,12 @@ object Snapshot {
         !st.getPath.getName.matches("v=\\d+\\.json") && stale(st))
         .map(st => s"$LogDir/${st.getPath.getName}")
     dead.foreach(n => fs.delete(new org.apache.hadoop.fs.Path(root, n), true))
+    collected.reverse.foreach { case (v, j) =>
+      val (time, dir) = headerOf(j)
+      replaceFile(spark, root, recordPath(root, v),
+        org.json4s.jackson.JsonMethods.compact(
+          org.json4s.JObject(headerFields(time, dir))))
+    }
     dead
   }
 

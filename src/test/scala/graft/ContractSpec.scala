@@ -36,6 +36,25 @@ class ContractSpec extends SparkSuite {
     }
   }
 
+  test("main code reads exactly the listed graft.* conf keys (knob count pin)") {
+    // every configuration knob is a review decision: a new `graft.<key>`
+    // conf read fails here until this list names it
+    import scala.jdk.CollectionConverters._
+    val key = "\"(graft\\.[a-z][A-Za-z0-9]*(?:\\.[A-Za-z0-9]+)+)\"".r
+    val read = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap(p => key.findAllMatchIn(new String(java.nio.file.Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.UTF_8)).map(_.group(1)))
+      .toSet
+    assert(read == Set(
+      "graft.ann.indexDir", "graft.ann.indexRetentionMs", "graft.ann.leaseStaleMs",
+      "graft.snapshot.bloomEstItems",
+      "graft.streaming.kafka.bootstrap", "graft.streaming.kafka.startingOffsets",
+      "graft.streaming.kafka.topic", "graft.streaming.rate.rowsPerBatch",
+      "graft.streaming.rate.startTimestamp", "graft.streaming.source",
+      "graft.streaming.statePartitions"), s"graft.* conf keys read: $read")
+  }
+
   test("README hardcodes no query-surface count (drift guard)") {
     // The surface count lives in ONE place: SparkEntry.queries.size.
     // README copies of it went stale twice (rounds 5 and 6); ban the

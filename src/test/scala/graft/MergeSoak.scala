@@ -165,16 +165,17 @@ object MergeSoak {
 
     // ---- leg C: merge-on-read scattered delete on the pruned table ----
     // the shape COW cannot serve: one matching row in ~every file.
-    // Measured: the delete commit itself (O(matched) sidecar write vs
-    // leg B's table rewrite), the read tax the anti-join adds, and the
-    // compact that re-materializes and clears the sidecar.
+    // Measured: the delete commit itself (O(matched) bitmaps in the
+    // entry vs leg B's table rewrite), the read tax the bitmap filter
+    // adds, and the purge that re-materializes and clears the bitmaps.
     def digestTimed() = sec(Snapshot.readCurrent(spark, tA)
       .agg(count(lit(1)),
         sum(col("o_orderkey").cast(DecimalType(38, 0)))).first())
     val (_, readBefore) = digestTimed()
     val (dvV, morSec) = sec(Snapshot.deleteWhereMor(spark, tA,
       col("o_orderkey") % 97 === 0))
-    val dvBytes = treeBytes(Snapshot.metaOf(spark, tA, dvV).dv.get.path)
+    val dvBytes = Snapshot.metaOf(spark, tA, dvV).files.flatMap(_.dv)
+      .map(_.serializedSizeInBytes).sum
     val (d1, readAfter) = digestTimed()
     drainJobs("read_mor")
     // scattered tombstones touch every file — purge's worst case
@@ -183,22 +184,25 @@ object MergeSoak {
     probeLine("purge_scattered")
     val (d2, readPurged) = digestTimed()
     require(d1 == d2, s"purge changed the MOR table's digest: $d1 vs $d2")
-    assert(Snapshot.metaOf(spark, tA, pv).dv.isEmpty, "purge left a sidecar")
+    assert(Snapshot.metaOf(spark, tA, pv).files.forall(_.dv.isEmpty),
+      "purge left a deletion vector")
     println(f"[msoak] mor_delete=$morSec%.2f s " +
-      f"sidecar=${dvBytes / 1e3}%.1f KB (vs full rewrite " +
+      f"bitmaps=${dvBytes / 1e3}%.1f KB (vs full rewrite " +
       f"${bytesB / 1e6}%.1f MB)")
     println(f"[msoak] read_plain=$readBefore%.2f s " +
       f"read_mor=$readAfter%.2f s read_purged=$readPurged%.2f s " +
       f"purge_scattered=$purgeScattered%.2f s")
 
     // ---- leg D: CLUSTERED tombstones — purge's design case ----
-    // delete one narrow key band via MOR (tombstones land in ~1-2
-    // files), then purge: rewrite O(touched files), carry the rest
-    val (_, morBand) = sec(Snapshot.deleteWhereMor(spark, tA,
+    // delete one narrow key band via MOR (bitmaps land in ~1-2 files;
+    // one whose deleted rows pass half its rows is rewritten by the
+    // delete itself), then purge: rewrite O(touched files), carry the rest
+    val (bandV, morBand) = sec(Snapshot.deleteWhereMor(spark, tA,
       col("o_orderkey").between(bandLo, bandHi)))
     val (ppv, purgeClustered) = sec(Snapshot.purgeDv(spark, tA))
     val pmf = Snapshot.fileInventory(spark, tA, ppv).map(_._1)
-    val pRewrote = pmf.count(_.startsWith(dirOf(tA, ppv) + "/"))
+    val wrote = Seq(bandV, ppv).distinct.flatMap(Snapshot.metaOf(spark, tA, _).dir)
+    val pRewrote = pmf.count(f => wrote.exists(d => f.startsWith(d + "/")))
     probeLine("end")
     println(f"[msoak] mor_band_delete=$morBand%.2f s " +
       f"purge_clustered=$purgeClustered%.2f s " +

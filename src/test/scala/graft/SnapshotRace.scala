@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   *  - `appendcompact` — append, with a compactSmall REWRITE every 3rd
   *                      op (makes ancestors unreferenced, so a racing
   *                      vacuum has real work);
-  *  - `restore`       — restore to (head − 2) per op;
+  *  - `restore`       — restore to (head − 2) per op, from the other
+  *                      writer's first commit on;
   *  - `vacuum`        — vacuum(retain = 2) per op.
   * Every op that may publish a version prints ONE machine-parseable
   * `[raceop] v=<v> op=<op> writer=<id> seq=<i> [target=<tv>]` line —
@@ -54,19 +55,19 @@ object SnapshotRaceWriter {
           val v = Snapshot.deleteWhere(spark, root, "k", lit(k), lit(k))
           println(s"[raceop] v=$v op=delete writer=$writerId seq=$i")
         case "mordelete" =>
-          // same seeded victims, MERGE-ON-READ: the tombstone payload
-          // commit races for the put exactly like a rewrite,
-          // and its carry rule must hold under concurrent merges
+          // same seeded victims, MERGE-ON-READ: the deletion-vector
+          // commit races for the put exactly like a rewrite, and its
+          // bitmaps must ride every concurrent merge's carry
           val k = 1000000L + i
           val v = Snapshot.deleteWhereMor(spark, root, col("k") === lit(k))
           println(s"[raceop] v=$v op=mordelete writer=$writerId seq=$i")
         case "morpurge" =>
           // mordelete with an explicit purgeDv every 3rd op: the purge's
           // touched-file rewrite races concurrent appends AND this
-          // writer's own later tombstone commits — the r12 carry assert
-          // (sidecar ∈ inventory, byte-wise path match) now THROWS on
-          // any interleaving that would wedge the chain, so a green soak
-          // is a proof, not a hope
+          // writer's own later deletes; a hit on a file no action names
+          // THROWS (the scan-form lookup), so a green soak is a proof,
+          // not a hope. A purge with no bitmap left (a victim's delete
+          // may rewrite its file itself) is a no-op that logs the head
           val k = 1000000L + i
           val v = Snapshot.deleteWhereMor(spark, root, col("k") === lit(k))
           println(s"[raceop] v=$v op=mordelete writer=$writerId seq=$i")
@@ -83,6 +84,14 @@ object SnapshotRaceWriter {
             println(s"[raceop] v=$cv op=compact writer=$writerId seq=$i")
           }
         case "restore" =>
+          // start once the other writer's first commit lands, so the
+          // restores interleave with its commits
+          if (i == 0) {
+            val seeded = Snapshot.currentVersion(spark, root)
+            val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+            while (Snapshot.currentVersion(spark, root) == seeded &&
+                System.nanoTime() < deadline) Thread.sleep(20)
+          }
           val head = Snapshot.currentVersion(spark, root).getOrElse(1L)
           val tv = math.max(1L, head - 2)
           try {
@@ -94,7 +103,7 @@ object SnapshotRaceWriter {
             case e: Exception =>
               println(s"[raceop] v=-1 op=restore_refused writer=$writerId seq=$i target=$tv")
           }
-          Thread.sleep(50)
+          Thread.sleep(300)
         case "vacuum" =>
           Snapshot.vacuum(spark, root, retain = 2)
           println(s"[raceop] v=-1 op=vacuum writer=$writerId seq=$i")
@@ -123,7 +132,8 @@ object SnapshotRaceWriter {
   *                      so the final content is exactly determined
   *                      regardless of interleaving — any deviation is
   *                      a protocol defect;
-  *  - `restoreappend` — A appends while B restores to (head − 2): the
+  *  - `restoreappend` — A appends while B restores to (head − 2) of a
+  *                      table seeded with three versions: the
   *                      final content DEPENDS on the serialization
   *                      order, so the verifier replays the writers'
   *                      logged (version, op) lines through an
@@ -193,7 +203,7 @@ object SnapshotRace {
     Snapshot.vacuum(spark, root, retain = 2)
     val named = Snapshot.logOf(spark, root).map(_._1)
       .flatMap(v => scala.util.Try(Snapshot.metaOf(spark, root, v)).toOption)
-      .flatMap(m => m.files.map(_.path) ++ m.dv.map(_.path))
+      .flatMap(m => m.files.map(_.path))
     val dataDir = new java.io.File(root, "_data")
     val left = Option(dataDir.listFiles()).toSeq.flatten
     val stale = left.filterNot(d => named.exists(_.contains(s"/_data/${d.getName}/")))
@@ -237,9 +247,9 @@ object SnapshotRace {
     val root = java.nio.file.Files
       .createTempDirectory(s"graft_race_${scenario}_").toString
     val spark = graft.util.LocalSession(8)
-    def seedBatch(lo: Long, width: Long): DataFrame =
+    def seedBatch(lo: Long, width: Long, seq: Int = -1): DataFrame =
       spark.range(lo, lo + width).select(
-        lit("seed").as("writer"), lit(-1).as("seq"), col("id").as("k"))
+        lit("seed").as("writer"), lit(seq).as("seq"), col("id").as("k"))
 
     val (modeA, modeB) = scenario match {
       case "append" => ("append", "append")
@@ -250,27 +260,34 @@ object SnapshotRace {
           seedBatch(1000000L, nCommits.toLong), root, Seq("k"))
         ("merge", "delete")
       case "mormerge" =>
-        // the merge-on-read analogue of mergedelete: B's tombstone
-        // payload commits race A's file-granular merges — the carried
-        // payload must survive every interleaving (a merge that wins
-        // the put between B's read and its put must not resurrect or
-        // double-drop a victim)
+        // the merge-on-read analogue of mergedelete: B's deletion-vector
+        // commits race A's file-granular merges — the carried bitmaps
+        // must survive every interleaving (a merge that wins the put
+        // between B's read and its put must not resurrect or
+        // double-drop a victim). The victims share one file, so their
+        // bitmap grows across deletes until half of them are gone
         Snapshot.commitWithStats(
-          seedBatch(1000000L, nCommits.toLong), root, Seq("k"))
+          seedBatch(1000000L, nCommits.toLong).coalesce(1), root, Seq("k"))
         ("merge", "mordelete")
       case "morpurgeappend" =>
         // VERDICT r12 #6: deleteWhereMor × appendCommit × purgeDv
         // across JVMs. A appends fresh batches (each CARRIES the live
-        // sidecar verbatim through the carry assert) while B tombstones
-        // every seeded victim and periodically purges — the purge's
-        // touched-file rewrite must never resurrect a victim (lost
-        // tombstone) or drop an appended batch, whatever the
-        // interleaving.
+        // bitmaps verbatim) while B deletes every seeded victim and
+        // periodically purges — the purge's touched-file rewrite must
+        // never resurrect a victim (a lost bitmap) or drop an appended
+        // batch, whatever the interleaving. One seed file, as in
+        // mormerge: a victim alone in a file would be rewritten by its
+        // own delete, leaving the purges nothing to do.
         Snapshot.commitWithStats(
-          seedBatch(1000000L, nCommits.toLong), root, Seq("k"))
+          seedBatch(1000000L, nCommits.toLong).coalesce(1), root, Seq("k"))
         ("append", "morpurge")
       case "restoreappend" =>
+        // three seed versions, each adding its own batch: B's first
+        // restore (to head − 2) already publishes, and a restore
+        // changes content
         Snapshot.commit(seedBatch(0L, 100L), root)
+        Snapshot.appendCommit(seedBatch(100L, 100L, -2), root)
+        Snapshot.appendCommit(seedBatch(200L, 100L, -3), root)
         ("append", "restore")
       case "vacuumappend" =>
         Snapshot.commit(seedBatch(0L, 100L), root)
@@ -309,20 +326,22 @@ object SnapshotRace {
       case "morpurgeappend" =>
         // exact regardless of interleaving: every appended batch
         // present, every seeded victim gone (a resurrected victim = a
-        // tombstone lost by a purge/append carry; a missing batch = a
-        // purge rewrite eating a concurrent commit), every delete and
-        // every purge published exactly one version
-        require(hist.size == 1 + 2 * nCommits + nCommits / 3,
-          s"expected ${1 + 2 * nCommits + nCommits / 3} versions, " +
-            s"got ${hist.size}")
+        // bitmap lost by a purge/append carry; a missing batch = a
+        // purge rewrite eating a concurrent commit), every append and
+        // every delete published a version of its own, and every other
+        // version is a purge's
+        val own = ops.filter(o => o("op") != "purge").map(_("v").toLong)
+        require(own.distinct.size == 2 * nCommits,
+          s"appends and deletes published ${own.distinct.size} distinct " +
+            s"versions, expected ${2 * nCommits}: $own")
+        require(ops.map(_("v").toLong).toSet == hist.toSet - 1L,
+          s"logged versions != published ${hist.toSet - 1L}: $ops")
         val want = (0 until nCommits)
           .map(i => ("A", i) -> rows.toLong).toMap
         require(got == want, s"morpurgeappend content mismatch: " +
           s"missing=${want.keySet -- got.keySet} " +
           s"extra=${got.keySet -- want.keySet}")
-        // and the head must carry no tombstone for a file it doesn't
-        // own — readCurrent above already walked the carry assert; a
-        // final explicit purge must be a no-op or leave content fixed
+        // a final explicit purge must be a no-op or leave content fixed
         val afterPurge = Snapshot.purgeDv(spark, root)
         require(contentOf(spark, root) == want,
           s"post-soak purge (v=$afterPurge) changed visible content")
@@ -337,11 +356,24 @@ object SnapshotRace {
           .filterNot(o => o("op") == "restore"
             && o("v") == o.getOrElse("target", ""))
           .map(o => o("v").toLong -> o).toMap
-        require(byV.keySet == hist.toSet -- Set(1L),
-          s"logged versions ${byV.keySet} != published ${hist.toSet - 1L}")
-        var state = Map[(String, Int), Long](("seed", -1) -> 100L)
-        val states = scala.collection.mutable.Map(1L -> state)
-        hist.filter(_ > 1L).foreach { v =>
+        val seeded = Set(1L, 2L, 3L)
+        require(byV.keySet == hist.toSet -- seeded,
+          s"logged versions ${byV.keySet} != published ${hist.toSet -- seeded}")
+        // the race must have happened: a restore that rolled back over
+        // at least one version, published on a moving head
+        require(byV.values.exists(o => o("op") == "restore" &&
+            o("target").toLong < o("v").toLong - 1),
+          s"no restore published a rollback: $byV")
+        val restored = byV.values.filter(_("op") == "restore").map(_("v").toLong)
+        require(byV.values.exists(o => o("op") == "append" &&
+            o("v").toLong > restored.min && o("v").toLong < restored.max),
+          s"no append landed between two restores, the writers did not race: $byV")
+        val states = scala.collection.mutable.Map(
+          1L -> Map(("seed", -1) -> 100L),
+          2L -> Map(("seed", -1) -> 100L, ("seed", -2) -> 100L),
+          3L -> Map(("seed", -1) -> 100L, ("seed", -2) -> 100L, ("seed", -3) -> 100L))
+        var state = states(3L)
+        hist.filterNot(seeded).foreach { v =>
           val op = byV(v)
           op("op") match {
             case "append" =>

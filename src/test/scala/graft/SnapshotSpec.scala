@@ -1358,11 +1358,10 @@ class SnapshotSpec extends SparkSuite {
     val k30 = Snapshot.readCurrent(spark, root)
       .filter(col("k") === 30L).collect().map(_.getLong(1)).toSeq
     assert(k30 == Seq(-30L), s"re-inserted tombstoned key read $k30")
-    // compact re-materializes the survivors and CLEARS the sidecar
+    // compact re-materializes the survivors and CLEARS the bitmaps
     val cv = Snapshot.compact(spark, root, numFiles = 2)
-    assert(Snapshot.metaOf(spark, root, cv).dv.isEmpty &&
-      !exists(root, rel(dirOf(root, cv)) + "/_payload/dv"),
-      "compact must clear the deletion-vector sidecar")
+    assert(Snapshot.metaOf(spark, root, cv).files.forall(_.dv.isEmpty),
+      "compact must clear the deletion vectors")
     assert(Snapshot.readCurrent(spark, root)
       .filter(col("k") % 10 === 0 && col("k") < 400).count() == 1L)
     // (k=30 is the one re-inserted multiple-of-10 under 400)
@@ -1379,9 +1378,8 @@ class SnapshotSpec extends SparkSuite {
     Snapshot.deleteWhereMor(spark, root, col("k") < 50)
     val pv = Snapshot.purgeDv(spark, root)
     assert(pv == 3L)
-    assert(Snapshot.metaOf(spark, root, pv).dv.isEmpty &&
-      !exists(root, rel(dirOf(root, pv)) + "/_payload/dv"),
-      "purge left the sidecar behind")
+    assert(Snapshot.metaOf(spark, root, pv).files.forall(_.dv.isEmpty),
+      "purge left a deletion vector behind")
     // only the tombstoned file(s) rewrote; the rest carried by reference
     val mfp = Snapshot.fileInventory(spark, root, pv).map(_._1)
     assert(mfp.count(_.startsWith(dirOf(root, 1L) + "/")) >= 2,
@@ -1417,10 +1415,10 @@ class SnapshotSpec extends SparkSuite {
       .select(col("id").as("k"), col("id").as("v")), root)
     val v2 = Snapshot.deleteWhereMor(spark, root, col("k") < 0)
     assert(v2 == 2L)
-    assert(Snapshot.metaOf(spark, root, v2).dv.isEmpty &&
+    assert(Snapshot.metaOf(spark, root, v2).files.forall(_.dv.isEmpty) &&
       attempts(root).size == 1,
-      "an empty tombstone set must not write a sidecar — every read " +
-        "would pay the anti-join plus the inventory-hash check for nothing")
+      "an empty match must not attach a bitmap — every read would pay " +
+        "the deletion-vector filter for nothing")
     assert(Snapshot.readCurrent(spark, root).count() == 50L)
   }
 
@@ -1446,33 +1444,104 @@ class SnapshotSpec extends SparkSuite {
     assert(got.size == 55)
   }
 
-  test("an oversized sidecar auto-purges at commit (README's COW-vs-MOR rule, self-executing)") {
+  test("a table root with a space, %, + and a non-ASCII character: actions name each file in the scan's form") {
     import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_snap_")
+    val root = dir.resolve("t a%b+c \u00e9").toString
+    // a bloom commit keys its stats aggregate by scan form; the append
+    // makes a version whose files live in two attempts
+    Snapshot.commitWithStats(spark.range(0, 60)
+      .select(col("id").as("k"), (col("id") % 7).as("v"))
+      .repartitionByRange(3, col("k")), root, Seq("k"), bloomCols = Seq("v"))
+    Snapshot.appendCommit(Seq((1000L, 1L)).toDF("k", "v"), root)
+    val m = Snapshot.metaOf(spark, root, 2L)
+    assert(m.files.size == 4 && m.files.forall(_.path.contains("/t a%b+c \u00e9/")))
+    def scanned(paths: String*) = spark.read.parquet(paths: _*)
+      .select(col("_metadata.file_path"), input_file_name()).distinct().collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    // the driver's scan form is `_metadata.file_path`, byte for byte;
+    // `input_file_name()` is the same URI in the `file:///` spelling
+    val want = m.files.map { f =>
+      val uri = org.apache.spark.paths.SparkPath.fromPathString(f.path).urlEncoded
+      assert(uri.startsWith("file:///"), uri)
+      (Snapshot.scanForm(f.path), uri)
+    }.toSet
+    assert(want.forall { case (s, u) => s == "file:/" + u.stripPrefix("file:///") })
+    assert(scanned(m.files.map(_.path): _*) == want)
+    assert(scanned(m.files.map(_.path).map(p => p.take(p.lastIndexOf('/'))).distinct: _*) == want)
+    // every read path: the bitmaps find their files, the bloom payload
+    // names the live files
+    Snapshot.deleteWhereMor(spark, root, col("k") % 10 === 0) // 6 + k=1000
+    assert(Snapshot.readCurrent(spark, root).count() == 54L &&
+      Snapshot.currentRowCount(spark, root) == 54L)
+    assert(Snapshot.readCurrentPoint(spark, root, "v", 3L)
+      .collect().map(_.getLong(0)).sorted.toSeq == (3L until 60L by 7L).filter(_ % 10 != 0))
+    Snapshot.purgeDv(spark, root)
+    assert(Snapshot.readCurrent(spark, root).count() == 54L)
+  }
+
+  test("vacuum reads only the versions since the last vacuum: a corrupt collected header is never opened") {
     val root = freshTable()
-    val df = spark.range(0, 400).select(col("id").as("k"),
-        (col("id") % 5).as("v"))
-      .repartitionByRange(4, col("k")).sortWithinPartitions("k")
-    Snapshot.commitWithStats(df, root, Seq("k"))
-    spark.conf.set("graft.snapshot.dvAutoPurgeBytes", "1")
-    try {
-      // opted out: the delete commits MOR-style and the sidecar stays
-      spark.conf.set("graft.snapshot.dvAutoPurge", "false")
-      val v2 = Snapshot.deleteWhereMor(spark, root, col("k") < 20)
-      assert(v2 == 2L && Snapshot.metaOf(spark, root, v2).dv
-        .exists(d => new java.io.File(
-          new org.apache.hadoop.fs.Path(d.path).toUri.getPath).exists()),
-        "opt-out must leave the sidecar in place (logged recommendation only)")
-      // default: the follow-on purge runs and clears it
-      spark.conf.unset("graft.snapshot.dvAutoPurge")
-      val v = Snapshot.deleteWhereMor(spark, root, col("k") >= 20 && col("k") < 40)
-      assert(v == 4L, s"expected the returned version to be the purge's (v=4), got $v")
-      assert(Snapshot.metaOf(spark, root, v).dv.isEmpty,
-        "auto-purge must clear the sidecar")
-      assert(Snapshot.readCurrent(spark, root).count() == 360L)
-    } finally {
-      spark.conf.unset("graft.snapshot.dvAutoPurgeBytes")
-      spark.conf.unset("graft.snapshot.dvAutoPurge")
+    def ver(v: Long) = Snapshot.metaOf(spark, root, v)
+    Snapshot.commitWithStats(spark.range(0, 40).select(col("id").as("k"))
+      .repartitionByRange(2, col("k")), root, Seq("k"))
+    Snapshot.compact(spark, root, numFiles = 1) // v=2
+    Snapshot.compact(spark, root, numFiles = 1) // v=3
+    val first = Seq(1L, 2L).map(v => rel(dirOf(root, v))).toSet
+    assert(Snapshot.vacuum(spark, root).toSet == first)
+    Snapshot.compact(spark, root, numFiles = 1) // v=4
+    Snapshot.compact(spark, root, numFiles = 1) // v=5
+    val second = Seq(3L, 4L).map(v => rel(dirOf(root, v))).toSet
+    val live = ver(5L).dir.toSet.map(rel)
+    // headers 1 and 2 form the collected prefix; the walk down from v=5
+    // stops at header 2 and never opens header 1
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_log", "v=1.json"),
+      "not json {".getBytes("UTF-8"))
+    intercept[IllegalStateException](Snapshot.commitHistory(spark, root))
+    assert(Snapshot.vacuum(spark, root).toSet == second)
+    assert(attempts(root) == live && Snapshot.readCurrent(spark, root).count() == 40L)
+    // v=3 and v=4 shrank to their headers
+    Seq(3L, 4L).foreach { v =>
+      val entry = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(root, "_log", s"v=$v.json")), "UTF-8")
+      assert(entry.startsWith("{\"time\":") && !entry.contains("\"files\""), entry)
     }
+  }
+
+  test("a MOR delete past half of a file's rows rewrites that file in the same commit") {
+    // four files of exactly 100 rows: keys [0,100), [100,200), …
+    val root = freshTable()
+    Snapshot.commitWithStats(spark.range(0, 400, 1, 4)
+      .select(col("id").as("k"), (col("id") % 5).as("v")), root, Seq("k"))
+    val v1 = Snapshot.metaOf(spark, root, 1L).files
+    def fileOf(k: Long) = v1.find(_.bounds.head._1 == k).get.path
+    // a fifth of the first file, and exactly half of the second: below
+    // the rule, both keep their rows behind a bitmap
+    val v2 = Snapshot.deleteWhereMor(spark, root, col("k") < 20 ||
+      (col("k") >= 100 && col("k") < 150))
+    val m2 = Snapshot.metaOf(spark, root, v2)
+    assert(v2 == 2L && m2.dir.isEmpty && m2.files.map(_.path) == v1.map(_.path))
+    assert(m2.files.map(f => f.path -> f.deleted).toMap ==
+      Map(fileOf(0L) -> 20L, fileOf(100L) -> 50L, fileOf(200L) -> 0L, fileOf(300L) -> 0L))
+    // the first file passes half: the same commit rewrites it without
+    // its deleted rows, and its bitmap dies with it; the others ride
+    val v3 = Snapshot.deleteWhereMor(spark, root, col("k") >= 20 && col("k") < 60)
+    val m3 = Snapshot.metaOf(spark, root, v3)
+    assert(v3 == 3L && m3.dir.isDefined)
+    val (fresh, carried) = m3.files.partition(f => m3.dir.contains(f.path.take(f.path.lastIndexOf('/'))))
+    assert(carried.map(_.path).toSet == Set(fileOf(100L), fileOf(200L), fileOf(300L)))
+    assert(fresh.map(_.rows).sum == 40L && fresh.forall(_.dv.isEmpty))
+    assert(carried.find(_.path == fileOf(100L)).get.deleted == 50L)
+    assert(spark.read.parquet(fresh.map(_.path): _*).collect().map(_.getLong(0)).toSet ==
+      (60L until 100L).toSet)
+    assert(Snapshot.readCurrent(spark, root).count() == 290L &&
+      Snapshot.currentRowCount(spark, root) == 290L)
+    // a file whose every row is deleted is dropped, not rewritten
+    val v4 = Snapshot.deleteWhereMor(spark, root, col("k") >= 300)
+    val m4 = Snapshot.metaOf(spark, root, v4)
+    assert(m4.dir.isEmpty && !m4.files.exists(_.path == fileOf(300L)))
+    assert(Snapshot.readCurrent(spark, root).count() == 190L &&
+      Snapshot.currentRowCount(spark, root) == 190L)
   }
 
   test("MOR sidecars ride shallow clones and follow vacuum retention") {
@@ -1486,17 +1555,14 @@ class SnapshotSpec extends SparkSuite {
     val cloneRoot = freshTable() + "/clone"
     Snapshot.shallowClone(spark, root, cloneRoot)
     assert(Snapshot.readCurrent(spark, cloneRoot).count() == 90L)
-    // vacuum with retain=1: the payload of the dead v2 dies, v3's
-    // stays (it belongs to the live version), and v1's directory stays
-    // for the files v3 carries
-    val dv2 = Snapshot.metaOf(spark, root, 2L).dv.get.path
+    // the bitmaps live in the entries, so the MOR deletes write no
+    // attempt; vacuum with retain=1 keeps v1's directory for the files
+    // v3 carries, with v3's bitmaps
     Snapshot.deleteWhereMor(spark, root, col("k") === 50L) // v=3
-    val dv3 = Snapshot.metaOf(spark, root, 3L).dv.get.path
-    def onDisk(p: String) =
-      new java.io.File(new org.apache.hadoop.fs.Path(p).toUri.getPath).exists()
+    assert(Seq(2L, 3L).map(Snapshot.metaOf(spark, root, _).files.map(_.deleted).sum) ==
+      Seq(10L, 11L) && attempts(root) == Set(rel(dirOf(root, 1L))))
     val swept = Snapshot.vacuum(spark, root, retain = 1)
-    assert(onDisk(dv3), "vacuum swept the live version's deletion vector")
-    assert(!onDisk(dv2), s"vacuum left a dead version's deletion vector behind: $swept")
+    assert(swept.isEmpty, s"vacuum swept $swept")
     assert(Snapshot.readCurrent(spark, root).count() == 89L)
     // entries follow the retained versions: the v1 directory v3's entry
     // still names keeps its files, not its entry
@@ -1663,8 +1729,7 @@ class SnapshotSpec extends SparkSuite {
         // an attempt directory exactly when the version added files
         val m = Snapshot.metaOf(spark, root, got)
         val added = attempts(root) -- before
-        assert(added.toSet.subsetOf(m.dir.map(rel).toSet ++
-            m.dv.map(d => rel(d.path.stripSuffix("/_payload/dv")))),
+        assert(added.toSet.subsetOf(m.dir.map(rel).toSet),
           s"$name: stray attempt $added")
         m.dir.foreach(d => assert(exists(root, rel(d)), s"$name: $d missing"))
         // the entry is the whole version: it keeps the stats columns,
@@ -1741,12 +1806,13 @@ class SnapshotSpec extends SparkSuite {
     Snapshot.commitWithStats(spark.range(0, 1000)
       .select(col("id").as("k"), (col("id") % 7).as("v"), (col("id") % 3).as("w"))
       .repartitionByRange(4, col("k")).sortWithinPartitions("k"), root, Seq("k"))
-    // (commit, Spark jobs): only the data-sized scans and the DV payload
-    // write remain; no zero-row anchor file is written, and the entry —
-    // file actions, stats and DV reference — is written on the driver
+    // (commit, Spark jobs): only the data-sized scans remain (the MOR
+    // delete's one bitmap aggregate among them); no zero-row anchor file
+    // is written, and the entry — file actions with their stats and
+    // deletion vectors — is written on the driver
     val cases: Seq[(String, () => Long, Int)] = Seq(
       ("deleteWhereMor", () => Snapshot.deleteWhereMor(spark, root,
-        col("k") % 10 === 3), 5),
+        col("k") % 10 === 3), 2),
       ("restore", () => Snapshot.restore(spark, root, 1L), 0),
       ("renameColumn", () => Snapshot.renameColumn(spark, root, "v", "v2"), 0),
       ("addCheckConstraint", () =>
@@ -1760,9 +1826,7 @@ class SnapshotSpec extends SparkSuite {
       val before = attempts(root)
       val (v, jobs) = jobsOf(call())
       val m = Snapshot.metaOf(spark, root, v)
-      // only the MOR delete makes a directory: its DV payload's
-      assert(m.dir.isEmpty && (attempts(root) -- before).size ==
-        (if (name == "deleteWhereMor") 1 else 0), s"$name wrote a data file at v=$v")
+      assert(m.dir.isEmpty && attempts(root) == before, s"$name wrote a data file at v=$v")
       name -> jobs
     }
     assert(ran == cases.map(c => c._1 -> c._3))
@@ -1791,14 +1855,13 @@ class SnapshotSpec extends SparkSuite {
     assert(driverJobs == 0, s"driver-branch sidecar reads ran $driverJobs jobs")
     assert(onDriver._1._1.size >= 8 && onDriver._1._2.nonEmpty && onDriver._2.nonEmpty)
     val driverRows = liveRows()
-    assert(driverRows.size == 900 &&
-      !live().inputFiles.exists(_.contains("/_payload/dv/")))
-    // every payload the reads resolve (the two bloom payloads, the
-    // deletion vector) is larger than the forced split
+    assert(driverRows.size == 900)
+    // every payload the reads resolve (the two bloom payloads) is
+    // larger than the forced split
     val split = 512L
-    val payloads = m.files.flatMap(_.bloom).distinct ++ m.dv.map(_.path)
-    assert(payloads == Seq(dirOf(root, 1L), dirOf(root, 2L)).map(_ + "/_payload/bloom") ++
-      m.dv.map(_.path) && m.dv.exists(_.path.endsWith("/_payload/dv")), payloads)
+    val payloads = m.files.flatMap(_.bloom).distinct
+    assert(payloads == Seq(dirOf(root, 1L), dirOf(root, 2L)).map(_ + "/_payload/bloom"),
+      payloads)
     payloads.foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1812,8 +1875,6 @@ class SnapshotSpec extends SparkSuite {
       val (scanned, scanJobs) = jobsOf(pointRead())
       assert(scanJobs >= 1, s"above one split the bloom probe scans: $scanJobs jobs")
       assert(scanned == onDriver._2)
-      // the DV-applied read anti-joins a scanned payload
-      assert(live().inputFiles.exists(_.contains("/_payload/dv/")))
       assert(liveRows() == driverRows)
     }
   }
@@ -1861,37 +1922,37 @@ class SnapshotSpec extends SparkSuite {
     }
   }
 
-  test("a commit on a table with a deletion vector takes the sidecar's file set on the driver") {
+  test("a commit on a table with deletion vectors carries them verbatim, with no job of its own") {
     import spark.implicits._
-    def commits(root: String) = (
-      jobsOf(Snapshot.appendCommit(Seq((2000L, 1L)).toDF("k", "v"), root))._2,
-      jobsOf(Snapshot.purgeDv(spark, root))._2,
-      Snapshot.readCurrent(spark, root).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
-    val (append, purge, rows) = commits(sidecarTable())
-    // the append's jobs are its data write and its fresh bloom stats;
-    // it references the DV payload as it stands. purgeDv takes the
-    // tombstoned files from the entry's per-file counts: its jobs are
-    // the DV-filtered rewrite and the fresh bloom stats
-    assert((append, purge) == (3, 4),
-      s"append ran $append jobs, purgeDv $purge")
-    assert(rows.size == 901)
-    // above one split the distinct stays distributed, with the same rows
+    def append(root: String) =
+      jobsOf(Snapshot.appendCommit(Seq((2000L, 1L)).toDF("k", "v"), root))._2
+    def rows(root: String) = Snapshot.readCurrent(spark, root).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    def bitmaps(root: String, v: Long) = Snapshot.metaOf(spark, root, v).files
+      .collect { case f if f.dv.isDefined => f.path -> f.dv.get }
+    // the same append on the table and on its purged twin: the
+    // deletion vectors add 0 jobs to the data write and its bloom stats
     val root = sidecarTable()
-    withConf("spark.sql.files.maxPartitionBytes", "512") {
-      val (bigAppend, bigPurge, bigRows) = commits(root)
-      assert(bigAppend > append && bigPurge > purge && bigRows == rows)
-    }
-    // an append references the MOR delete's payload as it stands, and
-    // vacuum keeps that payload for the live entry that names it
+    val clean = sidecarTable()
+    Snapshot.purgeDv(spark, clean)
+    val (dvAppend, cleanAppend) = (append(root), append(clean))
+    assert(dvAppend == cleanAppend && dvAppend == 3,
+      s"append ran $dvAppend jobs on the DV table, $cleanAppend without")
+    // the append's entry holds v3's bitmaps as they were
+    assert(bitmaps(root, 4L) == bitmaps(root, 3L) && bitmaps(root, 3L).size == 8)
+    assert(rows(root) == rows(clean) && rows(root).size == 901)
+    // purgeDv rewrites exactly the files with a bitmap: its jobs are the
+    // DV-filtered rewrite and the fresh bloom stats
+    val (pv, purge) = jobsOf(Snapshot.purgeDv(spark, root))
+    assert(purge == 3, s"purgeDv ran $purge jobs")
+    val m = Snapshot.metaOf(spark, root, pv)
+    assert(m.files.forall(_.dv.isEmpty) &&
+      m.files.map(_.path).toSet.intersect(bitmaps(root, 4L).map(_._1).toSet).isEmpty)
+    assert(rows(root).size == 901)
+    // vacuum keeps what the live entry names; the entry is the bitmaps
     val kept = sidecarTable()
-    val dv3 = Snapshot.metaOf(spark, kept, 3L).dv.get.path
     Snapshot.appendCommit(Seq((2000L, 1L)).toDF("k", "v"), kept)
-    assert(Snapshot.metaOf(spark, kept, 4L).dv.map(_.path).contains(dv3))
-    val swept = Snapshot.vacuum(spark, kept, retain = 1)
-    assert(!swept.contains(rel(dv3.stripSuffix("/_payload/dv"))) &&
-      exists(kept, rel(dv3.stripSuffix("/_payload/dv")) + "/_payload/dv"),
-      s"swept $swept")
+    Snapshot.vacuum(spark, kept, retain = 1)
     intercept[java.util.NoSuchElementException](Snapshot.metaOf(spark, kept, 3L))
     val left = Snapshot.readCurrent(spark, kept).collect().map(_.getLong(0))
     assert(left.length == 901 && !left.exists(k => k < 1000 && k % 10 == 3))
