@@ -473,7 +473,6 @@ object Layout {
       file: org.apache.hadoop.fs.FileStatus)
       : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.execution.datasources.parquet._
-    import org.apache.spark.sql.types._
     val reader = openFooter(spark.sparkContext.hadoopConfiguration, file,
       org.apache.parquet.format.converter.ParquetMetadataConverter
         .SKIP_ROW_GROUPS)
@@ -482,15 +481,21 @@ object Layout {
         new org.apache.parquet.hadoop.Footer(file.getPath, reader.getFooter),
         new ParquetToSparkSchemaConverter(spark.sessionState.conf))
       finally reader.close()
-    def nullable(t: DataType): DataType = t match {
+    nullable(schema)
+  }
+
+  /** `schema` nullable throughout, as Spark's file source reads it. */
+  private[graft] def nullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    def of(t: DataType): DataType = t match {
       case s: StructType => StructType(s.fields.map(f =>
-        f.copy(dataType = nullable(f.dataType), nullable = true)))
-      case a: ArrayType => ArrayType(nullable(a.elementType), true)
-      case m: MapType =>
-        MapType(nullable(m.keyType), nullable(m.valueType), true)
+        f.copy(dataType = of(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(of(a.elementType), true)
+      case m: MapType => MapType(of(m.keyType), of(m.valueType), true)
       case other => other
     }
-    nullable(schema).asInstanceOf[StructType]
+    of(schema).asInstanceOf[StructType]
   }
 
   /** [[footerSchema]] of the parquet at `path` (a file or a directory
@@ -525,23 +530,30 @@ object Layout {
     }
   }
 
-  private def readOnDriver(spark: SparkSession,
-                           schema: org.apache.spark.sql.types.StructType,
-                           files: Seq[org.apache.hadoop.fs.FileStatus]): DataFrame = {
-    import scala.jdk.CollectionConverters._
+  /** The rows of `files` ([[driverRows]], `deleted` as there) as a
+    * local relation of `schema`, on a session with
+    * [[graft.plans.DriverEval]] installed: the driver read of
+    * [[readParquet]] and of the snapshot's pruned and point reads. */
+  private[graft] def readOnDriver(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      files: Seq[org.apache.hadoop.fs.FileStatus],
+      deleted: Seq[Long => Boolean] = Nil): DataFrame = {
     // the converter copies every value out of the reader's reused row
     val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(schema)
-    val rows = driverRows(spark, schema, files)
+    val rows = driverRows(spark, schema, files, deleted)
     val read =
       try rows.map(toRow(_).asInstanceOf[org.apache.spark.sql.Row]).toList
       finally rows.close()
-    spark.createDataFrame(read.asJava, schema)
+    graft.plans.DriverEval.localFrame(spark, read, schema)
   }
 
   /** The rows of `files`, file after file, read on the driver by
     * Spark's own parquet reader as `schema` (a file without one of its
-    * columns reads NULL there). Lazy: a file is opened when the
+    * columns reads NULL there), leaving out each row whose position in
+    * its file (`_metadata.row_index`: every row group is read, in
+    * order) `deleted(i)` holds for `files(i)`; with `deleted` empty,
+    * none is left out. Lazy: a file is opened when the
     * iterator reaches it, so a file that does not decode fails in
     * `hasNext`/`next`. The iterator reuses its row: copy what must
     * outlive the next call. A file read to its end is closed; a caller
@@ -553,7 +565,8 @@ object Layout {
     * broadcasts its conf to the executors, a driver read has none. */
   private[graft] def driverRows(spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
-      files: Seq[org.apache.hadoop.fs.FileStatus])
+      files: Seq[org.apache.hadoop.fs.FileStatus],
+      deleted: Seq[Long => Boolean] = Nil)
       : Iterator[org.apache.spark.sql.catalyst.InternalRow] with java.io.Closeable = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.PartitionedFile
@@ -564,20 +577,26 @@ object Layout {
       new DriverOnly(driverReaderConf(spark, schema)),
       schema, schema, new org.apache.spark.sql.types.StructType(),
       Array.empty, None, new ParquetOptions(Map.empty[String, String], sqlConf))
+    val kept: Long => Boolean = _ => false
     new Iterator[InternalRow] with java.io.Closeable {
-      private var pending = files.iterator
+      private var pending = files.iterator.zipAll(deleted, null, kept)
       private var reader: org.apache.spark.sql.connector.read.PartitionReader[InternalRow] = null
+      private var skip = kept
+      private var position = -1L
       private var ready = false
       def hasNext: Boolean = {
         while (!ready && (reader != null || pending.hasNext)) {
           if (reader == null) {
-            val f = pending.next()
+            val (f, d) = pending.next()
             reader = factory.buildReader(PartitionedFile(InternalRow.empty,
               org.apache.spark.paths.SparkPath.fromPath(f.getPath),
               0L, f.getLen, Array.empty, f.getModificationTime, f.getLen))
+            skip = d
+            position = -1L
           }
           ready = reader.next()
           if (!ready) closeReader()
+          else { position += 1; ready = !skip(position) }
         }
         ready
       }

@@ -185,8 +185,6 @@ object PartitionCache {
       StructField("pass", IntegerType, nullable = false),
       StructField("avg_price", LongType, nullable = false),
       StructField("source", StringType, nullable = false)))
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
-      .orderBy("key", "pass")
+    graft.plans.DriverEval.localFrame(spark, rows, schema).orderBy("key", "pass")
   }
 }

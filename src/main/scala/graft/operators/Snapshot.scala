@@ -561,9 +561,25 @@ object Snapshot {
   /** Version `m`'s empty result in logical names, built from the
     * recorded schema: no file is opened. */
   private def emptyOf(spark: SparkSession, m: Meta): DataFrame =
-    toLogical(spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+    toLogical(graft.plans.DriverEval.localFrame(spark, Nil,
       StructType(m.schema.fields.map(_.copy(nullable = true)))), m.colmap)
+
+  /** The files `read` (actions of entry `m`) in PHYSICAL names with
+    * their deletion vectors applied. When they total at most
+    * `spark.sql.files.openCostInBytes` — sizes from the actions, no
+    * listing — Spark's parquet reader reads them on the driver
+    * ([[Layout.readOnDriver]]) as the recorded schema, skipping each
+    * bitmap's positions as it goes, into a local relation that
+    * [[graft.plans.DriverEval]] folds the rest of the query into: the
+    * read runs no Spark job. Larger reads scan through [[applyDv]]. */
+  private def readFiles(spark: SparkSession, m: Meta,
+                        read: Seq[FileAction]): DataFrame =
+    if (read.map(_.size).sum > spark.sessionState.conf.filesOpenCostInBytes)
+      applyDv(spark, m, physReader(spark, m).parquet(read.map(_.path): _*))
+    else Layout.readOnDriver(spark, Layout.nullable(m.schema),
+      read.map(f => new org.apache.hadoop.fs.FileStatus(f.size, false, 0, 0L, 0L,
+        new org.apache.hadoop.fs.Path(f.path))),
+      read.map(f => f.dv.fold[Long => Boolean](_ => false)(b => b.contains(_))))
 
   /** The live version; an empty table fails. */
   private def headOf(spark: SparkSession, root: String): Long =
@@ -1070,7 +1086,6 @@ object Snapshot {
     * filters into it, and `collect` runs no job. */
   private[graft] def statsFrame(spark: SparkSession, m: Meta): DataFrame = {
     import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
     val schema = StructType(StructField("file", StringType) +:
       m.stats.flatMap { c =>
         val t = m.schema(c).dataType
@@ -1084,7 +1099,7 @@ object Snapshot {
           f.bounds.flatMap { case (lo, hi) => Seq(lo, hi) } :+ f.rows))
         .asInstanceOf[org.apache.spark.sql.Row]
     }
-    spark.createDataFrame(rows.asJava, schema)
+    graft.plans.DriverEval.localFrame(spark, rows, schema)
   }
 
   /** The files of entry `m` whose `[min,max]` interval on `statsCol`
@@ -1141,10 +1156,9 @@ object Snapshot {
       // then present logical names
       val hit = skipping.map { case (c, lo, hi) =>
         pruned(spark, m, m.physical(c), lo, hi).toSet }.reduce(_ intersect _)
-      val files = m.files.map(_.path).filter(hit)
+      val files = m.files.filter(f => hit(f.path))
       if (files.isEmpty) emptyOf(spark, m) // no overlap: no scan
-      else toLogical(applyDv(spark, m, physReader(spark, m).parquet(files: _*))
-        .filter(inRange(m.physical)), m.colmap)
+      else toLogical(readFiles(spark, m, files).filter(inRange(m.physical)), m.colmap)
     }
   }
 
@@ -1219,11 +1233,11 @@ object Snapshot {
     if (!m.blooms.contains(physCol))
       readResolved(spark, m).filter(col(pointCol) === lit(value))
     else {
-      val files = pointFiles(spark, m, physCol, value)
+      val hit = pointFiles(spark, m, physCol, value).toSet
+      val files = m.files.filter(f => hit(f.path))
       // definitively absent: no file can contain it
       if (files.isEmpty) emptyOf(spark, m)
-      else toLogical(applyDv(spark, m,
-        physReader(spark, m).parquet(files: _*))
+      else toLogical(readFiles(spark, m, files)
         .filter(col(physCol) === lit(value)), m.colmap)
     }
   }

@@ -122,5 +122,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     QuantizedNorm2.injectInto(e)
     PolyHash.injectInto(e)
     e.injectOptimizerRule(_ => SelfDotToNorm)
+    e.injectOptimizerRule(_ => DriverEval)
   }
 }

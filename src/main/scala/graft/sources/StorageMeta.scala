@@ -9,7 +9,9 @@ import org.apache.spark.sql.types._
   * (`server.py:70-93`: WebHDFS GETFILEBLOCKLOCATIONS → flatten hosts[] →
   * count blocks per host), re-expressed on the Hadoop `FileSystem` API:
   * one NameNode metadata call per file (no data read), then the
-  * flatten+count as a relational explode/groupBy. Works identically on
+  * flatten+count as a relational explode/groupBy over a local relation,
+  * which [[graft.plans.DriverEval]] evaluates on the driver: no Spark
+  * job, as the reference answers in-process. Works identically on
   * local fs (single "localhost" replica) and HDFS (real block→host
   * lists) — the path scheme decides.
   */
@@ -33,7 +35,7 @@ object StorageMeta {
       StructField("offset", LongType, nullable = false),
       StructField("length", LongType, nullable = false),
       StructField("hosts", ArrayType(StringType), nullable = false)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    graft.plans.DriverEval.localFrame(spark, rows, schema)
   }
 
   /** The `BlockLocations` response shape: blocks per host (O14's

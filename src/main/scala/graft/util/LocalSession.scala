@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one local session shape every runner, tool, soak and spec uses:
   * `local[cpus]`, `cpus` shuffle partitions, AQE on, 8 MB file splits,
-  * UTC, no UI, WARN logging. One shape means a dev tool measures what
-  * the bench measures.
+  * UTC, no UI, WARN logging, and [[graft.plans.DriverEval]] installed.
+  * One shape means a dev tool measures what the bench measures.
   *
   * The split size: the fixture contract is ONE parquet file per table,
   * so the default 128 MB split hands an 80 MB sf1 lineitem scan to a
@@ -25,6 +25,7 @@ object LocalSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.plans.DriverEval.install(spark)
     spark
   }
 

@@ -55,6 +55,18 @@ class ContractSpec extends SparkSuite {
       "graft.streaming.statePartitions"), s"graft.* conf keys read: $read")
   }
 
+  test("main code builds no frame through sparkContext.parallelize") {
+    // a driver-made frame is a local relation (DriverEval.localFrame),
+    // so the plans over it fold on the driver instead of running jobs
+    import scala.jdk.CollectionConverters._
+    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.UTF_8).contains("sparkContext.parallelize"))
+      .toList
+    assert(hits.isEmpty, s"sparkContext.parallelize in $hits")
+  }
+
   test("README hardcodes no query-surface count (drift guard)") {
     // The surface count lives in ONE place: SparkEntry.queries.size.
     // README copies of it went stale twice (rounds 5 and 6); ban the

@@ -132,6 +132,23 @@ class EtlSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         !f.getName.startsWith("."))
       .sortBy(_.getName)
 
+  test("BlockLocations (o13): one block per table file, on the one local host, with no job") {
+    import graft.sources.{StorageMeta, Tables}
+    val files = Tables.all.map(t => new Path(s"$sf/$t.parquet"))
+    val fs = files.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val lengths = files.map(fs.getFileStatus(_).getLen)
+    assert(files.size == 10 &&
+      files.zip(lengths).forall { case (f, n) => n < fs.getDefaultBlockSize(f) })
+    val (rows, jobs) = jobsOf(StorageMeta.blocksPerHost(spark, sf).collect().toSeq)
+    assert(jobs == 0, s"BlockLocations ran $jobs jobs")
+    assert(rows.size == 1, rows)
+    assert(rows.head.getLong(1) == 10L && rows.head.getLong(2) == lengths.sum)
+    // Spark's own plan, the driver evaluation excluded, answers the same
+    val distributed = withConf("spark.sql.optimizer.excludedRules",
+      graft.plans.DriverEval.ruleName)(StorageMeta.blocksPerHost(spark, sf).collect().toSeq)
+    assert(distributed == rows)
+  }
+
   test("partition cache: a reuse of a small partition runs no job, a create or recreate one") {
     val cacheDir = tmpDir("graft_jobs_")
     val ((v1, s1), createJobs) =

@@ -1958,6 +1958,102 @@ class SnapshotSpec extends SparkSuite {
     assert(left.length == 901 && !left.exists(k => k < 1000 && k % 10 == 3))
     assert(Snapshot.currentRowCount(spark, kept) == 901L)
   }
+
+  // ---- pruned and point reads within openCostInBytes run on the driver
+
+  /** `read()` as the read-your-write client uses it — aggregated
+    * (count, sum of `sumCol`) and collected — runs no Spark job while
+    * its files total at most `spark.sql.files.openCostInBytes`; with
+    * the bound forced to one byte it scans (≥ 1 job) and answers the
+    * same, row for row. Returns the rows, sorted. */
+  private def driverParity(tag: String, sumCol: String)(
+      read: () => org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] = {
+    def both() = (read().agg(count(lit(1)), sum(col(sumCol))).head(),
+      read().collect().toSeq.sortBy(_.toString))
+    val (onDriver, jobs) = jobsOf(both())
+    assert(jobs == 0, s"$tag: the driver read ran $jobs jobs")
+    withConf("spark.sql.files.openCostInBytes", "1") {
+      val (scanned, scanJobs) = jobsOf(both())
+      assert(scanJobs >= 1, s"$tag: past the bound the read scans, ran $scanJobs jobs")
+      assert(scanned == onDriver, tag)
+    }
+    onDriver._2
+  }
+
+  test("pruned, box and point reads of a DV table run on the driver, skipping the bitmaps' rows") {
+    val root = sidecarTable()
+    val pruned = driverParity("pruned", "v")(() =>
+      Snapshot.readCurrentPruned(spark, root, "k", lit(100L), lit(450L)))
+    // the positions skipped on the driver are those the scan's filter drops
+    assert(pruned.map(_.getLong(0)).sorted == (100L to 450L).filter(_ % 10 != 3))
+    val box = driverParity("box", "k")(() => Snapshot.readCurrentPrunedBox(spark, root,
+      "k", lit(100L), lit(450L), "v", lit(0L), lit(499L)))
+    assert(box.nonEmpty && box.forall(r => r.getLong(1) <= 499L && r.getLong(0) % 10 != 3))
+    assert(driverParity("point", "k")(() =>
+      Snapshot.readCurrentPoint(spark, root, "v", vOf(124L))).map(_.getLong(0)) == Seq(124L))
+    assert(driverParity("deleted point", "k")(() =>
+      Snapshot.readCurrentPoint(spark, root, "v", vOf(123L))).isEmpty)
+  }
+
+  test("driver reads under a root with a space, %, + and a non-ASCII character") {
+    val root = java.nio.file.Files.createTempDirectory("graft_snap_")
+      .resolve("t a%b+c \u00e9").toString
+    Snapshot.commitWithStats(spark.range(0, 60)
+      .select(col("id").as("k"), (col("id") % 7).as("v"))
+      .repartitionByRange(3, col("k")), root, Seq("k"), bloomCols = Seq("v"))
+    Snapshot.deleteWhereMor(spark, root, col("k") % 10 === 0)
+    assert(driverParity("pruned", "v")(() =>
+      Snapshot.readCurrentPruned(spark, root, "k", lit(0L), lit(59L))).size == 54)
+    assert(driverParity("point", "k")(() =>
+      Snapshot.readCurrentPoint(spark, root, "v", 3L)).map(_.getLong(0)).sorted ==
+      (3L until 60L by 7L).filter(_ % 10 != 0))
+  }
+
+  test("driver reads across an added column: old files read NULL") {
+    val root = freshTable()
+    val mk = (lo: Long, hi: Long) => spark.range(lo, hi)
+      .select(col("id").as("k"), (col("id") % 7).as("v"))
+      .repartitionByRange(2, col("k")).sortWithinPartitions("k")
+    Snapshot.commitWithStats(mk(0L, 100L), root, Seq("k"))
+    Snapshot.appendCommit(mk(100L, 200L).withColumn("flag", col("k") % 2), root)
+    val got = driverParity("pruned", "flag")(() =>
+      Snapshot.readCurrentPruned(spark, root, "k", lit(50L), lit(150L)))
+    assert(got.size == 101 && got.count(_.isNullAt(2)) == 50)
+  }
+
+  test("driver reads after a rename and a drop speak the logical names") {
+    val root = freshTable()
+    Snapshot.commitWithStats(spark.range(0, 200)
+      .select(col("id").as("k"), (col("id") % 13).as("v"), (col("id") * 2).as("w"))
+      .repartitionByRange(4, col("k")), root, Seq("k"), bloomCols = Seq("v"))
+    Snapshot.renameColumn(spark, root, "v", "v2")
+    Snapshot.dropColumn(spark, root, "w")
+    val pruned = driverParity("pruned", "v2")(() =>
+      Snapshot.readCurrentPruned(spark, root, "k", lit(20L), lit(80L)))
+    assert(pruned.size == 61 && pruned.forall(_.length == 2))
+    assert(Snapshot.readCurrentPruned(spark, root, "k", lit(20L), lit(80L))
+      .columns.toSeq == Seq("k", "v2"))
+    val point = driverParity("point", "k")(() =>
+      Snapshot.readCurrentPoint(spark, root, "v2", 5L))
+    assert(point.map(_.getLong(0)).sorted == (5L until 200L by 13L))
+  }
+
+  test("driver reads widen an INT32 file under a long column, as the scan does") {
+    val root = freshTable()
+    Snapshot.commitWithStats(spark.range(0, 100)
+      .select(col("id").as("k"), (col("id") % 9).cast("int").as("n"))
+      .repartitionByRange(2, col("k")), root, Seq("k"))
+    // the entry records `n` as a long; the file keeps its INT32 column
+    val entry = java.nio.file.Paths.get(root, "_log", "v=1.json")
+    val text = new String(java.nio.file.Files.readAllBytes(entry), "UTF-8")
+    val widened = text.replace("\"name\":\"n\",\"type\":\"integer\"",
+      "\"name\":\"n\",\"type\":\"long\"")
+    assert(widened != text)
+    java.nio.file.Files.write(entry, widened.getBytes("UTF-8"))
+    val got = driverParity("pruned", "n")(() =>
+      Snapshot.readCurrentPruned(spark, root, "k", lit(10L), lit(40L)))
+    assert(got.size == 31 && got.forall(r => r.getLong(1) == r.getLong(0) % 9))
+  }
 }
 object SnapshotSpec {
   /** Holds a racing writer's batch in its write until released. */
