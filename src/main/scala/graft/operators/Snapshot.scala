@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.StructType
 import org.roaringbitmap.longlong.Roaring64NavigableMap
 
@@ -565,21 +567,33 @@ object Snapshot {
       StructType(m.schema.fields.map(_.copy(nullable = true)))), m.colmap)
 
   /** The files `read` (actions of entry `m`) in PHYSICAL names with
-    * their deletion vectors applied. When they total at most
-    * `spark.sql.files.openCostInBytes` — sizes from the actions, no
-    * listing — Spark's parquet reader reads them on the driver
+    * their deletion vectors applied. When they total at most a quarter
+    * of `spark.sql.files.openCostInBytes` (1 MB at Spark's default)
+    * both as parquet and as decoded rows (Σ live rows × the estimated
+    * row size, the estimate by which [[graft.plans.DriverEval]] bounds
+    * a local relation) — counts and sizes from the actions, no listing
+    * — Spark's parquet reader reads them on the driver
     * ([[Layout.readOnDriver]]) as the recorded schema, skipping each
-    * bitmap's positions as it goes, into a local relation that
-    * [[graft.plans.DriverEval]] folds the rest of the query into: the
-    * read runs no Spark job. Larger reads scan through [[applyDv]]. */
+    * bitmap's positions as it goes, into a local relation that the
+    * rule folds the rest of the query into: the read runs no Spark job.
+    * Larger reads scan through [[applyDv]]. The quarter is measured: on
+    * 4 vCPUs, a pruned or point read plus an aggregate over a one-file
+    * table of TPC-H orders took longer on the driver than as a scan
+    * from about 1.5 MB of decoded rows on, as the driver decodes,
+    * filters and aggregates every row on one thread. */
   private def readFiles(spark: SparkSession, m: Meta,
-                        read: Seq[FileAction]): DataFrame =
-    if (read.map(_.size).sum > spark.sessionState.conf.filesOpenCostInBytes)
+                        read: Seq[FileAction]): DataFrame = {
+    val schema = Layout.nullable(m.schema)
+    val bound = BigInt(spark.sessionState.conf.filesOpenCostInBytes) / 4
+    val decoded = BigInt(read.map(f => f.rows - f.deleted).sum) *
+      EstimationUtils.getSizePerRow(DataTypeUtils.toAttributes(schema))
+    if (read.map(_.size).sum > bound || decoded > bound)
       applyDv(spark, m, physReader(spark, m).parquet(read.map(_.path): _*))
-    else Layout.readOnDriver(spark, Layout.nullable(m.schema),
+    else Layout.readOnDriver(spark, schema,
       read.map(f => new org.apache.hadoop.fs.FileStatus(f.size, false, 0, 0L, 0L,
         new org.apache.hadoop.fs.Path(f.path))),
       read.map(f => f.dv.fold[Long => Boolean](_ => false)(b => b.contains(_))))
+  }
 
   /** The live version; an empty table fails. */
   private def headOf(spark: SparkSession, root: String): Long =

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.LOCAL_RELATION
+import org.apache.spark.sql.catalyst.util.UnsafeRowUtils
 import org.apache.spark.sql.types._
 import scala.util.control.NonFatal
 
@@ -21,9 +22,12 @@ import scala.util.control.NonFatal
   *  - `Aggregate`: a `DeclarativeAggregate` through its initial, update
   *    and evaluate expressions, an `ImperativeAggregate` through
   *    `initialize`/`update`/`eval` — the path Spark's aggregation
-  *    iterators run with codegen off, in Complete mode. A FLOAT or
-  *    DOUBLE grouping key is normalized as Spark's planner normalizes
-  *    it (NaN, -0.0); a key with one nested inside is not folded;
+  *    iterators run with codegen off, in Complete mode. Groups are keyed
+  *    by their UnsafeRow bytes, so a FLOAT or DOUBLE key is normalized
+  *    as Spark's planner normalizes it (NaN, -0.0), and an aggregate
+  *    with a key whose equal values can differ in bytes — a FLOAT or
+  *    DOUBLE nested inside, a string of a non-binary collation
+  *    (UTF8_LCASE groups 'A' with 'a') — is not folded;
   *  - a global `Sort`, through an interpreted ordering;
   *  - `Generate`, through `generator.eval`, with `outer`'s NULL row.
   *
@@ -57,7 +61,7 @@ object DriverEval extends Rule[LogicalPlan] {
         attempt(p)(ConvertToLocalRelation(p))
       case a @ Aggregate(_, _, r: LocalRelation, _)
           if small(a, r, bound) && aggregatesOf(a).forall(plain) &&
-            !a.groupingExpressions.exists(k => nestedFloat(k.dataType)) =>
+            a.groupingExpressions.forall(k => byteKey(k.dataType)) =>
         attempt(a)(aggregate(a, r))
       case s @ Sort(order, true, r: LocalRelation, _) if small(s, r, bound) =>
         attempt(s)(r.copy(data = r.data.sorted(new InterpretedOrdering(order, r.output))))
@@ -104,13 +108,17 @@ object DriverEval extends Rule[LogicalPlan] {
 
   private def floating(t: DataType): Boolean = t == FloatType || t == DoubleType
 
-  /** A FLOAT or DOUBLE inside a struct, array or map of type `t`. */
-  private def nestedFloat(t: DataType): Boolean = (t match {
-    case s: StructType => s.fields.toSeq.map(_.dataType)
-    case a: ArrayType => Seq(a.elementType)
-    case m: MapType => Seq(m.keyType, m.valueType)
-    case _ => Nil
-  }).exists(c => floating(c) || nestedFloat(c))
+  /** Whether equal keys of type `t` have equal UnsafeRow bytes once a
+    * top-level FLOAT or DOUBLE is normalized: no FLOAT or DOUBLE below
+    * the top and no string of a collation without binary equality. */
+  private def byteKey(t: DataType, top: Boolean = true): Boolean = t match {
+    case FloatType | DoubleType => top
+    case s: StringType => UnsafeRowUtils.isBinaryStable(s)
+    case s: StructType => s.fields.forall(f => byteKey(f.dataType, top = false))
+    case a: ArrayType => byteKey(a.elementType, top = false)
+    case m: MapType => byteKey(m.keyType, top = false) && byteKey(m.valueType, top = false)
+    case _ => true
+  }
 
   /** One aggregate function in Complete mode, on a buffer of its own. */
   private trait Fold {

@@ -109,6 +109,19 @@ class DriverEvalSpec extends SparkSuite {
     assert(got.size == 3)
   }
 
+  test("a key of a non-binary collation is not folded; a sort by one folds in its order") {
+    val lcase = (xs: Seq[String]) => () => DriverEval.localFrame(spark, xs.map(Row(_)),
+      StructType(Seq(StructField("s", StringType("UTF8_LCASE")))))
+    // 'A' = 'a' and 'B' = 'b' under UTF8_LCASE, though their bytes differ
+    val cased = lcase(Seq("A", "a", "B", "c", "b"))
+    assert(staysDistributed(() => cased().groupBy("s").count())
+      .map(_.getLong(1)).sorted == Seq(1L, 2L, 2L))
+    assert(staysDistributed(() => cased().groupBy(struct(col("s"))).count()).size == 3)
+    // binary order would put 'B' before 'a'
+    val sorted = folds(() => lcase(Seq("c", "B", "a"))().orderBy("s"), ordered = true)
+    assert(sorted.map(_.getString(0)) == Seq("a", "B", "c"))
+  }
+
   test("ANSI on and off: an overflow folds to Spark's answer or fails at execution with Spark's error") {
     import spark.implicits._
     val longs = () => Seq(Long.MaxValue, 1L).toDF("x").agg(sum("x"))

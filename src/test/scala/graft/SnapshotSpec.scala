@@ -1959,11 +1959,13 @@ class SnapshotSpec extends SparkSuite {
     assert(Snapshot.currentRowCount(spark, kept) == 901L)
   }
 
-  // ---- pruned and point reads within openCostInBytes run on the driver
+  // ---- pruned and point reads within a quarter of openCostInBytes
+  // run on the driver
 
   /** `read()` as the read-your-write client uses it — aggregated
     * (count, sum of `sumCol`) and collected — runs no Spark job while
-    * its files total at most `spark.sql.files.openCostInBytes`; with
+    * its files, as parquet and as decoded rows, total at most a quarter
+    * of `spark.sql.files.openCostInBytes`; with
     * the bound forced to one byte it scans (≥ 1 job) and answers the
     * same, row for row. Returns the rows, sorted. */
   private def driverParity(tag: String, sumCol: String)(
@@ -2053,6 +2055,26 @@ class SnapshotSpec extends SparkSuite {
     val got = driverParity("pruned", "n")(() =>
       Snapshot.readCurrentPruned(spark, root, "k", lit(10L), lit(40L)))
     assert(got.size == 31 && got.forall(r => r.getLong(1) == r.getLong(0) % 9))
+  }
+
+  test("a read whose decoded rows pass the bound scans, though its parquet is under it") {
+    val root = freshTable()
+    Snapshot.commitWithStats(spark.range(0, 1010)
+      .select(col("id").as("k"), (col("id") % 7).as("v")).coalesce(1), root, Seq("k"))
+    val read = () => Snapshot.readCurrentPruned(spark, root, "k", lit(0L), lit(1009L))
+    // a row of two longs is estimated at 24 bytes decoded, so the bound,
+    // a quarter of 96,000 bytes, holds 1,000 live rows
+    withConf("spark.sql.files.openCostInBytes", "96000") {
+      val parquet = Snapshot.readCurrent(spark, root).inputFiles.toSeq
+        .map(f => new java.io.File(new java.net.URI(f)).length).sum
+      assert(parquet > 0 && parquet < 24000L, parquet)
+      val (past, jobs) = jobsOf(read().agg(count(lit(1)), sum(col("v"))).head())
+      assert(jobs >= 1, "1,010 live rows are past the bound: the read scans")
+      assert(past.getLong(0) == 1010L)
+      // deleted rows do not count: 1,000 live rows read on the driver
+      Snapshot.deleteWhereMor(spark, root, col("k") >= 1000L)
+      assert(driverParity("at the bound", "v")(read).size == 1000)
+    }
   }
 }
 object SnapshotSpec {
